@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -88,7 +88,11 @@ object TermPostingsKernel {
   * allocate position buffers they would drop.
   */
 case class TermPostingsExpr(child: Expression, withPositions: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+
+  // a non-string child fails analysis instead of a ClassCastException
+  // in the kernel at run time
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = ArrayType(
     if (withPositions)

@@ -127,7 +127,7 @@ object BpeTokenizer {
   /** Rank-ordered merges from a [[buildBpeIndex]] artifact. */
   def loadBpeMerges(spark: SparkSession, path: String): Seq[(String, String)] = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    spark.read.parquet(s"$vdir/merges")
+    graft.sources.IndexIO.readTable(spark, s"$vdir/merges")
       .orderBy("rank")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
   }

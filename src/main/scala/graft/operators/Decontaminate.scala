@@ -360,7 +360,7 @@ object Decontaminate {
     * version's meta). */
   def evalIndexN(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    spark.read.parquet(s"$vdir/meta").head().getInt(0)
+    graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getInt(0)
   }
 
   /** Collapse an [[appendToEvalIndex]] chain back to ONE segment: the

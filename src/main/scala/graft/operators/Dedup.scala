@@ -450,7 +450,7 @@ object Dedup {
           array_sort(transform(col("__s"), s => xxhash64(s))).as("sh"),
           minhashBandKeys(numHashes, bands)(col("__s")).as("bks"))
         .write.mode("overwrite").parquet(s"$vdir/sketches")
-      spark.read.parquet(s"$vdir/sketches")
+      graft.sources.IndexIO.readTable(spark, s"$vdir/sketches")
         .select(col("doc_id"), posexplode(col("bks")).as(Seq("band", "bh")))
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
@@ -491,7 +491,7 @@ object Dedup {
       bandBuckets: Int = 64, marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     val (n, numHashes, bands) =
       (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
         graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
@@ -502,7 +502,7 @@ object Dedup {
           array_sort(transform(col("__s"), s => xxhash64(s))).as("sh"),
           minhashBandKeys(numHashes, bands)(col("__s")).as("bks"))
         .write.mode("overwrite").parquet(s"$seg/sketches")
-      spark.read.parquet(s"$seg/sketches")
+      graft.sources.IndexIO.readTable(spark, s"$seg/sketches")
         .select(col("doc_id"), posexplode(col("bks")).as(Seq("band", "bh")))
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
@@ -527,7 +527,7 @@ object Dedup {
       spark: SparkSession, path: String, ids: DataFrame, idCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = spark.read.parquet(s"$vdir/meta")
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ids.select(col(idCol).as("doc_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
@@ -552,13 +552,13 @@ object Dedup {
     val segs = graft.sources.IndexIO.segments(spark, path)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = spark.read.parquet(s"$vdir/meta")
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
     val sketches = graft.sources.IndexIO.withoutTombstoned(
       graft.sources.IndexIO.chainTable(spark, path, "sketches").get,
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"), "doc_id")
     graft.sources.IndexIO.publish(spark, path) { nv =>
       sketches.write.mode("overwrite").parquet(s"$nv/sketches")
-      spark.read.parquet(s"$nv/sketches")
+      graft.sources.IndexIO.readTable(spark, s"$nv/sketches")
         .select(col("doc_id"), posexplode(col("bks")).as(Seq("band", "bh")))
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
@@ -587,7 +587,7 @@ object Dedup {
         graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
       else data.drop("__seg")
     }
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     val (n, numHashes, bands) =
       (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
     val sh = delta

@@ -379,7 +379,7 @@ object Dsir {
   /** Bucket count of a persisted DSIR model. */
   def dsirIndexBuckets(spark: SparkSession, path: String): Int = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    spark.read.parquet(s"$vdir/meta").head().getInt(0)
+    graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getInt(0)
   }
 
   /** The persisted model's target / summed-raw-chain profiles as

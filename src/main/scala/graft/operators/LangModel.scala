@@ -262,19 +262,19 @@ object LangModel {
     // guard BEFORE collecting: a count is one cheap job; a require that
     // fires after the driver holds the oversized Row arrays is
     // documentation, not protection
-    val entries = spark.read.parquet(s"$vdir/bigrams").count() +
-      spark.read.parquet(s"$vdir/unigrams").count()
+    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/bigrams").count() +
+      graft.sources.IndexIO.readTable(spark, s"$vdir/unigrams").count()
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
     def sorted(name: String): (Array[Long], Array[Long]) = {
-      val rows = spark.read.parquet(s"$vdir/$name").sort("h")
+      val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/$name").sort("h")
         .collect()
       (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     }
     val (bk, bc) = sorted("bigrams")
     val (uk, uc) = sorted("unigrams")
-    val vocab = spark.read.parquet(s"$vdir/meta").head().getLong(0)
+    val vocab = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getLong(0)
     LmModel(bk, bc, uk, uc, vocab)
   }
 
@@ -318,24 +318,24 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModel3 = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val triPath = new org.apache.hadoop.fs.Path(s"$vdir/trigrams")
-    require(triPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(triPath),
+    val tri = graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/trigrams")
+    require(tri.isDefined,
       s"LM index at $path has no trigram table (built before order-3 " +
         "support) — rebuild with buildLmIndex")
-    val entries = spark.read.parquet(s"$vdir/trigrams").count() +
-      spark.read.parquet(s"$vdir/bigrams").count() +
-      spark.read.parquet(s"$vdir/unigrams").count()
+    val entries = tri.get.count() +
+      graft.sources.IndexIO.readTable(spark, s"$vdir/bigrams").count() +
+      graft.sources.IndexIO.readTable(spark, s"$vdir/unigrams").count()
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
     def sorted(name: String): (Array[Long], Array[Long]) = {
-      val rows = spark.read.parquet(s"$vdir/$name").sort("h").collect()
+      val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/$name").sort("h").collect()
       (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     }
     val (tk, tc) = sorted("trigrams")
     val (bk, bc) = sorted("bigrams")
     val (uk, uc) = sorted("unigrams")
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     LmModel3(tk, tc, bk, bc, uk, uc,
       meta.getLong(0), meta.getAs[Long]("n_tokens"))
   }
@@ -610,19 +610,19 @@ object LangModel {
       maxEntries: Long = 32L << 20): KnModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
     val entries = Seq("bigrams", "unigrams", "fw_types", "bw_types")
-      .map(t => spark.read.parquet(s"$vdir/$t").count()).sum
+      .map(t => graft.sources.IndexIO.readTable(spark, s"$vdir/$t").count()).sum
     require(entries <= maxEntries,
       s"KN model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
     def sorted(name: String): (Array[Long], Array[Long]) = {
-      val rows = spark.read.parquet(s"$vdir/$name").sort("h").collect()
+      val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/$name").sort("h").collect()
       (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     }
     val (bk, bc) = sorted("bigrams")
     val (uk, uc) = sorted("unigrams")
     val (fk, fc) = sorted("fw_types")
     val (wk, wc) = sorted("bw_types")
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     KnModel(bk, bc, uk, uc, fk, fc, wk, wc,
       meta.getAs[Long]("b_types"), meta.getAs[Long]("vocab"))
   }
@@ -716,20 +716,18 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModelN = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$vdir/meta")
-    require(metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(metaPath) &&
-        spark.read.parquet(s"$vdir/meta").schema.fieldNames.contains("order"),
+    val metaTable = graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/meta")
+    require(metaTable.exists(_.schema.fieldNames.contains("order")),
       s"LM index at $path is not an order-N artifact — build with buildLmIndexN")
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = metaTable.get.head()
     val order = meta.getAs[Int]("order")
     val entries = (1 to order)
-      .map(k => spark.read.parquet(s"$vdir/grams_$k").count()).sum
+      .map(k => graft.sources.IndexIO.readTable(spark, s"$vdir/grams_$k").count()).sum
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoff")
     val sorted = (1 to order).map { k =>
-      val rows = spark.read.parquet(s"$vdir/grams_$k").sort("h").collect()
+      val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/grams_$k").sort("h").collect()
       (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     }
     LmModelN(order, sorted.map(_._1).toArray, sorted.map(_._2).toArray,

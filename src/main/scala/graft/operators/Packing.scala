@@ -241,12 +241,12 @@ object Packing {
         val vdir = graft.sources.IndexIO.resolve(spark, path)
         // count BEFORE collecting — the guard must protect the driver,
         // not report after the oversized array already landed
-        val n = spark.read.parquet(s"$vdir/state").count()
+        val n = graft.sources.IndexIO.readTable(spark, s"$vdir/state").count()
         require(n <= maxCarryChunks,
           s"IncrementalPacker.restoreState: snapshot at $path holds $n " +
             s"chunks > maxCarryChunks=$maxCarryChunks — raise the cap " +
             "or repack with a coarser chunk expression")
-        carry = spark.read.parquet(s"$vdir/state").collect()
+        carry = graft.sources.IndexIO.readTable(spark, s"$vdir/state").collect()
           .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       }
   }

@@ -172,13 +172,13 @@ object QualityClassifier {
   def loadNbModel(spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): NbServingModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val entries = spark.read.parquet(s"$vdir/tokens").count()
+    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").count()
     require(entries <= maxEntries,
       s"NB model at $path has $entries entries > $maxEntries; raise the count cutoff")
-    val m = spark.read.parquet(s"$vdir/meta").head()
+    val m = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     val (np, nn, v) = (m.getLong(0), m.getLong(1), m.getLong(2))
     val (dp, dn) = (m.getLong(3), m.getLong(4))
-    val rows = spark.read.parquet(s"$vdir/tokens").sort("h").collect()
+    val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").sort("h").collect()
     val keys = rows.map(_.getLong(0))
     val deltas = rows.map(r =>
       grid((r.getLong(1) + 1.0) / (np + v)) - grid((r.getLong(2) + 1.0) / (nn + v)))
@@ -360,17 +360,17 @@ object QualityClassifier {
       path: String, maxEntries: Long = 32L << 20,
       priorWeights: Map[String, Double] = Map.empty): NbMulticlassModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val entries = spark.read.parquet(s"$vdir/tokens").count()
+    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").count()
     require(entries <= maxEntries,
       s"multiclass NB model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoff")
-    val m = spark.read.parquet(s"$vdir/meta").head()
+    val m = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     val classes = m.getSeq[String](0).toArray
     val ns = m.getSeq[Long](1).toArray
     val ds = m.getSeq[Long](2).toArray
     val v = m.getLong(3)
     val nc = classes.length
-    val rows = spark.read.parquet(s"$vdir/tokens").sort("h").collect()
+    val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").sort("h").collect()
     val keys = rows.map(_.getLong(0))
     val lps = new Array[Long](rows.length * nc)
     var i = 0

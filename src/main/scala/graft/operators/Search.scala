@@ -309,15 +309,12 @@ object Search {
     * fixes the layout every later append must match (chainTable's
     * strict unionByName enforces it on read).
     */
-  private def chainPostingsHaveDl(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val seg = graft.sources.IndexIO.segments(spark, path).find { s =>
-      val p = new org.apache.hadoop.fs.Path(s, "postings")
-      p.getFileSystem(conf).exists(p)
-    }.getOrElse(throw new IllegalStateException(
-      s"cannot append to $path: no segment carries a postings table"))
-    spark.read.parquet(s"$seg/postings").columns.contains("dl")
-  }
+  private def chainPostingsHaveDl(spark: SparkSession, path: String): Boolean =
+    graft.sources.IndexIO.segments(spark, path).iterator
+      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/postings"))
+      .nextOption().getOrElse(throw new IllegalStateException(
+        s"cannot append to $path: no segment carries a postings table"))
+      .columns.contains("dl")
 
   /** The chain's one-row corpus stats: the NEWEST stats-bearing segment
     * wins. Appends and the stats-correcting [[deleteFromBm25Index]]
@@ -328,15 +325,11 @@ object Search {
     * stats-publishing operation, instead of throwing path-not-found on
     * the latest version directory.
     */
-  private def chainStats(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val seg = graft.sources.IndexIO.segments(spark, path).reverse.find { s =>
-      val p = new org.apache.hadoop.fs.Path(s, "stats")
-      p.getFileSystem(conf).exists(p)
-    }.getOrElse(throw new IllegalStateException(
-      s"index at $path has no stats table"))
-    spark.read.parquet(s"$seg/stats")
-  }
+  private def chainStats(spark: SparkSession, path: String): DataFrame =
+    graft.sources.IndexIO.segments(spark, path).reverseIterator
+      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/stats"))
+      .nextOption().getOrElse(throw new IllegalStateException(
+        s"index at $path has no stats table"))
 
   /** Serve a BM25 top-k from a [[buildBm25Index]] (or
     * [[buildLexicalIndex]] — column pruning drops the positions) index.

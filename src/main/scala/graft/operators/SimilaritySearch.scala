@@ -40,14 +40,10 @@ object SimilaritySearch {
       ids: DataFrame, idCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val conf = spark.sparkContext.hadoopConfiguration
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      for (t <- Seq("centroids", "codebook", "meta")) {
-        val p = new org.apache.hadoop.fs.Path(s"$vdir/$t")
-        if (p.getFileSystem(conf).exists(p))
-          spark.read.parquet(p.toString).repartition(1)
-            .write.mode("overwrite").parquet(s"$seg/$t")
-      }
+      for (t <- Seq("centroids", "codebook", "meta"))
+        graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/$t").foreach(
+          _.repartition(1).write.mode("overwrite").parquet(s"$seg/$t"))
       ids.select(col(idCol).as("neighbor_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
     }
@@ -739,12 +735,8 @@ object SimilaritySearch {
           s"SemDeDup index at $path has no members table")),
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
       "neighbor_id")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val remaps = graft.sources.IndexIO.segments(spark, path).flatMap { s =>
-      val p = new org.apache.hadoop.fs.Path(s, "remaps")
-      if (p.getFileSystem(conf).exists(p)) Some(spark.read.parquet(p.toString))
-      else None
-    }
+    val remaps = graft.sources.IndexIO.segments(spark, path).flatMap(s =>
+      graft.sources.IndexIO.readTableIfExists(spark, s"$s/remaps"))
     remaps.foldLeft(members) { (acc, r) =>
       acc.join(
           broadcast(r.select(col("from").as("__rf"), col("to").as("__rt"))),
@@ -786,8 +778,9 @@ object SimilaritySearch {
       batch: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val threshold = spark.read.parquet(s"$vdir/meta").head().getAs[Double]("threshold")
-    val cents = spark.read.parquet(s"$vdir/centroids").orderBy(col("cell"))
+    val threshold = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+      .getAs[Double]("threshold")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").orderBy(col("cell"))
       .select("centroid").collect().map(_.getSeq[Double](0).toArray)
     val c = prepared(batch, idCol, vecCol, "neighbor_id", "__cv", "__cn")
       .select(col("neighbor_id").cast("long").as("neighbor_id"),
@@ -826,9 +819,9 @@ object SimilaritySearch {
       .localCheckpoint(true) // consumed twice (labels + remaps)
     val labels = comps.select(col("id").as("__id"), col("component"))
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      spark.read.parquet(s"$vdir/centroids").repartition(1)
+      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").repartition(1)
         .write.mode("overwrite").parquet(s"$seg/centroids")
-      spark.read.parquet(s"$vdir/meta").coalesce(1)
+      graft.sources.IndexIO.readTable(spark, s"$vdir/meta").coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/meta")
       assigned.join(labels, Seq("__id"), "left")
         .select(col("__id").as("neighbor_id"), col("__cv").as("vec"),
@@ -888,7 +881,7 @@ object SimilaritySearch {
       // rule), so later appends/compactions resolve them from the
       // latest version dir even when that version is this takedown
       for (t <- Seq("centroids", "meta"))
-        spark.read.parquet(s"$vdir/$t").repartition(1)
+        graft.sources.IndexIO.readTable(spark, s"$vdir/$t").repartition(1)
           .write.mode("overwrite").parquet(s"$seg/$t")
       ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
@@ -906,8 +899,8 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val cents = spark.read.parquet(s"$vdir/centroids")
-    val meta = spark.read.parquet(s"$vdir/meta")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
     val m = resolvedSemDedupMembers(spark, path)
     graft.sources.IndexIO.publish(spark, path) { nv =>
       cents.repartition(1).write.mode("overwrite").parquet(s"$nv/centroids")
@@ -1140,7 +1133,7 @@ object SimilaritySearch {
       newVectors: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .orderBy(col("cell"))
       .select("centroid").collect().map(_.getSeq[Double](0).toArray)
     val c = prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
@@ -1156,7 +1149,7 @@ object SimilaritySearch {
       s"appendToIvfIndex: new vectors have dim ${newDim.get} but the index at " +
         s"$indexDir was trained on dim ${cents(0).length}")
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      spark.read.parquet(s"$vdir/centroids")
+      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
         .repartition(1)
         .write.mode("overwrite").parquet(s"$seg/centroids")
       c.withColumn("cell", bestCellExpr(col("__cv"), cents))
@@ -1179,7 +1172,7 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
     // liveChain: tombstoned rows die physically here, and the fresh
     // single-segment publish carries no tombstone table forward
     val cells = liveChain(spark, indexDir, "cells")
@@ -1236,7 +1229,7 @@ object SimilaritySearch {
       newVectors: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .orderBy(col("cell"))
       .select("centroid").collect().map(_.getSeq[Double](0).toArray)
     val c = prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
@@ -1247,7 +1240,7 @@ object SimilaritySearch {
       s"appendToIvfSq8Index: new vectors have dim ${newDim.get} but the index " +
         s"at $indexDir was trained on dim ${cents(0).length}")
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      spark.read.parquet(s"$vdir/centroids")
+      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
         .repartition(1)
         .write.mode("overwrite").parquet(s"$seg/centroids")
       c.withColumn("cell", bestCellExpr(col("__cv"), cents))
@@ -1270,7 +1263,7 @@ object SimilaritySearch {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     val cells = liveChain(spark, indexDir, "cells")
@@ -1302,7 +1295,7 @@ object SimilaritySearch {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     // the index may be an append chain (appendToIvfIndex): union the
@@ -1336,7 +1329,7 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       live: DataFrame, vecCol: String): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell"), col("centroid"))
     val quantized = liveChain(spark, indexDir, "cells")
       .select(col("cell"))
@@ -1393,7 +1386,7 @@ object SimilaritySearch {
       threshold: Double, nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     // k×dim model, collected once at plan time (same bound as training)
-    val cents = spark.read.parquet(s"$vdir/centroids").orderBy("cell")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").orderBy("cell")
       .select("centroid").collect().map(_.getSeq[Double](0).toArray)
     require(nProbe >= 1 && nProbe <= cents.length,
       s"dedupAgainstIvfIndex: nProbe $nProbe outside [1, ${cents.length}]")
@@ -1798,10 +1791,10 @@ object SimilaritySearch {
     */
   private def loadIvfPqModel(spark: org.apache.spark.sql.SparkSession, vdir: String)
       : (Array[Array[Double]], Array[Double], Int, Int, Int, Int, Array[Double]) = {
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .orderBy(col("cell"))
       .select("centroid").collect().map(_.getSeq[Double](0).toArray)
-    val meta = spark.read.parquet(s"$vdir/codebook").collect()(0)
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook").collect()(0)
     val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val cb = meta.getSeq[Double](3).toArray
     val cnorms = cents.map(v => math.sqrt(v.map(x => x * x).sum))
@@ -1823,7 +1816,7 @@ object SimilaritySearch {
     val (cents, cnorms, dim, m, kCodes, subDim, cb) = loadIvfPqModel(spark, vdir0)
     // a meta-partitioned index must keep its layout through appends:
     // segment schemas have to agree for the chain union to resolve
-    val baseHasMeta = spark.read.parquet(s"$vdir0/cells")
+    val baseHasMeta = graft.sources.IndexIO.readTable(spark, s"$vdir0/cells")
       .schema.fieldNames.contains("meta")
     require(baseHasMeta == metaCol.isDefined,
       if (baseHasMeta)
@@ -1840,9 +1833,9 @@ object SimilaritySearch {
     val (flat, _, _) = flatCentroids(cents)
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      spark.read.parquet(s"$vdir0/centroids")
+      graft.sources.IndexIO.readTable(spark, s"$vdir0/centroids")
         .repartition(1).write.mode("overwrite").parquet(s"$seg/centroids")
-      spark.read.parquet(s"$vdir0/codebook")
+      graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook")
         .repartition(1).write.mode("overwrite").parquet(s"$seg/codebook")
       val nv = (metaCol match {
         case Some(mc) => newVectors.select(
@@ -1881,8 +1874,8 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
-    val cbdf = spark.read.parquet(s"$vdir/codebook")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
+    val cbdf = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook")
     val cells = liveChain(spark, indexDir, "cells")
     // vectors side-file is optional (indexes built before it existed);
     // carry it forward when present so rerank stays self-contained
@@ -1914,7 +1907,7 @@ object SimilaritySearch {
       nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     val (_, _, _, m, kCodes, subDim, cb) = loadIvfPqModel(spark, vdir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     val codes = liveChain(spark, indexDir, "cells")
@@ -1940,7 +1933,7 @@ object SimilaritySearch {
       allowed: DataFrame, nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     val (_, _, _, m, kCodes, subDim, cb) = loadIvfPqModel(spark, vdir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     val allow = allowed.select(col(idCol).as("neighbor_id")).distinct()
@@ -1972,7 +1965,7 @@ object SimilaritySearch {
     require(metaValues.nonEmpty, "searchIvfPqWhereMeta: empty metaValues")
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     val (_, _, _, m, kCodes, subDim, cb) = loadIvfPqModel(spark, vdir)
-    val cents = spark.read.parquet(s"$vdir/centroids")
+    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     val chain = liveChain(spark, indexDir, "cells")
@@ -2118,7 +2111,7 @@ object SimilaritySearch {
       indexDir: String, marker: Option[String] = None): Unit = {
     val spark = newVectors.sparkSession
     val vdir0 = graft.sources.IndexIO.resolve(spark, indexDir)
-    val meta = spark.read.parquet(s"$vdir0/codebook").collect()(0)
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook").collect()(0)
     val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val cb = meta.getSeq[Double](3).toArray
     // same loud-failure contract as appendToIvfIndex: a mismatched dim
@@ -2132,7 +2125,7 @@ object SimilaritySearch {
         s"$indexDir encodes dim ${m * subDim} (m=$m x subDim=$subDim)")
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { vdir =>
-      spark.read.parquet(s"$vdir0/codebook")
+      graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook")
         .repartition(1).write.mode("overwrite").parquet(s"$vdir/codebook")
       prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
         .select(col("neighbor_id"),
@@ -2156,7 +2149,7 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cb = spark.read.parquet(s"$vdir/codebook")
+    val cb = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook")
     val codes = liveChain(spark, indexDir, "codes")
     graft.sources.IndexIO.publish(spark, indexDir) { nv =>
       cb.repartition(1).write.mode("overwrite").parquet(s"$nv/codebook")
@@ -2174,7 +2167,7 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val meta = spark.read.parquet(s"$vdir/codebook").collect()(0)
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook").collect()(0)
     val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val cb = meta.getSeq[Double](3).toArray
     val codes = liveChain(spark, indexDir, "codes")

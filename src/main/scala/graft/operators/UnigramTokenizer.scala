@@ -177,7 +177,7 @@ object UnigramTokenizer {
     * [[buildUnigramIndex]] artifact. */
   def loadUnigramVocab(spark: SparkSession, path: String): Seq[(String, Long)] = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    spark.read.parquet(s"$vdir/vocab")
+    graft.sources.IndexIO.readTable(spark, s"$vdir/vocab")
       .orderBy("piece")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
   }

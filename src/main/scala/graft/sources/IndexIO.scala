@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Atomic publish/resolve for persisted index directories (MinHash
@@ -86,6 +86,10 @@ import org.apache.spark.sql.SparkSession
   *     no `_SEGMENTS` yet and is younger than the stale bound, so
   *     vacuum skips it; committed versions within retention are
   *     pruning roots.
+  *
+  * Reads ([[readTable]], [[chainTable]]) take each segment table's
+  * schema from one parquet footer on the driver, with no
+  * schema-inference Spark job.
   */
 object IndexIO {
 
@@ -696,16 +700,94 @@ object IndexIO {
     */
   def chainTable(spark: SparkSession, path: String, name: String,
       allowMissingColumns: Boolean = false)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+      : Option[org.apache.spark.sql.DataFrame] =
     segments(spark, path).zipWithIndex.flatMap { case (s, i) =>
-      val p = new Path(s, name)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p))
-        Some(spark.read.parquet(p.toString)
-          .withColumn("__seg", org.apache.spark.sql.functions.lit(i)))
-      else None
+      readTableIfExists(spark, new Path(s, name).toString)
+        .map(_.withColumn("__seg", org.apache.spark.sql.functions.lit(i)))
     }.reduceOption(_.unionByName(_, allowMissingColumns))
+
+  /** One persisted index table (a parquet directory written by Spark)
+    * as a lazy DataFrame: no Spark job runs until the caller's action.
+    * The directory is listed once; for a flat (not `partitionBy`) table
+    * that listing is Spark's file index. The schema comes from one
+    * footer read on the driver, by Spark's own rule (the
+    * `org.apache.spark.sql.parquet.row.metadata` key when present, else
+    * the parquet schema converted under the session conf) applied to the
+    * file Spark's inference would pick, instead of from Spark's one-task
+    * schema-inference job. Every file of a table carries the same
+    * schema, so one footer stands for the table. A missing directory, or
+    * one without a data file, fails with Spark's own error.
+    */
+  def readTable(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    readTableIfExists(spark, dir).getOrElse(spark.read.parquet(dir))
+
+  /** [[readTable]], or None when `dir` does not exist: the listing that
+    * finds the files doubles as the existence probe (a tombstone-only
+    * segment has no data tables).
+    */
+  private[graft] def readTableIfExists(spark: SparkSession, dir: String)
+      : Option[org.apache.spark.sql.DataFrame] = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, InMemoryFileIndex, NoopCache}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(dir))
+    // plain statuses carry no block locations, so the scan of a flat
+    // table schedules without locality preferences; index tables are
+    // small next to the corpus they index
+    val listing =
+      try fs.listStatus(root)
+      catch { case _: java.io.FileNotFoundException => return None }
+    // a partitionBy layout nests its files one directory per value:
+    // there Spark's index lists the tree itself
+    val data = listing.filterNot(st => hiddenName(st.getPath.getName))
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None,
+      if (data.exists(_.isDirectory)) NoopCache else new ListedFiles(root, data))
+    // Spark's inference reads the first data file in path order; with
+    // none, a plain read raises Spark's own unable-to-infer error
+    val file = index.allFiles().sortBy(_.getPath.toString).headOption
+      .getOrElse(return Some(spark.read.parquet(dir)))
+    val parts = index.partitionSchema
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      footerSchema(spark, file).filterNot(f => parts.fieldNames.contains(f.name)))
+    Some(spark.baseRelationToDataFrame(HadoopFsRelation(
+      index, parts, org.apache.spark.sql.GraftInternals.asNullable(dataSchema), None,
+      new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** Spark's listing filter: `_` and `.` names are metadata, not data;
+    * its file index takes a cached listing as already filtered.
+    */
+  private def hiddenName(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+
+  /** A file-status cache that answers the one directory already listed,
+    * until the index is refreshed.
+    */
+  private final class ListedFiles(root: Path, files: Array[FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileStatusCache {
+    @volatile private var valid = true
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      if (valid && path == root) Some(files) else None
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = valid = false
+  }
+
+  private def footerSchema(spark: SparkSession, file: FileStatus)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
   }
 
   /** One-row OPERATIONAL summary of a persisted index — the

@@ -595,7 +595,7 @@ object Streaming {
         graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
       else data.drop("__seg")
     }
-    val meta = spark.read.parquet(s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
     val (n, numHashes, bands) =
       (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
     val sh = stream
@@ -723,10 +723,15 @@ object Streaming {
     */
   private def collectExact(
       hashes: DataFrame, hashCol: String, maxExactHashes: Long): Array[Long] = {
-    val capped = math.min(maxExactHashes, Int.MaxValue - 8L).toInt
+    // a cap past the largest JVM array would let limit(cap + 1) truncate
+    // an oversized set to an array that still passes the guard below
+    require(maxExactHashes <= Int.MaxValue - 8L,
+      s"maxExactHashes=$maxExactHashes exceeds the largest collectable " +
+        s"array (${Int.MaxValue - 8L} hashes)")
     // sort().limit().collect() not collect().sorted — the sort runs
     // distributed and the driver only merges ordered partition heads
-    val arr = hashes.sort(hashCol).limit(capped + 1).collect().map(_.getLong(0))
+    val arr = hashes.sort(hashCol).limit(maxExactHashes.toInt + 1)
+      .collect().map(_.getLong(0))
     require(arr.length <= maxExactHashes,
       s"eval set has more than maxExactHashes=$maxExactHashes distinct " +
         "shingle hashes; decontaminate in batch instead " +

@@ -20,4 +20,9 @@ object GraftInternals {
     */
   def toRealExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** `StructType.asNullable`: a file relation reads every column as
+    * nullable, whatever the writer declared.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }

@@ -507,4 +507,83 @@ class IndexIOSuite extends SparkSpec {
     assert(IndexIO.resolve(spark, base) == published.get)
     assert(spark.read.parquet(s"${published.get}/a").count() == 2)
   }
+
+  /** Spark jobs this thread starts while `body` runs — tagged with a
+    * job group so jobs of other threads in the shared session never
+    * count — after the listener bus has drained.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) {
+          n.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "jobsDuring")
+    try { body; org.apache.spark.graft.runtime.ListenerDrain.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get()
+  }
+
+  test("readTable: same schema and rows as spark.read.parquet, with no job") {
+    import org.apache.spark.sql.Row
+    val base = newBase()
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789")
+    val df = Seq(
+      (1L, 7, 0.5, "a", Array[Byte](1, 2), Seq("x", "y"), Seq(1.5f, 2.5f),
+        (3L, "s"), ts),
+      (2L, -1, Double.NaN, null, Array.emptyByteArray, Seq.empty[String],
+        Seq.empty[Float], (4L, null), null)
+    ).toDF("l", "i", "d", "s", "b", "as", "af", "st", "ts")
+      .withColumn("st", struct(col("st._1").as("n"), col("st._2").as("t")))
+    df.write.mode("overwrite").parquet(s"$base/flat")
+    df.write.mode("overwrite").partitionBy("i").parquet(s"$base/parted")
+    def sorted(d: org.apache.spark.sql.DataFrame): Seq[Row] =
+      d.collect().toSeq.sortBy(_.getAs[Long]("l"))
+    for (t <- Seq("flat", "parted")) {
+      val expected = spark.read.parquet(s"$base/$t")
+      var got: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { got = IndexIO.readTable(spark, s"$base/$t") } == 0, t)
+      assert(got.schema == expected.schema, t)
+      assert(sorted(got) == sorted(expected), t)
+    }
+    assert(IndexIO.readTableIfExists(spark, s"$base/missing").isEmpty)
+    // a missing table fails with Spark's own error, as a plain read does
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IndexIO.readTable(spark, s"$base/missing")
+    }
+  }
+
+  test("chainTable and bm25SearchIndex over a 3-segment chain start no Spark job") {
+    val base = newBase()
+    val docs = Seq((1L, "spark joins fast"), (2L, "spark streams"),
+      (3L, "joins on ranges"), (4L, "fast range joins in spark"))
+      .toDF("doc_id", "text")
+    graft.operators.Search.buildBm25Index(docs.filter(col("doc_id") <= 2),
+      "doc_id", "text", base, termBuckets = 2)
+    graft.operators.Search.appendToBm25Index(docs.filter(col("doc_id") > 2),
+      "doc_id", "text", base, termBuckets = 2)
+    graft.operators.Search.deleteFromBm25Index(spark, base,
+      Seq(2L).toDF("doc_id"), "doc_id")
+    assert(IndexIO.segments(spark, base).size == 3)
+    var served: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring {
+      IndexIO.chainTable(spark, base, "postings")
+      IndexIO.chainTable(spark, base, "tombstones")
+      served = graft.operators.Search.bm25SearchIndex(
+        spark, base, Seq("spark", "joins"), k = 10)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs before the caller's action")
+    val live = docs.filter(col("doc_id") =!= 2L)
+    assertSameRows(
+      graft.operators.Search.bm25TopK(live, "doc_id", "text",
+        Seq("spark", "joins"), k = 10),
+      served)
+  }
 }

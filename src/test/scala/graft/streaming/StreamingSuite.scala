@@ -1301,6 +1301,18 @@ class StreamingSuite extends SparkSpec {
     assert(r3.getLong(0) == 0 && r3.getLong(1) == 0 && r3.getDouble(2) == 0.0)
   }
 
+  test("decontaminateGate: a cap past the largest collectable array fails up front") {
+    val evalSet = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
+    val corpus = Seq((1L, "alpha beta gamma one")).toDF("doc_id", "text")
+    // a larger cap would let the capped collect truncate an oversized
+    // eval set and still pass the size guard
+    val e = intercept[IllegalArgumentException] {
+      Streaming.decontaminateGate(spark, corpus, "doc_id", "text", evalSet,
+        "text", n = 3, maxExactHashes = Int.MaxValue.toLong)
+    }
+    assert(e.getMessage.contains("maxExactHashes"), e.getMessage)
+  }
+
   test("decontaminateGate: nonzero threshold keeps lightly-contaminated docs") {
     val evalSet = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
     // doc 1: 1 shared shingle of 8 => exact ratio 0.125
