@@ -9,6 +9,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** The rows reported as `degraded`: those that end with at least one
+    * but fewer than `passes` samples (budget shedding, or a failed
+    * sample). A noisy row whose extra re-samples were shed still has its
+    * `passes` samples and is not degraded; a row with none is `failed`.
+    */
+  def degradedRows(
+      names: Seq[String], samples: Map[String, List[Double]], passes: Int): Seq[String] =
+    names.filter(n => samples.get(n).exists(_.size < passes))
+
   /** Headline set: one per operator family (parity joins, dedup,
     * similarity, text, relational built-ins).
     */
@@ -143,8 +152,8 @@ object Bench {
     // per row minimum — a dropped row reads as a regression), passes
     // 2-3 and the noisy re-sample passes skip a query when the elapsed
     // time plus that query's last observed cost would cross the budget.
-    // Skipped rows are reported in "degraded" so a single-sample median
-    // is attributable. Timing semantics of every sample are unchanged.
+    // Rows that end with fewer than `passes` samples are reported in
+    // "degraded" so a short median is attributable ([[degradedRows]]). Timing semantics of every sample are unchanged.
     val budgetSecs = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SECS")
       .map(_.toDouble).getOrElse(2400.0)
     val tStart = System.nanoTime()
@@ -235,15 +244,13 @@ object Bench {
     val passes = 3
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val degraded = scala.collection.mutable.LinkedHashSet.empty[String]
     (1 to passes).foreach { pass =>
       names.foreach { name =>
         // budget shedding applies only AFTER the row has one sample:
         // estimate this sample's cost from the row's last observation
-        if (pass > 1 && samples.contains(name) &&
-            elapsedSecs + samples(name).head > budgetSecs) {
-          degraded += name
-        } else {
+        val shed = pass > 1 && samples.contains(name) &&
+          elapsedSecs + samples(name).head > budgetSecs
+        if (!shed) {
           val t0 = System.nanoTime()
           // a sample is recorded ONLY when the query completes: timing a
           // throw would report time-to-exception as a 10-20x "speedup" and
@@ -278,9 +285,7 @@ object Bench {
     }
     (1 to 2).foreach { _ =>
       noisy.foreach { name =>
-        if (elapsedSecs + samples(name).head > budgetSecs) {
-          degraded += name
-        } else {
+        if (elapsedSecs + samples(name).head <= budgetSecs) {
           val t0 = System.nanoTime()
           try {
             allFns(name)(spark, sfDir).count()
@@ -313,7 +318,8 @@ object Bench {
     val total = results.map(_._2).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val setupFailedJson = setupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val degradedJson = degraded.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val degradedJson = degradedRows(names, samples.toMap, passes)
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full artifact goes to a committed file: the one-line stdout JSON
     // outgrew the driver's tail capture once the suite passed ~50 rows
     // (medians truncated, `parsed: null` in 10 of 11 rounds). The file

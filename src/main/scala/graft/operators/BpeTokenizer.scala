@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{BpeCountExpr, BpeDecodeExpr, BpeIdsExpr, BpeTokensExpr, TextFunctions}
 
@@ -113,13 +114,13 @@ object BpeTokenizer {
       trainWords: Int = 4096, numMerges: Int = 256): Unit = {
     val merges = trainBpe(docs, textCol, trainWords, numMerges)
     val spark = docs.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, path) { vdir =>
-      merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-        .toDF("rank", "l", "r")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/merges")
-      Seq((trainWords, numMerges)).toDF("train_words", "num_merges")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/merges",
+        StructType.fromDDL("rank INT NOT NULL, l STRING, r STRING"),
+        merges.zipWithIndex.map { case ((l, r), i) => Row(i, l, r) })
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta",
+        StructType.fromDDL("train_words INT NOT NULL, num_merges INT NOT NULL"),
+        Seq(Row(trainWords, numMerges)))
     }
     ()
   }
@@ -127,9 +128,9 @@ object BpeTokenizer {
   /** Rank-ordered merges from a [[buildBpeIndex]] artifact. */
   def loadBpeMerges(spark: SparkSession, path: String): Seq[(String, String)] = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.readTable(spark, s"$vdir/merges")
-      .orderBy("rank")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    graft.sources.IndexIO.readRows(spark, s"$vdir/merges")
+      .sortBy(_.getInt(0))
+      .map(r => (r.getString(1), r.getString(2)))
   }
 
   /** Subword token count of `text` under `merges` — codegen'd, 0 for

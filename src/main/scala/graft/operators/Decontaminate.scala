@@ -250,12 +250,10 @@ object Decontaminate {
       eval: DataFrame, textCol: String, path: String, n: Int = 8,
       marker: Option[String] = None): Unit = {
     val spark = eval.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, path, marker) { vdir =>
       evalProfile(eval, textCol, n)
         .coalesce(1).write.mode("overwrite").parquet(s"$vdir/hashes")
-      Seq(Tuple1(n)).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      writeEvalMeta(spark, vdir, n)
     }
     ()
   }
@@ -284,13 +282,11 @@ object Decontaminate {
       newEval: DataFrame, textCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = newEval.sparkSession
-    import spark.implicits._
     val n = evalIndexN(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       evalProfile(newEval, textCol, n)
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/hashes")
-      Seq(Tuple1(n)).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeEvalMeta(spark, seg, n)
     }
     ()
   }
@@ -314,14 +310,12 @@ object Decontaminate {
       withdrawnEval: DataFrame, textCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = withdrawnEval.sparkSession
-    import spark.implicits._
     val n = evalIndexN(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       evalProfile(withdrawnEval, textCol, n)
         .select(col("h"), (-col("cnt")).as("cnt"))
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/hashes")
-      Seq(Tuple1(n)).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeEvalMeta(spark, seg, n)
     }
     ()
   }
@@ -341,7 +335,6 @@ object Decontaminate {
       addedEval: DataFrame, withdrawnEval: DataFrame, textCol: String,
       path: String, marker: Option[String] = None): Unit = {
     val spark = addedEval.sparkSession
-    import spark.implicits._
     val n = evalIndexN(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       evalProfile(addedEval, textCol, n)
@@ -350,8 +343,7 @@ object Decontaminate {
         .groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
         .filter(col("cnt") =!= 0L)
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/hashes")
-      Seq(Tuple1(n)).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeEvalMeta(spark, seg, n)
     }
     ()
   }
@@ -360,8 +352,17 @@ object Decontaminate {
     * version's meta). */
   def evalIndexN(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getInt(0)
+    graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head.getInt(0)
   }
+
+  /** A version's one-row `meta` table (the shingle width), written on
+    * the driver.
+    */
+  private def writeEvalMeta(
+      spark: org.apache.spark.sql.SparkSession, vdir: String, n: Int): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/meta",
+      org.apache.spark.sql.types.StructType.fromDDL("n INT NOT NULL"),
+      Seq(org.apache.spark.sql.Row(n)))
 
   /** Collapse an [[appendToEvalIndex]] chain back to ONE segment: the
     * distinct union of the chain's hashes republishes atomically (the
@@ -374,7 +375,6 @@ object Decontaminate {
     */
   def compactEvalIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import spark.implicits._
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val n = evalIndexN(spark, path)
     val chain = rawEvalChain(spark, path)
@@ -393,8 +393,7 @@ object Decontaminate {
             .filter(col("cnt") > 0)
         else chain.select(col("h")).distinct() // pre-counts layout
       summed.coalesce(1).write.mode("overwrite").parquet(s"$nv/hashes")
-      Seq(Tuple1(n)).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$nv/meta")
+      writeEvalMeta(spark, nv, n)
     }
     ()
   }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{Hashing, TextFunctions, VectorFunctions}
 
@@ -455,11 +456,26 @@ object Dedup {
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
         .write.mode("overwrite").parquet(s"$vdir/postings")
-      import spark.implicits._
-      Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      writeMinhashMeta(spark, vdir, (n, numHashes, bands))
     }
     ()
+  }
+
+  private val MinhashMetaSchema =
+    StructType.fromDDL("n INT NOT NULL, num_hashes INT NOT NULL, bands INT NOT NULL")
+
+  /** A version's one-row `meta` table `(n, num_hashes, bands)`, written
+    * on the driver.
+    */
+  private def writeMinhashMeta(
+      spark: SparkSession, vdir: String, meta: (Int, Int, Int)): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", MinhashMetaSchema,
+      Seq(Row(meta._1, meta._2, meta._3)))
+
+  /** `(n, num_hashes, bands)` from a version's `meta`, read on the driver. */
+  private def readMinhashMeta(spark: SparkSession, vdir: String): (Int, Int, Int) = {
+    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
+    (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
   }
 
   /** Near-dup join of a new batch against a [[buildMinhashIndex]] index:
@@ -491,10 +507,8 @@ object Dedup {
       bandBuckets: Int = 64, marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
-    val (n, numHashes, bands) =
-      (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
-        graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
+    val (n, numHashes, bands) = readMinhashMeta(spark, vdir)
+    graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       docs
         .select(col(idCol).as("doc_id"), TextFunctions.shingles(col(textCol), n).as("__s"))
         .filter(size(col("__s")) > 0)
@@ -507,9 +521,7 @@ object Dedup {
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
         .write.mode("overwrite").parquet(s"$seg/postings")
-      import spark.implicits._
-      Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeMinhashMeta(spark, seg, (n, numHashes, bands))
     }
     ()
   }
@@ -527,11 +539,11 @@ object Dedup {
       spark: SparkSession, path: String, ids: DataFrame, idCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
+    val meta = readMinhashMeta(spark, vdir)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ids.select(col(idCol).as("doc_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
-      meta.coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeMinhashMeta(spark, seg, meta)
     }
     ()
   }
@@ -552,7 +564,7 @@ object Dedup {
     val segs = graft.sources.IndexIO.segments(spark, path)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
+    val meta = readMinhashMeta(spark, vdir)
     val sketches = graft.sources.IndexIO.withoutTombstoned(
       graft.sources.IndexIO.chainTable(spark, path, "sketches").get,
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"), "doc_id")
@@ -563,7 +575,7 @@ object Dedup {
         .repartition(col("band"), col("bh"))
         .sortWithinPartitions("band", "bh")
         .write.mode("overwrite").parquet(s"$nv/postings")
-      meta.coalesce(1).write.mode("overwrite").parquet(s"$nv/meta")
+      writeMinhashMeta(spark, nv, meta)
     }
     ()
   }
@@ -587,9 +599,7 @@ object Dedup {
         graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
       else data.drop("__seg")
     }
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
-    val (n, numHashes, bands) =
-      (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
+    val (n, numHashes, bands) = readMinhashMeta(spark, vdir)
     val sh = delta
       .select(col(idCol).as("__id"), TextFunctions.shingles(col(textCol), n).as("__s"))
       .filter(size(col("__s")) > 0)

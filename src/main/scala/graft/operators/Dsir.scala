@@ -242,14 +242,12 @@ object Dsir {
     require(buckets >= 1 && buckets <= 65536,
       s"buckets must be in [1, 65536], got $buckets")
     val spark = target.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, path, marker) { vdir =>
       ngramProfile(target, targetTextCol, buckets).coalesce(1)
         .write.mode("overwrite").parquet(s"$vdir/target")
       ngramProfile(raw, rawTextCol, buckets).coalesce(1)
         .write.mode("overwrite").parquet(s"$vdir/raw")
-      Seq(Tuple1(buckets)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      writeDsirMeta(spark, vdir, buckets)
     }
     ()
   }
@@ -264,13 +262,11 @@ object Dsir {
       newRaw: DataFrame, textCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = newRaw.sparkSession
-    import spark.implicits._
     val b = dsirIndexBuckets(spark, path)
         graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ngramProfile(newRaw, textCol, b).coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeDsirMeta(spark, seg, b)
     }
     ()
   }
@@ -295,15 +291,13 @@ object Dsir {
       deletedRaw: DataFrame, textCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = deletedRaw.sparkSession
-    import spark.implicits._
     val b = dsirIndexBuckets(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ngramProfile(deletedRaw, textCol, b)
         .select(col("bucket"), (-col("cnt")).as("cnt"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeDsirMeta(spark, seg, b)
     }
     ()
   }
@@ -326,7 +320,6 @@ object Dsir {
       addedRaw: DataFrame, deletedRaw: DataFrame, textCol: String,
       path: String, marker: Option[String] = None): Unit = {
     val spark = addedRaw.sparkSession
-    import spark.implicits._
     val b = dsirIndexBuckets(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ngramProfile(addedRaw, textCol, b)
@@ -336,8 +329,7 @@ object Dsir {
         .filter(col("cnt") =!= 0L)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeDsirMeta(spark, seg, b)
     }
     ()
   }
@@ -359,7 +351,6 @@ object Dsir {
     * branching on the stored schema.
     */
   def compactDsirIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val b = dsirIndexBuckets(spark, path)
     val grouped = graft.sources.IndexIO.chainTable(spark, path, "raw")
@@ -370,8 +361,7 @@ object Dsir {
     graft.sources.IndexIO.publish(spark, path) { nv =>
       tp.coalesce(1).write.mode("overwrite").parquet(s"$nv/target")
       rp.coalesce(1).write.mode("overwrite").parquet(s"$nv/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$nv/meta")
+      writeDsirMeta(spark, nv, b)
     }
     ()
   }
@@ -379,8 +369,16 @@ object Dsir {
   /** Bucket count of a persisted DSIR model. */
   def dsirIndexBuckets(spark: SparkSession, path: String): Int = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getInt(0)
+    graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head.getInt(0)
   }
+
+  /** A version's one-row `meta` table (the bucket count), written on the
+    * driver.
+    */
+  private def writeDsirMeta(spark: SparkSession, vdir: String, buckets: Int): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/meta",
+      org.apache.spark.sql.types.StructType.fromDDL("buckets INT NOT NULL"),
+      Seq(org.apache.spark.sql.Row(buckets)))
 
   /** The persisted model's target / summed-raw-chain profiles as
     * DataFrames — the inputs [[importanceScore]] and [[ratioArray]]
@@ -538,14 +536,12 @@ object Dsir {
     require(buckets >= 1 && buckets <= 65536,
       s"buckets must be in [1, 65536], got $buckets")
     val spark = target.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, path, marker) { vdir =>
       ngramProfileByGroup(target, targetTextCol, targetGroupCol, buckets)
         .coalesce(1).write.mode("overwrite").parquet(s"$vdir/target")
       ngramProfileByGroup(raw, rawTextCol, rawGroupCol, buckets)
         .coalesce(1).write.mode("overwrite").parquet(s"$vdir/raw")
-      Seq(Tuple1(buckets)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      writeDsirMeta(spark, vdir, buckets)
     }
     ()
   }
@@ -558,13 +554,11 @@ object Dsir {
       newRaw: DataFrame, textCol: String, groupCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = newRaw.sparkSession
-    import spark.implicits._
     val b = dsirIndexBuckets(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ngramProfileByGroup(newRaw, textCol, groupCol, b)
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeDsirMeta(spark, seg, b)
     }
     ()
   }
@@ -579,15 +573,13 @@ object Dsir {
       deletedRaw: DataFrame, textCol: String, groupCol: String, path: String,
       marker: Option[String] = None): Unit = {
     val spark = deletedRaw.sparkSession
-    import spark.implicits._
     val b = dsirIndexBuckets(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       ngramProfileByGroup(deletedRaw, textCol, groupCol, b)
         .select(col("grp"), col("bucket"), (-col("cnt")).as("cnt"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/raw")
-      Seq(Tuple1(b)).toDF("buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/meta")
+      writeDsirMeta(spark, seg, b)
     }
     ()
   }

@@ -24,13 +24,21 @@ import org.apache.spark.sql.functions._
   *  - if extremes prove *no* pair can match, return the empty relation
   *    without running the join at all (O(n+m) instead of O(n·m)).
   *
-  * The two extreme aggregates are tiny all-to-one jobs (partial
-  * aggregation map-side, single row shuffled). NOTE: with the default
-  * `prune = true` they run EAGERLY when this function is called — a
-  * deliberate laziness break (two small jobs buy an asymptotic rewrite
-  * of the join), same trade as Dedup.ngramJaccardAuto's probe. Pass
-  * `prune = false` for fully lazy plan construction or when inputs are
-  * known to interleave.
+  * Both fast paths exist for the nested-loop plan. When the session has
+  * `RangeJoinStrategy` installed (`graft.plans.GraftExtensions`), the
+  * range-join operators (`BroadcastRangeJoinExec`,
+  * `ShuffledRangeJoinExec`) already emit the all-match and none-match
+  * cases in O(n log m + output), so the extremes probe is skipped and
+  * the join is built lazily.
+  *
+  * Without the strategy, the extremes come from parquet footers when
+  * both inputs are plain scans, else from two tiny all-to-one
+  * aggregates (partial aggregation map-side, single row shuffled).
+  * NOTE: with the default `prune = true` those aggregates run EAGERLY
+  * when this function is called — a deliberate laziness break (two
+  * small jobs buy an asymptotic rewrite of the nested-loop join), same
+  * trade as Dedup.ngramJaccardAuto's probe. Pass `prune = false` for
+  * fully lazy plan construction or when inputs are known to interleave.
   */
 object IneqJoin {
 
@@ -48,10 +56,12 @@ object IneqJoin {
     * search, a silent 100× trap at scale (round-3 judge finding). Warn
     * loudly, once per JVM, at plan-construction time.
     */
-  private def warnIfNoRangeStrategy(df: DataFrame): Unit = {
-    val present = df.sparkSession.sessionState.planner.strategies
+  private def hasRangeStrategy(df: DataFrame): Boolean =
+    df.sparkSession.sessionState.planner.strategies
       .exists(_ eq graft.plans.RangeJoinStrategy)
-    if (!present && !warnedMissingStrategy) {
+
+  private def warnIfNoRangeStrategy(df: DataFrame): Unit = {
+    if (!hasRangeStrategy(df) && !warnedMissingStrategy) {
       warnedMissingStrategy = true
       System.err.println(
         "[graft] WARN: GraftExtensions is not installed in this SparkSession, " +
@@ -89,7 +99,9 @@ object IneqJoin {
       case ">"  => lc > rc
     }
 
-    if (prune) {
+    // the range-join operators handle both extreme cases themselves:
+    // the probe (and its jobs) only pays off for the nested-loop plan
+    if (prune && !hasRangeStrategy(l)) {
       // Reference M4 fast paths (pandance/pandance.py:792-807): compare
       // the extremes under the operator. `<`/`<=`: if max(l) OP min(r)
       // every pair matches; if NOT (min(l) OP max(r)) no pair matches.

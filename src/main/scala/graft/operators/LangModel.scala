@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions
 
@@ -217,7 +218,6 @@ object LangModel {
     require(minBigramCount >= 1 && minUnigramCount >= 1 && minTrigramCount >= 1,
       "buildLmIndex: count cutoffs must be >= 1")
     val spark = train.sparkSession
-    import spark.implicits._
     val trainTrigrams = trigrams(train, textCol).select(
       xxhash64(col("__w1"), col("__w2"), col("__w3")).as("h"))
     val trigramCounts = trainTrigrams.groupBy("h").agg(count(lit(1)).as("c"))
@@ -243,9 +243,11 @@ object LangModel {
         .write.mode("overwrite").parquet(s"$vdir/bigrams")
       unigramCounts.filter(col("c") >= minUnigramCount)
         .write.mode("overwrite").parquet(s"$vdir/unigrams")
-      Seq((vocab, minBigramCount, minUnigramCount, minTrigramCount, nTokens))
-        .toDF("vocab", "min_bigram", "min_unigram", "min_trigram", "n_tokens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "vocab BIGINT NOT NULL, min_bigram BIGINT NOT NULL, " +
+            "min_unigram BIGINT NOT NULL, min_trigram BIGINT NOT NULL, " +
+            "n_tokens BIGINT NOT NULL"),
+        Seq(Row(vocab, minBigramCount, minUnigramCount, minTrigramCount, nTokens)))
     }
     ()
   }
@@ -259,11 +261,11 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    // guard BEFORE collecting: a count is one cheap job; a require that
-    // fires after the driver holds the oversized Row arrays is
-    // documentation, not protection
-    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/bigrams").count() +
-      graft.sources.IndexIO.readTable(spark, s"$vdir/unigrams").count()
+    // guard BEFORE collecting: exact counts from the parquet footers
+    // (no job); a require that fires after the driver holds the
+    // oversized Row arrays is documentation, not protection
+    val entries = graft.sources.IndexIO.countRows(spark, s"$vdir/bigrams") +
+      graft.sources.IndexIO.countRows(spark, s"$vdir/unigrams")
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
@@ -274,7 +276,7 @@ object LangModel {
     }
     val (bk, bc) = sorted("bigrams")
     val (uk, uc) = sorted("unigrams")
-    val vocab = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head().getLong(0)
+    val vocab = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head.getLong(0)
     LmModel(bk, bc, uk, uc, vocab)
   }
 
@@ -318,13 +320,14 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModel3 = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val tri = graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/trigrams")
+    val tri = graft.sources.IndexIO.countRowsIfExists(spark, s"$vdir/trigrams")
     require(tri.isDefined,
       s"LM index at $path has no trigram table (built before order-3 " +
         "support) — rebuild with buildLmIndex")
-    val entries = tri.get.count() +
-      graft.sources.IndexIO.readTable(spark, s"$vdir/bigrams").count() +
-      graft.sources.IndexIO.readTable(spark, s"$vdir/unigrams").count()
+    // footer counts: the guard runs no job
+    val entries = tri.get +
+      graft.sources.IndexIO.countRows(spark, s"$vdir/bigrams") +
+      graft.sources.IndexIO.countRows(spark, s"$vdir/unigrams")
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
@@ -335,7 +338,7 @@ object LangModel {
     val (tk, tc) = sorted("trigrams")
     val (bk, bc) = sorted("bigrams")
     val (uk, uc) = sorted("unigrams")
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
     LmModel3(tk, tc, bk, bc, uk, uc,
       meta.getLong(0), meta.getAs[Long]("n_tokens"))
   }
@@ -570,7 +573,6 @@ object LangModel {
     require(minBigramCount >= 1 && minUnigramCount >= 1,
       "buildKnIndex: count cutoffs must be >= 1")
     val spark = train.sparkSession
-    import spark.implicits._
     val biCounts = bigrams(train, textCol).select(
         xxhash64(col("__w1"), col("__w2")).as("h"),
         xxhash64(col("__w1")).as("h1"),
@@ -595,9 +597,10 @@ object LangModel {
         .write.mode("overwrite").parquet(s"$vdir/fw_types")
       biCounts.groupBy(col("h2").as("h")).agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(s"$vdir/bw_types")
-      Seq((bTypes, vocab, minBigramCount, minUnigramCount))
-        .toDF("b_types", "vocab", "min_bigram", "min_unigram")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "b_types BIGINT NOT NULL, vocab BIGINT NOT NULL, " +
+            "min_bigram BIGINT NOT NULL, min_unigram BIGINT NOT NULL"),
+        Seq(Row(bTypes, vocab, minBigramCount, minUnigramCount)))
     }
     ()
   }
@@ -609,8 +612,9 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): KnModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
+    // footer counts: the guard runs no job
     val entries = Seq("bigrams", "unigrams", "fw_types", "bw_types")
-      .map(t => graft.sources.IndexIO.readTable(spark, s"$vdir/$t").count()).sum
+      .map(t => graft.sources.IndexIO.countRows(spark, s"$vdir/$t")).sum
     require(entries <= maxEntries,
       s"KN model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoffs")
@@ -622,7 +626,7 @@ object LangModel {
     val (uk, uc) = sorted("unigrams")
     val (fk, fc) = sorted("fw_types")
     val (wk, wc) = sorted("bw_types")
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
     KnModel(bk, bc, uk, uc, fk, fc, wk, wc,
       meta.getAs[Long]("b_types"), meta.getAs[Long]("vocab"))
   }
@@ -684,7 +688,6 @@ object LangModel {
     require(order >= 2, s"buildLmIndexN: order must be >= 2, got $order")
     require(minCount >= 1, "buildLmIndexN: count cutoff must be >= 1")
     val spark = train.sparkSession
-    import spark.implicits._
     val unigramCounts = train
       .select(explode(TextFunctions.tokens(col(textCol))).as("__w"))
       .select(xxhash64(col("__w")).as("h"))
@@ -702,9 +705,10 @@ object LangModel {
           .filter(col("c") >= minCount)
           .write.mode("overwrite").parquet(s"$vdir/grams_$k")
       }
-      Seq((order, vocab, nTokens, minCount))
-        .toDF("order", "vocab", "n_tokens", "min_count")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "order INT NOT NULL, vocab BIGINT NOT NULL, n_tokens BIGINT NOT NULL, " +
+            "min_count BIGINT NOT NULL"),
+        Seq(Row(order, vocab, nTokens, minCount)))
     }
     ()
   }
@@ -716,13 +720,15 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModelN = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val metaTable = graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/meta")
-    require(metaTable.exists(_.schema.fieldNames.contains("order")),
+    val metaRow = graft.sources.IndexIO.readRowsIfExists(spark, s"$vdir/meta")
+      .flatMap(_.headOption)
+    require(metaRow.exists(_.schema.fieldNames.contains("order")),
       s"LM index at $path is not an order-N artifact — build with buildLmIndexN")
-    val meta = metaTable.get.head()
+    val meta = metaRow.get
     val order = meta.getAs[Int]("order")
+    // footer counts: the guard runs no job
     val entries = (1 to order)
-      .map(k => graft.sources.IndexIO.readTable(spark, s"$vdir/grams_$k").count()).sum
+      .map(k => graft.sources.IndexIO.countRows(spark, s"$vdir/grams_$k")).sum
     require(entries <= maxEntries,
       s"LM model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoff")

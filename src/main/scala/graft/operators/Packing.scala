@@ -226,11 +226,13 @@ object Packing {
       */
     def saveState(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
       synchronized {
-        import spark.implicits._
-        val rows = carry.toSeq.map { case (c, (b, f)) => (c, b, f) }
+        val rows = carry.toSeq.map { case (c, (b, f)) =>
+          org.apache.spark.sql.Row(c, b, f) }
         graft.sources.IndexIO.publish(spark, path) { vdir =>
-          rows.toDF("chunk", "bin", "fill")
-            .coalesce(1).write.mode("overwrite").parquet(s"$vdir/state")
+          graft.sources.IndexIO.writeRows(spark, s"$vdir/state",
+            org.apache.spark.sql.types.StructType.fromDDL(
+              "chunk BIGINT NOT NULL, bin BIGINT NOT NULL, fill BIGINT NOT NULL"),
+            rows)
         }
         ()
       }
@@ -240,13 +242,14 @@ object Packing {
       synchronized {
         val vdir = graft.sources.IndexIO.resolve(spark, path)
         // count BEFORE collecting — the guard must protect the driver,
-        // not report after the oversized array already landed
-        val n = graft.sources.IndexIO.readTable(spark, s"$vdir/state").count()
+        // not report after the oversized array already landed; the
+        // parquet footers give the exact count with no job
+        val n = graft.sources.IndexIO.countRows(spark, s"$vdir/state")
         require(n <= maxCarryChunks,
           s"IncrementalPacker.restoreState: snapshot at $path holds $n " +
             s"chunks > maxCarryChunks=$maxCarryChunks — raise the cap " +
             "or repack with a coarser chunk expression")
-        carry = graft.sources.IndexIO.readTable(spark, s"$vdir/state").collect()
+        carry = graft.sources.IndexIO.readRows(spark, s"$vdir/state")
           .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       }
   }

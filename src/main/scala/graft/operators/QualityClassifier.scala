@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextFunctions
 
@@ -134,7 +135,6 @@ object QualityClassifier {
       path: String, minCount: Long = 2): Unit = {
     require(minCount >= 1, "buildNbIndex: count cutoff must be >= 1")
     val spark = docs.sparkSession
-    import spark.implicits._
     val lab = docs.select(positive.cast("boolean").as("__pos"),
       col(textCol).as("__t"))
     // materialized once: the pre-prune totals and the pruned write are
@@ -157,9 +157,10 @@ object QualityClassifier {
     graft.sources.IndexIO.publish(spark, path) { vdir =>
       tc.filter(col("cp") + col("cn") >= minCount)
         .write.mode("overwrite").parquet(s"$vdir/tokens")
-      Seq((c.getLong(0), c.getLong(1), c.getLong(2), dp, dn, minCount))
-        .toDF("np", "nn", "v", "dp", "dn", "min_count")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "np BIGINT NOT NULL, nn BIGINT NOT NULL, v BIGINT NOT NULL, " +
+            "dp BIGINT NOT NULL, dn BIGINT NOT NULL, min_count BIGINT NOT NULL"),
+        Seq(Row(c.getLong(0), c.getLong(1), c.getLong(2), dp, dn, minCount)))
     }
     ()
   }
@@ -172,10 +173,11 @@ object QualityClassifier {
   def loadNbModel(spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): NbServingModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").count()
+    // exact count from the parquet footers: the guard runs no job
+    val entries = graft.sources.IndexIO.countRows(spark, s"$vdir/tokens")
     require(entries <= maxEntries,
       s"NB model at $path has $entries entries > $maxEntries; raise the count cutoff")
-    val m = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val m = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
     val (np, nn, v) = (m.getLong(0), m.getLong(1), m.getLong(2))
     val (dp, dn) = (m.getLong(3), m.getLong(4))
     val rows = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").sort("h").collect()
@@ -313,7 +315,6 @@ object QualityClassifier {
       maxClasses: Int = 1000): Unit = {
     require(minCount >= 1, "buildNbMulticlassIndex: count cutoff must be >= 1")
     val spark = docs.sparkSession
-    import spark.implicits._
     val lab = docs.select(col(labelCol).cast("string").as("__lbl"),
       col(textCol).as("__t"))
     val classesRaw = lab.select(col("__lbl")).distinct()
@@ -342,9 +343,10 @@ object QualityClassifier {
     graft.sources.IndexIO.publish(spark, path) { vdir =>
       tokC.filter(classes.indices.map(i => col(s"c$i")).reduce(_ + _) >= minCount)
         .write.mode("overwrite").parquet(s"$vdir/tokens")
-      Seq((classes.toSeq, ns.toSeq, ds.toSeq, v, minCount))
-        .toDF("classes", "ns", "ds", "v", "min_count")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "classes ARRAY<STRING>, ns ARRAY<BIGINT>, ds ARRAY<BIGINT>, " +
+            "v BIGINT NOT NULL, min_count BIGINT NOT NULL"),
+        Seq(Row(classes.toSeq, ns.toSeq, ds.toSeq, v, minCount)))
     }
     ()
   }
@@ -360,11 +362,12 @@ object QualityClassifier {
       path: String, maxEntries: Long = 32L << 20,
       priorWeights: Map[String, Double] = Map.empty): NbMulticlassModel = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val entries = graft.sources.IndexIO.readTable(spark, s"$vdir/tokens").count()
+    // exact count from the parquet footers: the guard runs no job
+    val entries = graft.sources.IndexIO.countRows(spark, s"$vdir/tokens")
     require(entries <= maxEntries,
       s"multiclass NB model at $path has $entries entries > $maxEntries; " +
         "raise the count cutoff")
-    val m = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val m = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
     val classes = m.getSeq[String](0).toArray
     val ns = m.getSeq[Long](1).toArray
     val ds = m.getSeq[Long](2).toArray

@@ -192,24 +192,26 @@ object Search {
       termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    graft.sources.IndexIO.resolve(spark, path) // fail fast on a missing index
-    val prev = chainStats(spark, path).head()
+    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
+    val prev = chainStatsRow(spark, path, segs)
+    // the job that pins the lengths also sums them (an observed
+    // aggregate): the batch's stats and the no-op probe need no job
+    val added = org.apache.spark.sql.Observation()
     val lengths = docs.select(
         col(idCol).as("doc_id"),
         size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
       .filter(col("dl") > 0)
-      .localCheckpoint(true) // scanned for stats, the no-op probe, and the write
-    val add = lengths.agg(
-      count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head()
-    if (add.getLong(0) == 0L) return
-    import spark.implicits._
+      .observe(added, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
+      .localCheckpoint(true)
+    val (addN, addS) = (added.get("n").asInstanceOf[Long], added.get("s").asInstanceOf[Long])
+    if (addN == 0L) return
     // the BASE chain fixes the postings layout: a pre-denormalization
     // artifact (postings without dl) must keep appending WITHOUT dl —
     // chainTable's strict unionByName would otherwise fail on every
     // subsequent read of the mixed chain (bricking the index until a
     // rebuild). Serving re-joins lengths for that layout, and
     // compactBm25Index migrates it to the denormalized one.
-    val baseHasDl = chainPostingsHaveDl(spark, path)
+    val baseHasDl = chainPostingsHaveDl(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       val toks = docs.select(col(idCol).as("doc_id"),
         size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
@@ -226,9 +228,8 @@ object Search {
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$seg/postings")
       lengths.write.mode("overwrite").parquet(s"$seg/lengths")
-      Seq((prev.getLong(0) + add.getLong(0), prev.getLong(1) + add.getLong(1)))
-        .toDF("n_docs", "total_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
+      writeStats(spark, seg,
+        prev.getLong(0) + addN, prev.getLong(1) + addS)
     }
     ()
   }
@@ -246,20 +247,22 @@ object Search {
   def deleteFromBm25Index(
       spark: SparkSession, path: String, ids: DataFrame, idCol: String,
       marker: Option[String] = None): Unit = {
-    import spark.implicits._
-    graft.sources.IndexIO.resolve(spark, path) // fail fast on a missing index
-    val tomb = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
+    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
+    val batchIds = ids.select(col(idCol).cast("long").as("doc_id"))
     // live lengths BEFORE this delete: only still-live docs may shrink
-    // the stats (double-deleting an id must not subtract twice)
-    val del = liveTable(spark, path, "lengths").join(tomb, "doc_id")
+    // the stats (double-deleting an id must not subtract twice). A semi
+    // join counts each live doc once however often the batch names it,
+    // so the correction needs no distinct of the ids
+    val del = liveTable(spark, path, segs, "lengths")
+      .join(batchIds, Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .head()
-    val stats = chainStats(spark, path).head()
+    val stats = chainStatsRow(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      tomb.coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
-      Seq((stats.getLong(0) - del.getLong(0), stats.getLong(1) - del.getLong(1)))
-        .toDF("n_docs", "total_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
+      batchIds.distinct()
+        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      writeStats(spark, seg,
+        stats.getLong(0) - del.getLong(0), stats.getLong(1) - del.getLong(1))
     }
     ()
   }
@@ -270,10 +273,11 @@ object Search {
     */
   def compactBm25Index(
       spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
-    if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val postings0 = liveTable(spark, path, "postings")
-    val lengths = liveTable(spark, path, "lengths")
-    val stats = chainStats(spark, path)
+    val segs = graft.sources.IndexIO.segments(spark, path)
+    if (segs.length <= 1) return
+    val postings0 = liveTable(spark, path, segs, "postings")
+    val lengths = liveTable(spark, path, segs, "lengths")
+    val stats = chainStatsRow(spark, path, segs)
     // compaction is the layout-migration point: a pre-denormalization
     // artifact's postings gain the dl column here (one build-time
     // join), so serving drops the lengths join from this version on
@@ -285,20 +289,22 @@ object Search {
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$nv/postings")
       lengths.write.mode("overwrite").parquet(s"$nv/lengths")
-      stats.coalesce(1).write.mode("overwrite").parquet(s"$nv/stats")
+      writeStats(spark, nv, stats.getLong(0), stats.getLong(1))
     }
     ()
   }
 
-  /** A chain table with the tombstone anti-join applied ([[
+  /** A table of the resolved chain `segs` of the index at `path`, with
+    * the tombstone anti-join applied ([[
     * graft.sources.IndexIO.withoutTombstoned]] — log-ordered, so only
     * rows indexed BEFORE the delete die).
     */
-  private def liveTable(spark: SparkSession, path: String, name: String): DataFrame =
+  private def liveTable(
+      spark: SparkSession, path: String, segs: Seq[String], name: String): DataFrame =
     graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, name).getOrElse(
+      graft.sources.IndexIO.chainTableOf(spark, segs, name).getOrElse(
         throw new IllegalStateException(s"BM25 index at $path has no $name table")),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
+      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
       "doc_id")
 
   /** Whether the chain's postings carry the denormalized `dl` column.
@@ -309,8 +315,9 @@ object Search {
     * fixes the layout every later append must match (chainTable's
     * strict unionByName enforces it on read).
     */
-  private def chainPostingsHaveDl(spark: SparkSession, path: String): Boolean =
-    graft.sources.IndexIO.segments(spark, path).iterator
+  private def chainPostingsHaveDl(
+      spark: SparkSession, path: String, segs: Seq[String]): Boolean =
+    segs.iterator
       .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/postings"))
       .nextOption().getOrElse(throw new IllegalStateException(
         s"cannot append to $path: no segment carries a postings table"))
@@ -325,11 +332,29 @@ object Search {
     * stats-publishing operation, instead of throwing path-not-found on
     * the latest version directory.
     */
-  private def chainStats(spark: SparkSession, path: String): DataFrame =
-    graft.sources.IndexIO.segments(spark, path).reverseIterator
+  private def chainStats(spark: SparkSession, path: String, segs: Seq[String]): DataFrame =
+    segs.reverseIterator
       .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/stats"))
       .nextOption().getOrElse(throw new IllegalStateException(
         s"index at $path has no stats table"))
+
+  /** [[chainStats]]' one row, read on the driver with no Spark job — for
+    * the maintenance paths that correct the stats and write them back.
+    */
+  private def chainStatsRow(
+      spark: SparkSession, path: String, segs: Seq[String]): org.apache.spark.sql.Row =
+    segs.reverseIterator
+      .flatMap(s => graft.sources.IndexIO.readRowsIfExists(spark, s"$s/stats"))
+      .nextOption().flatMap(_.headOption).getOrElse(throw new IllegalStateException(
+        s"index at $path has no stats table"))
+
+  private val StatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "n_docs BIGINT NOT NULL, total_dl BIGINT NOT NULL")
+
+  /** The one-row `stats` table of a new version, written on the driver. */
+  private def writeStats(spark: SparkSession, vdir: String, nDocs: Long, totalDl: Long): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/stats", StatsSchema,
+      Seq(org.apache.spark.sql.Row(nDocs, totalDl)))
 
   /** Serve a BM25 top-k from a [[buildBm25Index]] (or
     * [[buildLexicalIndex]] — column pruning drops the positions) index.
@@ -348,18 +373,23 @@ object Search {
       b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25SearchIndex: empty query")
     val terms = queryTerms.distinct
+    // ONE resolve: postings, tombstones and stats all come from this
+    // version's chain, so a publish (or a compaction that drops the
+    // tombstone segments) landing mid-call cannot pair one version's
+    // postings with another's tombstones and resurrect deleted docs
+    val segs = graft.sources.IndexIO.segments(spark, path)
     val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "postings").getOrElse(
+      graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
         throw new IllegalStateException(s"BM25 index at $path has no postings table"))
         .filter(col("term").isin(terms: _*)),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
+      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
       "doc_id")
     // lengths is BY-NAME into the scorer: the current layout carries dl
     // in every posting row, so resolving the corpus-sized lengths chain
     // (one listing + footer read per segment, per query) only happens
     // for pre-denormalization artifacts that actually join it
-    def lengths = liveTable(spark, path, "lengths")
-    val stats = chainStats(spark, path)
+    def lengths = liveTable(spark, path, segs, "lengths")
+    val stats = chainStats(spark, path, segs)
     bm25ScoreIndexed(postings, lengths, stats, k, k1, b)
   }
 
@@ -1139,8 +1169,9 @@ object Search {
     */
   def compactPositionalIndex(
       spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
-    if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val postings = liveTable(spark, path, "postings")
+    val segs = graft.sources.IndexIO.segments(spark, path)
+    if (segs.length <= 1) return
+    val postings = liveTable(spark, path, segs, "postings")
     graft.sources.IndexIO.publish(spark, path) { nv =>
       postings.repartition(col("term")) // AQE sizes the partition count from actual bytes
         .sortWithinPartitions("term", "doc_id")
@@ -1236,21 +1267,23 @@ object Search {
       termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    graft.sources.IndexIO.resolve(spark, path) // fail fast on a missing index
-    val prev = chainStats(spark, path).head()
+    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
+    val prev = chainStatsRow(spark, path, segs)
+    // the job that pins the lengths also sums them (an observed
+    // aggregate): the batch's stats and the no-op probe need no job
+    val added = org.apache.spark.sql.Observation()
     val lengths = docs.select(
         col(idCol).cast("long").as("doc_id"),
         size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
       .filter(col("dl") > 0)
+      .observe(added, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .localCheckpoint(true)
-    val add = lengths.agg(
-      count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head()
-    if (add.getLong(0) == 0L) return
-    import spark.implicits._
+    val (addN, addS) = (added.get("n").asInstanceOf[Long], added.get("s").asInstanceOf[Long])
+    if (addN == 0L) return
     // match the BASE chain's postings layout (see appendToBm25Index):
     // a pre-denormalization lexical artifact keeps appending without
     // dl so the chain union stays schema-consistent
-    val baseHasDl = chainPostingsHaveDl(spark, path)
+    val baseHasDl = chainPostingsHaveDl(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
       val toks = docs
         .select(col(idCol).cast("long").as("doc_id"),
@@ -1269,9 +1302,8 @@ object Search {
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$seg/postings")
       lengths.write.mode("overwrite").parquet(s"$seg/lengths")
-      Seq((prev.getLong(0) + add.getLong(0), prev.getLong(1) + add.getLong(1)))
-        .toDF("n_docs", "total_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
+      writeStats(spark, seg,
+        prev.getLong(0) + addN, prev.getLong(1) + addS)
     }
     ()
   }
@@ -1294,8 +1326,10 @@ object Search {
       positionalPath: String,
       outPath: String,
       termBuckets: Int = 64): Unit = {
-    val lengths = liveTable(spark, bm25Path, "lengths")
-    val posBare = liveTable(spark, positionalPath, "postings")
+    val bm25Segs = graft.sources.IndexIO.segments(spark, bm25Path)
+    val lengths = liveTable(spark, bm25Path, bm25Segs, "lengths")
+    val posBare = liveTable(spark, positionalPath,
+      graft.sources.IndexIO.segments(spark, positionalPath), "postings")
       .select(col("term"), col("doc_id"),
         size(col("positions")).cast("long").as("tf"), col("positions"))
     // dl joins in ONCE here (a compact is a build-time job) so the
@@ -1303,8 +1337,8 @@ object Search {
     // divergence check below counts the PRE-join doc set, so the inner
     // join can never mask a positional-only doc by dropping it
     val posLive = posBare.join(lengths, "doc_id")
-    val stats = chainStats(spark, bm25Path)
-    val nDocs = stats.head().getLong(0)
+    val stats = chainStatsRow(spark, bm25Path, bm25Segs)
+    val nDocs = stats.getLong(0)
     // SET comparison, not count comparison: one delete applied to each
     // chain but to DIFFERENT ids leaves the counts equal while the doc
     // sets diverge — the inner lengths join would then silently drop
@@ -1328,7 +1362,7 @@ object Search {
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$nv/postings")
       lengths.write.mode("overwrite").parquet(s"$nv/lengths")
-      stats.coalesce(1).write.mode("overwrite").parquet(s"$nv/stats")
+      writeStats(spark, nv, nDocs, stats.getLong(1))
     }
     ()
   }
@@ -1367,18 +1401,19 @@ object Search {
     // ONE probe of the artifact: the union term set is pushed to the
     // bucket scan, and the eager checkpoint pins the single read that
     // both legs consume
+    val segs = graft.sources.IndexIO.segments(spark, path)
     val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "postings").getOrElse(
+      graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
         throw new IllegalStateException(
           s"lexical index at $path has no postings table"))
         .filter(col("term").isin(allTerms: _*)),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
+      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
       "doc_id")
       .localCheckpoint(true)
     // by-name into the scorer (see bm25SearchIndex): only resolved for
     // pre-denormalization artifacts whose postings lack dl
-    def lengths = liveTable(spark, path, "lengths")
-    val stats = chainStats(spark, path)
+    def lengths = liveTable(spark, path, segs, "lengths")
+    val stats = chainStats(spark, path, segs)
 
     val lexCols =
       if (postings.columns.contains("dl")) Seq("doc_id", "term", "tf", "dl")

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions
 
@@ -42,8 +43,7 @@ object SimilaritySearch {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
       for (t <- Seq("centroids", "codebook", "meta"))
-        graft.sources.IndexIO.readTableIfExists(spark, s"$vdir/$t").foreach(
-          _.repartition(1).write.mode("overwrite").parquet(s"$seg/$t"))
+        graft.sources.IndexIO.copyRowsIfExists(spark, s"$vdir/$t", s"$seg/$t")
       ids.select(col(idCol).as("neighbor_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
     }
@@ -104,16 +104,37 @@ object SimilaritySearch {
     // is routinely a false alarm that silently degrades a trivially
     // broadcastable query set to a full shuffle of the corpus (guide
     // §3.1: estimates are often badly wrong after filters — confirm
-    // before refusing). Confirm with a BOUNDED exact probe: count at
-    // most capRows+1 rows of the query frame (the scan stops feeding
-    // past the limit), where capRows is how many rows of the charged
-    // width fit under the threshold. Streaming frames can't run the
-    // probe job; they keep the conservative estimate.
+    // before refusing). Confirm with a BOUNDED exact probe over at most
+    // capRows+1 rows of the query frame (the scan stops feeding past
+    // the limit), where capRows is how many of the narrowest possible
+    // rows (an 8-byte null bitmap plus one 8-byte slot) fit under the
+    // threshold with the charged payload: the probe sums the MEASURED
+    // unsafe-row size of every row it sees, so a frame of wide vector
+    // rows trips on its real width, not on a fixed per-row floor.
+    // Streaming frames can't run the probe job; they keep the
+    // conservative estimate.
     if (queries.isStreaming) return true
-    val width = extraBytesPerRow + 32L
-    val capRows = math.min(cap / width, 4L << 20)
-    val n = queries.limit((capRows + 1).toInt).count()
-    n > capRows
+    val capRows = math.min(cap / (extraBytesPerRow + 16L), 4L << 20)
+    val (n, bytes) = rowsAndBytes(queries.limit((capRows + 1).toInt))
+    n > capRows || bytes + n * extraBytesPerRow > cap
+  }
+
+  /** Row count and total unsafe-row bytes of `df`, in one job. */
+  private def rowsAndBytes(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    val schema = df.schema
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      var n, bytes = 0L
+      rows.foreach { r =>
+        n += 1
+        bytes += (r match {
+          case u: UnsafeRow => u.getSizeInBytes
+          case other => toUnsafe(other).getSizeInBytes
+        })
+      }
+      Iterator.single((n, bytes))
+    }.fold((0L, 0L)) { case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2) }
   }
 
   /** Broadcast `df` unless the caller's guard tripped: the oversized
@@ -690,7 +711,6 @@ object SimilaritySearch {
       marker: Option[String] = None): Unit = {
     require(k >= 2, s"buildSemDedupIndex: k must be >= 2, got $k")
     val spark = df.sparkSession
-    import spark.implicits._
     val c = prepared(df, idCol, vecCol, "neighbor_id", "__cv", "__cn")
       .select(col("neighbor_id").cast("long").as("neighbor_id"),
         col("__cv"), col("__cn"))
@@ -698,17 +718,13 @@ object SimilaritySearch {
     val centroids = trainCentroids(c, k, iters)
     val state = semDeDupState(c, centroids, threshold)
     graft.sources.IndexIO.publish(spark, path, marker) { vdir =>
-      centroidTable(spark, centroids)
-        .select(col("__cell").as("cell"), col("__ctv").as("centroid"),
-          col("__ctn").as("cnorm"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$vdir/centroids")
+      writeCentroids(spark, vdir, centroids)
       state.select(col("__id").as("neighbor_id"), col("__cv").as("vec"),
           col("__cn").as("norm"), col("cluster"), col("__ccos").as("ccos"),
           coalesce(col("component"), col("__id")).as("component"))
         .write.mode("overwrite").parquet(s"$vdir/members")
-      Seq(threshold).toDF("threshold")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta",
+        StructType.fromDDL("threshold DOUBLE NOT NULL"), Seq(Row(threshold)))
     }
     ()
   }
@@ -778,10 +794,9 @@ object SimilaritySearch {
       batch: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val threshold = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val threshold = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
       .getAs[Double]("threshold")
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").orderBy(col("cell"))
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
+    val cents = readCentroids(spark, vdir)
     val c = prepared(batch, idCol, vecCol, "neighbor_id", "__cv", "__cn")
       .select(col("neighbor_id").cast("long").as("neighbor_id"),
         col("__cv"), col("__cn"))
@@ -819,10 +834,8 @@ object SimilaritySearch {
       .localCheckpoint(true) // consumed twice (labels + remaps)
     val labels = comps.select(col("id").as("__id"), col("component"))
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").repartition(1)
-        .write.mode("overwrite").parquet(s"$seg/centroids")
-      graft.sources.IndexIO.readTable(spark, s"$vdir/meta").coalesce(1)
-        .write.mode("overwrite").parquet(s"$seg/meta")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$seg/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/meta", s"$seg/meta")
       assigned.join(labels, Seq("__id"), "left")
         .select(col("__id").as("neighbor_id"), col("__cv").as("vec"),
           col("__cn").as("norm"), col("cluster"), col("__ccos").as("ccos"),
@@ -881,8 +894,7 @@ object SimilaritySearch {
       // rule), so later appends/compactions resolve them from the
       // latest version dir even when that version is this takedown
       for (t <- Seq("centroids", "meta"))
-        graft.sources.IndexIO.readTable(spark, s"$vdir/$t").repartition(1)
-          .write.mode("overwrite").parquet(s"$seg/$t")
+        graft.sources.IndexIO.copyRows(spark, s"$vdir/$t", s"$seg/$t")
       ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
     }
@@ -899,12 +911,10 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta")
     val m = resolvedSemDedupMembers(spark, path)
     graft.sources.IndexIO.publish(spark, path) { nv =>
-      cents.repartition(1).write.mode("overwrite").parquet(s"$nv/centroids")
-      meta.coalesce(1).write.mode("overwrite").parquet(s"$nv/meta")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$nv/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/meta", s"$nv/meta")
       m.write.mode("overwrite").parquet(s"$nv/members")
     }
     ()
@@ -1081,6 +1091,42 @@ object SimilaritySearch {
       .toDF("__cell", "__ctv", "__ctn")
   }
 
+  /** A version's `centroids` table `(cell, centroid, cnorm)`, written on
+    * the driver, which trained them.
+    */
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+      vdir: String, centroids: Array[Array[Double]]): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/centroids",
+      StructType.fromDDL("cell INT NOT NULL, centroid ARRAY<DOUBLE>, cnorm DOUBLE NOT NULL"),
+      centroids.toSeq.zipWithIndex.map { case (v, i) =>
+        Row(i, v.toSeq, math.sqrt(v.map(x => x * x).sum)) })
+
+  /** The centroid matrix of a version, in cell order, read on the driver. */
+  private def readCentroids(
+      spark: org.apache.spark.sql.SparkSession, vdir: String): Array[Array[Double]] =
+    graft.sources.IndexIO.readRows(spark, s"$vdir/centroids")
+      .sortBy(_.getAs[Int]("cell"))
+      .map(_.getAs[Seq[Double]]("centroid").toArray).toArray
+
+  /** A version's one-row PQ `codebook` table `(m, k_codes, sub_dim, cb)`,
+    * written on the driver.
+    */
+  private def writeCodebook(spark: org.apache.spark.sql.SparkSession,
+      vdir: String, book: (Int, Int, Int, Array[Double])): Unit =
+    graft.sources.IndexIO.writeRows(spark, s"$vdir/codebook",
+      StructType.fromDDL(
+        "m INT NOT NULL, k_codes INT NOT NULL, sub_dim INT NOT NULL, cb ARRAY<DOUBLE>"),
+      Seq(Row(book._1, book._2, book._3, book._4.toSeq)))
+
+  /** `(m, kCodes, subDim, flattened codebooks)` of a version, read on
+    * the driver.
+    */
+  private def readCodebook(spark: org.apache.spark.sql.SparkSession, vdir: String)
+      : (Int, Int, Int, Array[Double]) = {
+    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/codebook").head
+    (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getSeq[Double](3).toArray)
+  }
+
   /** Train an IVF index ONCE and persist it (the index lifecycle a
     * 100 TB ANN deployment needs — [[ivfTopK]] retrains per call):
     *
@@ -1104,11 +1150,7 @@ object SimilaritySearch {
     // centroids + cells publish atomically (IndexIO): a probe can never
     // pair one training run's centroids with another's cell assignments
     graft.sources.IndexIO.publish(c.sparkSession, indexDir, marker) { vdir =>
-      centroidTable(c.sparkSession, centroids)
-        .select(col("__cell").as("cell"), col("__ctv").as("centroid"),
-          col("__ctn").as("cnorm"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$vdir/centroids")
+      writeCentroids(c.sparkSession, vdir, centroids)
       c.withColumn("cell", bestCellExpr(col("__cv"), centroids))
         .select(col("neighbor_id"), col("__cv").as("vec"), col("__cn").as("norm"),
           col("cell"))
@@ -1133,9 +1175,7 @@ object SimilaritySearch {
       newVectors: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-      .orderBy(col("cell"))
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
+    val cents = readCentroids(spark, vdir)
     val c = prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
     // fail loudly on a dimension mismatch: bestCellExpr would otherwise
     // zip the shorter prefix and assign every new vector a garbage cell.
@@ -1149,9 +1189,7 @@ object SimilaritySearch {
       s"appendToIvfIndex: new vectors have dim ${newDim.get} but the index at " +
         s"$indexDir was trained on dim ${cents(0).length}")
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$seg/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$seg/centroids")
       c.withColumn("cell", bestCellExpr(col("__cv"), cents))
         .select(col("neighbor_id"), col("__cv").as("vec"), col("__cn").as("norm"),
           col("cell"))
@@ -1172,12 +1210,11 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
     // liveChain: tombstoned rows die physically here, and the fresh
     // single-segment publish carries no tombstone table forward
     val cells = liveChain(spark, indexDir, "cells")
     graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      cents.repartition(1).write.mode("overwrite").parquet(s"$nv/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$nv/centroids")
       cells.write.mode("overwrite").partitionBy("cell").parquet(s"$nv/cells")
     }
     ()
@@ -1200,11 +1237,7 @@ object SimilaritySearch {
       .localCheckpoint(true)
     val centroids = trainCentroids(c, nCentroids, iters)
     graft.sources.IndexIO.publish(c.sparkSession, indexDir, marker) { vdir =>
-      centroidTable(c.sparkSession, centroids)
-        .select(col("__cell").as("cell"), col("__ctv").as("centroid"),
-          col("__ctn").as("cnorm"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$vdir/centroids")
+      writeCentroids(c.sparkSession, vdir, centroids)
       c.withColumn("cell", bestCellExpr(col("__cv"), centroids))
         .select(col("neighbor_id"),
           VectorFunctions.sq8Quantize(col("__cv")).as("qvec"), col("cell"))
@@ -1229,9 +1262,7 @@ object SimilaritySearch {
       newVectors: DataFrame, idCol: String, vecCol: String,
       marker: Option[String] = None): Unit = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-      .orderBy(col("cell"))
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
+    val cents = readCentroids(spark, vdir)
     val c = prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
     val newDim = c.select(size(col("__cv"))).limit(1).collect()
       .headOption.map(_.getInt(0))
@@ -1240,9 +1271,7 @@ object SimilaritySearch {
       s"appendToIvfSq8Index: new vectors have dim ${newDim.get} but the index " +
         s"at $indexDir was trained on dim ${cents(0).length}")
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$seg/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$seg/centroids")
       c.withColumn("cell", bestCellExpr(col("__cv"), cents))
         .select(col("neighbor_id"),
           VectorFunctions.sq8Quantize(col("__cv")).as("qvec"), col("cell"))
@@ -1386,8 +1415,7 @@ object SimilaritySearch {
       threshold: Double, nProbe: Int = 4): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     // k×dim model, collected once at plan time (same bound as training)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids").orderBy("cell")
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
+    val cents = readCentroids(spark, vdir)
     require(nProbe >= 1 && nProbe <= cents.length,
       s"dedupAgainstIvfIndex: nProbe $nProbe outside [1, ${cents.length}]")
     val cells = liveChain(spark, indexDir, "cells")
@@ -1754,15 +1782,9 @@ object SimilaritySearch {
       sampleN, pqIters)
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     val spark = corpus.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, indexDir, marker) { vdir =>
-      centroidTable(spark, centroids)
-        .select(col("__cell").as("cell"), col("__ctv").as("centroid"),
-          col("__ctn").as("cnorm"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$vdir/centroids")
-      Seq((m, kCodes, subDim, cb.toSeq)).toDF("m", "k_codes", "sub_dim", "cb")
-        .repartition(1).write.mode("overwrite").parquet(s"$vdir/codebook")
+      writeCentroids(spark, vdir, centroids)
+      writeCodebook(spark, vdir, (m, kCodes, subDim, cb))
       val encoded = c.select(
           (col("neighbor_id") +:
             toColumn(graft.functions.IvfPqEncodeExpr(
@@ -1791,12 +1813,8 @@ object SimilaritySearch {
     */
   private def loadIvfPqModel(spark: org.apache.spark.sql.SparkSession, vdir: String)
       : (Array[Array[Double]], Array[Double], Int, Int, Int, Int, Array[Double]) = {
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-      .orderBy(col("cell"))
-      .select("centroid").collect().map(_.getSeq[Double](0).toArray)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook").collect()(0)
-    val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = meta.getSeq[Double](3).toArray
+    val cents = readCentroids(spark, vdir)
+    val (m, kCodes, subDim, cb) = readCodebook(spark, vdir)
     val cnorms = cents.map(v => math.sqrt(v.map(x => x * x).sum))
     (cents, cnorms, cents(0).length, m, kCodes, subDim, cb)
   }
@@ -1833,10 +1851,8 @@ object SimilaritySearch {
     val (flat, _, _) = flatCentroids(cents)
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      graft.sources.IndexIO.readTable(spark, s"$vdir0/centroids")
-        .repartition(1).write.mode("overwrite").parquet(s"$seg/centroids")
-      graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook")
-        .repartition(1).write.mode("overwrite").parquet(s"$seg/codebook")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir0/centroids", s"$seg/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir0/codebook", s"$seg/codebook")
       val nv = (metaCol match {
         case Some(mc) => newVectors.select(
           col(idCol).as("neighbor_id"),
@@ -1874,8 +1890,6 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
-    val cbdf = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook")
     val cells = liveChain(spark, indexDir, "cells")
     // vectors side-file is optional (indexes built before it existed);
     // carry it forward when present so rerank stays self-contained
@@ -1888,8 +1902,8 @@ object SimilaritySearch {
       if (cells.schema.fieldNames.contains("meta")) Seq("cell", "meta")
       else Seq("cell")
     graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      cents.repartition(1).write.mode("overwrite").parquet(s"$nv/centroids")
-      cbdf.repartition(1).write.mode("overwrite").parquet(s"$nv/codebook")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$nv/centroids")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/codebook", s"$nv/codebook")
       cells.write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$nv/cells")
       vecs.foreach(_.write.mode("overwrite").parquet(s"$nv/vectors"))
     }
@@ -2086,10 +2100,8 @@ object SimilaritySearch {
     val cb = trainPqCodebooks(sample, m, kCodes, subDim, iters)
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     val spark = corpus.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, indexDir, marker) { vdir =>
-      Seq((m, kCodes, subDim, cb.toSeq)).toDF("m", "k_codes", "sub_dim", "cb")
-        .repartition(1).write.mode("overwrite").parquet(s"$vdir/codebook")
+      writeCodebook(spark, vdir, (m, kCodes, subDim, cb))
       cv.select(col("neighbor_id"),
           toColumn(graft.functions.PqEncodeExpr(
             toExpression(col("__cv")), m, kCodes, subDim, cb)).as("__pq"))
@@ -2111,9 +2123,7 @@ object SimilaritySearch {
       indexDir: String, marker: Option[String] = None): Unit = {
     val spark = newVectors.sparkSession
     val vdir0 = graft.sources.IndexIO.resolve(spark, indexDir)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook").collect()(0)
-    val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = meta.getSeq[Double](3).toArray
+    val (m, kCodes, subDim, cb) = readCodebook(spark, vdir0)
     // same loud-failure contract as appendToIvfIndex: a mismatched dim
     // must not reach the encode kernel as an array-bounds error;
     // empty batch -> no-op (see appendToIvfIndex)
@@ -2125,8 +2135,7 @@ object SimilaritySearch {
         s"$indexDir encodes dim ${m * subDim} (m=$m x subDim=$subDim)")
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { vdir =>
-      graft.sources.IndexIO.readTable(spark, s"$vdir0/codebook")
-        .repartition(1).write.mode("overwrite").parquet(s"$vdir/codebook")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir0/codebook", s"$vdir/codebook")
       prepared(newVectors, idCol, vecCol, "neighbor_id", "__cv", "__cn")
         .select(col("neighbor_id"),
           toColumn(graft.functions.PqEncodeExpr(
@@ -2149,10 +2158,9 @@ object SimilaritySearch {
     val segs = graft.sources.IndexIO.segments(spark, indexDir)
     if (segs.length <= 1) return
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cb = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook")
     val codes = liveChain(spark, indexDir, "codes")
     graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      cb.repartition(1).write.mode("overwrite").parquet(s"$nv/codebook")
+      graft.sources.IndexIO.copyRows(spark, s"$vdir/codebook", s"$nv/codebook")
       codes.write.mode("overwrite").parquet(s"$nv/codes")
     }
     ()
@@ -2167,9 +2175,7 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/codebook").collect()(0)
-    val (m, kCodes, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = meta.getSeq[Double](3).toArray
+    val (m, kCodes, subDim, cb) = readCodebook(spark, vdir)
     val codes = liveChain(spark, indexDir, "codes")
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     val q = prepared(queries, idCol, vecCol, "query_id", "__qv", "__qn")

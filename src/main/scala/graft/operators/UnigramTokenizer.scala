@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{TextFunctions, UnigramCountExpr, UnigramDecodeExpr, UnigramIdsExpr, UnigramKernel, UnigramTokensExpr}
 
@@ -162,13 +163,14 @@ object UnigramTokenizer {
     val vocab = trainUnigram(docs, textCol, trainWords, maxPieceLen,
       seedPieces, emIters)
     val spark = docs.sparkSession
-    import spark.implicits._
     graft.sources.IndexIO.publish(spark, path) { vdir =>
-      vocab.toDF("piece", "score")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/vocab")
-      Seq((trainWords, maxPieceLen, seedPieces, emIters))
-        .toDF("train_words", "max_piece_len", "seed_pieces", "em_iters")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/vocab",
+        StructType.fromDDL("piece STRING, score BIGINT NOT NULL"),
+        vocab.map { case (p, sc) => Row(p, sc) })
+      graft.sources.IndexIO.writeRows(spark, s"$vdir/meta", StructType.fromDDL(
+          "train_words INT NOT NULL, max_piece_len INT NOT NULL, " +
+            "seed_pieces INT NOT NULL, em_iters INT NOT NULL"),
+        Seq(Row(trainWords, maxPieceLen, seedPieces, emIters)))
     }
     ()
   }
@@ -177,9 +179,10 @@ object UnigramTokenizer {
     * [[buildUnigramIndex]] artifact. */
   def loadUnigramVocab(spark: SparkSession, path: String): Seq[(String, Long)] = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.readTable(spark, s"$vdir/vocab")
-      .orderBy("piece")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // hex pieces: String order is the byte order Spark sorts by
+    graft.sources.IndexIO.readRows(spark, s"$vdir/vocab")
+      .map(r => (r.getString(0), r.getLong(1)))
+      .sortBy(_._1)
   }
 
   /** The document's unigram tokens as hex strings (word piece lists

@@ -89,7 +89,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Reads ([[readTable]], [[chainTable]]) take each segment table's
   * schema from one parquet footer on the driver, with no
-  * schema-inference Spark job.
+  * schema-inference Spark job. Small tables the driver holds anyway
+  * (stats, meta, params, centroids, codebooks) are read and written on
+  * the driver with no Spark job at all ([[readRows]], [[writeRows]]),
+  * and memory guards count rows from the parquet footers
+  * ([[countRows]]).
   */
 object IndexIO {
 
@@ -701,7 +705,17 @@ object IndexIO {
   def chainTable(spark: SparkSession, path: String, name: String,
       allowMissingColumns: Boolean = false)
       : Option[org.apache.spark.sql.DataFrame] =
-    segments(spark, path).zipWithIndex.flatMap { case (s, i) =>
+    chainTableOf(spark, segments(spark, path), name, allowMissingColumns)
+
+  /** [[chainTable]] over an already-resolved segment chain: a reader
+    * that needs several tables of ONE version resolves [[segments]]
+    * once and builds every read from that list, so a publish between
+    * its reads cannot pair tables of different versions.
+    */
+  def chainTableOf(spark: SparkSession, segs: Seq[String], name: String,
+      allowMissingColumns: Boolean = false)
+      : Option[org.apache.spark.sql.DataFrame] =
+    segs.zipWithIndex.flatMap { case (s, i) =>
       readTableIfExists(spark, new Path(s, name).toString)
         .map(_.withColumn("__seg", org.apache.spark.sql.functions.lit(i)))
     }.reduceOption(_.unionByName(_, allowMissingColumns))
@@ -730,17 +744,9 @@ object IndexIO {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, InMemoryFileIndex, NoopCache}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(dir))
-    // plain statuses carry no block locations, so the scan of a flat
-    // table schedules without locality preferences; index tables are
-    // small next to the corpus they index
-    val listing =
-      try fs.listStatus(root)
-      catch { case _: java.io.FileNotFoundException => return None }
+    val (root, data) = listTable(spark, dir).getOrElse(return None)
     // a partitionBy layout nests its files one directory per value:
     // there Spark's index lists the tree itself
-    val data = listing.filterNot(st => hiddenName(st.getPath.getName))
     val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None,
       if (data.exists(_.isDirectory)) NoopCache else new ListedFiles(root, data))
     // Spark's inference reads the first data file in path order; with
@@ -753,6 +759,112 @@ object IndexIO {
     Some(spark.baseRelationToDataFrame(HadoopFsRelation(
       index, parts, org.apache.spark.sql.GraftInternals.asNullable(dataSchema), None,
       new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** The qualified root of table `dir` and its data entries (files, or
+    * partition directories), from one listing; None when `dir` does not
+    * exist. Plain statuses carry no block locations, so the scan of a
+    * flat table schedules without locality preferences; index tables are
+    * small next to the corpus they index.
+    */
+  private def listTable(spark: SparkSession, dir: String)
+      : Option[(Path, Array[FileStatus])] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(dir))
+    try Some((root, fs.listStatus(root).filterNot(st => hiddenName(st.getPath.getName))))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The data files of a flat table, in path order; a `partitionBy`
+    * table is refused (its partition values live in directory names).
+    */
+  private def flatFiles(dir: String, data: Array[FileStatus]): Seq[FileStatus] = {
+    require(!data.exists(_.isDirectory),
+      s"IndexIO: $dir is a partitioned table; read it with readTable")
+    data.toSeq.sortBy(_.getPath.toString)
+  }
+
+  /** Every row of a driver-sized index table (stats, meta, params,
+    * centroids, codebooks), decoded on the driver with no Spark job: one
+    * listing, as [[readTable]]; each file's schema from its footer, by
+    * Spark's rule; rows through Spark's own parquet record reader. Files
+    * are read in path order, rows in file order. Flat tables only. A
+    * missing directory, or one without a data file, fails with Spark's
+    * own error.
+    */
+  def readRows(spark: SparkSession, dir: String): Seq[org.apache.spark.sql.Row] =
+    readRowsIfExists(spark, dir).getOrElse(spark.read.parquet(dir).collect().toSeq)
+
+  /** [[readRows]], or None when `dir` does not exist. */
+  private[graft] def readRowsIfExists(spark: SparkSession, dir: String)
+      : Option[Seq[org.apache.spark.sql.Row]] =
+    decodeIfExists(spark, dir).map(_._2)
+
+  /** A flat table's schema (its first file's, as Spark's inference
+    * picks) and all its rows, decoded on the driver; None when `dir`
+    * does not exist.
+    */
+  private def decodeIfExists(spark: SparkSession, dir: String)
+      : Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])] = {
+    import org.apache.spark.sql.execution.datasources.parquet.GraftParquetRows
+    val (_, data) = listTable(spark, dir).getOrElse(return None)
+    val files = flatFiles(dir, data)
+    if (files.isEmpty) spark.read.parquet(dir) // Spark's unable-to-infer error
+    val decoded = files.map(GraftParquetRows.read(spark, _))
+    Some((decoded.head._1, decoded.flatMap(_._2)))
+  }
+
+  /** Copy a driver-sized table (a model table that every segment of a
+    * chain carries forward) from `from` into `to` as one file, under
+    * the source's footer schema and with no Spark job; false when
+    * `from` does not exist.
+    */
+  private[graft] def copyRowsIfExists(spark: SparkSession, from: String, to: String)
+      : Boolean =
+    decodeIfExists(spark, from).exists { case (schema, rows) =>
+      writeRows(spark, to, schema, rows)
+      true
+    }
+
+  /** [[copyRowsIfExists]] for a table that must exist: a missing `from`
+    * fails with Spark's own error.
+    */
+  private[graft] def copyRows(spark: SparkSession, from: String, to: String): Unit =
+    if (!copyRowsIfExists(spark, from, to)) spark.read.parquet(from)
+
+  /** Write `rows` under `schema` as one parquet file in table directory
+    * `dir`, on the driver and with no Spark job, through Spark's own
+    * writer (`ParquetFileFormat.prepareWrite` and its
+    * `OutputWriterFactory`): codec, timestamp type and row metadata
+    * follow the session conf as a `DataFrameWriter` write would. The
+    * file is written in place with no `_SUCCESS` marker, so `dir` must
+    * lie inside a version directory that is not yet published — every
+    * index build's tables do. For tables the driver already holds.
+    */
+  def writeRows(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): Unit =
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetRows
+      .write(spark, dir, schema, rows)
+
+  /** The exact row count of a flat table, summed from its parquet
+    * footers on the driver — the memory guards' count, with no Spark
+    * job. A missing directory fails with Spark's own error.
+    */
+  def countRows(spark: SparkSession, dir: String): Long =
+    countRowsIfExists(spark, dir).getOrElse(spark.read.parquet(dir).count())
+
+  /** [[countRows]], or None when `dir` does not exist. */
+  private[graft] def countRowsIfExists(spark: SparkSession, dir: String): Option[Long] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (_, data) = listTable(spark, dir).getOrElse(return None)
+    Some(flatFiles(dir, data).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
+      try reader.getRecordCount finally reader.close()
+    }.sum)
   }
 
   /** Spark's listing filter: `_` and `.` names are metadata, not data;

@@ -595,7 +595,7 @@ object Streaming {
         graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
       else data.drop("__seg")
     }
-    val meta = graft.sources.IndexIO.readTable(spark, s"$vdir/meta").head()
+    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
     val (n, numHashes, bands) =
       (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
     val sh = stream
@@ -937,32 +937,51 @@ object Streaming {
       bootstrap: (DataFrame, String) => Unit)(
       append: (DataFrame, String) => Unit)(
       compact: SparkSession => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startChain(stream, checkpointDir) { (batch, batchId, marker) =>
+      if (!batch.isEmpty)
+        applyChainBatch(batch.sparkSession, path, marker, batchId, compactEvery,
+          vacuumEvery, vacuumRetain)(bootstrap(batch, marker))(
+          append(batch, marker))(compact)
+    }
+
+  /** Start the `foreachBatch` stream of a chain maintainer: `step`
+    * receives each micro-batch with its id and its applied-batch marker.
+    */
+  private def startChain(stream: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long, String) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val sid = streamMarkerId(stream.sparkSession, checkpointDir)
-    val step: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val s = batch.sparkSession
-      if (!batch.isEmpty) {
-        val marker = s"b$batchId-$sid"
-        applyIndexBatch(s, path, marker)(bootstrap(batch, marker))(
-          append(batch, marker))
-        maybeCompact(s, path, compactEvery)(compact(s))
-        // vacuum cadence: every publish (append, compact) retires a
-        // version dir that publish-time pruning retains only up to its
-        // default window — an unattended year-long stream would
-        // otherwise accumulate retired versions without bound. Age
-        // bound: only in-flight debris older than a day is reclaimed
-        // (IndexIO.vacuum's stale rule — a live concurrent build looks
-        // identical to a crash), and `vacuumRetain` committed versions
-        // survive so a reader resolved against the PREVIOUS version
-        // keeps its data through the next publish.
-        if (vacuumEvery > 0 && batchId > 0 && batchId % vacuumEvery == 0)
-          graft.sources.IndexIO.vacuum(s, path, retainVersions = vacuumRetain)
-      }
-    }
+    val run: (DataFrame, Long) => Unit =
+      (batch, batchId) => step(batch, batchId, s"b$batchId-$sid")
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(step)
+      .foreachBatch(run)
       .start()
+  }
+
+  /** One non-empty micro-batch of a chain maintainer: apply it
+    * exactly-once ([[applyIndexBatch]]), then run the compaction and
+    * vacuum cadences.
+    */
+  private def applyChainBatch(
+      s: SparkSession, path: String, marker: String, batchId: Long,
+      compactEvery: Int, vacuumEvery: Int, vacuumRetain: Int)(
+      bootstrap: => Unit)(append: => Unit)(
+      compact: SparkSession => Unit): Unit = {
+    applyIndexBatch(s, path, marker)(bootstrap)(append)
+    maybeCompact(s, path, compactEvery)(compact(s))
+    // vacuum cadence: every publish (append, compact) retires a
+    // version dir that publish-time pruning retains only up to its
+    // default window — an unattended year-long stream would
+    // otherwise accumulate retired versions without bound. Age
+    // bound: only in-flight debris older than a day is reclaimed
+    // (IndexIO.vacuum's stale rule — a live concurrent build looks
+    // identical to a crash), and `vacuumRetain` committed versions
+    // survive so a reader resolved against the PREVIOUS version
+    // keeps its data through the next publish.
+    if (vacuumEvery > 0 && batchId > 0 && batchId % vacuumEvery == 0)
+      graft.sources.IndexIO.vacuum(s, path, retainVersions = vacuumRetain)
   }
 
   /** Maintain a [[graft.operators.Search.buildBm25Index]] artifact FROM
@@ -1044,33 +1063,40 @@ object Streaming {
       append: (DataFrame, String) => Unit)(
       compact: SparkSession => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    def adds(b: DataFrame) = b.filter(col(statusCol).isin("added", "changed"))
-    def dels(b: DataFrame) =
-      b.filter(col(statusCol).isin("removed", "changed")).select(idCol)
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => {
-        // deletes before the index exists refer to rows never indexed —
-        // there is nothing to shadow, so they drop (log-ordered
-        // tombstones of nothing). Guarding on the adds also keeps a
-        // delete-only FIRST batch from bootstrapping a trained model on
-        // zero rows (k-means would throw and kill the stream); the
-        // batch publishes nothing, records no marker, and a replay is
-        // a no-op for the same reason — the next batch with adds
-        // bootstraps.
-        val a = adds(b)
-        if (!a.isEmpty) bootstrap(a, m)
-      })(
-      (b, m) => {
-        val a = adds(b).localCheckpoint(true) // emptiness probe + append
-        val addEmpty = a.isEmpty
-        val d = dels(b)
-        if (!d.isEmpty)
-          // a delete-only batch carries the marker on its tombstone
-          // segment; otherwise the append records it
-          delete(d, if (addEmpty) Some(m) else None)
-        if (!addEmpty) append(a, m)
-      })(compact)
+    val isAdd = col(statusCol).isin("added", "changed")
+    val isDel = col(statusCol).isin("removed", "changed")
+    startChain(stream, checkpointDir) { (b, batchId, m) =>
+      // ONE classification pass: the job that pins the batch also
+      // counts its adds and deletes (an observed aggregate) — the
+      // emptiness probe of the batch and of both halves, with no job
+      // of its own
+      val classified = org.apache.spark.sql.Observation()
+      val batch = b.observe(classified,
+        count(when(isAdd, lit(1))).as("adds"), count(when(isDel, lit(1))).as("dels"))
+        .localCheckpoint(true)
+      val nAdds = classified.get("adds").asInstanceOf[Long]
+      val nDels = classified.get("dels").asInstanceOf[Long]
+      val adds = batch.filter(isAdd)
+      if (nAdds + nDels > 0)
+        applyChainBatch(batch.sparkSession, path, m, batchId, compactEvery,
+          vacuumEvery, vacuumRetain)(
+          // deletes before the index exists refer to rows never indexed
+          // — there is nothing to shadow, so they drop (log-ordered
+          // tombstones of nothing). Guarding on the adds also keeps a
+          // delete-only FIRST batch from bootstrapping a trained model
+          // on zero rows (k-means would throw and kill the stream); the
+          // batch publishes nothing, records no marker, and a replay is
+          // a no-op for the same reason — the next batch with adds
+          // bootstraps.
+          if (nAdds > 0) bootstrap(adds, m))({
+          if (nDels > 0)
+            // a delete-only batch carries the marker on its tombstone
+            // segment; otherwise the append records it
+            delete(batch.filter(isDel).select(idCol),
+              if (nAdds == 0) Some(m) else None)
+          if (nAdds > 0) append(adds, m)
+        })(compact)
+    }
   }
 
   def maintainBm25IndexCdc(

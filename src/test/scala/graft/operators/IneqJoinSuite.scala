@@ -268,4 +268,39 @@ class IneqJoinSuite extends SparkSpec {
     // INT96 has no INT32/INT64 raw type — bails on the raw-type gate
     assert(ParquetFooterBounds.bounds(write("INT96"), "t").isEmpty)
   }
+
+  test("under GraftExtensions the extremes probe is skipped: no job, same rows") {
+    val orig = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val s2 = org.apache.spark.sql.SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new graft.plans.GraftExtensions)
+        .getOrCreate()
+      import s2.implicits._
+      val low = Seq((1, 1.0), (2, 3.0), (3, 5.0)).toDF("lid", "a")
+      val high = Seq((10, 5.0), (11, 8.0), (12, 9.0)).toDF("rid", "b")
+      val mixed = Seq((20, 2.0), (21, 4.0), (22, 6.0)).toDF("rid", "b")
+      // low vs high: every pair matches under <= (5.0 = 5.0) and no
+      // pair matches under >; high vs low mirrors it; mixed interleaves
+      val cases = Seq(
+        (low, high),
+        (high.withColumnRenamed("rid", "lid").withColumnRenamed("b", "a"),
+          low.withColumnRenamed("lid", "rid").withColumnRenamed("a", "b")),
+        (low, mixed))
+      for ((l, r) <- cases; how <- IneqJoin.Ops.toSeq.sorted) {
+        var built: org.apache.spark.sql.DataFrame = null
+        val jobs = jobsDuring {
+          built = IneqJoin(l, r, how, leftOn = Some("a"), rightOn = Some("b"))
+        }
+        assert(jobs == 0, s"$how: $jobs jobs while building the join")
+        assertSameRows(built,
+          IneqJoin(l, r, how, leftOn = Some("a"), rightOn = Some("b"), prune = false))
+      }
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(orig)
+      org.apache.spark.sql.SparkSession.setDefaultSession(orig)
+    }
+  }
 }

@@ -80,6 +80,49 @@ class LangModelSuite extends SparkSpec {
     LangModel.loadLmModel(spark, path)
   }
 
+  test("model memory guards count exact entries from parquet footers, with no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = (0L until 10L).map(i => (i, s"alpha beta gamma delta tok$i"))
+      .toDF("doc_id", "text")
+    def dir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val lm = dir("graft_lm_guard_")
+    LangModel.buildLmIndex(docs, "text", lm,
+      minBigramCount = 1, minUnigramCount = 1, minTrigramCount = 1)
+    val kn = dir("graft_kn_guard_")
+    LangModel.buildKnIndex(docs, "text", kn, minBigramCount = 1, minUnigramCount = 1)
+    val lmN = dir("graft_lmn_guard_")
+    LangModel.buildLmIndexN(docs, "text", lmN, order = 4, minCount = 1)
+    def rows(path: String, tables: Seq[String]): Long = {
+      val vdir = graft.sources.IndexIO.resolve(spark, path)
+      tables.map(t => spark.read.parquet(s"$vdir/$t").count()).sum
+    }
+    val guards: Seq[(String, Long, Long => Any)] = Seq(
+      ("lm", rows(lm, Seq("bigrams", "unigrams")),
+        n => LangModel.loadLmModel(spark, lm, maxEntries = n)),
+      ("lm3", rows(lm, Seq("trigrams", "bigrams", "unigrams")),
+        n => LangModel.loadLmModel3(spark, lm, maxEntries = n)),
+      ("kn", rows(kn, Seq("bigrams", "unigrams", "fw_types", "bw_types")),
+        n => LangModel.loadKnModel(spark, kn, maxEntries = n)),
+      ("lmN", rows(lmN, (1 to 4).map(k => s"grams_$k")),
+        n => LangModel.loadLmModelN(spark, lmN, maxEntries = n)))
+    val sc = spark.sparkContext
+    for ((name, entries, load) <- guards) {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      sc.addSparkListener(l)
+      try {
+        // one entry over the exact count: loud, before any collect job
+        val err = intercept[IllegalArgumentException](load(entries - 1))
+        assert(err.getMessage.contains(s"$entries entries"), s"$name: ${err.getMessage}")
+        org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+      } finally sc.removeSparkListener(l)
+      assert(jobs.get == 0, s"$name: ${jobs.get} Spark jobs before the guard fired")
+      load(entries) // exactly at the cap: silent
+    }
+  }
+
   test("scoreWithModel (cutoffs=1) is bit-equal to scoreAgainst") {
     val docs = (0L until 40L).map { i =>
       (i, Seq.fill(3 + (i % 7).toInt)(s"w${(i * 13) % 9}").mkString(" ") +

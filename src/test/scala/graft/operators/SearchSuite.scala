@@ -866,4 +866,63 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
         "embedding", Seq("spark"), Array(1.0), k = 5, fetchK = 0)
     }
   }
+
+  test("bm25SearchIndex reads one version: a compaction mid-call cannot resurrect a delete") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.cmpctfs.impl", classOf[CompactOnOpenFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.cmpctfs.impl",
+      classOf[CompactOnOpenAbstractFileSystem].getName)
+    val base = s"cmpctfs://${Files.createTempDirectory("graft_bm25_onever_")}/idx"
+    val docs = Seq((1L, "spark joins fast"), (2L, "spark streams fast"),
+      (3L, "joins on ranges"), (4L, "fast range joins in spark"),
+      (5L, "spark again"), (6L, "streams of joins")).toDF("doc_id", "text")
+    Search.buildBm25Index(docs.filter($"doc_id" <= 4), "doc_id", "text", base)
+    Search.appendToBm25Index(docs.filter($"doc_id" > 4), "doc_id", "text", base)
+    Search.deleteFromBm25Index(spark, base, Seq(2L).toDF("doc_id"), "doc_id")
+    val terms = Seq("spark", "streams")
+    // the first pointer read of the query lets a compaction publish: the
+    // compacted version carries no tombstone segment
+    CompactOnOpenFileSystem.onPointerOpen = Some(() => Search.compactBm25Index(spark, base))
+    val served =
+      try Search.bm25SearchIndex(spark, base, terms, k = 10)
+      finally CompactOnOpenFileSystem.onPointerOpen = None
+    assert(CompactOnOpenFileSystem.fired, "the compaction hook never ran")
+    assert(graft.sources.IndexIO.segments(spark, base).size == 1)
+    assert(!served.collect().exists(_.getLong(0) == 2L), "deleted doc 2 came back")
+    assertSameRows(
+      Search.bm25TopK(docs.filter($"doc_id" =!= 2L), "doc_id", "text", terms, k = 10),
+      served)
+  }
 }
+
+/** The local file system under the `cmpctfs` scheme, with a one-shot hook
+  * that runs right after the first `_LATEST` pointer file is opened: the
+  * caller still reads the pointer it opened, while the hook publishes a
+  * newer version.
+  */
+class CompactOnOpenFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("cmpctfs:///")
+  override def getScheme: String = "cmpctfs"
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    if (f.getName == "_LATEST") CompactOnOpenFileSystem.onPointerOpen.foreach { hook =>
+      CompactOnOpenFileSystem.onPointerOpen = None
+      CompactOnOpenFileSystem.fired = true
+      hook()
+    }
+    in
+  }
+}
+
+object CompactOnOpenFileSystem {
+  @volatile var onPointerOpen: Option[() => Unit] = None
+  @volatile var fired = false
+}
+
+/** [[CompactOnOpenFileSystem]] for FileContext callers (pointer flips). */
+class CompactOnOpenAbstractFileSystem(
+    uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      java.net.URI.create("cmpctfs:///"), new CompactOnOpenFileSystem, conf,
+      "cmpctfs", false)

@@ -1280,6 +1280,25 @@ class SimilaritySearchSuite extends SparkSpec {
     assert(SimilaritySearch.querySideOversized(vecs, 1L << 20))
   }
 
+  test("bounded probe charges the measured row width of wide vector rows") {
+    val rnd = new scala.util.Random(7)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_rows_").toString
+    // 200 rows of 768-dim vectors: ~1.2 MB, far fewer rows than the
+    // threshold over a 32-byte row floor
+    (0 until 200).map(i => (i, Array.fill(768)(rnd.nextDouble())))
+      .toDF("id", "emb").write.mode("overwrite").parquet(dir)
+    val wide = spark.read.parquet(dir)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 10).toString)
+      assert(SimilaritySearch.querySideOversized(wide),
+        "a 1.2 MB frame of wide rows must not pass a 256 KB threshold")
+      // the estimate trips on the whole file for a 5-row slice too; the
+      // probe's measured bytes clear it
+      assert(!SimilaritySearch.querySideOversized(wide.filter($"id" < 5)))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("PQ family degrades to non-broadcast joins on an oversized query frame") {
     val rnd = new scala.util.Random(31)
     val centers = Seq(

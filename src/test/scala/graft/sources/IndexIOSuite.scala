@@ -586,4 +586,70 @@ class IndexIOSuite extends SparkSpec {
         Seq("spark", "joins"), k = 10),
       served)
   }
+
+  test("writeRows and readRows: Spark's schema, rows and file layout, with no job") {
+    import org.apache.spark.sql.Row
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val base = newBase()
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789")
+    val df = Seq(
+      (1L, 7, 0.5, "a", Array[Byte](1, 2), Seq("x", "y"), Seq(0.25, -1.0),
+        Seq(1.5f, 2.5f), (3L, "s"), ts),
+      (2L, -1, Double.NaN, null, Array.emptyByteArray, Seq.empty[String],
+        Seq.empty[Double], Seq.empty[Float], (4L, null), null)
+    ).toDF("l", "i", "d", "s", "b", "as", "ad", "af", "st", "ts")
+      .withColumn("st", struct(col("st._1").as("n"), col("st._2").as("t")))
+    df.coalesce(1).write.mode("overwrite").parquet(s"$base/spark")
+    val rows = df.collect().toSeq
+    assert(jobsDuring {
+      IndexIO.writeRows(spark, s"$base/driver", df.schema, rows)
+    } == 0)
+    def sorted(rs: Seq[Row]): Seq[Row] = rs.sortBy(_.getAs[Long]("l"))
+    val viaSpark = spark.read.parquet(s"$base/spark")
+    val viaDriver = spark.read.parquet(s"$base/driver")
+    assert(viaDriver.schema == viaSpark.schema)
+    assert(sorted(viaDriver.collect().toSeq) == sorted(viaSpark.collect().toSeq))
+    // one data file each, same codec suffix and the same footer metadata
+    // (Spark's row schema, version and rebase keys)
+    def dataFile(t: String) = {
+      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val fs0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/$t"))
+        .filter(_.getPath.getName.startsWith("part-"))
+      assert(fs0.length == 1, t)
+      fs0.head
+    }
+    def footerMeta(t: String) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(dataFile(t),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData finally r.close()
+    }
+    assert(dataFile("driver").getPath.getName.endsWith(".snappy.parquet"))
+    assert(footerMeta("driver") == footerMeta("spark"))
+    df.repartition(2).write.mode("overwrite").parquet(s"$base/multi")
+    for (t <- Seq("spark", "driver", "multi")) {
+      val expected = spark.read.parquet(s"$base/$t").collect().toSeq
+      var got: Seq[Row] = null
+      var n = -1L
+      assert(jobsDuring {
+        got = IndexIO.readRows(spark, s"$base/$t")
+        n = IndexIO.countRows(spark, s"$base/$t")
+      } == 0, t)
+      assert(sorted(got) == sorted(expected), t)
+      assert(got.head.schema == viaSpark.schema, t)
+      assert(n == 2L, t)
+    }
+    // an empty table keeps its schema for later readers
+    IndexIO.writeRows(spark, s"$base/empty", df.schema, Seq.empty)
+    assert(spark.read.parquet(s"$base/empty").schema == viaSpark.schema)
+    assert(IndexIO.readRows(spark, s"$base/empty").isEmpty)
+    assert(IndexIO.readRowsIfExists(spark, s"$base/missing").isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IndexIO.readRows(spark, s"$base/missing")
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IndexIO.countRows(spark, s"$base/missing")
+    }
+  }
 }

@@ -2351,4 +2351,54 @@ class StreamingSuite extends SparkSpec {
       SimilaritySearch.searchIvfSq8(spark, sqB, queries, "vec_id", "embedding",
         k = 4, nProbe = 2))
   }
+
+  test("maintainBm25IndexCdc: a change batch stays within its Spark job budget, stats exact") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.operators.Search
+    val idx = java.nio.file.Files.createTempDirectory("graft_cdc_jobs_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_jobsck_").toString
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String, String)]
+    val q = Streaming.maintainBm25IndexCdc(
+      input.toDF().toDF("doc_id", "status", "text"),
+      "doc_id", "status", "text", idx, ckpt)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val live = scala.collection.mutable.LinkedHashMap(
+      1L -> "alpha beta gamma", 2L -> "delta epsilon", 3L -> "zeta eta theta",
+      4L -> "iota kappa lambda mu", 5L -> "nu xi", 6L -> "omicron pi rho")
+    try {
+      input.addData(live.toSeq.map { case (i, t) => (i, "added", t) }: _*)
+      q.processAllAvailable()
+      org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+      // one non-compacting batch: two adds, a delete and a changed doc
+      val batch = Seq((7L, "added", "sigma tau"), (8L, "added", "upsilon phi chi psi"),
+        (1L, "removed", null.asInstanceOf[String]), (2L, "changed", "delta omega"))
+      sc.addSparkListener(counter)
+      try {
+        input.addData(batch: _*)
+        q.processAllAvailable()
+        org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+      } finally sc.removeSparkListener(counter)
+      live.remove(1L)
+      live(2L) = "delta omega"
+      live(7L) = "sigma tau"
+      live(8L) = "upsilon phi chi psi"
+    } finally q.stop()
+    // classification is one checkpoint pass; the stats move on the driver
+    assert(jobs.get <= 12, s"${jobs.get} Spark jobs for one change batch")
+    val segs = graft.sources.IndexIO.segments(spark, idx)
+    assert(segs.size == 3, s"tombstone + append segments expected: $segs")
+    val stats = graft.sources.IndexIO.readRows(spark, s"${segs.last}/stats").head
+    assert((stats.getLong(0), stats.getLong(1)) ==
+      ((live.size.toLong, live.values.map(_.split(" ").length.toLong).sum)))
+    val fresh = java.nio.file.Files.createTempDirectory("graft_cdc_jobsfresh_").toString
+    Search.buildBm25Index(live.toSeq.toDF("doc_id", "text"), "doc_id", "text", fresh)
+    for (terms <- Seq(Seq("delta"), Seq("alpha"), Seq("sigma", "omega")))
+      assertSameRows(Search.bm25SearchIndex(spark, idx, terms, k = 10),
+        Search.bm25SearchIndex(spark, fresh, terms, k = 10))
+  }
 }
