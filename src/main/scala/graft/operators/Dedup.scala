@@ -541,8 +541,7 @@ object Dedup {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
     val meta = readMinhashMeta(spark, vdir)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      ids.select(col(idCol).as("doc_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).as("doc_id")), seg)
       writeMinhashMeta(spark, seg, meta)
     }
     ()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -136,34 +136,64 @@ object Search {
     // mid-build failure or a rebuild under a reader never exposes
     // postings from one corpus snapshot with stats from another
     graft.sources.IndexIO.publish(docs.sparkSession, path, marker) { vdir =>
-      val toks = docs.select(col(idCol).as("doc_id"),
-        TextFunctions.tokens(col(textCol)).as("__toks"))
-      val lengths = toks.select(col("doc_id"),
-          size(col("__toks")).cast("long").as("dl"))
-        .filter(col("dl") > 0)
       // dl DENORMALIZED into the postings rows: the serving path reads
       // everything it needs from the pruned term buckets alone — no
       // corpus-sized lengths join per query (at 100 TB that join was
       // the serving bottleneck; lengths persists only for delete-time
       // stats correction and old-layout readers)
-      // per-doc postings fold in the scan projection (TermPostingsExpr):
-      // the old posexplode -> groupBy(doc_id, dl, term) shape shuffled
-      // one row PER TOKEN for an aggregation that is row-local
-      docs.select(col(idCol).as("doc_id"),
-          size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
-          explode(TextFunctions.termPostings(col(textCol),
-            withPositions = false)).as("__p"))
-        .select(col("doc_id"), col("dl"),
-          col("__p.term").as("term"), col("__p.tf").as("tf"))
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$vdir/postings")
-      lengths.write.mode("overwrite").parquet(s"$vdir/lengths")
-      lengths.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
-        .write.mode("overwrite").parquet(s"$vdir/stats")
+      writeByTerm(docPostings(docs, col(idCol), textCol, withDl = true,
+        withPositions = false), s"$vdir/postings")
+      writeLengthsAndStats(docs.sparkSession, docLengths(docs, col(idCol), textCol), vdir)
     }
     ()
+  }
+
+  /** The postings rows of `docs` that every build, append and folded
+    * compaction writes, one per (doc, term): the BM25 layout `(doc_id,
+    * [dl], term, tf)`, or with `withPositions` the lexical layout `(term,
+    * doc_id, [dl], tf, positions)`; `dl` rides along when `withDl`. The
+    * per-doc postings fold in the scan projection (TermPostingsExpr): the
+    * old posexplode -> groupBy(doc_id, dl, term) shape shuffled one row
+    * PER TOKEN for an aggregation that is row-local.
+    */
+  private def docPostings(docs: DataFrame, id: Column, textCol: String,
+      withDl: Boolean, withPositions: Boolean): DataFrame = {
+    val dl = if (withDl) Seq(col("dl")) else Nil
+    val term = col("__p.term").as("term")
+    val tf = col("__p.tf").as("tf")
+    docs.select(id.as("doc_id"),
+        size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
+        explode(TextFunctions.termPostings(col(textCol), withPositions)).as("__p"))
+      .select(
+        (if (withPositions) Seq(term, col("doc_id")) ++ dl :+ tf :+ col("__p.positions").as("positions")
+        else (col("doc_id") +: dl) :+ term :+ tf): _*)
+  }
+
+  /** The `(doc_id, dl)` lengths rows of `docs`; token-less docs are
+    * outside the corpus stats.
+    */
+  private def docLengths(docs: DataFrame, id: Column, textCol: String): DataFrame =
+    docs.select(id.as("doc_id"), size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
+      .filter(col("dl") > 0)
+
+  /** Write a postings table clustered by term: hash-shuffled on term,
+    * AQE sizing the partition count from the actual bytes, rows sorted
+    * by (term, doc_id) within each file for row-group pruning.
+    */
+  private def writeByTerm(postings: DataFrame, dir: String): Unit =
+    postings.repartition(col("term")).sortWithinPartitions("term", "doc_id")
+      .write.mode("overwrite").parquet(dir)
+
+  /** Write `lengths` into version `vdir` and its one-row `stats` beside
+    * it: `n_docs`/`total_dl` are observed on the lengths write itself,
+    * exact over the rows written and with no job of their own.
+    */
+  private def writeLengthsAndStats(
+      spark: SparkSession, lengths: DataFrame, vdir: String): Unit = {
+    val sums = org.apache.spark.sql.Observation()
+    lengths.observe(sums, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
+      .write.mode("overwrite").parquet(s"$vdir/lengths")
+    writeStats(spark, vdir, sums.get("n").asInstanceOf[Long], sums.get("s").asInstanceOf[Long])
   }
 
   /** Append NEW documents to a [[buildBm25Index]] index WITHOUT a
@@ -190,17 +220,22 @@ object Search {
       textCol: String,
       path: String,
       termBuckets: Int = 64,
-      marker: Option[String] = None): Unit = {
+      marker: Option[String] = None): Unit =
+    appendToIndex(docs, col(idCol), textCol, path, marker, withPositions = false)
+
+  /** The one append body of [[appendToBm25Index]] and
+    * [[appendToLexicalIndex]]: a `publishDelta` segment of the new docs'
+    * postings and lengths, with the chain's stats plus the batch's.
+    */
+  private def appendToIndex(docs: DataFrame, id: Column, textCol: String,
+      path: String, marker: Option[String], withPositions: Boolean): Unit = {
     val spark = docs.sparkSession
-    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
+    val segs = graft.sources.IndexIO.chain(spark, path) // fails fast on a missing index
     val prev = chainStatsRow(spark, path, segs)
     // the job that pins the lengths also sums them (an observed
     // aggregate): the batch's stats and the no-op probe need no job
     val added = org.apache.spark.sql.Observation()
-    val lengths = docs.select(
-        col(idCol).as("doc_id"),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
-      .filter(col("dl") > 0)
+    val lengths = docLengths(docs, id, textCol)
       .observe(added, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .localCheckpoint(true)
     val (addN, addS) = (added.get("n").asInstanceOf[Long], added.get("s").asInstanceOf[Long])
@@ -213,25 +248,11 @@ object Search {
     // compactBm25Index migrates it to the denormalized one.
     val baseHasDl = chainPostingsHaveDl(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      val toks = docs.select(col(idCol).as("doc_id"),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
-        explode(TextFunctions.termPostings(col(textCol),
-          withPositions = false)).as("__p"))
-      val posted =
-        if (baseHasDl)
-          toks.select(col("doc_id"), col("dl"),
-            col("__p.term").as("term"), col("__p.tf").as("tf"))
-        else toks.select(col("doc_id"),
-          col("__p.term").as("term"), col("__p.tf").as("tf"))
-      posted
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$seg/postings")
+      writeByTerm(docPostings(docs, id, textCol, baseHasDl, withPositions), s"$seg/postings")
       lengths.write.mode("overwrite").parquet(s"$seg/lengths")
       writeStats(spark, seg,
         prev.getLong(0) + addN, prev.getLong(1) + addS)
     }
-    ()
   }
 
   /** Tombstone-delete docs from a [[buildBm25Index]] index WITHOUT a
@@ -247,49 +268,86 @@ object Search {
   def deleteFromBm25Index(
       spark: SparkSession, path: String, ids: DataFrame, idCol: String,
       marker: Option[String] = None): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
+    val segs = graft.sources.IndexIO.chain(spark, path) // fails fast on a missing index
     val batchIds = ids.select(col(idCol).cast("long").as("doc_id"))
     // live lengths BEFORE this delete: only still-live docs may shrink
     // the stats (double-deleting an id must not subtract twice). A semi
     // join counts each live doc once however often the batch names it,
-    // so the correction needs no distinct of the ids
+    // so the correction needs no distinct of the ids. The ids are
+    // takedown-sized (withoutTombstoned's assumption) but carry no size
+    // statistics, so the hint keeps the join from shuffling both sides
     val del = liveTable(spark, path, segs, "lengths")
-      .join(batchIds, Seq("doc_id"), "left_semi")
+      .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .head()
     val stats = chainStatsRow(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      batchIds.distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      graft.sources.IndexIO.writeTombstones(batchIds, seg)
       writeStats(spark, seg,
         stats.getLong(0) - del.getLong(0), stats.getLong(1) - del.getLong(1))
     }
     ()
   }
 
-  /** Collapse a tombstoned [[buildBm25Index]] chain to ONE segment:
-    * live postings re-bucketed by term, live lengths, the corrected
-    * stats carried forward. Identical serving results by construction.
+  /** Collapse a tombstoned [[buildBm25Index]] (or [[buildLexicalIndex]])
+    * chain to ONE segment: live postings re-bucketed by term, live
+    * lengths, and stats observed on the lengths write (exact over the
+    * live docs). Identical serving results by construction. A chain of
+    * one segment is left as it is.
     */
   def compactBm25Index(
-      spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, path)
-    if (segs.length <= 1) return
-    val postings0 = liveTable(spark, path, segs, "postings")
-    val lengths = liveTable(spark, path, segs, "lengths")
-    val stats = chainStatsRow(spark, path, segs)
+      spark: SparkSession, path: String, termBuckets: Int = 64): Unit =
+    compactBm25Index(spark, path, None)
+
+  /** A CDC micro-batch to fold into a compaction: `dels` holds the ids
+    * it removes (the one column `idCol`), `adds` the documents it adds
+    * (`idCol`, `textCol`), `marker` its applied-batch marker.
+    */
+  private[graft] final case class CdcBatch(
+      dels: Option[DataFrame], adds: Option[DataFrame],
+      idCol: String, textCol: String, marker: String)
+
+  /** The one [[compactBm25Index]] body, with an optional CDC `batch`
+    * folded in: the new version is the chain's live rows, minus the
+    * batch's deleted ids, plus the batch's added rows, published ONCE
+    * with the batch's marker (the full publish carries the chain's
+    * markers forward, so a replay of the batch is recognized; a crash
+    * before the pointer flip leaves the previous version live and the
+    * replay folds again). The batch's ids are one more tombstone set,
+    * ordered after every chain segment, so a `changed` id (or one
+    * removed and re-added in the batch) keeps only its new rows. The
+    * added rows come from the same projections build and append use, in
+    * the chain's postings layout (with positions on a lexical chain);
+    * they always carry `dl`, as the compacted postings do. A folding
+    * call publishes even on a one-segment chain.
+    */
+  private[graft] def compactBm25Index(
+      spark: SparkSession, path: String, batch: Option[CdcBatch]): Unit = {
+    val segs = graft.sources.IndexIO.chain(spark, path)
+    if (batch.isEmpty && segs.length <= 1) return
+    val batchTombs = for (b <- batch; d <- b.dels)
+      yield d.select(col(b.idCol).cast("long").as("doc_id"), lit(segs.length).as("__seg"))
+    val tombs = (graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones") ++ batchTombs)
+      .reduceOption(_.unionByName(_))
+    val postings0 = liveRows(spark, path, segs, "postings", tombs)
+    val lengths0 = liveRows(spark, path, segs, "lengths", tombs)
     // compaction is the layout-migration point: a pre-denormalization
     // artifact's postings gain the dl column here (one build-time
     // join), so serving drops the lengths join from this version on
-    val postings =
+    val livePostings =
       if (postings0.columns.contains("dl")) postings0
-      else postings0.join(lengths, "doc_id")
-    graft.sources.IndexIO.publish(spark, path) { nv =>
-      postings.repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$nv/postings")
-      lengths.write.mode("overwrite").parquet(s"$nv/lengths")
-      writeStats(spark, nv, stats.getLong(0), stats.getLong(1))
+      else postings0.join(lengths0, "doc_id")
+    val added = for (b <- batch; a <- b.adds) yield {
+      val id = col(b.idCol).cast(postings0.schema("doc_id").dataType)
+      (docPostings(a, id, b.textCol, withDl = true,
+          withPositions = postings0.columns.contains("positions")),
+        docLengths(a, id, b.textCol))
+    }
+    val postings = added.fold(livePostings)(a => livePostings.unionByName(a._1))
+    val lengths = added.fold(lengths0)(a => lengths0.unionByName(a._2))
+    graft.sources.IndexIO.publish(spark, path, batch.map(_.marker)) { nv =>
+      writeByTerm(postings, s"$nv/postings")
+      writeLengthsAndStats(spark, lengths, nv)
     }
     ()
   }
@@ -300,12 +358,19 @@ object Search {
     * rows indexed BEFORE the delete die).
     */
   private def liveTable(
-      spark: SparkSession, path: String, segs: Seq[String], name: String): DataFrame =
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment],
+      name: String): DataFrame =
+    liveRows(spark, path, segs, name,
+      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"))
+
+  /** [[liveTable]] against the tombstone sets `tombs`. */
+  private def liveRows(
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment],
+      name: String, tombs: Option[DataFrame]): DataFrame =
     graft.sources.IndexIO.withoutTombstoned(
       graft.sources.IndexIO.chainTableOf(spark, segs, name).getOrElse(
         throw new IllegalStateException(s"BM25 index at $path has no $name table")),
-      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
-      "doc_id")
+      tombs, "doc_id")
 
   /** Whether the chain's postings carry the denormalized `dl` column.
     * Probed from the OLDEST postings-bearing segment, never from the
@@ -316,9 +381,9 @@ object Search {
     * strict unionByName enforces it on read).
     */
   private def chainPostingsHaveDl(
-      spark: SparkSession, path: String, segs: Seq[String]): Boolean =
-    segs.iterator
-      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/postings"))
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment]): Boolean =
+    segs.iterator.filter(_.holds("postings"))
+      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"${s.dir}/postings"))
       .nextOption().getOrElse(throw new IllegalStateException(
         s"cannot append to $path: no segment carries a postings table"))
       .columns.contains("dl")
@@ -332,9 +397,10 @@ object Search {
     * stats-publishing operation, instead of throwing path-not-found on
     * the latest version directory.
     */
-  private def chainStats(spark: SparkSession, path: String, segs: Seq[String]): DataFrame =
-    segs.reverseIterator
-      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"$s/stats"))
+  private def chainStats(
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment]): DataFrame =
+    segs.reverseIterator.filter(_.holds("stats"))
+      .flatMap(s => graft.sources.IndexIO.readTableIfExists(spark, s"${s.dir}/stats"))
       .nextOption().getOrElse(throw new IllegalStateException(
         s"index at $path has no stats table"))
 
@@ -342,9 +408,10 @@ object Search {
     * the maintenance paths that correct the stats and write them back.
     */
   private def chainStatsRow(
-      spark: SparkSession, path: String, segs: Seq[String]): org.apache.spark.sql.Row =
-    segs.reverseIterator
-      .flatMap(s => graft.sources.IndexIO.readRowsIfExists(spark, s"$s/stats"))
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment])
+      : org.apache.spark.sql.Row =
+    segs.reverseIterator.filter(_.holds("stats"))
+      .flatMap(s => graft.sources.IndexIO.readRowsIfExists(spark, s"${s.dir}/stats"))
       .nextOption().flatMap(_.headOption).getOrElse(throw new IllegalStateException(
         s"index at $path has no stats table"))
 
@@ -377,7 +444,7 @@ object Search {
     // version's chain, so a publish (or a compaction that drops the
     // tombstone segments) landing mid-call cannot pair one version's
     // postings with another's tombstones and resurrect deleted docs
-    val segs = graft.sources.IndexIO.segments(spark, path)
+    val segs = graft.sources.IndexIO.chain(spark, path)
     val postings = graft.sources.IndexIO.withoutTombstoned(
       graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
         throw new IllegalStateException(s"BM25 index at $path has no postings table"))
@@ -1100,15 +1167,13 @@ object Search {
       path: String,
       termBuckets: Int = 64): Unit = {
     graft.sources.IndexIO.publish(docs.sparkSession, path) { vdir =>
-      docs
+      val postings = docs
         .select(col(idCol).cast("long").as("doc_id"),
           explode(TextFunctions.termPostings(col(textCol),
             withPositions = true)).as("__p"))
         .select(col("__p.term").as("term"), col("doc_id"),
           col("__p.positions").as("positions"))
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$vdir/postings")
+      writeByTerm(postings, s"$vdir/postings")
     }
     ()
   }
@@ -1140,10 +1205,7 @@ object Search {
       .localCheckpoint(true) // probed for emptiness, then written
     if (postings.isEmpty) return
     graft.sources.IndexIO.publishDelta(spark, path) { seg =>
-      postings
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$seg/postings")
+      writeByTerm(postings, s"$seg/postings")
     }
     ()
   }
@@ -1157,8 +1219,7 @@ object Search {
       spark: SparkSession, path: String, ids: DataFrame, idCol: String): Unit = {
     graft.sources.IndexIO.resolve(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path) { seg =>
-      ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).cast("long").as("doc_id")), seg)
     }
     ()
   }
@@ -1169,13 +1230,11 @@ object Search {
     */
   def compactPositionalIndex(
       spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, path)
+    val segs = graft.sources.IndexIO.chain(spark, path)
     if (segs.length <= 1) return
     val postings = liveTable(spark, path, segs, "postings")
     graft.sources.IndexIO.publish(spark, path) { nv =>
-      postings.repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$nv/postings")
+      writeByTerm(postings, s"$nv/postings")
     }
     ()
   }
@@ -1231,25 +1290,11 @@ object Search {
       path: String,
       termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
+    val id = col(idCol).cast("long")
     graft.sources.IndexIO.publish(docs.sparkSession, path, marker) { vdir =>
-      val lengths = docs.select(
-          col(idCol).cast("long").as("doc_id"),
-          size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
-        .filter(col("dl") > 0)
-      docs
-        .select(col(idCol).cast("long").as("doc_id"),
-          size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
-          explode(TextFunctions.termPostings(col(textCol),
-            withPositions = true)).as("__p"))
-        .select(col("__p.term").as("term"), col("doc_id"), col("dl"),
-          col("__p.tf").as("tf"), col("__p.positions").as("positions"))
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$vdir/postings")
-      lengths.write.mode("overwrite").parquet(s"$vdir/lengths")
-      lengths.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
-        .write.mode("overwrite").parquet(s"$vdir/stats")
+      writeByTerm(docPostings(docs, id, textCol, withDl = true, withPositions = true),
+        s"$vdir/postings")
+      writeLengthsAndStats(docs.sparkSession, docLengths(docs, id, textCol), vdir)
     }
     ()
   }
@@ -1265,48 +1310,11 @@ object Search {
       textCol: String,
       path: String,
       termBuckets: Int = 64,
-      marker: Option[String] = None): Unit = {
-    val spark = docs.sparkSession
-    val segs = graft.sources.IndexIO.segments(spark, path) // fails fast on a missing index
-    val prev = chainStatsRow(spark, path, segs)
-    // the job that pins the lengths also sums them (an observed
-    // aggregate): the batch's stats and the no-op probe need no job
-    val added = org.apache.spark.sql.Observation()
-    val lengths = docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
-      .filter(col("dl") > 0)
-      .observe(added, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
-      .localCheckpoint(true)
-    val (addN, addS) = (added.get("n").asInstanceOf[Long], added.get("s").asInstanceOf[Long])
-    if (addN == 0L) return
-    // match the BASE chain's postings layout (see appendToBm25Index):
-    // a pre-denormalization lexical artifact keeps appending without
-    // dl so the chain union stays schema-consistent
-    val baseHasDl = chainPostingsHaveDl(spark, path, segs)
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      val toks = docs
-        .select(col(idCol).cast("long").as("doc_id"),
-          size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
-          explode(TextFunctions.termPostings(col(textCol),
-            withPositions = true)).as("__p"))
-      val posted =
-        if (baseHasDl)
-          toks.select(col("__p.term").as("term"), col("doc_id"), col("dl"),
-            col("__p.tf").as("tf"), col("__p.positions").as("positions"))
-        else
-          toks.select(col("__p.term").as("term"), col("doc_id"),
-            col("__p.tf").as("tf"), col("__p.positions").as("positions"))
-      posted
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$seg/postings")
-      lengths.write.mode("overwrite").parquet(s"$seg/lengths")
-      writeStats(spark, seg,
-        prev.getLong(0) + addN, prev.getLong(1) + addS)
-    }
-    ()
-  }
+      marker: Option[String] = None): Unit =
+    // match the BASE chain's postings layout (see appendToBm25Index): a
+    // pre-denormalization lexical artifact keeps appending without dl so
+    // the chain union stays schema-consistent
+    appendToIndex(docs, col(idCol).cast("long"), textCol, path, marker, withPositions = true)
 
   /** MERGE a [[buildBm25Index]] chain and a [[buildPositionalIndex]]
     * chain over the SAME live corpus into one [[buildLexicalIndex]]
@@ -1326,10 +1334,10 @@ object Search {
       positionalPath: String,
       outPath: String,
       termBuckets: Int = 64): Unit = {
-    val bm25Segs = graft.sources.IndexIO.segments(spark, bm25Path)
+    val bm25Segs = graft.sources.IndexIO.chain(spark, bm25Path)
     val lengths = liveTable(spark, bm25Path, bm25Segs, "lengths")
     val posBare = liveTable(spark, positionalPath,
-      graft.sources.IndexIO.segments(spark, positionalPath), "postings")
+      graft.sources.IndexIO.chain(spark, positionalPath), "postings")
       .select(col("term"), col("doc_id"),
         size(col("positions")).cast("long").as("tf"), col("positions"))
     // dl joins in ONCE here (a compact is a build-time job) so the
@@ -1357,10 +1365,7 @@ object Search {
         s"covers $nPos live docs, BM25 stats say $nDocs, and $mism doc ids " +
         s"are in one chain but not the other; rebuild instead")
     graft.sources.IndexIO.publish(spark, outPath) { nv =>
-      posLive
-        .repartition(col("term")) // AQE sizes the partition count from actual bytes
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$nv/postings")
+      writeByTerm(posLive, s"$nv/postings")
       lengths.write.mode("overwrite").parquet(s"$nv/lengths")
       writeStats(spark, nv, nDocs, stats.getLong(1))
     }
@@ -1401,7 +1406,7 @@ object Search {
     // ONE probe of the artifact: the union term set is pushed to the
     // bucket scan, and the eager checkpoint pins the single read that
     // both legs consume
-    val segs = graft.sources.IndexIO.segments(spark, path)
+    val segs = graft.sources.IndexIO.chain(spark, path)
     val postings = graft.sources.IndexIO.withoutTombstoned(
       graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
         throw new IllegalStateException(

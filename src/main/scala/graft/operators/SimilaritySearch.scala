@@ -44,8 +44,7 @@ object SimilaritySearch {
     graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
       for (t <- Seq("centroids", "codebook", "meta"))
         graft.sources.IndexIO.copyRowsIfExists(spark, s"$vdir/$t", s"$seg/$t")
-      ids.select(col(idCol).as("neighbor_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).as("neighbor_id")), seg)
     }
     ()
   }
@@ -895,8 +894,8 @@ object SimilaritySearch {
       // latest version dir even when that version is this takedown
       for (t <- Seq("centroids", "meta"))
         graft.sources.IndexIO.copyRows(spark, s"$vdir/$t", s"$seg/$t")
-      ids.select(col(idCol).cast("long").as("neighbor_id")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/tombstones")
+      graft.sources.IndexIO.writeTombstones(
+        ids.select(col(idCol).cast("long").as("neighbor_id")), seg)
     }
     ()
   }

@@ -26,7 +26,10 @@ import org.apache.spark.sql.SparkSession
   *     builds still resolve) — just itself for a full build, the
   *     parent's segments plus itself for an incremental append
   *     ([[publishDelta]]); readers scan the union, so "append" never
-  *     rewrites or mutates existing data;
+  *     rewrites or mutates existing data. Each entry also names the
+  *     tables its segment holds (`<dir>\t<table>,<table>…`), so a reader
+  *     lists a segment only for a table it has; entries written before
+  *     the names were recorded fall back to listing every segment;
   *   - the single-file pointer `<path>/_LATEST` (the uuid, written via
   *     create-temp + atomic rename-overwrite) is flipped LAST;
   *   - readers resolve `_LATEST` once and then read only that
@@ -96,6 +99,14 @@ import org.apache.spark.sql.SparkSession
   * ([[countRows]]).
   */
 object IndexIO {
+
+  /** One segment of a resolved chain: its data directory and, when its
+    * `_SEGMENTS` entry records them, the names of the tables it holds.
+    */
+  final case class Segment(dir: String, tables: Option[Set[String]]) {
+    /** False only when the recorded tables exclude `table`. */
+    def holds(table: String): Boolean = tables.forall(_.contains(table))
+  }
 
   private val Pointer = "_LATEST"
   private val SegmentsFile = "_SEGMENTS"
@@ -428,12 +439,15 @@ object IndexIO {
     // per-segment walk on chains whose tip predates it.
     writeFile(fs, new Path(vdir, MarkersFile),
       (parentAggregate ++ marker).distinct.mkString("\n"))
+    // the tables this segment holds, recorded in its chain entry: a
+    // reader lists a segment only for the tables it has (a tombstone
+    // table is in delete segments alone)
+    val tables =
+      try fs.listStatus(vdir).toSeq.filter(_.isDirectory).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
     val newSegments =
-      (if (delta) parentSegments else Seq.empty) :+ vdir.toString
-    // segment entries are stored as names relative to the index base so
-    // the chain survives a directory move/rename or a different mount URI
-    writeFile(fs, new Path(vdir, SegmentsFile),
-      newSegments.map(p => new Path(p).getName).mkString("\n"))
+      (if (delta) parentSegments else Seq.empty) :+ Segment(vdir.toString, Some(tables))
+    writeFile(fs, new Path(vdir, SegmentsFile), newSegments.map(segmentEntry).mkString("\n"))
     // FileContext.rename(OVERWRITE) is the atomic single-file swap on
     // HDFS-like stores (FileSystem.rename refuses an existing target).
     // On the LOCAL (Checksum) filesystem it is check-delete-rename of
@@ -483,7 +497,15 @@ object IndexIO {
     * tax at 100 TB.
     */
   def segmentMarkersIfExists(
-      spark: SparkSession, path: String): Option[Set[String]] = {
+      spark: SparkSession, path: String): Option[Set[String]] =
+    markersAndLengthIfExists(spark, path).map(_._1)
+
+  /** [[segmentMarkersIfExists]] with the chain length it read on the
+    * way: the maintainers decide from this one read whether a batch
+    * bootstraps, is a replay, or lands on a chain due for compaction.
+    */
+  private[graft] def markersAndLengthIfExists(
+      spark: SparkSession, path: String): Option[(Set[String], Int)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val (baseStr, _) = splitPin(path)
     val base = new Path(baseStr)
@@ -491,7 +513,10 @@ object IndexIO {
     currentVersion(spark, path).flatMap { v =>
       val vdir = versionDir(base, v)
       if (!fs.exists(vdir)) None // pointer to a removed version = no index
-      else Some(readAggregatedMarkers(fs, vdir, readSegments(fs, vdir)).toSet)
+      else {
+        val segs = readSegments(fs, vdir)
+        Some((readAggregatedMarkers(fs, vdir, segs).toSet, segs.length))
+      }
     }
   }
 
@@ -504,7 +529,7 @@ object IndexIO {
     * a listing per chain segment.
     */
   private def readAggregatedMarkers(
-      fs: FileSystem, vdir: Path, chainSegments: Seq[String]): Seq[String] = {
+      fs: FileSystem, vdir: Path, chainSegments: Seq[Segment]): Seq[String] = {
     val agg = new Path(vdir, MarkersFile)
     val viaFile =
       try {
@@ -513,7 +538,7 @@ object IndexIO {
         else None
       } catch { case _: java.io.IOException => None }
     viaFile.getOrElse(
-      chainSegments.flatMap(s => readMarkers(fs, new Path(s))).distinct)
+      chainSegments.flatMap(s => readMarkers(fs, new Path(s.dir))).distinct)
   }
 
   private def readMarkers(fs: FileSystem, segDir: Path): Seq[String] =
@@ -559,7 +584,7 @@ object IndexIO {
       .take(math.max(retain, 1)).map(_._1) ++
       complete.map(_._1).filter(p =>
         pointed.contains(p.getName) || protectedDirs.contains(p.getName))
-    val keep = kept.flatMap(v => readSegments(fs, v).map(p => new Path(p).getName))
+    val keep = kept.flatMap(v => readSegments(fs, v).map(s => new Path(s.dir).getName))
       .toSet ++ kept.map(_.getName)
     // PRUNE GRACE (publish-time only): a version published moments ago
     // may be mid-read by a concurrent query that resolved it before
@@ -666,7 +691,14 @@ object IndexIO {
     * `path` (oldest first): one for a plain build, the whole append
     * chain for an incrementally-grown index. Readers union these.
     */
-  def segments(spark: SparkSession, path: String): Seq[String] = {
+  def segments(spark: SparkSession, path: String): Seq[String] =
+    chain(spark, path).map(_.dir)
+
+  /** [[segments]] with the tables each segment holds, for
+    * [[chainTableOf]]: a reader that needs several tables of ONE
+    * version resolves the chain once and builds every read from it.
+    */
+  def chain(spark: SparkSession, path: String): Seq[Segment] = {
     val vdir = new Path(resolve(spark, path))
     val fs = vdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     readSegments(fs, vdir)
@@ -685,7 +717,7 @@ object IndexIO {
     currentVersion(spark, path).flatMap { v =>
       val vdir = versionDir(base, v)
       if (!fs.exists(vdir)) None
-      else Some(readSegments(fs, vdir))
+      else Some(readSegments(fs, vdir).map(_.dir))
     }
   }
 
@@ -705,18 +737,20 @@ object IndexIO {
   def chainTable(spark: SparkSession, path: String, name: String,
       allowMissingColumns: Boolean = false)
       : Option[org.apache.spark.sql.DataFrame] =
-    chainTableOf(spark, segments(spark, path), name, allowMissingColumns)
+    chainTableOf(spark, chain(spark, path), name, allowMissingColumns)
 
-  /** [[chainTable]] over an already-resolved segment chain: a reader
-    * that needs several tables of ONE version resolves [[segments]]
-    * once and builds every read from that list, so a publish between
-    * its reads cannot pair tables of different versions.
+  /** [[chainTable]] over an already-resolved [[chain]]: a reader that
+    * needs several tables of ONE version resolves the chain once and
+    * builds every read from that list, so a publish between its reads
+    * cannot pair tables of different versions. Segments whose chain
+    * entry records their tables are listed only when they hold `name`.
     */
-  def chainTableOf(spark: SparkSession, segs: Seq[String], name: String,
+  def chainTableOf(spark: SparkSession, segs: Seq[Segment], name: String,
       allowMissingColumns: Boolean = false)
       : Option[org.apache.spark.sql.DataFrame] =
     segs.zipWithIndex.flatMap { case (s, i) =>
-      readTableIfExists(spark, new Path(s, name).toString)
+      if (!s.holds(name)) None
+      else readTableIfExists(spark, new Path(s.dir, name).toString)
         .map(_.withColumn("__seg", org.apache.spark.sql.functions.lit(i)))
     }.reduceOption(_.unionByName(_, allowMissingColumns))
 
@@ -958,16 +992,41 @@ object IndexIO {
     }
   }
 
+  /** Write a delete segment's `tombstones` table: the distinct rows of
+    * the one-column id frame `ids`, as one file. Coalescing to one
+    * partition BEFORE the distinct leaves the aggregate nothing to
+    * shuffle, so the write is one job with no Exchange; tombstone sets
+    * are takedown-sized (the assumption [[withoutTombstoned]]'s
+    * broadcast makes too).
+    */
+  private[graft] def writeTombstones(ids: org.apache.spark.sql.DataFrame, seg: String): Unit =
+    ids.coalesce(1).distinct().write.mode("overwrite").parquet(s"$seg/tombstones")
+
   private def versionDir(base: Path, version: String): Path =
     new Path(base, s"v-$version")
 
-  private def readSegments(fs: FileSystem, vdir: Path): Seq[String] = {
+  private def readSegments(fs: FileSystem, vdir: Path): Seq[Segment] = {
     val f = new Path(vdir, SegmentsFile)
-    if (!fs.exists(f)) Seq(vdir.toString) // pre-segments layout
-    else readFile(fs, f).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    if (!fs.exists(f)) Seq(Segment(vdir.toString, None)) // pre-segments layout
+    else readFile(fs, f).split("\n").toSeq.filter(_.trim.nonEmpty).map { line =>
+      val (e, tables) = line.indexOf('\t') match {
+        case -1 => (line.trim, None) // written before table names were recorded
+        case i => (line.substring(0, i).trim,
+          Some(line.substring(i + 1).split(',').map(_.trim).filter(_.nonEmpty).toSet))
+      }
       // relative entries (current layout) resolve against the index
       // base; absolute entries (older builds) pass through unchanged
-      .map(e => if (e.contains("/")) e else new Path(vdir.getParent, e).toString)
+      Segment(if (e.contains("/")) e else new Path(vdir.getParent, e).toString, tables)
+    }
+  }
+
+  /** A `_SEGMENTS` line: the segment's directory name relative to the
+    * index base (so the chain survives a directory move/rename or a
+    * different mount URI), then its tables when recorded.
+    */
+  private def segmentEntry(s: Segment): String = {
+    val name = new Path(s.dir).getName
+    s.tables.fold(name)(t => s"$name\t${t.toSeq.sorted.mkString(",")}")
   }
 
   private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {

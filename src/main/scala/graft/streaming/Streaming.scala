@@ -886,7 +886,15 @@ object Streaming {
       bootstrap: => Unit)(append: => Unit): Boolean =
     // one fused index-state read per batch (exists + marker set) —
     // see IndexIO.segmentMarkersIfExists
-    graft.sources.IndexIO.segmentMarkersIfExists(spark, path) match {
+    applyOnMarkers(graft.sources.IndexIO.segmentMarkersIfExists(spark, path), marker)(
+      bootstrap)(append)
+
+  /** [[applyIndexBatch]] on an index state already read: `markers` is
+    * None when no committed index exists.
+    */
+  private def applyOnMarkers(markers: Option[Set[String]], marker: String)(
+      bootstrap: => Unit)(append: => Unit): Boolean =
+    markers match {
       case None => bootstrap; true
       case Some(ms) if ms.contains(marker) => false
       case _ => append; true
@@ -901,6 +909,9 @@ object Streaming {
     * COUNT, not data volume, is the cost driver. Compaction is a full
     * publish, so the applied-batch markers carry forward: a replay
     * straddling the compact boundary is still recognized and skipped.
+    * A batch folded into its compaction ([[applyChainBatch]]) has
+    * already compacted and skips this check and its re-read of the
+    * chain.
     */
   private def maybeCompact(
       spark: SparkSession, path: String, compactEvery: Int)(
@@ -962,15 +973,29 @@ object Streaming {
 
   /** One non-empty micro-batch of a chain maintainer: apply it
     * exactly-once ([[applyIndexBatch]]), then run the compaction and
-    * vacuum cadences.
+    * vacuum cadences. The marker check and the chain length come from
+    * one read of the index state. A batch that would publish
+    * `publishes` segments onto a committed chain of `n` segments with
+    * `n + publishes >= compactEvery` is due to compact right after it
+    * applies; when the family can `fold` the batch into its compaction,
+    * that one full publish (the fold, carrying the batch's marker)
+    * replaces the batch's own publishes and [[maybeCompact]].
     */
   private def applyChainBatch(
       s: SparkSession, path: String, marker: String, batchId: Long,
-      compactEvery: Int, vacuumEvery: Int, vacuumRetain: Int)(
+      compactEvery: Int, vacuumEvery: Int, vacuumRetain: Int,
+      publishes: Int = 0, fold: Option[() => Unit] = None)(
       bootstrap: => Unit)(append: => Unit)(
       compact: SparkSession => Unit): Unit = {
-    applyIndexBatch(s, path, marker)(bootstrap)(append)
-    maybeCompact(s, path, compactEvery)(compact(s))
+    val state = graft.sources.IndexIO.markersAndLengthIfExists(s, path)
+    val folded = fold.filter(_ => compactEvery > 0 && state.exists { case (ms, n) =>
+      !ms.contains(marker) && n + publishes >= compactEvery })
+    folded match {
+      case Some(f) => f()
+      case None =>
+        applyOnMarkers(state.map(_._1), marker)(bootstrap)(append)
+        maybeCompact(s, path, compactEvery)(compact(s))
+    }
     // vacuum cadence: every publish (append, compact) retires a
     // version dir that publish-time pruning retains only up to its
     // default window — an unattended year-long stream would
@@ -1019,23 +1044,6 @@ object Streaming {
       s => Search.compactBm25Index(s, path, termBuckets))
   }
 
-  /** Maintain a BM25 index from a CDC CHANGE FEED — the streaming
-    * composition of [[graft.operators.IndexSync]]: each micro-batch
-    * carries [[graft.operators.CorpusDiff.diff]]-shaped rows
-    * `(idCol, statusCol, textCol)` and applies as tombstone-the-old
-    * THEN append-the-new (`removed`+`changed` ids die, `added`+
-    * `changed` rows land — log-ordered, so a changed doc's new
-    * version serves and its old one does not).
-    *
-    * Exactly-once: the batch's marker rides the APPEND segment (or the
-    * tombstone segment of a delete-only batch), so a replayed batch is
-    * skipped whole; a crash BETWEEN the delete and the append replays
-    * both, and the delete is idempotent by construction
-    * ([[graft.operators.Search.deleteFromBm25Index]] shrinks stats
-    * from still-LIVE rows only — a second tombstone of the same ids
-    * subtracts nothing). The first non-empty batch bootstraps from its
-    * added/changed rows.
-    */
   /** The ONE CDC-maintainer skeleton every `maintain*IndexCdc` rides:
     * each micro-batch carries [[graft.operators.CorpusDiff.diff]]-shaped
     * rows and applies tombstone-the-old THEN append-the-new
@@ -1048,6 +1056,21 @@ object Streaming {
     * already in the chain; stats-correcting deletes shrink from
     * still-live rows only). The first non-empty batch bootstraps from
     * its added/changed rows.
+    *
+    * Compaction cadence: a batch publishes one segment for its deletes
+    * and one for its adds, so it compacts when the chain length plus
+    * those segments reaches `compactEvery`; the decision is made up
+    * front, from the same index-state read as the replay check. A
+    * family with a `fold` (BM25 and lexical) then publishes the batch
+    * and the compaction as ONE version: `fold(session, dels, adds, marker)`
+    * writes the chain's live rows minus `dels` plus `adds` with the
+    * batch's marker, so the batch's own segments are never written and
+    * read back. A crash before that version's pointer flip leaves the
+    * previous version live, and the replay folds again. Where a
+    * family's append publishes nothing (adds that are all token-less)
+    * the up-front count is one segment high, so such a batch may
+    * compact one batch earlier than delete-then-append would; serving
+    * results are the same.
     */
   private def maintainCdcChain(
       stream: DataFrame,
@@ -1057,7 +1080,8 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int,
       vacuumEvery: Int,
-      vacuumRetain: Int)(
+      vacuumRetain: Int,
+      fold: Option[(SparkSession, Option[DataFrame], Option[DataFrame], String) => Unit] = None)(
       bootstrap: (DataFrame, String) => Unit)(
       delete: (DataFrame, Option[String]) => Unit)(
       append: (DataFrame, String) => Unit)(
@@ -1077,9 +1101,13 @@ object Streaming {
       val nAdds = classified.get("adds").asInstanceOf[Long]
       val nDels = classified.get("dels").asInstanceOf[Long]
       val adds = batch.filter(isAdd)
+      val dels = batch.filter(isDel).select(idCol)
       if (nAdds + nDels > 0)
         applyChainBatch(batch.sparkSession, path, m, batchId, compactEvery,
-          vacuumEvery, vacuumRetain)(
+          vacuumEvery, vacuumRetain,
+          publishes = (if (nDels > 0) 1 else 0) + (if (nAdds > 0) 1 else 0),
+          fold = fold.map(f => () => f(batch.sparkSession, Option.when(nDels > 0)(dels),
+            Option.when(nAdds > 0)(adds), m)))(
           // deletes before the index exists refer to rows never indexed
           // — there is nothing to shadow, so they drop (log-ordered
           // tombstones of nothing). Guarding on the adds also keeps a
@@ -1092,13 +1120,41 @@ object Streaming {
           if (nDels > 0)
             // a delete-only batch carries the marker on its tombstone
             // segment; otherwise the append records it
-            delete(batch.filter(isDel).select(idCol),
-              if (nAdds == 0) Some(m) else None)
+            delete(dels, if (nAdds == 0) Some(m) else None)
           if (nAdds > 0) append(adds, m)
         })(compact)
     }
   }
 
+  /** The BM25/lexical fold of a CDC batch into the chain's compaction
+    * ([[graft.operators.Search.compactBm25Index]] with the batch). The
+    * compaction follows the chain's postings layout, so one fold serves
+    * both families.
+    */
+  private def foldBm25(path: String, idCol: String, textCol: String)
+      : (SparkSession, Option[DataFrame], Option[DataFrame], String) => Unit =
+    (s, dels, adds, m) => graft.operators.Search.compactBm25Index(s, path,
+      Some(graft.operators.Search.CdcBatch(dels, adds, idCol, textCol, m)))
+
+  /** Maintain a BM25 index from a CDC CHANGE FEED — the streaming
+    * composition of [[graft.operators.IndexSync]]: each micro-batch
+    * carries [[graft.operators.CorpusDiff.diff]]-shaped rows
+    * `(idCol, statusCol, textCol)` and applies as tombstone-the-old
+    * THEN append-the-new (`removed`+`changed` ids die, `added`+
+    * `changed` rows land — log-ordered, so a changed doc's new
+    * version serves and its old one does not).
+    *
+    * Exactly-once: the batch's marker rides the APPEND segment (or the
+    * tombstone segment of a delete-only batch), so a replayed batch is
+    * skipped whole; a crash BETWEEN the delete and the append replays
+    * both, and the delete is idempotent by construction
+    * ([[graft.operators.Search.deleteFromBm25Index]] shrinks stats
+    * from still-LIVE rows only — a second tombstone of the same ids
+    * subtracts nothing). The first non-empty batch bootstraps from its
+    * added/changed rows. With `compactEvery`, a batch due to compact
+    * folds into the compaction and publishes one version
+    * ([[maintainCdcChain]]).
+    */
   def maintainBm25IndexCdc(
       stream: DataFrame,
       idCol: String,
@@ -1112,7 +1168,7 @@ object Streaming {
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Search
     maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
+      compactEvery, vacuumEvery, vacuumRetain, Some(foldBm25(path, idCol, textCol)))(
       (a, m) => Search.buildBm25Index(a, idCol, textCol, path,
         termBuckets, marker = Some(m)))(
       (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d,
@@ -1143,7 +1199,7 @@ object Streaming {
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Search
     maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
+      compactEvery, vacuumEvery, vacuumRetain, Some(foldBm25(path, idCol, textCol)))(
       (a, m) => Search.buildLexicalIndex(a, idCol, textCol, path,
         termBuckets, marker = Some(m)))(
       (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol,

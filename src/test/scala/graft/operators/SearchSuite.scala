@@ -867,6 +867,30 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("compactBm25Index writes stats exact over the live docs, also for an emptied index") {
+    val dir = Files.createTempDirectory("bm25_cmpct_stats").toString
+    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
+    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text", dir)
+    Search.deleteFromBm25Index(spark, dir, Seq(2L, 4L).toDF("doc_id"), "doc_id")
+    Search.compactBm25Index(spark, dir)
+    def stats() = {
+      val r = graft.sources.IndexIO.readRows(spark,
+        graft.sources.IndexIO.resolve(spark, dir) + "/stats").head
+      (r.getLong(0), r.getLong(1))
+    }
+    // docs 1, 3, 5 live: 4 + 1 + 4 tokens
+    assert(stats() == ((3L, 9L)))
+    assertSameRows(
+      Search.bm25TopK(corpus.filter(!$"doc_id".isin(2L, 4L)), "doc_id", "text",
+        Seq("spark", "words"), k = 10),
+      Search.bm25SearchIndex(spark, dir, Seq("spark", "words"), k = 10))
+    Search.deleteFromBm25Index(spark, dir, Seq(1L, 3L, 5L).toDF("doc_id"), "doc_id")
+    Search.compactBm25Index(spark, dir)
+    assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
+    assert(stats() == ((0L, 0L)))
+    assert(Search.bm25SearchIndex(spark, dir, Seq("spark"), k = 10).isEmpty)
+  }
+
   test("bm25SearchIndex reads one version: a compaction mid-call cannot resurrect a delete") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.cmpctfs.impl", classOf[CompactOnOpenFileSystem].getName)

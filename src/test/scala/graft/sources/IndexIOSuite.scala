@@ -652,4 +652,79 @@ class IndexIOSuite extends SparkSpec {
       IndexIO.countRows(spark, s"$base/missing")
     }
   }
+
+  test("writeTombstones: one Spark job, each id written once") {
+    val base = newBase()
+    // three input partitions: distinct-then-coalesce shuffles them first
+    val ids = spark.sparkContext.parallelize(Seq(3L, 1L, 3L, 2L, 1L, 3L), 3).toDF("doc_id")
+    assert(jobsDuring(IndexIO.writeTombstones(ids, base)) == 1)
+    assert(spark.read.parquet(s"$base/tombstones").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+  }
+
+  test("_SEGMENTS names each segment's tables: reads list only segments that hold one") {
+    import graft.operators.Search
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.lstfs.impl", classOf[ListingFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.lstfs.impl", classOf[ListingAbstractFileSystem].getName)
+    val base = s"lstfs://${newBase()}/idx"
+    val docs = Seq((1L, "spark joins fast"), (2L, "spark streams"),
+      (3L, "joins on ranges"), (4L, "fast range joins in spark")).toDF("doc_id", "text")
+    val terms = Seq("spark", "joins")
+    Search.buildBm25Index(docs.filter(col("doc_id") <= 2), "doc_id", "text", base)
+    Search.appendToBm25Index(docs.filter(col("doc_id") > 2), "doc_id", "text", base)
+    /** the tables listed while the search is planned, by name */
+    def listedBySearch(): (Seq[String], org.apache.spark.sql.DataFrame) = {
+      ListingFileSystem.listed.clear()
+      val served = Search.bm25SearchIndex(spark, base, terms, k = 10)
+      import scala.jdk.CollectionConverters._
+      (ListingFileSystem.listed.asScala.toSeq.map(_.getName), served)
+    }
+    // no delete segment: no tombstones listing at all; stats from the newest segment
+    val (noDelete, served0) = listedBySearch()
+    assert(!noDelete.contains("tombstones"), noDelete)
+    assert(noDelete.count(_ == "stats") == 1, noDelete)
+    assertSameRows(Search.bm25TopK(docs, "doc_id", "text", terms, k = 10), served0)
+    // one delete segment: tombstones listed there only
+    Search.deleteFromBm25Index(spark, base, Seq(2L).toDF("doc_id"), "doc_id")
+    val (oneDelete, served1) = listedBySearch()
+    assert(oneDelete.count(_ == "tombstones") == 1, oneDelete)
+    assert(oneDelete.count(_ == "postings") == 2, oneDelete)
+    val live = docs.filter(col("doc_id") =!= 2L)
+    assertSameRows(Search.bm25TopK(live, "doc_id", "text", terms, k = 10), served1)
+    // a chain written before the names were recorded still reads: every
+    // segment is listed for every table, as before
+    val segFile = java.nio.file.Paths.get(
+      new java.net.URI(IndexIO.resolve(spark, base)).getPath, "_SEGMENTS")
+    val entries = new String(java.nio.file.Files.readAllBytes(segFile), "UTF-8").split("\n")
+    assert(entries.length == 3 && entries.forall(_.contains("\t")), entries.toSeq)
+    java.nio.file.Files.write(segFile,
+      entries.map(_.takeWhile(_ != '\t')).mkString("\n").getBytes("UTF-8"))
+    assert(IndexIO.chain(spark, base).forall(_.tables.isEmpty))
+    val (oldFormat, served2) = listedBySearch()
+    assert(oldFormat.count(_ == "tombstones") == 3, oldFormat)
+    assertSameRows(Search.bm25TopK(live, "doc_id", "text", terms, k = 10), served2)
+  }
 }
+
+/** The local file system under the `lstfs` scheme, recording every
+  * directory it lists.
+  */
+class ListingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("lstfs:///")
+  override def getScheme: String = "lstfs"
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListingFileSystem.listed.add(f)
+    super.listStatus(f)
+  }
+}
+
+object ListingFileSystem {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]
+}
+
+/** [[ListingFileSystem]] for FileContext callers (pointer flips). */
+class ListingAbstractFileSystem(
+    uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      java.net.URI.create("lstfs:///"), new ListingFileSystem, conf, "lstfs", false)

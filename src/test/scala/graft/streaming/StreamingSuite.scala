@@ -2401,4 +2401,258 @@ class StreamingSuite extends SparkSpec {
       assertSameRows(Search.bm25SearchIndex(spark, idx, terms, k = 10),
         Search.bm25SearchIndex(spark, fresh, terms, k = 10))
   }
+
+  /** A BM25/lexical chain's live state: its live postings and lengths
+    * rows (columns in name order), its stats, and its applied-batch
+    * markers without the stream generation (`b<id>`).
+    */
+  private def cdcChainState(path: String)
+      : (Set[Seq[String]], Set[Seq[String]], (Long, Long), Set[String]) = {
+    import graft.sources.IndexIO
+    val tombs = IndexIO.chainTable(spark, path, "tombstones")
+    def live(t: String) = {
+      val d = IndexIO.withoutTombstoned(IndexIO.chainTable(spark, path, t).get, tombs, "doc_id")
+      rowSet(d.select(d.columns.sorted.map(col).toSeq: _*))
+    }
+    val stats = IndexIO.segments(spark, path).reverseIterator
+      .flatMap(s => IndexIO.readRowsIfExists(spark, s"$s/stats")).next().head
+    (live("postings"), live("lengths"), (stats.getLong(0), stats.getLong(1)),
+      IndexIO.segmentMarkers(spark, path).map(_.takeWhile(_ != '-')))
+  }
+
+  /** `n_docs`/`total_dl` over the live texts (token-less docs excluded). */
+  private def liveStats(live: Iterable[String]): (Long, Long) = {
+    val dls = live.map(_.trim.split("\\s+").count(_.nonEmpty).toLong).filter(_ > 0)
+    (dls.size.toLong, dls.sum)
+  }
+
+  private val none = null.asInstanceOf[String]
+
+  /** CDC batches for `compactEvery = 3`, with whether each folds: a
+    * batch folds when the chain length plus its segments (one for
+    * deletes, one for adds) reaches 3.
+    */
+  private val foldBatches: Seq[(Seq[(Long, String, String)], Boolean)] = Seq(
+    (1L to 6L).map(i => (i, "added", s"common words w$i and more w$i")) -> false,
+    // a changed id, a removed id and a new one
+    Seq((2L, "changed", "common words rewritten two"), (1L, "removed", none),
+      (7L, "added", "seven common words")) -> true,
+    Seq((4L, "removed", none)) -> false,
+    // add-only compacting batch
+    Seq((8L, "added", "eight words common words")) -> true,
+    // an id removed and re-added in one batch
+    Seq((3L, "removed", none), (3L, "added", "three common words again"),
+      (9L, "added", "nine")) -> true,
+    Seq((10L, "added", "ten common words")) -> false,
+    // delete-only compacting batch
+    Seq((5L, "removed", none)) -> true,
+    // a token-less add: delete-then-append publishes no append segment
+    // (and so records no marker); the fold counts it and compacts
+    Seq((6L, "removed", none), (11L, "added", "   ")) -> true)
+
+  /** Feed [[foldBatches]] to `maintain` with `compactEvery = 3` and, in
+    * lockstep, to a maintainer that never compacts on its own, compacted
+    * after each batch on the same cadence — the delete, append, then
+    * compact sequence. Both land the same live rows, stats and markers
+    * after every batch, and serve the same results.
+    */
+  private def foldMatchesDeleteAppendCompact(
+      maintain: (org.apache.spark.sql.DataFrame, String, String, Int) =>
+        org.apache.spark.sql.streaming.StreamingQuery,
+      serve: Seq[String => org.apache.spark.sql.DataFrame]): Unit = {
+    import graft.operators.Search
+    import graft.sources.IndexIO
+    implicit val sqlCtx = spark.sqlContext
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (idx, ref) = (tmp("graft_fold_"), tmp("graft_fold_ref_"))
+    val in1 = MemoryStream[(Long, String, String)]
+    val in2 = MemoryStream[(Long, String, String)]
+    val q1 = maintain(in1.toDF().toDF("doc_id", "status", "text"), idx, tmp("graft_fold_ck_"), 3)
+    val q2 = maintain(in2.toDF().toDF("doc_id", "status", "text"), ref, tmp("graft_fold_rck_"), 0)
+    val live = scala.collection.mutable.Map.empty[Long, String]
+    try for (((batch, folds), i) <- foldBatches.zipWithIndex) {
+      val before = IndexIO.versions(spark, idx).toSet
+      in1.addData(batch: _*)
+      q1.processAllAvailable()
+      in2.addData(batch: _*)
+      q2.processAllAvailable()
+      if (IndexIO.segments(spark, ref).length >= 3) Search.compactBm25Index(spark, ref)
+      batch.foreach { case (id, st, _) => if (st != "added") live.remove(id) }
+      batch.foreach { case (id, st, t) => if (st != "removed") live(id) = t }
+      if (folds) {
+        assert((IndexIO.versions(spark, idx).toSet -- before).size == 1,
+          s"batch $i: a folded batch publishes one version")
+        assert(IndexIO.segments(spark, idx).length == 1, s"batch $i")
+      }
+      val (got, want) = (cdcChainState(idx), cdcChainState(ref))
+      assert(got._1 == want._1, s"batch $i: live postings")
+      assert(got._2 == want._2, s"batch $i: live lengths")
+      assert(got._3 == want._3 && got._3 == liveStats(live.values), s"batch $i: stats")
+      assert(got._4 == (0 to i).map(j => s"b$j").toSet, s"batch $i: markers ${got._4}")
+      assert(want._4 == got._4 -- Set("b7"), s"batch $i: markers ${want._4}")
+    } finally { q1.stop(); q2.stop() }
+    assert(live.keySet == Set(2L, 3L, 7L, 8L, 9L, 10L, 11L))
+    for (f <- serve) assertSameRows(f(idx), f(ref))
+  }
+
+  test("CDC fold: BM25 folded compaction == delete, append, then compact") {
+    import graft.operators.Search
+    foldMatchesDeleteAppendCompact(
+      (df, path, ck, every) => Streaming.maintainBm25IndexCdc(df, "doc_id", "status",
+        "text", path, ck, compactEvery = every),
+      Seq(Seq("common"), Seq("words", "rewritten"), Seq("three", "nine"), Seq("w6"))
+        .map(t => (p: String) => Search.bm25SearchIndex(spark, p, t, k = 10)))
+  }
+
+  test("CDC fold: lexical folded compaction == delete, append, then compact") {
+    import graft.operators.Search
+    foldMatchesDeleteAppendCompact(
+      (df, path, ck, every) => Streaming.maintainLexicalIndexCdc(df, "doc_id", "status",
+        "text", path, ck, compactEvery = every),
+      Seq[String => org.apache.spark.sql.DataFrame](
+        p => Search.bm25SearchIndex(spark, p, Seq("common", "again"), k = 10),
+        p => Search.phraseSearchIndex(spark, p, Seq("common", "words"), k = 10),
+        p => Search.phraseSearchIndex(spark, p, Seq("words", "rewritten", "two"), k = 10)))
+  }
+
+  test("CDC fold: a replayed folded batch is skipped") {
+    import graft.sources.IndexIO
+    implicit val sqlCtx = spark.sqlContext
+    val idx = java.nio.file.Files.createTempDirectory("graft_fold_replay_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_fold_replayck_").toString
+    val input = MemoryStream[(Long, String, String)]
+    def start() = Streaming.maintainBm25IndexCdc(input.toDF().toDF("doc_id", "status", "text"),
+      "doc_id", "status", "text", idx, ckpt, compactEvery = 3)
+    val q = start()
+    try {
+      input.addData((1L to 4L).map(i => (i, "added", s"doc $i text")): _*)
+      q.processAllAvailable()
+      input.addData((1L, "removed", none), (5L, "added", "doc five"))
+      q.processAllAvailable() // 1 + 2 segments: folds
+    } finally q.stop()
+    assert(IndexIO.segments(spark, idx).length == 1)
+    val v = IndexIO.currentVersionId(spark, idx)
+    val state = cdcChainState(idx)
+    // forget that batch 1 committed: the restarted query runs it again
+    val fs = new org.apache.hadoop.fs.Path(ckpt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (f <- Seq("commits/1", "commits/.1.crc"))
+      fs.delete(new org.apache.hadoop.fs.Path(ckpt, f), false)
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0),
+      "batch 1 was not replayed")
+    assert(IndexIO.currentVersionId(spark, idx) == v, "the replayed batch published")
+    assert(cdcChainState(idx) == state)
+    assert(state._3 == liveStats(Seq("doc 2 text", "doc 3 text", "doc 4 text", "doc five")))
+  }
+
+  test("CDC fold: a failed pointer flip leaves the previous version live; the restart applies once") {
+    import graft.operators.Search
+    import graft.sources.IndexIO
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.flipfs.impl", classOf[FailingFlipFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.flipfs.impl", classOf[FailingFlipAbstractFileSystem].getName)
+    implicit val sqlCtx = spark.sqlContext
+    val idx = s"flipfs://${java.nio.file.Files.createTempDirectory("graft_fold_crash_")}/idx"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_fold_crashck_").toString
+    val input = MemoryStream[(Long, String, String)]
+    def start() = Streaming.maintainBm25IndexCdc(input.toDF().toDF("doc_id", "status", "text"),
+      "doc_id", "status", "text", idx, ckpt, compactEvery = 3)
+    val live = scala.collection.mutable.Map((1L to 4L).map(i => i -> s"doc $i text"): _*)
+    FailingFlipFileSystem.failed.set(0)
+    val q = start()
+    try {
+      input.addData(live.toSeq.map { case (i, t) => (i, "added", t) }: _*)
+      q.processAllAvailable()
+      val v0 = IndexIO.currentVersionId(spark, idx)
+      val state0 = cdcChainState(idx)
+      FailingFlipFileSystem.failFlips = true
+      input.addData((1L, "removed", none), (2L, "changed", "doc two rewritten"),
+        (5L, "added", "doc five"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      assert(FailingFlipFileSystem.failed.get == 1)
+      assert(IndexIO.currentVersionId(spark, idx) == v0, "the failed publish flipped the pointer")
+      assert(cdcChainState(idx) == state0)
+    } finally { FailingFlipFileSystem.failFlips = false; q.stop() }
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    live.remove(1L); live(2L) = "doc two rewritten"; live(5L) = "doc five"
+    val (_, lengths, stats, markers) = cdcChainState(idx)
+    assert(IndexIO.segments(spark, idx).length == 1)
+    assert(markers == Set("b0", "b1"))
+    assert(lengths.map(_(1).toLong) == live.keySet.toSet) // columns (dl, doc_id)
+    assert(stats == liveStats(live.values))
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fold_crashfresh_").toString
+    Search.buildBm25Index(live.toSeq.toDF("doc_id", "text"), "doc_id", "text", fresh)
+    for (terms <- Seq(Seq("doc"), Seq("two", "five"), Seq("text")))
+      assertSameRows(Search.bm25SearchIndex(spark, idx, terms, k = 10),
+        Search.bm25SearchIndex(spark, fresh, terms, k = 10))
+  }
+
+  test("CDC fold: a compacting batch of 100 adds and 100 removes stays within 10 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sources.IndexIO
+    implicit val sqlCtx = spark.sqlContext
+    val idx = java.nio.file.Files.createTempDirectory("graft_fold_jobs_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_fold_jobsck_").toString
+    val input = MemoryStream[(Long, String, String)]
+    val q = Streaming.maintainBm25IndexCdc(input.toDF().toDF("doc_id", "status", "text"),
+      "doc_id", "status", "text", idx, ckpt, compactEvery = 5)
+    def text(i: Long) = (0 until 30).map(j => s"t${(i * 31 + j * j) % 300}").mkString(" ")
+    def change(b: Long) = (b * 100 until b * 100 + 100).map(i => (i, "removed", none)) ++
+      (1000 + b * 100 until 1100 + b * 100).map(i => (i, "added", text(i)))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    try {
+      input.addData((0L until 1000L).map(i => (i, "added", text(i))): _*)
+      q.processAllAvailable()
+      input.addData(change(0): _*)
+      q.processAllAvailable() // 1 + 2 segments: applies
+      assert(IndexIO.segments(spark, idx).length == 3)
+      org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+      sc.addSparkListener(counter)
+      try {
+        input.addData(change(1): _*)
+        q.processAllAvailable() // 3 + 2 segments: folds
+        org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+      } finally sc.removeSparkListener(counter)
+    } finally q.stop()
+    assert(jobs.get <= 10, s"${jobs.get} Spark jobs for one compacting batch")
+    assert(IndexIO.segments(spark, idx).length == 1)
+    assert(cdcChainState(idx)._3 == liveStats((200L until 1200L).map(text)))
+  }
 }
+
+/** The local file system under the `flipfs` scheme: while `failFlips` is
+  * set, creating a publish's temporary pointer file (the step right
+  * before the pointer flip) fails.
+  */
+class FailingFlipFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("flipfs:///")
+  override def getScheme: String = "flipfs"
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    // `._LATEST.<version>`, not the flip lock `._LATEST.flip_lock`
+    if (FailingFlipFileSystem.failFlips && f.getName.startsWith("._LATEST.") &&
+        !f.getName.endsWith("_lock")) {
+      FailingFlipFileSystem.failed.incrementAndGet()
+      throw new java.io.IOException(s"injected failure before the pointer flip: $f")
+    }
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailingFlipFileSystem {
+  @volatile var failFlips = false
+  val failed = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
+/** [[FailingFlipFileSystem]] for FileContext callers (pointer flips). */
+class FailingFlipAbstractFileSystem(
+    uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      java.net.URI.create("flipfs:///"), new FailingFlipFileSystem, conf, "flipfs", false)
