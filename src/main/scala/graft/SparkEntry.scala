@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.multimodal.Multimodal
 import graft.operators._
-import graft.streaming.Streaming
+import graft.streaming.{IndexFamily, Streaming}
 
 /** Driver contract (SURVEY.md §7 + builder prompt): `entry` is the
   * flagship smoke query; `queries` maps every implemented operator to a
@@ -4938,18 +4938,14 @@ object SparkEntry {
         .sortBy(_._1)
         .map { case (id, st) => (id, st, newText.getOrElse(id, null: String)) }
         .toSeq
+      val indexFamily = family match {
+        case "bm25" => IndexFamily.bm25("doc_id", "text", idx)
+        case "lexical" => IndexFamily.lexical("doc_id", "text", idx)
+        case "minhash" => IndexFamily.minhash("doc_id", "text", idx)
+        case other => throw new IllegalArgumentException(s"buildCdc: unknown family $other")
+      }
       runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        val df = ds.toDF("doc_id", "status", "text")
-        family match {
-          case "bm25" => Streaming.maintainBm25IndexCdc(
-            df, "doc_id", "status", "text", idx, ckpt)
-          case "lexical" => Streaming.maintainLexicalIndexCdc(
-            df, "doc_id", "status", "text", idx, ckpt)
-          case "minhash" => Streaming.maintainMinhashIndexCdc(
-            df, "doc_id", "status", "text", idx, ckpt)
-          case other => throw new IllegalArgumentException(
-            s"buildCdc: unknown family $other")
-        }
+        Streaming.maintainCdc(indexFamily, ds.toDF("doc_id", "status", "text"), "status", ckpt)
       }
     }
   }

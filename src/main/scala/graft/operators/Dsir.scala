@@ -318,14 +318,31 @@ object Dsir {
     */
   def applyDsirIndexCdc(
       addedRaw: DataFrame, deletedRaw: DataFrame, textCol: String,
-      path: String, marker: Option[String] = None): Unit = {
-    val spark = addedRaw.sparkSession
+      path: String, marker: Option[String] = None): Unit =
+    publishNetProfile(addedRaw, deletedRaw, path, marker)(ngramProfile(_, textCol, _))
+
+  /** [[applyDsirIndexCdc]] for the per-group artifact: the batch's net
+    * GROUPED profile in one marked segment (a retracted row's group is
+    * read from `groupCol` like an added row's).
+    */
+  def applyDsirIndexByGroupCdc(
+      addedRaw: DataFrame, deletedRaw: DataFrame, textCol: String, groupCol: String,
+      path: String, marker: Option[String] = None): Unit =
+    publishNetProfile(addedRaw, deletedRaw, path, marker)(
+      ngramProfileByGroup(_, textCol, groupCol, _))
+
+  /** One delta segment holding `profile(added) - profile(deleted)`, zero
+    * counts dropped, with `marker`.
+    */
+  private def publishNetProfile(
+      added: DataFrame, deleted: DataFrame, path: String, marker: Option[String])(
+      profile: (DataFrame, Int) => DataFrame): Unit = {
+    val spark = added.sparkSession
     val b = dsirIndexBuckets(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      ngramProfile(addedRaw, textCol, b)
-        .unionByName(ngramProfile(deletedRaw, textCol, b)
-          .select(col("bucket"), (-col("cnt")).as("cnt")))
-        .groupBy("bucket").agg(sum("cnt").as("cnt"))
+      val adds = profile(added, b)
+      adds.unionByName(profile(deleted, b).withColumn("cnt", -col("cnt")))
+        .groupBy(adds.columns.filter(_ != "cnt").map(col).toSeq: _*).agg(sum("cnt").as("cnt"))
         .filter(col("cnt") =!= 0L)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$seg/raw")

@@ -1832,9 +1832,10 @@ object SimilaritySearch {
     val vdir0 = graft.sources.IndexIO.resolve(spark, indexDir)
     val (cents, cnorms, dim, m, kCodes, subDim, cb) = loadIvfPqModel(spark, vdir0)
     // a meta-partitioned index must keep its layout through appends:
-    // segment schemas have to agree for the chain union to resolve
-    val baseHasMeta = graft.sources.IndexIO.readTable(spark, s"$vdir0/cells")
-      .schema.fieldNames.contains("meta")
+    // segment schemas have to agree for the chain union to resolve. The
+    // chain's cells, not the newest version's: a delete segment holds none
+    val baseHasMeta = graft.sources.IndexIO.chainTable(spark, indexDir, "cells")
+      .exists(_.schema.fieldNames.contains("meta"))
     require(baseHasMeta == metaCol.isDefined,
       if (baseHasMeta)
         s"appendToIvfPqIndex: index at $indexDir is meta-partitioned; pass metaCol"

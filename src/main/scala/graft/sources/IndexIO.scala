@@ -338,6 +338,8 @@ object IndexIO {
     // java.io.File.createNewFile (O_CREAT|O_EXCL, atomic across
     // processes); HDFS-like stores enforce no-overwrite server-side.
     val scheme = Option(lock.toUri.getScheme).getOrElse("file")
+    // the last failed create, the cause when the wait gives up
+    var createError: Option[java.io.IOException] = None
     def tryCreate(): Boolean =
       if (scheme == "file") {
         val f = new java.io.File(lock.toUri.getPath)
@@ -355,19 +357,19 @@ object IndexIO {
             .getBytes(StandardCharsets.UTF_8))
           finally out.close()
           true
-        } catch { case _: java.io.IOException => false }
+        } catch { case e: java.io.IOException => createError = Some(e); false }
       }
     val deadline = System.currentTimeMillis() + timeoutMs
     var acquired = false
     while (!acquired) {
       if (tryCreate()) acquired = true
       else {
-        val stale =
-          try {
-            val st = fs.getFileStatus(lock)
-            System.currentTimeMillis() - st.getModificationTime > staleMs
-          } catch { case _: java.io.FileNotFoundException => true }
-        if (stale) {
+        // None: no lock file, so the create failed for another reason
+        // (or the holder just released) — back off like a held lock
+        val age =
+          try Some(System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime)
+          catch { case _: java.io.FileNotFoundException => None }
+        if (age.exists(_ > staleMs)) {
           // crash leftover: delete and retry the atomic create (a
           // concurrent taker-over may win the re-create — fine, we
           // loop back into the wait)
@@ -376,7 +378,8 @@ object IndexIO {
           throw new IllegalStateException(
             s"IndexIO: could not acquire $lock within ${timeoutMs} ms — " +
               "another publisher holds it (a crashed holder's lock is " +
-              s"taken over after $staleMs ms)")
+              s"taken over after $staleMs ms) or creating it fails",
+            createError.orNull)
         } else Thread.sleep(50)
       }
     }
@@ -464,8 +467,22 @@ object IndexIO {
       FileContext.getFileContext(base.toUri, conf)
         .rename(tmp, new Path(base, Pointer), Options.Rename.OVERWRITE)
     }
+    committedHere.set(committedHere.get + 1)
     prune(fs, base, RetainVersions, PruneGraceMs)
     vdir.toString
+  }
+
+  /** Versions the calling thread has committed, for [[commits]]. */
+  private val committedHere = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  /** Whether `f` committed a version on the calling thread — asked of an
+    * append that may publish nothing (a batch with no indexable rows),
+    * with no file-system round trip.
+    */
+  private[graft] def commits(f: => Unit): Boolean = {
+    val before = committedHere.get
+    f
+    committedHere.get != before
   }
 
   /** The applied-batch markers of the CURRENT index: the union of every

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured-Streaming surface (beyond the reference, which is purely
   * batch — SURVEY.md §2.4 "Streaming: none"). Transforms are written
@@ -926,42 +926,87 @@ object Streaming {
         .segmentsIfExists(spark, path).exists(_.length >= compactEvery))
       compact
 
-  /** The ONE build-then-append maintenance skeleton every index-family
-    * maintainer runs: markers scope to the CHECKPOINT (not the run) via
-    * [[streamMarkerId]] — replays within one checkpoint keep their
-    * batch id and are recognized, while a fresh stream generation (new
+  /** Maintain `family`'s index FROM A STREAM of new rows — the ONE
+    * build-then-append skeleton every plain `maintain*Index` forwards
+    * to. Markers scope to the CHECKPOINT (not the run) via
+    * [[streamMarkerId]]: replays within one checkpoint keep their batch
+    * id and are recognized, while a fresh stream generation (new
     * checkpoint, batch ids restarting at 0) gets its own marker space
     * and never collides. Each non-empty micro-batch applies
-    * exactly-once through [[applyIndexBatch]] (first batch `bootstrap`,
-    * later batches `append`, both receiving the batch + its marker),
-    * then [[maybeCompact]] runs the family's `compact` on the
-    * segment-count cadence. Empty batches (quiet crawl windows) are
-    * no-ops.
+    * exactly-once through [[applyIndexBatch]] (the first bootstraps the
+    * index, later ones append), then [[maybeCompact]] runs the family's
+    * compaction once the chain reaches `compactEvery` segments, and
+    * every `vacuumEvery`-th batch vacuums down to `vacuumRetain`
+    * versions. Empty batches (quiet crawl windows) are no-ops.
     */
-  private def maintainChain(
+  def maintain(
+      family: IndexFamily,
       stream: DataFrame,
-      path: String,
       checkpointDir: String,
-      compactEvery: Int,
+      compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2)(
-      bootstrap: (DataFrame, String) => Unit)(
-      append: (DataFrame, String) => Unit)(
-      compact: SparkSession => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startChain(stream, checkpointDir) { (batch, batchId, marker) =>
+      vacuumRetain: Int = 2): StreamingQuery =
+    startChain(stream, checkpointDir) { (batch, batchId, m) =>
       if (!batch.isEmpty)
-        applyChainBatch(batch.sparkSession, path, marker, batchId, compactEvery,
-          vacuumEvery, vacuumRetain)(bootstrap(batch, marker))(
-          append(batch, marker))(compact)
+        applyChainBatch(family, batch.sparkSession, m, batchId, compactEvery, vacuumEvery,
+          vacuumRetain)(family.build(batch, Some(m)))(family.append(batch, Some(m)))
+    }
+
+  /** Maintain `family`'s index from a CDC CHANGE FEED — the ONE skeleton
+    * every `maintain*IndexCdc` forwards to, and the streaming
+    * composition of [[graft.operators.IndexSync.sync]]: each micro-batch
+    * carries [[graft.operators.CorpusDiff.diff]]-shaped rows (status in
+    * `statusCol`) and applies as one change set
+    * ([[IndexFamily.applyChanges]]: `removed`+`changed` rows die,
+    * `added`+`changed` rows land, log-ordered, so a changed row's new
+    * version serves and its old one does not).
+    *
+    * Exactly-once: the batch's marker rides its last publish, so a
+    * replayed batch is skipped whole; a crash between a tombstone
+    * family's delete and append replays both, and every such delete is
+    * idempotent (tombstones only shadow rows already in the chain;
+    * stats-correcting deletes shrink from still-live rows only). A
+    * retraction family publishes the batch as one segment, so there is
+    * no in-between. The first batch with adds bootstraps from its
+    * added/changed rows; deletes before the index exists refer to rows
+    * never indexed and drop, and a delete-only FIRST batch publishes
+    * nothing (so it never trains a model on zero rows) — a replay is a
+    * no-op for the same reason.
+    *
+    * Compaction cadence: the batch compacts when the chain length plus
+    * the segments it publishes reaches `compactEvery`, decided up front
+    * from the same index-state read as the replay check. A folding
+    * family (BM25, lexical) then publishes the batch and the compaction
+    * as ONE version — the chain's live rows minus the batch's deletes
+    * plus its adds, with its marker — so the batch's own segments are
+    * never written and read back. A crash before that version's pointer
+    * flip leaves the previous version live, and the replay folds again.
+    * Where an add-only batch's append publishes nothing (adds that are
+    * all token-less) the up-front count is one segment high, so such a
+    * batch may compact one batch earlier than delete-then-append would;
+    * serving results are the same.
+    */
+  def maintainCdc(
+      family: IndexFamily,
+      stream: DataFrame,
+      statusCol: String,
+      checkpointDir: String,
+      compactEvery: Int = 0,
+      vacuumEvery: Int = 0,
+      vacuumRetain: Int = 2): StreamingQuery =
+    startChain(stream, checkpointDir) { (b, batchId, m) =>
+      val cs = family.feedChanges(b, statusCol)
+      if (!cs.isEmpty)
+        applyChainBatch(family, b.sparkSession, m, batchId, compactEvery, vacuumEvery,
+          vacuumRetain, Some(cs))(cs.adds.foreach(family.build(_, Some(m))))(
+          family.applyChanges(cs, Some(m)))
     }
 
   /** Start the `foreachBatch` stream of a chain maintainer: `step`
     * receives each micro-batch with its id and its applied-batch marker.
     */
   private def startChain(stream: DataFrame, checkpointDir: String)(
-      step: (DataFrame, Long, String) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      step: (DataFrame, Long, String) => Unit): StreamingQuery = {
     val sid = streamMarkerId(stream.sparkSession, checkpointDir)
     val run: (DataFrame, Long) => Unit =
       (batch, batchId) => step(batch, batchId, s"b$batchId-$sid")
@@ -974,27 +1019,26 @@ object Streaming {
   /** One non-empty micro-batch of a chain maintainer: apply it
     * exactly-once ([[applyIndexBatch]]), then run the compaction and
     * vacuum cadences. The marker check and the chain length come from
-    * one read of the index state. A batch that would publish
-    * `publishes` segments onto a committed chain of `n` segments with
-    * `n + publishes >= compactEvery` is due to compact right after it
-    * applies; when the family can `fold` the batch into its compaction,
-    * that one full publish (the fold, carrying the batch's marker)
-    * replaces the batch's own publishes and [[maybeCompact]].
+    * one read of the index state. A change set that would publish its
+    * segments onto a committed chain of `n` segments, reaching
+    * `compactEvery`, is due to compact right after it applies; when the
+    * family folds, that one full publish (the fold, carrying the batch's
+    * marker) replaces the batch's own publishes and [[maybeCompact]].
     */
   private def applyChainBatch(
-      s: SparkSession, path: String, marker: String, batchId: Long,
+      family: IndexFamily, s: SparkSession, marker: String, batchId: Long,
       compactEvery: Int, vacuumEvery: Int, vacuumRetain: Int,
-      publishes: Int = 0, fold: Option[() => Unit] = None)(
-      bootstrap: => Unit)(append: => Unit)(
-      compact: SparkSession => Unit): Unit = {
-    val state = graft.sources.IndexIO.markersAndLengthIfExists(s, path)
-    val folded = fold.filter(_ => compactEvery > 0 && state.exists { case (ms, n) =>
-      !ms.contains(marker) && n + publishes >= compactEvery })
-    folded match {
-      case Some(f) => f()
-      case None =>
-        applyOnMarkers(state.map(_._1), marker)(bootstrap)(append)
-        maybeCompact(s, path, compactEvery)(compact(s))
+      changes: Option[ChangeSet] = None)(bootstrap: => Unit)(append: => Unit): Unit = {
+    val state = graft.sources.IndexIO.markersAndLengthIfExists(s, family.path)
+    val folded = for {
+      cs <- changes
+      fold <- family.fold
+      if compactEvery > 0 && state.exists { case (ms, n) =>
+        !ms.contains(marker) && n + cs.publishes >= compactEvery }
+    } yield fold(s, cs, marker)
+    if (folded.isEmpty) {
+      applyOnMarkers(state.map(_._1), marker)(bootstrap)(append)
+      maybeCompact(s, family.path, compactEvery)(family.compact(s))
     }
     // vacuum cadence: every publish (append, compact) retires a
     // version dir that publish-time pruning retains only up to its
@@ -1006,7 +1050,7 @@ object Streaming {
     // survive so a reader resolved against the PREVIOUS version
     // keeps its data through the next publish.
     if (vacuumEvery > 0 && batchId > 0 && batchId % vacuumEvery == 0)
-      graft.sources.IndexIO.vacuum(s, path, retainVersions = vacuumRetain)
+      graft.sources.IndexIO.vacuum(s, family.path, retainVersions = vacuumRetain)
   }
 
   /** Maintain a [[graft.operators.Search.buildBm25Index]] artifact FROM
@@ -1033,108 +1077,9 @@ object Streaming {
       termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Search
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Search.buildBm25Index(b, idCol, textCol, path, termBuckets,
-        marker = Some(m)))(
-      (b, m) => Search.appendToBm25Index(b, idCol, textCol, path, termBuckets,
-        marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
-  }
-
-  /** The ONE CDC-maintainer skeleton every `maintain*IndexCdc` rides:
-    * each micro-batch carries [[graft.operators.CorpusDiff.diff]]-shaped
-    * rows and applies tombstone-the-old THEN append-the-new
-    * (`removed`+`changed` ids die, `added`+`changed` rows land —
-    * log-ordered, so a changed doc's new version serves and its old one
-    * does not). Exactly-once: the marker rides the append segment, or
-    * the tombstone segment of a delete-only batch, so a replayed batch
-    * skips whole; a crash BETWEEN delete and append replays both, and
-    * every family's delete is idempotent (tombstones only shadow rows
-    * already in the chain; stats-correcting deletes shrink from
-    * still-live rows only). The first non-empty batch bootstraps from
-    * its added/changed rows.
-    *
-    * Compaction cadence: a batch publishes one segment for its deletes
-    * and one for its adds, so it compacts when the chain length plus
-    * those segments reaches `compactEvery`; the decision is made up
-    * front, from the same index-state read as the replay check. A
-    * family with a `fold` (BM25 and lexical) then publishes the batch
-    * and the compaction as ONE version: `fold(session, dels, adds, marker)`
-    * writes the chain's live rows minus `dels` plus `adds` with the
-    * batch's marker, so the batch's own segments are never written and
-    * read back. A crash before that version's pointer flip leaves the
-    * previous version live, and the replay folds again. Where a
-    * family's append publishes nothing (adds that are all token-less)
-    * the up-front count is one segment high, so such a batch may
-    * compact one batch earlier than delete-then-append would; serving
-    * results are the same.
-    */
-  private def maintainCdcChain(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int,
-      vacuumEvery: Int,
-      vacuumRetain: Int,
-      fold: Option[(SparkSession, Option[DataFrame], Option[DataFrame], String) => Unit] = None)(
-      bootstrap: (DataFrame, String) => Unit)(
-      delete: (DataFrame, Option[String]) => Unit)(
-      append: (DataFrame, String) => Unit)(
-      compact: SparkSession => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val isAdd = col(statusCol).isin("added", "changed")
-    val isDel = col(statusCol).isin("removed", "changed")
-    startChain(stream, checkpointDir) { (b, batchId, m) =>
-      // ONE classification pass: the job that pins the batch also
-      // counts its adds and deletes (an observed aggregate) — the
-      // emptiness probe of the batch and of both halves, with no job
-      // of its own
-      val classified = org.apache.spark.sql.Observation()
-      val batch = b.observe(classified,
-        count(when(isAdd, lit(1))).as("adds"), count(when(isDel, lit(1))).as("dels"))
-        .localCheckpoint(true)
-      val nAdds = classified.get("adds").asInstanceOf[Long]
-      val nDels = classified.get("dels").asInstanceOf[Long]
-      val adds = batch.filter(isAdd)
-      val dels = batch.filter(isDel).select(idCol)
-      if (nAdds + nDels > 0)
-        applyChainBatch(batch.sparkSession, path, m, batchId, compactEvery,
-          vacuumEvery, vacuumRetain,
-          publishes = (if (nDels > 0) 1 else 0) + (if (nAdds > 0) 1 else 0),
-          fold = fold.map(f => () => f(batch.sparkSession, Option.when(nDels > 0)(dels),
-            Option.when(nAdds > 0)(adds), m)))(
-          // deletes before the index exists refer to rows never indexed
-          // — there is nothing to shadow, so they drop (log-ordered
-          // tombstones of nothing). Guarding on the adds also keeps a
-          // delete-only FIRST batch from bootstrapping a trained model
-          // on zero rows (k-means would throw and kill the stream); the
-          // batch publishes nothing, records no marker, and a replay is
-          // a no-op for the same reason — the next batch with adds
-          // bootstraps.
-          if (nAdds > 0) bootstrap(adds, m))({
-          if (nDels > 0)
-            // a delete-only batch carries the marker on its tombstone
-            // segment; otherwise the append records it
-            delete(dels, if (nAdds == 0) Some(m) else None)
-          if (nAdds > 0) append(adds, m)
-        })(compact)
-    }
-  }
-
-  /** The BM25/lexical fold of a CDC batch into the chain's compaction
-    * ([[graft.operators.Search.compactBm25Index]] with the batch). The
-    * compaction follows the chain's postings layout, so one fold serves
-    * both families.
-    */
-  private def foldBm25(path: String, idCol: String, textCol: String)
-      : (SparkSession, Option[DataFrame], Option[DataFrame], String) => Unit =
-    (s, dels, adds, m) => graft.operators.Search.compactBm25Index(s, path,
-      Some(graft.operators.Search.CdcBatch(dels, adds, idCol, textCol, m)))
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.bm25(idCol, textCol, path), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** Maintain a BM25 index from a CDC CHANGE FEED — the streaming
     * composition of [[graft.operators.IndexSync]]: each micro-batch
@@ -1153,7 +1098,7 @@ object Streaming {
     * subtracts nothing). The first non-empty batch bootstraps from its
     * added/changed rows. With `compactEvery`, a batch due to compact
     * folds into the compaction and publishes one version
-    * ([[maintainCdcChain]]).
+    * ([[maintainCdc]]).
     */
   def maintainBm25IndexCdc(
       stream: DataFrame,
@@ -1165,18 +1110,9 @@ object Streaming {
       termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Search
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain, Some(foldBm25(path, idCol, textCol)))(
-      (a, m) => Search.buildBm25Index(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d,
-        idCol, marker = m))(
-      (a, m) => Search.appendToBm25Index(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.bm25(idCol, textCol, path), stream, statusCol, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainBm25IndexCdc]] for the unified lexical artifact
     * ([[graft.operators.Search.buildLexicalIndex]]): one change feed
@@ -1196,18 +1132,9 @@ object Streaming {
       termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Search
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain, Some(foldBm25(path, idCol, textCol)))(
-      (a, m) => Search.buildLexicalIndex(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol,
-        marker = m))(
-      (a, m) => Search.appendToLexicalIndex(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.lexical(idCol, textCol, path), stream, statusCol, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainBm25IndexCdc]] for the IVF index: removed/changed
     * vectors tombstone through the cells-schema-agnostic
@@ -1228,18 +1155,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => SimilaritySearch.buildIvfIndex(a, idCol, vecCol, path,
-        nCentroids, iters, marker = Some(m)))(
-      (d, m) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d,
-        idCol, marker = m))(
-      (a, m) => SimilaritySearch.appendToIvfIndex(a.sparkSession, path, a,
-        idCol, vecCol, marker = Some(m)))(
-      s => SimilaritySearch.compactIvfIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.ivf(idCol, vecCol, path, nCentroids, iters), stream, statusCol,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndexCdc]] for the SQ8-quantized cells — frozen
     * float centroids from the bootstrap batch, later changes land
@@ -1258,18 +1176,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => SimilaritySearch.buildIvfSq8Index(a, idCol, vecCol, path,
-        nCentroids, iters, marker = Some(m)))(
-      (d, m) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d,
-        idCol, marker = m))(
-      (a, m) => SimilaritySearch.appendToIvfSq8Index(a.sparkSession, path, a,
-        idCol, vecCol, marker = Some(m)))(
-      s => SimilaritySearch.compactIvfIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.ivfSq8(idCol, vecCol, path, nCentroids, iters), stream, statusCol,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndexCdc]] for the flat PQ code table — frozen
     * codebooks from the bootstrap batch encode every later change. */
@@ -1284,45 +1193,9 @@ object Streaming {
       kCodes: Int = 32,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, mk) => SimilaritySearch.buildPqIndex(a, idCol, vecCol, path,
-        m = m, kCodes = kCodes, marker = Some(mk)))(
-      (d, mk) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d,
-        idCol, marker = mk))(
-      (a, mk) => SimilaritySearch.appendToPqIndex(a, idCol, vecCol, path,
-        marker = Some(mk)))(
-      s => SimilaritySearch.compactPqIndex(s, path))
-  }
-
-  /** [[maintainIvfIndexCdc]] for the IVF×PQ artifact — frozen
-    * centroids AND codebooks encode the changed vectors. */
-  def maintainIvfPqIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      m: Int = 32,
-      kCodes: Int = 32,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, mk) => SimilaritySearch.buildIvfPqIndex(a, idCol, vecCol, path,
-        nCentroids = nCentroids, m = m, kCodes = kCodes, marker = Some(mk)))(
-      (d, mk) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d,
-        idCol, marker = mk))(
-      (a, mk) => SimilaritySearch.appendToIvfPqIndex(a, idCol, vecCol, path,
-        marker = Some(mk)))(
-      s => SimilaritySearch.compactIvfPqIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.pq(idCol, vecCol, path, m, kCodes), stream, statusCol, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** The MinHash near-dup family's CDC maintainer: removed/changed
     * docs tombstone out of the band postings, added/changed docs
@@ -1343,18 +1216,9 @@ object Streaming {
       bandBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => Dedup.buildMinhashIndex(a, idCol, textCol, path, n, numHashes,
-        bands, bandBuckets, marker = Some(m)))(
-      (d, m) => Dedup.deleteFromMinhashIndex(d.sparkSession, path, d, idCol,
-        marker = m))(
-      (a, m) => Dedup.appendToMinhashIndex(a, idCol, textCol, path,
-        bandBuckets, marker = Some(m)))(
-      s => Dedup.compactMinhashIndex(s, path, bandBuckets))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.minhash(idCol, textCol, path, n, numHashes, bands, bandBuckets),
+      stream, statusCol, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** The SemDeDup family's CDC maintainer: removed/changed member
     * vectors tombstone (keeper re-election happens at read — removing
@@ -1376,18 +1240,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => SimilaritySearch.buildSemDedupIndex(a, idCol, vecCol, path,
-        k, threshold, iters, marker = Some(m)))(
-      (d, m) => SimilaritySearch.deleteFromSemDedupIndex(d.sparkSession, path,
-        d, idCol, marker = m))(
-      (a, m) => SimilaritySearch.applySemDedupBatch(a.sparkSession, path, a,
-        idCol, vecCol, marker = Some(m)))(
-      s => SimilaritySearch.compactSemDedupIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.semDedup(idCol, vecCol, path, k, threshold, iters), stream, statusCol,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** The scene family's CDC maintainer — the one perceptual shape a
     * flat hash feed can't carry: each change-feed row brings a WHOLE
@@ -1411,22 +1266,9 @@ object Streaming {
       sceneMaxHamming: Int = 16,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    def frames(a: DataFrame) = a
-      .select(col(idCol), explode(col(framesCol)).as("__graft_f"))
-      .select(col(idCol),
-        col(s"__graft_f.`$frameIdxField`").as("__graft_fi"),
-        col(s"__graft_f.`$payloadField`").as("__graft_fb"))
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => Multimodal.buildSceneIndex(frames(a), idCol,
-        "__graft_fi", "__graft_fb", path, sceneMaxHamming, marker = Some(m)))(
-      (d, m) => Multimodal.deleteFromSceneIndex(d, idCol, path, marker = m))(
-      (a, m) => Multimodal.appendToSceneIndex(frames(a), idCol,
-        "__graft_fi", "__graft_fb", path, sceneMaxHamming, marker = Some(m)))(
-      s => Multimodal.compactSceneIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.scene(idCol, frameIdxField, payloadField, path, sceneMaxHamming,
+      Some(framesCol)), stream, statusCol, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** The perceptual-hash family's CDC maintainer (image aHash — the
     * pHash/audio forms differ only in the append function, exactly as
@@ -1443,17 +1285,9 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)(
-      (a, m) => Multimodal.buildAHashIndex(a, idCol, binCol, path,
-        marker = Some(m)))(
-      (d, m) => Multimodal.deleteFromAHashIndex(d, idCol, path, marker = m))(
-      (a, m) => Multimodal.appendToAHashIndex(a, idCol, binCol, path,
-        marker = Some(m)))(
-      s => Multimodal.compactAHashIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.aHash(idCol, binCol, path), stream, statusCol, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** Maintain a persisted DSIR model ([[graft.operators.Dsir]]) FROM A
     * STREAM: profiles are additive, so every micro-batch of raw
@@ -1479,15 +1313,9 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dsir
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Dsir.buildDsirIndex(target, targetTextCol, b, textCol,
-        buckets, path, marker = Some(m)))(
-      (b, m) => Dsir.appendToDsirIndex(b, textCol, path, marker = Some(m)))(
-      s => Dsir.compactDsirIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.dsir(textCol, path, Some(IndexFamily.DsirTarget(target, targetTextCol,
+      buckets))), stream, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainDsirIndex]] for a CDC CHANGE FEED — the RETRACTION
     * family's maintainer, closing the SURVEY §2.5 lifecycle-matrix
@@ -1521,28 +1349,10 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dsir
-    def adds(b: DataFrame) = b.filter(col(statusCol).isin("added", "changed"))
-    def dels(b: DataFrame) = b
-      .filter(col(statusCol).isin("removed", "changed"))
-      .select(col(oldTextCol).as(textCol))
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => {
-        val a = adds(b)
-        if (!a.isEmpty) Dsir.buildDsirIndex(target, targetTextCol, a,
-          textCol, buckets, path, marker = Some(m))
-      })(
-      // one marked segment per batch: retraction and append are
-      // atomic (applyDsirIndexCdc) — a crash-replay either sees the
-      // marker and skips, or re-applies the WHOLE batch exactly once;
-      // the old delete-then-append pair could replay the unmarked
-      // retraction twice and silently zero a shared bucket
-      (b, m) => Dsir.applyDsirIndexCdc(adds(b), dels(b), textCol, path,
-        marker = Some(m)))(
-      s => Dsir.compactDsirIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.dsir(textCol, path, Some(IndexFamily.DsirTarget(target, targetTextCol,
+      buckets)), idCol, oldTextCol), stream, statusCol, checkpointDir, compactEvery, vacuumEvery,
+      vacuumRetain)
 
   /** [[maintainDsirIndex]] for the PER-GROUP artifact
     * ([[graft.operators.Dsir.buildDsirIndexByGroup]]): the first
@@ -1565,17 +1375,10 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dsir
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Dsir.buildDsirIndexByGroup(target, targetTextCol,
-        targetGroupCol, b, textCol, groupCol, buckets, path,
-        marker = Some(m)))(
-      (b, m) => Dsir.appendToDsirIndexByGroup(b, textCol, groupCol, path,
-        marker = Some(m)))(
-      s => Dsir.compactDsirIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.dsirByGroup(textCol, groupCol, path, Some(IndexFamily.DsirTarget(target,
+      targetTextCol, buckets)), targetGroupCol), stream, checkpointDir, compactEvery, vacuumEvery,
+      vacuumRetain)
 
   /** [[maintainBm25Index]] for the UNIFIED lexical artifact
     * ([[graft.operators.Search.buildLexicalIndex]] — postings carry tf
@@ -1593,18 +1396,9 @@ object Streaming {
       termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Search
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Search.buildLexicalIndex(b, idCol, textCol, path, termBuckets,
-        marker = Some(m)))(
-      (b, m) => Search.appendToLexicalIndex(b, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      // compactBm25Index rewrites the FULL postings schema, so the
-      // positional payload survives the unified artifact's compact
-      s => Search.compactBm25Index(s, path, termBuckets))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.lexical(idCol, textCol, path), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** [[maintainBm25Index]] for the MinHash near-dup index — the crawl
     * stream maintains the artifact that [[dedupAgainstMinhashIndex]]
@@ -1624,16 +1418,9 @@ object Streaming {
       bandBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Dedup.buildMinhashIndex(b, idCol, textCol, path, n, numHashes,
-        bands, bandBuckets, marker = Some(m)))(
-      (b, m) => Dedup.appendToMinhashIndex(b, idCol, textCol, path,
-        bandBuckets, marker = Some(m)))(
-      s => Dedup.compactMinhashIndex(s, path, bandBuckets))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.minhash(idCol, textCol, path, n, numHashes, bands, bandBuckets), stream,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainBm25Index]] for the IVF ANN index
     * ([[graft.operators.SimilaritySearch.buildIvfIndex]]) — the
@@ -1660,16 +1447,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => SimilaritySearch.buildIvfIndex(b, idCol, vecCol, path,
-        nCentroids, iters, marker = Some(m)))(
-      (b, m) => SimilaritySearch.appendToIvfIndex(b.sparkSession, path, b,
-        idCol, vecCol, marker = Some(m)))(
-      s => SimilaritySearch.compactIvfIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.ivf(idCol, vecCol, path, nCentroids, iters), stream, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndex]] for the IVF×PQ index ([[graft.operators
     * .SimilaritySearch.buildIvfPqIndex]]): bootstrap trains centroids
@@ -1690,16 +1470,9 @@ object Streaming {
       kCodes: Int = 32,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, mk) => SimilaritySearch.buildIvfPqIndex(b, idCol, vecCol, path,
-        nCentroids = nCentroids, m = m, kCodes = kCodes, marker = Some(mk)))(
-      (b, mk) => SimilaritySearch.appendToIvfPqIndex(b, idCol, vecCol, path,
-        marker = Some(mk)))(
-      s => SimilaritySearch.compactIvfPqIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.ivfPq(idCol, vecCol, path, nCentroids, m, kCodes), stream, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndex]] for the plain PQ index ([[graft.operators
     * .SimilaritySearch.buildPqIndex]]): bootstrap trains the codebooks
@@ -1721,16 +1494,9 @@ object Streaming {
       kCodes: Int = 32,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, mk) => SimilaritySearch.buildPqIndex(b, idCol, vecCol, path,
-        m = m, kCodes = kCodes, marker = Some(mk)))(
-      (b, mk) => SimilaritySearch.appendToPqIndex(b, idCol, vecCol, path,
-        marker = Some(mk)))(
-      s => SimilaritySearch.compactPqIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.pq(idCol, vecCol, path, m, kCodes), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndex]] for the IVF-SQ8 index ([[graft.operators
     * .SimilaritySearch.buildIvfSq8Index]]): bootstrap trains the float
@@ -1751,16 +1517,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, mk) => SimilaritySearch.buildIvfSq8Index(b, idCol, vecCol, path,
-        nCentroids, iters, marker = Some(mk)))(
-      (b, mk) => SimilaritySearch.appendToIvfSq8Index(b.sparkSession, path, b,
-        idCol, vecCol, marker = Some(mk)))(
-      s => SimilaritySearch.compactIvfIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.ivfSq8(idCol, vecCol, path, nCentroids, iters), stream, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** Maintain the decontamination EVAL index ([[graft.operators
     * .Decontaminate.buildEvalIndex]]) from a stream of ARRIVING
@@ -1781,16 +1540,9 @@ object Streaming {
       n: Int = 8,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Decontaminate
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, mk) => Decontaminate.buildEvalIndex(b, textCol, path, n,
-        marker = Some(mk)))(
-      (b, mk) => Decontaminate.appendToEvalIndex(b, textCol, path,
-        marker = Some(mk)))(
-      s => Decontaminate.compactEvalIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.eval(textCol, path, n), stream, checkpointDir, compactEvery, vacuumEvery,
+      vacuumRetain)
 
   /** [[maintainEvalIndex]] for a CDC CHANGE FEED over the benchmark
     * suite — the eval-hash retraction maintainer ([[graft.operators
@@ -1814,24 +1566,9 @@ object Streaming {
       n: Int = 8,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Decontaminate
-    def adds(b: DataFrame) = b.filter(col(statusCol).isin("added", "changed"))
-    def dels(b: DataFrame) = b
-      .filter(col(statusCol).isin("removed", "changed"))
-      .select(col(oldTextCol).as(textCol))
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => {
-        val a = adds(b)
-        if (!a.isEmpty) Decontaminate.buildEvalIndex(a, textCol, path, n,
-          marker = Some(m))
-      })(
-      // atomic per-batch segment, same rationale as maintainDsirIndexCdc
-      (b, m) => Decontaminate.applyEvalIndexCdc(adds(b), dels(b), textCol,
-        path, marker = Some(m)))(
-      s => Decontaminate.compactEvalIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintainCdc(IndexFamily.eval(textCol, path, n, idCol, oldTextCol), stream, statusCol,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainIvfIndex]] for the incremental SemDeDup artifact
     * ([[graft.operators.SimilaritySearch.buildSemDedupIndex]]): the
@@ -1857,16 +1594,9 @@ object Streaming {
       iters: Int = 5,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.SimilaritySearch
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => SimilaritySearch.buildSemDedupIndex(b, idCol, vecCol, path,
-        k, threshold, iters, marker = Some(m)))(
-      (b, m) => SimilaritySearch.applySemDedupBatch(b.sparkSession, path, b,
-        idCol, vecCol, marker = Some(m)))(
-      s => SimilaritySearch.compactSemDedupIndex(s, path))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.semDedup(idCol, vecCol, path, k, threshold, iters), stream,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** [[maintainBm25Index]] for the perceptual image-hash index
     * ([[graft.multimodal.Multimodal.buildAHashIndex]]) — the image
@@ -1885,16 +1615,9 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Multimodal.buildAHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      (b, m) => Multimodal.appendToAHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      s => Multimodal.compactAHashIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.aHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** [[maintainAHashIndex]] with the crop/rescale-robust DCT hash
     * ([[graft.multimodal.Multimodal.buildPHashIndex]] — the stored
@@ -1909,16 +1632,9 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Multimodal.buildPHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      (b, m) => Multimodal.appendToPHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      s => Multimodal.compactAHashIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.pHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** [[maintainAHashIndex]]'s audio-envelope sibling
     * ([[graft.multimodal.Multimodal.buildAudioHashIndex]] — shared
@@ -1933,16 +1649,9 @@ object Streaming {
       checkpointDir: String,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Multimodal.buildAudioHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      (b, m) => Multimodal.appendToAudioHashIndex(b, idCol, binCol, path,
-        marker = Some(m)))(
-      s => Multimodal.compactAHashIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.audioHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
+      vacuumEvery, vacuumRetain)
 
   /** Maintain the SHIFT-ROBUST audio subfingerprint index
     * ([[graft.multimodal.Multimodal.buildAudioFpIndex]]) from a
@@ -1964,16 +1673,9 @@ object Streaming {
       w: Int = 4,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Multimodal.buildAudioFpIndex(b, idCol, binCol, path,
-        windowSamples, k, w, marker = Some(m)))(
-      (b, m) => Multimodal.appendToAudioFpIndex(b, idCol, binCol, path,
-        windowSamples, k, w, marker = Some(m)))(
-      s => Multimodal.compactAudioFpIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.audioFp(idCol, binCol, path, windowSamples, k, w), stream, checkpointDir,
+      compactEvery, vacuumEvery, vacuumRetain)
 
   /** Maintain the video SCENE index
     * ([[graft.multimodal.Multimodal.buildSceneIndex]]) from a stream
@@ -1996,16 +1698,9 @@ object Streaming {
       sceneMaxHamming: Int = 16,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.multimodal.Multimodal
-    maintainChain(stream, path, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)(
-      (b, m) => Multimodal.buildSceneIndex(b, idCol, frameIdxCol, frameBinCol,
-        path, sceneMaxHamming, marker = Some(m)))(
-      (b, m) => Multimodal.appendToSceneIndex(b, idCol, frameIdxCol,
-        frameBinCol, path, sceneMaxHamming, marker = Some(m)))(
-      s => Multimodal.compactSceneIndex(s, path, idCol))
-  }
+      vacuumRetain: Int = 2): StreamingQuery =
+    maintain(IndexFamily.scene(idCol, frameIdxCol, frameBinCol, path, sceneMaxHamming), stream,
+      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** RETRIEVAL-BASED decontamination gate, hybrid and STATELESS: flag
     * incoming documents that near-match a benchmark item through

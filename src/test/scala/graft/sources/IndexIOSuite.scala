@@ -461,6 +461,25 @@ class IndexIOSuite extends SparkSpec {
     fs.delete(lock, false)
   }
 
+  test("append lock: a lock file that cannot be created fails within the timeout, with the cause") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nolockfs.impl", classOf[NoLockFileSystem].getName)
+    val base = s"nolockfs://${newBase()}/idx"
+    NoLockFileSystem.refused.set(0)
+    // on its own thread: a wait that never ends fails the deadline below
+    // instead of hanging the suite
+    val publish = scala.concurrent.Future(intercept[IllegalStateException] {
+      IndexIO.publishDeltaWithTimeout(spark, base, timeoutMs = 500) { seg =>
+        writeTable(seg, "seg", Seq(1))
+      }
+    })(scala.concurrent.ExecutionContext.global)
+    val e = scala.concurrent.Await.result(publish, scala.concurrent.duration.Duration(60, "s"))
+    assert(e.getMessage.contains("_APPEND_LOCK"))
+    assert(e.getCause.isInstanceOf[java.io.IOException], e.getCause)
+    // the wait backs off between attempts instead of spinning
+    assert(NoLockFileSystem.refused.get < 100, s"${NoLockFileSystem.refused.get} create attempts")
+  }
+
   test("vacuum reclaims stale lock files on idle indexes, spares fresh ones") {
     val base = newBase()
     IndexIO.publish(spark, base) { vdir => writeTable(vdir, "a", Seq(1)) }
@@ -728,3 +747,24 @@ class ListingAbstractFileSystem(
     uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
     extends org.apache.hadoop.fs.DelegateToFileSystem(
       java.net.URI.create("lstfs:///"), new ListingFileSystem, conf, "lstfs", false)
+
+/** The local file system under the `nolockfs` scheme, refusing to create
+  * lock files: every create of a `*_LOCK` or `*_lock` file fails.
+  */
+class NoLockFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("nolockfs:///")
+  override def getScheme: String = "nolockfs"
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.getName.toUpperCase.endsWith("_LOCK")) {
+      NoLockFileSystem.refused.incrementAndGet()
+      throw new java.io.IOException(s"refused lock file create: $f")
+    }
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object NoLockFileSystem {
+  val refused = new java.util.concurrent.atomic.AtomicInteger(0)
+}
