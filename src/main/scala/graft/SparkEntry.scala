@@ -826,15 +826,15 @@ object SparkEntry {
         .select("doc_id", "text")
       val newSuite = d.filter(col("doc_id") % 10 === 0).select("doc_id", "text")
       Decontaminate.buildEvalIndex(oldSuite, "text", idx, n = 3)
-      IndexSync.syncEvalIndex(s, oldSuite, newSuite, "doc_id", "text", idx)
+      IndexSync.sync(IndexFamily.eval("text", idx), oldSuite, newSuite)
       Streaming.decontaminateGateFromIndex(s, d.filter(col("doc_id") % 5 =!= 0),
           "doc_id", "text", idx)
         .select(col("doc_id"), col("n_shared"), col("n_shingles"),
           col("contamination"))
     }),
     "stream_cdc_eval" -> ((s, dir) => {
-      // the same change feed as a REAL STREAM (Streaming
-      // .maintainEvalIndexCdc): batch 1 bootstraps the stale suite,
+      // the same change feed as a REAL STREAM (Streaming.maintainCdc,
+      // IndexFamily.eval): batch 1 bootstraps the stale suite,
       // batch 2 carries the diff — %10==0 items changed (old stale
       // text rides old_text and retracts), the %10==5 benchmark
       // removed. Same survivor oracle.
@@ -857,11 +857,8 @@ object SparkEntry {
           (id, "changed", tx, tx + " stale revision") } ++
           retired.map { case (id, tx) =>
             (id, "removed", null: String, tx) }).sortBy(_._1).toSeq
-      runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        Streaming.maintainEvalIndexCdc(
-          ds.toDF("doc_id", "status", "text", "old_text"),
-          "doc_id", "status", "text", "old_text", idx, ckpt, n = 3)
-      }
+      runMaintainer(s, Feed(Seq(batch1, batch2), "doc_id", "status", "text", "old_text"))(
+        Streaming.maintainCdc(IndexFamily.eval("text", idx, n = 3), _, "status", ckpt))
       Streaming.decontaminateGateFromIndex(s, d.filter(col("doc_id") % 5 =!= 0),
           "doc_id", "text", idx)
         .select(col("doc_id"), col("n_shared"), col("n_shingles"),
@@ -871,7 +868,7 @@ object SparkEntry {
       // the benchmark-ARRIVAL write path: a real streaming query
       // maintains the decontamination eval index (first suite
       // bootstraps, the second appends + in-stream compacts, markers
-      // make replays exactly-once — Streaming.maintainEvalIndex), then
+      // make replays exactly-once — Streaming.maintain), then
       // the ingest gate resolves the stream-built artifact. Shares
       // stream_decontaminate_indexed's oracle: the maintained chain's
       // union is the same %5==0 eval side, so output identity with the
@@ -2054,7 +2051,7 @@ object SparkEntry {
       // the perceptual-hash index via foreachBatch (first batch
       // bootstraps, later micro-batches decode ONCE and append 8-byte
       // hashes as immutable segments, markers make replays
-      // exactly-once — Streaming.maintainAHashIndex). The even docs'
+      // exactly-once — Streaming.maintain). The even docs'
       // images stream in over 3 batches; the odd docs then probe the
       // stream-built artifact at radius 0 — matches must be EXACTLY
       // the same-class (odd, even) pairs from the doc_id % 5
@@ -2066,7 +2063,7 @@ object SparkEntry {
       serveMaintained("ahash", s, dir, idx)
     }),
     "stream_maintained_phash" -> ((s, dir) => {
-      // the crop/rescale-robust crawl loop: maintainPHashIndex hashes
+      // the crop/rescale-robust crawl loop: the pHash family hashes
       // each micro-batch's images ONCE (DCT pHash) and appends them as
       // immutable segments with exactly-once markers; the odd docs'
       // own geometric variants then probe the stream-built chain at
@@ -2079,7 +2076,7 @@ object SparkEntry {
     }),
     "stream_maintained_audiofp" -> ((s, dir) => {
       // the AUDIO-crawl write path for the shift-robust index:
-      // maintainAudioFpIndex decodes each micro-batch's clips once and
+      // the audioFp family decodes each micro-batch's clips once and
       // appends their winnowed (id, fp) postings exactly-once; the odd
       // docs' trimmed/padded variants probe the stream-built chain —
       // shared-fp matches >= 4 ≡ the same-pattern (odd, even) pairs:
@@ -2091,7 +2088,7 @@ object SparkEntry {
     }),
     "stream_maintained_scenes" -> ((s, dir) => {
       // the VIDEO-crawl write path for shot-reuse detection:
-      // maintainSceneIndex segments each micro-batch's videos once and
+      // the scene family segments each micro-batch's videos once and
       // appends their 8-byte scene rows exactly-once (whole videos per
       // batch — the maintainer's documented contract); the odd docs'
       // scenes probe the stream-built chain — matches ≡ the (odd,
@@ -2678,7 +2675,7 @@ object SparkEntry {
       // the live-crawl WRITE path: a real streaming query maintains the
       // BM25 index via foreachBatch (first batch bootstraps, each later
       // micro-batch appends an immutable segment, batch markers make
-      // replays exactly-once — Streaming.maintainBm25Index), then the
+      // replays exactly-once — Streaming.maintain), then the
       // serving path reads the stream-built artifact. Must equal BM25
       // over the whole corpus: bm25_search's oracle verbatim.
       val token = java.util.UUID.randomUUID().toString.take(8)
@@ -2692,7 +2689,7 @@ object SparkEntry {
       // TRAINS the centroids and bootstraps; each later batch assigns
       // its vectors to the frozen cells and appends an immutable
       // segment; batch markers make replays exactly-once —
-      // Streaming.maintainIvfIndex). compactEvery = 3 additionally
+      // Streaming.maintain). compactEvery = 3 additionally
       // collapses the chain IN-stream once it reaches 3 segments, so
       // the served artifact crossed a compact boundary mid-run.
       // Serving probes ALL 16 cells: exhaustive probing makes the
@@ -2706,8 +2703,8 @@ object SparkEntry {
       serveMaintained("ann", s, dir, idx)
     }),
     "stream_maintained_ivf_sq8" -> ((s, dir) => {
-      // the QUANTIZED embedding-crawl write path (Streaming
-      // .maintainIvfSq8Index): first micro-batch trains the float
+      // the QUANTIZED embedding-crawl write path (IndexFamily
+      // .ivfSq8): first micro-batch trains the float
       // centroids, later batches assign on their FLOAT vectors to the
       // frozen cells and land SQ8-quantized; compactEvery = 3 crosses a
       // compact boundary mid-run. Served at exhaustive probes the chain
@@ -2720,7 +2717,7 @@ object SparkEntry {
       serveMaintained("ivf_sq8", s, dir, idx)
     }),
     "stream_maintained_pq" -> ((s, dir) => {
-      // the PQ write path (Streaming.maintainPqIndex): the first
+      // the PQ write path (IndexFamily.pq): the first
       // micro-batch trains the codebooks on its deterministic sample,
       // later batches encode with the FROZEN codebooks, compactEvery=3
       // collapses the code chain mid-run. The claim is stream ≡ batch
@@ -2916,7 +2913,7 @@ object SparkEntry {
       Search.bm25SearchIndex(s, idx, Seq("vector", "stream", "spark"), k = 20)
     }),
     "index_sync" -> ((s, dir) => {
-      // CDC → index sync (IndexSync.syncBm25Index): the OLD snapshot
+      // CDC → index sync (IndexSync.sync, BM25): the OLD snapshot
       // lacks the %5==0 docs (added), carries a stale revision of the
       // %7==0 texts (changed), and holds retired ids absent from the
       // new snapshot (removed). ONE sync call feeds CorpusDiff's change
@@ -2934,7 +2931,7 @@ object SparkEntry {
           .unionByName(d.filter(col("doc_id") % 11 === 0)
             .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
         Search.buildBm25Index(old, "doc_id", "text", idx)
-        IndexSync.syncBm25Index(s, old, d, "doc_id", "text", idx)
+        IndexSync.sync(IndexFamily.bm25("doc_id", "text", idx), old, d)
       }
       Search.bm25SearchIndex(s, idx, Seq("vector", "stream", "spark"), k = 20)
     }),
@@ -2962,8 +2959,8 @@ object SparkEntry {
       graft.sources.IndexIO.describe(s, idx, "lengths", "doc_id")
     }),
     "index_sync_phash" -> ((s, dir) => {
-      // the perceptual family's snapshot sync (IndexSync
-      // .syncPHashIndex): the binary payload diffs by content hash
+      // the perceptual family's snapshot sync (IndexSync.sync,
+      // pHash): the binary payload diffs by content hash
       // exactly like text. The OLD media snapshot misses the
       // %8==6 evens (added), carries a re-encode of the %6==0 evens
       // under a DIFFERENT variant payload (changed — old hash must
@@ -2987,7 +2984,7 @@ object SparkEntry {
           .unionByName(evens.filter(col("doc_id") % 11 === 0)
             .select((col("doc_id") + 10000000L).as("doc_id"), col("payload")))
         Multimodal.buildPHashIndex(old, "doc_id", "payload", idx)
-        IndexSync.syncPHashIndex(s, old, evens, "doc_id", "payload", idx)
+        IndexSync.sync(IndexFamily.pHash("doc_id", "payload", idx), old, evens)
       }
       Multimodal.dedupAgainstPHashIndex(s,
           withP.filter(col("doc_id") % 2 === 1), "doc_id", "payload", idx,
@@ -2995,7 +2992,7 @@ object SparkEntry {
         .select(col("doc_id"), col("index_id"))
     }),
     "index_sync_ivf" -> ((s, dir) => {
-      // the ANN-family sync (IndexSync.syncIvfIndex): old snapshot =
+      // the ANN-family sync (IndexSync.sync, IVF): old snapshot =
       // no %5==0 vectors (added), NEGATED %7==0 vectors (changed —
       // the re-embedding shape), retired ids (removed). Centroids stay
       // the ones trained on the OLD snapshot (sync appends assign to
@@ -3014,7 +3011,7 @@ object SparkEntry {
             .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding")))
         SimilaritySearch.buildIvfIndex(old, "vec_id", "embedding", idx,
           nCentroids = 16)
-        IndexSync.syncIvfIndex(s, old, e, "vec_id", "embedding", idx)
+        IndexSync.sync(IndexFamily.ivf("vec_id", "embedding", idx), old, e)
       }
       val qs = e.filter(col("vec_id") < 20)
       SimilaritySearch.recallSummary(
@@ -3041,7 +3038,7 @@ object SparkEntry {
             .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
         Dsir.buildDsirIndex(d.filter(col("lang") === "en"), "text",
           old, "text", buckets = 4096, idx)
-        IndexSync.syncDsirIndex(s, old, base, "doc_id", "text", idx)
+        IndexSync.sync(IndexFamily.dsir("text", idx), old, base)
       }
       val (tp, rp) = Dsir.dsirIndexProfiles(s, idx)
       Dsir.importanceScore(d, "doc_id", "text", tp, rp, buckets = 4096)
@@ -3061,8 +3058,8 @@ object SparkEntry {
       serveCdc("bm25", s, dir, idx)
     }),
     "stream_cdc_lexical" -> ((s, dir) => {
-      // the unified-lexical change feed (Streaming
-      // .maintainLexicalIndexCdc): same two-batch CDC stream as
+      // the unified-lexical change feed (Streaming.maintainCdc,
+      // IndexFamily.lexical): same two-batch CDC stream as
       // stream_cdc_bm25, but the served artifact carries POSITIONS —
       // phrase retrieval from the stream-built chain must equal the
       // inline scan over the live corpus (phrase_search's oracle
@@ -3074,7 +3071,7 @@ object SparkEntry {
       serveCdc("lexical", s, dir, idx)
     }),
     "stream_cdc_ivf" -> ((s, dir) => {
-      // the re-embedding change feed (Streaming.maintainIvfIndexCdc):
+      // the re-embedding change feed (IndexFamily.ivf's change feed):
       // batch 1 bootstraps on the old snapshot (training the frozen
       // centroids), batch 2 applies the diff — changed vectors
       // tombstone-then-re-append, removed ids die. At exhaustive
@@ -3086,7 +3083,7 @@ object SparkEntry {
       serveCdc("ivf", s, dir, idx)
     }),
     "stream_cdc_semdedup" -> ((s, dir) => {
-      // the SemDeDup change feed (Streaming.maintainSemDedupIndexCdc):
+      // the SemDeDup change feed (IndexFamily.semDedup's change feed):
       // batch 1 bootstraps the FROZEN blocking model from the old
       // embedding snapshot, batch 2 applies the diff — re-embedded
       // vectors tombstone-then-re-resolve, takedowns drop. The claim
@@ -3117,10 +3114,9 @@ object SparkEntry {
       val token = java.util.UUID.randomUUID().toString.take(8)
       val idx = scratch(s"cdc_sd_$token", dir)
       val ckpt = scratch(s"cdc_sd_ck_$token", dir)
-      runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        Streaming.maintainSemDedupIndexCdc(ds.toDF("vec_id", "status", "embedding"),
-          "vec_id", "status", "embedding", idx, ckpt, k = 8, threshold = 0.45)
-      }
+      runMaintainer(s, Feed(Seq(batch1, batch2), "vec_id", "status", "embedding"))(
+        Streaming.maintainCdc(IndexFamily.semDedup("vec_id", "embedding", idx, k = 8,
+          threshold = 0.45), _, "status", ckpt))
       val bidx = scratch(s"cdc_sdb_$token", dir)
       SimilaritySearch.buildSemDedupIndex(old, "vec_id", "embedding", bidx,
         k = 8, threshold = 0.45)
@@ -3144,8 +3140,8 @@ object SparkEntry {
             .as("n_diff"))
     }),
     "stream_cdc_dsir" -> ((s, dir) => {
-      // the RETRACTION family's change feed (Streaming
-      // .maintainDsirIndexCdc), closing the lifecycle-matrix dash:
+      // the RETRACTION family's change feed (Streaming.maintainCdc,
+      // IndexFamily.dsir), closing the lifecycle-matrix dash:
       // batch 1 bootstraps the model from the stale snapshot, batch 2
       // applies the diff — removed+changed rows carry their OLD text
       // and publish a NEGATIVE profile segment, added+changed rows
@@ -3159,8 +3155,8 @@ object SparkEntry {
       serveCdc("dsir", s, dir, idx)
     }),
     "stream_cdc_minhash" -> ((s, dir) => {
-      // the near-dup family's change feed (Streaming
-      // .maintainMinhashIndexCdc): batch 1 bootstraps the band index
+      // the near-dup family's change feed (Streaming.maintainCdc,
+      // IndexFamily.minhash): batch 1 bootstraps the band index
       // from a STALE odd-id snapshot (some docs missing, stale
       // revisions for doc_id % 7 == 0, retired extra ids), batch 2
       // applies the diff to the live odd corpus — changed docs
@@ -3420,7 +3416,7 @@ object SparkEntry {
       // query maintains the profile chain via foreachBatch (first
       // micro-batch bootstraps target+raw, each later batch appends its
       // own additive profile segment, batch markers make replays
-      // exactly-once — Streaming.maintainDsirIndex), then scoring reads
+      // exactly-once — Streaming.maintain), then scoring reads
       // the stream-built chain. Must equal the one-shot profile over
       // the whole corpus: dsir_score's oracle verbatim.
       val token = java.util.UUID.randomUUID().toString.take(8)
@@ -3528,7 +3524,7 @@ object SparkEntry {
     "stream_maintained_dsir_by_lang" -> ((s, dir) => {
       // the live-crawl WRITE path for the per-language model: a real
       // streaming query maintains the grouped profile chain
-      // (Streaming.maintainDsirIndexByGroup — first micro-batch fits
+      // (IndexFamily.dsirByGroup — first micro-batch fits
       // the fixed per-lang target + bootstraps, later batches append
       // grouped additive segments, exactly-once batch markers), then
       // scoring reads the stream-built chain. Must equal the one-shot
@@ -4817,15 +4813,21 @@ object SparkEntry {
     }
   }
 
-  private def runMaintainer[T](s: SparkSession, batches: Seq[Seq[T]])(
-      start: org.apache.spark.sql.Dataset[T] =>
-        org.apache.spark.sql.streaming.StreamingQuery)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Unit = {
+  /** One gate's micro-batches, typed for a `MemoryStream`, and the
+    * column names of the stream they feed.
+    */
+  private final case class Feed[T](batches: Seq[Seq[T]], cols: String*)(
+      implicit val enc: org.apache.spark.sql.Encoder[T])
+
+  /** Start `start` on a memory stream of `feed` and process its batches in order. */
+  private def runMaintainer[T](s: SparkSession, feed: Feed[T])(
+      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val enc: org.apache.spark.sql.Encoder[T] = feed.enc
     val input = MemoryStream[T]
-    val q = start(input.toDS())
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    val q = start(input.toDS().toDF(feed.cols: _*))
+    try feed.batches.foreach { b => input.addData(b); q.processAllAvailable() }
     finally q.stop()
   }
 
@@ -4850,20 +4852,15 @@ object SparkEntry {
         posexplode(col("frames")).as(Seq("frame_idx", "frame_bytes")))
   }
 
-  /** Build one stream-maintained index family (bootstrap + appends +
-    * in-stream compactions) under `idx`/`ckpt` — the write half of the
-    * `stream_maintained_*` gates. Shared by the full gate queries
-    * (fresh random path per call: the correctness claim re-streams
-    * every run) and the bench's `stream_maintained_*_serve` split rows
-    * (fixed per-JVM path, built once untimed, so the timed row is the
-    * steady-state serving plan alone).
-    */
   /** The two-batch CDC change feeds of the `stream_cdc_*` gates,
     * factored like [[buildMaintained]] so the bench can split the
     * lifecycle (bootstrap + diff batch through a real streaming query)
     * from serving the resulting chain. Families: `bm25` / `lexical` /
     * `minhash` (text; minhash runs over the odd ids so the even batch
-    * can probe) and `ivf` (embeddings). The OLD snapshot misses some
+    * can probe), `ivf` (embeddings) and `dsir` (the retraction family:
+    * removed+changed rows carry their OLD text so the maintainer can
+    * subtract its n-gram counts — the streaming composition of
+    * index_sync_dsir's snapshot sync). The OLD snapshot misses some
     * rows (added), carries stale revisions (changed — tombstone then
     * re-append), and holds retired ids (removed).
     */
@@ -4871,93 +4868,86 @@ object SparkEntry {
       family: String, s: SparkSession, dir: String,
       idx: String, ckpt: String): Unit = {
     import s.implicits._
-    if (family == "ivf") {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val old = e.filter(col("vec_id") % 5 =!= 0)
-        .withColumn("embedding", when(col("vec_id") % 7 === 0,
-          transform(col("embedding"), x => negate(x))).otherwise(col("embedding")))
-        .unionByName(e.filter(col("vec_id") % 11 === 0)
-          .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding")))
-      val batch1 = old.collect()
-        .map(r => (r.getLong(0), "added", r.getSeq[Float](1).toArray))
-        .sortBy(_._1).toSeq
-      val newByIdx = e.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      val batch2 = CorpusDiff.diff(old, e, "vec_id", Seq("embedding"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-        .sortBy(_._1)
-        .map { case (id, st) =>
-          (id, st, newByIdx.getOrElse(id, Array.empty[Float])) }.toSeq
-      runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        Streaming.maintainIvfIndexCdc(ds.toDF("vec_id", "status", "embedding"),
-          "vec_id", "status", "embedding", idx, ckpt, nCentroids = 16)
-      }
-    } else if (family == "dsir") {
-      // the RETRACTION family's change feed: removed+changed rows must
-      // carry their OLD text so the maintainer can subtract its n-gram
-      // counts (maintainDsirIndexCdc) — the streaming composition of
-      // index_sync_dsir's snapshot sync
-      val full = t(s, dir, "documents").select("doc_id", "text")
-      val old = full.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" stale revision"))).otherwise(col("text")))
-        .unionByName(full.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-      val oldRows = old.collect().map(r => r.getLong(0) -> r.getString(1))
-      val batch1 = oldRows.sortBy(_._1)
-        .map { case (id, tx) => (id, "added", tx, null: String) }.toSeq
-      val oldText = oldRows.toMap
-      val newText = full.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val batch2 = CorpusDiff.diff(old, full, "doc_id", Seq("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-        .sortBy(_._1)
-        .map { case (id, st) => (id, st,
-          newText.getOrElse(id, null: String),
-          oldText.getOrElse(id, null: String)) }.toSeq
-      val target = t(s, dir, "documents").filter(col("lang") === "en")
-      runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        Streaming.maintainDsirIndexCdc(
-          ds.toDF("doc_id", "status", "text", "old_text"),
-          "doc_id", "status", "text", "old_text",
-          target, "text", buckets = 4096, idx, ckpt)
-      }
-    } else {
-      val full = t(s, dir, "documents").select("doc_id", "text")
-      val d = if (family == "minhash") full.filter(col("doc_id") % 2 === 1) else full
-      val missRes = if (family == "minhash") 3 else 0
-      val old = d.filter(col("doc_id") % 5 =!= missRes)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" stale revision"))).otherwise(col("text")))
-        .unionByName(d.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-      val batch1 = old.collect().map(r => (r.getLong(0), "added", r.getString(1)))
-        .sortBy(_._1).toSeq
-      val newText = d.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val batch2 = CorpusDiff.diff(old, d, "doc_id", Seq("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-        .sortBy(_._1)
-        .map { case (id, st) => (id, st, newText.getOrElse(id, null: String)) }
-        .toSeq
-      val indexFamily = family match {
-        case "bm25" => IndexFamily.bm25("doc_id", "text", idx)
-        case "lexical" => IndexFamily.lexical("doc_id", "text", idx)
-        case "minhash" => IndexFamily.minhash("doc_id", "text", idx)
-        case other => throw new IllegalArgumentException(s"buildCdc: unknown family $other")
-      }
-      runMaintainer(s, Seq(batch1, batch2)) { ds =>
-        Streaming.maintainCdc(indexFamily, ds.toDF("doc_id", "status", "text"), "status", ckpt)
-      }
+    def maintainCdc[T](indexFamily: IndexFamily, feed: Feed[T]): Unit =
+      runMaintainer(s, feed)(Streaming.maintainCdc(indexFamily, _, "status", ckpt))
+    family match {
+      case "ivf" =>
+        val e = t(s, dir, "embeddings").select("vec_id", "embedding")
+        val old = e.filter(col("vec_id") % 5 =!= 0)
+          .withColumn("embedding", when(col("vec_id") % 7 === 0,
+            transform(col("embedding"), x => negate(x))).otherwise(col("embedding")))
+          .unionByName(e.filter(col("vec_id") % 11 === 0)
+            .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding")))
+        val batch1 = old.collect()
+          .map(r => (r.getLong(0), "added", r.getSeq[Float](1).toArray))
+          .sortBy(_._1).toSeq
+        val newByIdx = e.collect()
+          .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+        val batch2 = CorpusDiff.diff(old, e, "vec_id", Seq("embedding"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+          .sortBy(_._1)
+          .map { case (id, st) =>
+            (id, st, newByIdx.getOrElse(id, Array.empty[Float])) }.toSeq
+        maintainCdc(IndexFamily.ivf("vec_id", "embedding", idx, nCentroids = 16),
+          Feed(Seq(batch1, batch2), "vec_id", "status", "embedding"))
+      case "dsir" =>
+        val full = t(s, dir, "documents").select("doc_id", "text")
+        val old = full.filter(col("doc_id") % 5 =!= 0)
+          .withColumn("text", when(col("doc_id") % 7 === 0,
+            concat(col("text"), lit(" stale revision"))).otherwise(col("text")))
+          .unionByName(full.filter(col("doc_id") % 11 === 0)
+            .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
+        val oldRows = old.collect().map(r => r.getLong(0) -> r.getString(1))
+        val batch1 = oldRows.sortBy(_._1)
+          .map { case (id, tx) => (id, "added", tx, null: String) }.toSeq
+        val oldText = oldRows.toMap
+        val newText = full.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        val batch2 = CorpusDiff.diff(old, full, "doc_id", Seq("text"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+          .sortBy(_._1)
+          .map { case (id, st) => (id, st,
+            newText.getOrElse(id, null: String),
+            oldText.getOrElse(id, null: String)) }.toSeq
+        val target = t(s, dir, "documents").filter(col("lang") === "en")
+        maintainCdc(IndexFamily.dsir("text", idx,
+            Some(IndexFamily.DsirTarget(target, "text", 4096))),
+          Feed(Seq(batch1, batch2), "doc_id", "status", "text", "old_text"))
+      case "bm25" | "lexical" | "minhash" =>
+        val full = t(s, dir, "documents").select("doc_id", "text")
+        val d = if (family == "minhash") full.filter(col("doc_id") % 2 === 1) else full
+        val missRes = if (family == "minhash") 3 else 0
+        val old = d.filter(col("doc_id") % 5 =!= missRes)
+          .withColumn("text", when(col("doc_id") % 7 === 0,
+            concat(col("text"), lit(" stale revision"))).otherwise(col("text")))
+          .unionByName(d.filter(col("doc_id") % 11 === 0)
+            .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
+        val batch1 = old.collect().map(r => (r.getLong(0), "added", r.getString(1)))
+          .sortBy(_._1).toSeq
+        val newText = d.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        val batch2 = CorpusDiff.diff(old, d, "doc_id", Seq("text"))
+          .collect().map(r => (r.getLong(0), r.getString(1)))
+          .sortBy(_._1)
+          .map { case (id, st) => (id, st, newText.getOrElse(id, null: String)) }
+          .toSeq
+        val textFamily = family match {
+          case "bm25" => IndexFamily.bm25("doc_id", "text", idx)
+          case "lexical" => IndexFamily.lexical("doc_id", "text", idx)
+          case _ => IndexFamily.minhash("doc_id", "text", idx)
+        }
+        maintainCdc(textFamily, Feed(Seq(batch1, batch2), "doc_id", "status", "text"))
+      case other => throw new IllegalArgumentException(s"buildCdc: unknown family $other")
     }
   }
 
   /** Serve a [[buildCdc]]-built chain — the query side of the
-    * `stream_cdc_*` gates and their `_serve` bench splits.
+    * `stream_cdc_*` gates and their `_serve` bench splits. A BM25 or
+    * DSIR chain serves as its stream-maintained twin does: the change
+    * feed lands the live corpus's index exactly.
     */
   private def serveCdc(
       family: String, s: SparkSession, dir: String, idx: String): DataFrame =
     family match {
-      case "bm25" =>
-        Search.bm25SearchIndex(s, idx, Seq("vector", "stream", "spark"), k = 20)
+      case "bm25" | "dsir" => serveMaintained(family, s, dir, idx)
       case "lexical" =>
         Search.phraseSearchIndex(s, idx, Seq("vector", "stream"), k = 20)
       case "minhash" =>
@@ -4974,128 +4964,85 @@ object SparkEntry {
           SimilaritySearch.searchIvf(s, idx, qs, "vec_id", "embedding",
             k = 5, nProbe = 16),
           SimilaritySearch.bruteForceTopK(qs, e, "vec_id", "embedding", k = 5))
-      case "dsir" =>
-        // the retraction chain's summed raw profile equals the live
-        // corpus's one-shot profile EXACTLY, so scoring serves
-        // dsir_score's oracle verbatim (index_sync_dsir's claim,
-        // stream-built)
-        val (tp, rp) = Dsir.dsirIndexProfiles(s, idx)
-        Dsir.importanceScore(t(s, dir, "documents"), "doc_id", "text",
-          tp, rp, buckets = 4096)
       case other => throw new IllegalArgumentException(
         s"serveCdc: unknown family $other")
     }
 
+  /** Build one stream-maintained index family (bootstrap + appends +
+    * in-stream compactions) under `idx`/`ckpt` — the write half of the
+    * `stream_maintained_*` gates. Shared by the full gate queries
+    * (fresh random path per call: the correctness claim re-streams
+    * every run) and the bench's `stream_maintained_*_serve` split rows
+    * (fixed per-JVM path, built once untimed, so the timed row is the
+    * steady-state serving plan alone). Each family is an index family
+    * value, a feed of micro-batches and a compaction cadence.
+    */
   private def buildMaintained(
       family: String, s: SparkSession, dir: String,
       idx: String, ckpt: String): Unit = {
     import s.implicits._
+    def texts(keep: Column = lit(true)) = t(s, dir, "documents").filter(keep)
+      .select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    def vectors(keep: Column = lit(true)) = t(s, dir, "embeddings").filter(keep)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
+    def payloads(keep: Column, payload: Long => Array[Byte]) =
+      thirds(t(s, dir, "documents").select("doc_id").filter(keep)
+        .collect().map(_.getLong(0)).sorted
+        .map(id => (id, payload(id))).toSeq)
+    def target(keep: Column) =
+      Some(IndexFamily.DsirTarget(t(s, dir, "documents").filter(keep), "text", 4096))
+    def maintain[T](indexFamily: IndexFamily, feed: Feed[T], compactEvery: Int = 0): Unit =
+      runMaintainer(s, feed)(Streaming.maintain(indexFamily, _, ckpt, compactEvery))
     family match {
       case "bm25" =>
-        val rows = t(s, dir, "documents").select("doc_id", "text")
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainBm25Index(ds.toDF("doc_id", "text"),
-            "doc_id", "text", idx, ckpt)
-        }
+        maintain(IndexFamily.bm25("doc_id", "text", idx), Feed(thirds(texts()), "doc_id", "text"))
       case "ann" =>
-        val rows = t(s, dir, "embeddings").select("vec_id", "embedding")
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainIvfIndex(ds.toDF("vec_id", "embedding"),
-            "vec_id", "embedding", idx, ckpt, nCentroids = 16, compactEvery = 3)
-        }
+        maintain(IndexFamily.ivf("vec_id", "embedding", idx, nCentroids = 16),
+          Feed(thirds(vectors()), "vec_id", "embedding"), 3)
       case "dsir" =>
-        val d = t(s, dir, "documents")
-        val rows = d.select("doc_id", "text")
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainDsirIndex(ds.toDF("doc_id", "text"), "text",
-            d.filter(col("lang") === "en"), "text", buckets = 4096, idx, ckpt)
-        }
+        maintain(IndexFamily.dsir("text", idx, target(col("lang") === "en")),
+          Feed(thirds(texts()), "doc_id", "text"))
       case "dsir_by_lang" =>
-        val d = t(s, dir, "documents")
-        val rows = d.select("doc_id", "lang", "text").collect()
+        val rows = t(s, dir, "documents").select("doc_id", "lang", "text").collect()
           .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
           .sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainDsirIndexByGroup(
-            ds.toDF("doc_id", "lang", "text"), "text", "lang",
-            d.filter(col("doc_id") % 5 === 0), "text", "lang",
-            buckets = 4096, idx, ckpt)
-        }
+        maintain(IndexFamily.dsirByGroup("text", "lang", idx, target(col("doc_id") % 5 === 0),
+          targetGroupCol = "lang"), Feed(thirds(rows), "doc_id", "lang", "text"))
       case "pq" =>
-        val rows = t(s, dir, "embeddings").select("vec_id", "embedding")
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainPqIndex(ds.toDF("vec_id", "embedding"),
-            "vec_id", "embedding", idx, ckpt, m = 32, kCodes = 32,
-            compactEvery = 3)
-        }
+        maintain(IndexFamily.pq("vec_id", "embedding", idx, m = 32, kCodes = 32),
+          Feed(thirds(vectors()), "vec_id", "embedding"), 3)
       case "ivf_sq8" =>
-        val rows = t(s, dir, "embeddings").select("vec_id", "embedding")
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .sortBy(_._1).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainIvfSq8Index(ds.toDF("vec_id", "embedding"),
-            "vec_id", "embedding", idx, ckpt, nCentroids = 16,
-            compactEvery = 3)
-        }
+        maintain(IndexFamily.ivfSq8("vec_id", "embedding", idx, nCentroids = 16),
+          Feed(thirds(vectors()), "vec_id", "embedding"), 3)
       case "semdedup" =>
         // batch 1 (the even half) bootstraps the blocking model,
         // batches 2–3 split the odd half (contraction is associative)
-        val e = t(s, dir, "embeddings")
-        def half(m: Int) = e.filter(col("vec_id") % 2 === m)
-          .select("vec_id", "embedding").collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
-        val odd = half(1)
-        val batches = half(0) +:
+        val odd = vectors(col("vec_id") % 2 === 1)
+        val batches = vectors(col("vec_id") % 2 === 0) +:
           odd.grouped(math.max(1, (odd.length + 1) / 2)).toSeq
-        runMaintainer(s, batches) { ds =>
-          Streaming.maintainSemDedupIndex(ds.toDF("vec_id", "embedding"),
-            "vec_id", "embedding", idx, ckpt, k = 8, threshold = 0.45)
-        }
+        maintain(IndexFamily.semDedup("vec_id", "embedding", idx, k = 8, threshold = 0.45),
+          Feed(batches, "vec_id", "embedding"))
       case "ahash" =>
-        val rows = t(s, dir, "documents").select("doc_id")
-          .filter(col("doc_id") % 2 === 0)
-          .collect().map(_.getLong(0)).sorted
-          .map(id => (id, classPngs((id % 5).toInt))).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainAHashIndex(ds.toDF("doc_id", "payload"),
-            "doc_id", "payload", idx, ckpt)
-        }
+        maintain(IndexFamily.aHash("doc_id", "payload", idx),
+          Feed(payloads(col("doc_id") % 2 === 0, id => classPngs((id % 5).toInt)),
+            "doc_id", "payload"))
       case "phash" =>
-        val rows = t(s, dir, "documents").select("doc_id")
-          .filter(col("doc_id") % 2 === 0)
-          .collect().map(_.getLong(0)).sorted
-          .map(id => (id, phashPayloads((id % 9).toInt))).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainPHashIndex(ds.toDF("doc_id", "payload"),
-            "doc_id", "payload", idx, ckpt)
-        }
+        maintain(IndexFamily.pHash("doc_id", "payload", idx),
+          Feed(payloads(col("doc_id") % 2 === 0, id => phashPayloads((id % 9).toInt)),
+            "doc_id", "payload"))
       case "audiofp" =>
-        val rows = t(s, dir, "documents").select("doc_id")
-          .filter(col("doc_id") % 7 === 0 && col("doc_id") % 2 === 0)
-          .collect().map(_.getLong(0)).sorted
-          .map(id => (id, shiftWavs((id % 9).toInt))).toSeq
-        runMaintainer(s, thirds(rows)) { ds =>
-          Streaming.maintainAudioFpIndex(ds.toDF("doc_id", "payload"),
-            "doc_id", "payload", idx, ckpt)
-        }
+        maintain(IndexFamily.audioFp("doc_id", "payload", idx),
+          Feed(payloads(col("doc_id") % 7 === 0 && col("doc_id") % 2 === 0,
+            id => shiftWavs((id % 9).toInt)), "doc_id", "payload"))
       case "eval" =>
         // two arriving benchmark suites (the %10==0 and %10==5 halves
         // of the eval set — their union is stream_decontaminate's
         // %5==0 eval side)
-        val d = t(s, dir, "documents")
-        def half(m: Int) = d.filter(col("doc_id") % 10 === m)
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-        runMaintainer(s, Seq(half(0), half(5))) { ds =>
-          Streaming.maintainEvalIndex(ds.toDF("doc_id", "text"), "text",
-            idx, ckpt, n = 3, compactEvery = 2)
-        }
+        maintain(IndexFamily.eval("text", idx, n = 3),
+          Feed(Seq(texts(col("doc_id") % 10 === 0), texts(col("doc_id") % 10 === 5)),
+            "doc_id", "text"), 2)
       case "scenes" =>
         // batches keep whole docs together (a doc's frames arrive in
         // one micro-batch, like a video landing in the crawl)
@@ -5105,10 +5052,8 @@ object SparkEntry {
         val batches = evenByDoc
           .grouped(math.max(1, (evenByDoc.length + 2) / 3))
           .map(_.flatten.toSeq).toSeq
-        runMaintainer(s, batches) { ds =>
-          Streaming.maintainSceneIndex(ds.toDF("doc_id", "frame_idx", "frame_bytes"),
-            "doc_id", "frame_idx", "frame_bytes", idx, ckpt)
-        }
+        maintain(IndexFamily.scene("doc_id", "frame_idx", "frame_bytes", idx),
+          Feed(batches, "doc_id", "frame_idx", "frame_bytes"))
       case other => throw new IllegalArgumentException(
         s"buildMaintained: unknown family $other")
     }

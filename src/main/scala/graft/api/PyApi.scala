@@ -166,14 +166,12 @@ object PyApi {
   // ---- persisted-index lifecycle (build once, serve every batch) ----
 
   def buildBm25Index(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      termBuckets: Int): Unit =
-    Search.buildBm25Index(docs, idCol, textCol, path, termBuckets)
+      docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    Search.buildBm25Index(docs, idCol, textCol, path)
 
   def appendToBm25Index(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      termBuckets: Int): Unit =
-    Search.appendToBm25Index(docs, idCol, textCol, path, termBuckets)
+      docs: DataFrame, idCol: String, textCol: String, path: String): Unit =
+    Search.appendToBm25Index(docs, idCol, textCol, path)
 
   def deleteFromBm25Index(
       deletedIds: DataFrame, idCol: String, path: String): Unit = {

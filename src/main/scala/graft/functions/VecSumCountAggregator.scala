@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * whole-stage codegen once the aggregate exceeds
   * `spark.sql.codegen.maxFields` (default 100) and every Lloyd pass
   * over the corpus turns interpreted — measured 3-4x slower per pass
-  * at d=768 (tools/CentroidDimProbe; round-18 verdict #4). This
+  * at d=768 (OPTIMIZATION_r19.md; round-18 verdict #4). This
   * aggregator holds the d sums in one `Array[Double]`, accumulating
   * per partition in row order and merging partials pairwise — the
   * same adds in the same order as d independent `Sum`s over the same

@@ -933,7 +933,7 @@ object Multimodal {
     * [[deleteFromAHashIndex]] segments) to ONE segment of live hashes —
     * identical probe results by construction; applied-batch markers
     * carry forward through the full publish, so a streaming maintainer
-    * ([[graft.streaming.Streaming.maintainAHashIndex]]) can compact
+    * ([[graft.streaming.Streaming.maintain]]) can compact
     * mid-stream without re-applying batches. No-op on a single-segment
     * index.
     */

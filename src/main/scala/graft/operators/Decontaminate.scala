@@ -368,7 +368,7 @@ object Decontaminate {
     * distinct union of the chain's hashes republishes atomically (the
     * applied-batch markers carry forward — [[graft.sources.IndexIO]]'s
     * compaction contract), so a benchmark suite maintained from a
-    * stream ([[graft.streaming.Streaming.maintainEvalIndex]]) never
+    * stream ([[graft.streaming.Streaming.maintain]]) never
     * degrades its gate's broadcast build into a K-segment union read.
     * Results are identical by construction: readers take the distinct
     * union either way.

@@ -110,13 +110,11 @@ object Search {
   /** Persist the full inverted index + doc stats so repeated queries
     * skip the corpus scan: `path/postings` holds `(term, doc_id, tf,
     * dl)` CLUSTERED BY term — hash-shuffled on term with the partition
-    * count sized at RUNTIME by AQE from the actual shuffle bytes
-    * (`termBuckets` is retained as the legacy fixed-spread knob; the
-    * write no longer pins the file count to it, so a micro-batch delta
-    * lands one small file instead of 64 near-empty ones while a full
-    * corpus build still fans out to advisory-sized files). Within each
-    * file rows sort by (term, doc_id), so a term lookup's row-group
-    * min/max pruning skips non-matching files exactly as before (the
+    * count sized at RUNTIME by AQE from the actual shuffle bytes (no
+    * fixed file count, so a micro-batch delta lands one small file
+    * while a full corpus build fans out to advisory-sized files).
+    * Within each file rows sort by (term, doc_id), so a term lookup's
+    * row-group min/max pruning skips non-matching files exactly as before (the
     * pruning comes from the sort, not the bucket count;
     * the doc length rides DENORMALIZED in every posting row so the
     * serving path never joins the corpus-sized lengths table),
@@ -129,7 +127,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     // three tables, one atomic publish: postings/lengths/stats land in
     // a fresh version dir and the _LATEST pointer flips last, so a
@@ -219,7 +216,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit =
     appendToIndex(docs, col(idCol), textCol, path, marker, withPositions = false)
 
@@ -289,16 +285,6 @@ object Search {
     ()
   }
 
-  /** Collapse a tombstoned [[buildBm25Index]] (or [[buildLexicalIndex]])
-    * chain to ONE segment: live postings re-bucketed by term, live
-    * lengths, and stats observed on the lengths write (exact over the
-    * live docs). Identical serving results by construction. A chain of
-    * one segment is left as it is.
-    */
-  def compactBm25Index(
-      spark: SparkSession, path: String, termBuckets: Int = 64): Unit =
-    compactBm25Index(spark, path, None)
-
   /** A CDC micro-batch to fold into a compaction: `dels` holds the ids
     * it removes (the one column `idCol`), `adds` the documents it adds
     * (`idCol`, `textCol`), `marker` its applied-batch marker.
@@ -307,10 +293,15 @@ object Search {
       dels: Option[DataFrame], adds: Option[DataFrame],
       idCol: String, textCol: String, marker: String)
 
-  /** The one [[compactBm25Index]] body, with an optional CDC `batch`
-    * folded in: the new version is the chain's live rows, minus the
-    * batch's deleted ids, plus the batch's added rows, published ONCE
-    * with the batch's marker (the full publish carries the chain's
+  /** Collapse a tombstoned [[buildBm25Index]] (or [[buildLexicalIndex]])
+    * chain to ONE segment: live postings re-bucketed by term, live
+    * lengths, and stats observed on the lengths write (exact over the
+    * live docs). Identical serving results by construction. A chain of
+    * one segment is left as it is.
+    *
+    * With a CDC `batch` folded in, the new version is the chain's live
+    * rows, minus the batch's deleted ids, plus the batch's added rows,
+    * published ONCE with the batch's marker (the full publish carries the chain's
     * markers forward, so a replay of the batch is recognized; a crash
     * before the pointer flip leaves the previous version live and the
     * replay folds again). The batch's ids are one more tombstone set,
@@ -321,8 +312,8 @@ object Search {
     * they always carry `dl`, as the compacted postings do. A folding
     * call publishes even on a one-segment chain.
     */
-  private[graft] def compactBm25Index(
-      spark: SparkSession, path: String, batch: Option[CdcBatch]): Unit = {
+  def compactBm25Index(
+      spark: SparkSession, path: String, batch: Option[CdcBatch] = None): Unit = {
     val segs = graft.sources.IndexIO.chain(spark, path)
     if (batch.isEmpty && segs.length <= 1) return
     val batchTombs = for (b <- batch; d <- b.dels)
@@ -1164,8 +1155,7 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      termBuckets: Int = 64): Unit = {
+      path: String): Unit = {
     graft.sources.IndexIO.publish(docs.sparkSession, path) { vdir =>
       val postings = docs
         .select(col(idCol).cast("long").as("doc_id"),
@@ -1192,8 +1182,7 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      termBuckets: Int = 64): Unit = {
+      path: String): Unit = {
     val spark = docs.sparkSession
     graft.sources.IndexIO.resolve(spark, path) // fail loudly on no base
     val postings = docs
@@ -1229,7 +1218,7 @@ object Search {
     * results by construction, mirrors [[compactBm25Index]].
     */
   def compactPositionalIndex(
-      spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
+      spark: SparkSession, path: String): Unit = {
     val segs = graft.sources.IndexIO.chain(spark, path)
     if (segs.length <= 1) return
     val postings = liveTable(spark, path, segs, "postings")
@@ -1288,7 +1277,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     val id = col(idCol).cast("long")
     graft.sources.IndexIO.publish(docs.sparkSession, path, marker) { vdir =>
@@ -1309,7 +1297,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit =
     // match the BASE chain's postings layout (see appendToBm25Index): a
     // pre-denormalization lexical artifact keeps appending without dl so
@@ -1332,8 +1319,7 @@ object Search {
       spark: SparkSession,
       bm25Path: String,
       positionalPath: String,
-      outPath: String,
-      termBuckets: Int = 64): Unit = {
+      outPath: String): Unit = {
     val bm25Segs = graft.sources.IndexIO.chain(spark, bm25Path)
     val lengths = liveTable(spark, bm25Path, bm25Segs, "lengths")
     val posBare = liveTable(spark, positionalPath,

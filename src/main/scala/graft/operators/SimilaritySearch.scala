@@ -987,7 +987,7 @@ object SimilaritySearch {
       // drops out of whole-stage codegen and every Lloyd pass over the
       // corpus turns interpreted — measured 3-4x slower per pass at
       // d=768/1536, and the array form is ~2x faster even at d=64
-      // (tools/CentroidDimProbe, which also checks the two forms'
+      // (OPTIMIZATION_r19.md, which also records that the two forms'
       // sums are BIT-IDENTICAL: same adds over the same shuffle).
       val vecSumCount = udaf(new graft.functions.VecSumCountAggregator())
       val means = assigned

@@ -489,8 +489,8 @@ object IndexIO {
     * live segment's `_MARKER.*` files. A streaming maintainer records
     * its micro-batch id here atomically with the appended data and
     * skips batches already present — exactly-once index maintenance
-    * under foreachBatch's at-least-once replay ([[
-    * graft.streaming.Streaming.maintainBm25Index]]).
+    * under foreachBatch's at-least-once replay
+    * ([[graft.streaming.Streaming.maintain]]).
     */
   def segmentMarkers(spark: SparkSession, path: String): Set[String] = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -168,7 +168,7 @@ object IndexFamily {
       build: Write, append: Write): IndexFamily =
     tombstoned(path, idCol, textCol)(build, append,
       (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol, m),
-      s => Search.compactBm25Index(s, path, None),
+      s => Search.compactBm25Index(s, path),
       Some((s, cs, m) => Search.compactBm25Index(s, path,
         Some(Search.CdcBatch(cs.dels, cs.adds, idCol, textCol, m)))))
 
@@ -193,7 +193,11 @@ object IndexFamily {
     tombstoned(path, idCol, vecCol)(build, append,
       (d, m) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d, idCol, m), compact)
 
-  /** [[graft.operators.SimilaritySearch.buildIvfIndex]]. */
+  /** [[graft.operators.SimilaritySearch.buildIvfIndex]]: added and
+    * changed vectors assign to the FROZEN centroids (no retrain on the
+    * write path — [[graft.operators.SimilaritySearch.ivfIndexDrift]] is
+    * the retrain signal).
+    */
   def ivf(idCol: String, vecCol: String, path: String, nCentroids: Int = 16,
       iters: Int = 5): IndexFamily =
     ann(idCol, vecCol, path)(
@@ -202,7 +206,10 @@ object IndexFamily {
       s => SimilaritySearch.compactIvfIndex(s, path))
 
   /** [[graft.operators.SimilaritySearch.buildIvfSq8Index]]: float
-    * centroids, SQ8-quantized cells.
+    * centroids, SQ8-quantized cells. Appends assign on the float values
+    * and land quantized; per-vector quantization is
+    * centroid-independent, so at exhaustive probes a maintained chain
+    * equals the one-shot quantized scan exactly.
     */
   def ivfSq8(idCol: String, vecCol: String, path: String, nCentroids: Int = 16,
       iters: Int = 5): IndexFamily =
@@ -288,7 +295,9 @@ object IndexFamily {
     * `(idCol, frameIdxCol, frameBinCol)`; a video's frames must arrive
     * together (cuts are inter-frame). With `framesCol`, a row is instead
     * a WHOLE video: an array of structs with fields `frameIdxCol` and
-    * `frameBinCol` — the change-feed shape. Frame-row snapshots diff on
+    * `frameBinCol` — the change-feed shape, where a re-cut video arrives
+    * as `changed` and null or empty frame arrays on delete rows are fine
+    * (a delete reads only the ids). Frame-row snapshots diff on
     * a per-video fingerprint, the XOR of the DISTINCT frames'
     * `xxhash64(frameIdx, frameBin)`: an unordered set hash that any
     * added, dropped, re-cut or re-encoded frame moves, that cannot

@@ -927,12 +927,12 @@ object Streaming {
       compact
 
   /** Maintain `family`'s index FROM A STREAM of new rows — the ONE
-    * build-then-append skeleton every plain `maintain*Index` forwards
-    * to. Markers scope to the CHECKPOINT (not the run) via
-    * [[streamMarkerId]]: replays within one checkpoint keep their batch
-    * id and are recognized, while a fresh stream generation (new
-    * checkpoint, batch ids restarting at 0) gets its own marker space
-    * and never collides. Each non-empty micro-batch applies
+    * build-then-append skeleton of every family. Markers scope to the
+    * CHECKPOINT (not the run) via [[streamMarkerId]]: replays within
+    * one checkpoint keep their batch id and are recognized, while a
+    * fresh stream generation (new checkpoint, batch ids restarting at
+    * 0) gets its own marker space and never collides. Each non-empty
+    * micro-batch applies
     * exactly-once through [[applyIndexBatch]] (the first bootstraps the
     * index, later ones append), then [[maybeCompact]] runs the family's
     * compaction once the chain reaches `compactEvery` segments, and
@@ -953,9 +953,9 @@ object Streaming {
     }
 
   /** Maintain `family`'s index from a CDC CHANGE FEED — the ONE skeleton
-    * every `maintain*IndexCdc` forwards to, and the streaming
-    * composition of [[graft.operators.IndexSync.sync]]: each micro-batch
-    * carries [[graft.operators.CorpusDiff.diff]]-shaped rows (status in
+    * of every family, and the streaming composition of
+    * [[graft.operators.IndexSync.sync]]: each micro-batch carries
+    * [[graft.operators.CorpusDiff.diff]]-shaped rows (status in
     * `statusCol`) and applies as one change set
     * ([[IndexFamily.applyChanges]]: `removed`+`changed` rows die,
     * `added`+`changed` rows land, log-ordered, so a changed row's new
@@ -1053,52 +1053,8 @@ object Streaming {
       graft.sources.IndexIO.vacuum(s, family.path, retainVersions = vacuumRetain)
   }
 
-  /** Maintain a [[graft.operators.Search.buildBm25Index]] artifact FROM
-    * A STREAM: every micro-batch of `(idCol, textCol)` documents lands
-    * as an immutable append segment (the first non-empty batch
-    * bootstraps the index), restart-safe and exactly-once via
-    * [[applyIndexBatch]]'s in-segment batch markers. This closes the
-    * ingest loop the batch lifecycle leaves open: the crawl stream
-    * feeds the index that the serving/gate paths
-    * ([[graft.operators.Search.bm25SearchIndex]],
-    * [[hybridDecontaminateFlags]]) read — no nightly rebuild job in
-    * between. Deletes/compaction interleave through the normal chain
-    * operations (compaction carries the applied-batch markers);
-    * `compactEvery` additionally compacts IN-stream once the chain
-    * reaches that many segments ([[maybeCompact]]), so an unattended
-    * stream never degrades serving without bound.
-    */
-  def maintainBm25Index(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      termBuckets: Int = 64,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.bm25(idCol, textCol, path), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** Maintain a BM25 index from a CDC CHANGE FEED — the streaming
-    * composition of [[graft.operators.IndexSync]]: each micro-batch
-    * carries [[graft.operators.CorpusDiff.diff]]-shaped rows
-    * `(idCol, statusCol, textCol)` and applies as tombstone-the-old
-    * THEN append-the-new (`removed`+`changed` ids die, `added`+
-    * `changed` rows land — log-ordered, so a changed doc's new
-    * version serves and its old one does not).
-    *
-    * Exactly-once: the batch's marker rides the APPEND segment (or the
-    * tombstone segment of a delete-only batch), so a replayed batch is
-    * skipped whole; a crash BETWEEN the delete and the append replays
-    * both, and the delete is idempotent by construction
-    * ([[graft.operators.Search.deleteFromBm25Index]] shrinks stats
-    * from still-LIVE rows only — a second tombstone of the same ids
-    * subtracts nothing). The first non-empty batch bootstraps from its
-    * added/changed rows. With `compactEvery`, a batch due to compact
-    * folds into the compaction and publishes one version
-    * ([[maintainCdc]]).
+  /** [[maintainCdc]] over [[IndexFamily.bm25]]: a BM25 index kept
+    * current from a change feed of `(idCol, statusCol, textCol)` rows.
     */
   def maintainBm25IndexCdc(
       stream: DataFrame,
@@ -1107,600 +1063,11 @@ object Streaming {
       textCol: String,
       path: String,
       checkpointDir: String,
-      termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
       vacuumRetain: Int = 2): StreamingQuery =
     maintainCdc(IndexFamily.bm25(idCol, textCol, path), stream, statusCol, checkpointDir,
       compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainBm25IndexCdc]] for the unified lexical artifact
-    * ([[graft.operators.Search.buildLexicalIndex]]): one change feed
-    * keeps BM25 ranking, phrase retrieval, and the fused hybrid
-    * current. Deletes go through the stats-correcting
-    * [[graft.operators.Search.deleteFromBm25Index]] (the doc-id
-    * tombstone covers both serving paths — [[graft.operators
-    * .IndexSync.syncLexicalIndex]]'s rule).
-    */
-  def maintainLexicalIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      termBuckets: Int = 64,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.lexical(idCol, textCol, path), stream, statusCol, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainBm25IndexCdc]] for the IVF index: removed/changed
-    * vectors tombstone through the cells-schema-agnostic
-    * [[graft.operators.SimilaritySearch.deleteFromAnnIndex]], added/
-    * changed ones assign to the FROZEN centroids and append — the
-    * re-embedding change feed shape
-    * ([[graft.operators.SimilaritySearch.ivfIndexDrift]] is the
-    * retrain signal).
-    */
-  def maintainIvfIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.ivf(idCol, vecCol, path, nCentroids, iters), stream, statusCol,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndexCdc]] for the SQ8-quantized cells — frozen
-    * float centroids from the bootstrap batch, later changes land
-    * quantized ([[graft.operators.SimilaritySearch.appendToIvfSq8Index]]);
-    * the tombstone and compact are the cells-schema-agnostic shared
-    * forms.
-    */
-  def maintainIvfSq8IndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.ivfSq8(idCol, vecCol, path, nCentroids, iters), stream, statusCol,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndexCdc]] for the flat PQ code table — frozen
-    * codebooks from the bootstrap batch encode every later change. */
-  def maintainPqIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      m: Int = 32,
-      kCodes: Int = 32,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.pq(idCol, vecCol, path, m, kCodes), stream, statusCol, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** The MinHash near-dup family's CDC maintainer: removed/changed
-    * docs tombstone out of the band postings, added/changed docs
-    * re-sketch with the index's own stored banding meta — a re-crawled
-    * page's new content replaces its old sketch, so near-dup probes
-    * never match retired text.
-    */
-  def maintainMinhashIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      n: Int = 3,
-      numHashes: Int = 128,
-      bands: Int = 32,
-      bandBuckets: Int = 64,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.minhash(idCol, textCol, path, n, numHashes, bands, bandBuckets),
-      stream, statusCol, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** The SemDeDup family's CDC maintainer: removed/changed member
-    * vectors tombstone (keeper re-election happens at read — removing
-    * a cluster's keeper promotes the next survivor without a rewrite),
-    * added/changed embeddings resolve against the FROZEN blocking
-    * model per batch ([[graft.operators.SimilaritySearch
-    * .applySemDedupBatch]]) — the re-embedding feed: a doc whose
-    * vector changed is re-deduplicated under its new position.
-    */
-  def maintainSemDedupIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      k: Int,
-      threshold: Double,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.semDedup(idCol, vecCol, path, k, threshold, iters), stream, statusCol,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** The scene family's CDC maintainer — the one perceptual shape a
-    * flat hash feed can't carry: each change-feed row brings a WHOLE
-    * video as an array of `(frameIdxField, payloadField)` structs in
-    * `framesCol` (scene detection needs every frame of a video in one
-    * batch — cut boundaries are inter-frame). A re-cut or re-encoded
-    * video arrives as `changed`: its old scenes tombstone whole and
-    * the new frame stream re-detects in one pass; `removed` videos
-    * drop entirely. Null/empty frame arrays on delete rows are fine —
-    * the delete leg reads only the ids.
-    */
-  def maintainSceneIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      framesCol: String,
-      path: String,
-      checkpointDir: String,
-      frameIdxField: String = "frame_idx",
-      payloadField: String = "payload",
-      sceneMaxHamming: Int = 16,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.scene(idCol, frameIdxField, payloadField, path, sceneMaxHamming,
-      Some(framesCol)), stream, statusCol, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** The perceptual-hash family's CDC maintainer (image aHash — the
-    * pHash/audio forms differ only in the append function, exactly as
-    * in [[graft.operators.IndexSync]]): a re-encoded blob is a
-    * `changed` row, so its old 8-byte hash tombstones and the new one
-    * lands from ONE decode of the changed media only.
-    */
-  def maintainAHashIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      binCol: String,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.aHash(idCol, binCol, path), stream, statusCol, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** Maintain a persisted DSIR model ([[graft.operators.Dsir]]) FROM A
-    * STREAM: profiles are additive, so every micro-batch of raw
-    * documents lands as its own ≤`buckets`-row profile segment — the
-    * first non-empty batch bootstraps the model (fitting the FIXED
-    * target profile from `target` — the target corpus is curated, not
-    * streamed) and each later batch appends. Restart-safe and
-    * exactly-once via [[applyIndexBatch]]'s in-segment batch markers.
-    * This keeps the "does my corpus need more docs like this" model
-    * current with the crawl that feeds it — [[dsirGate]] reloads the
-    * ratio from the chain on whatever cadence the pipeline wants.
-    * Unlike the postings maintainers there is NO id column: the
-    * profile chain stores bucket counts only, so the artifact is
-    * id-free by construction.
-    */
-  def maintainDsirIndex(
-      stream: DataFrame,
-      textCol: String,
-      target: DataFrame,
-      targetTextCol: String,
-      buckets: Int,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.dsir(textCol, path, Some(IndexFamily.DsirTarget(target, targetTextCol,
-      buckets))), stream, checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainDsirIndex]] for a CDC CHANGE FEED — the RETRACTION
-    * family's maintainer, closing the SURVEY §2.5 lifecycle-matrix
-    * dash. DSIR "deletes" are not tombstones: the model must UNSEE the
-    * old rows' n-gram counts, so the change feed carries the OLD text
-    * (`oldTextCol`) for removed+changed rows alongside the new text
-    * for added+changed rows — the streaming composition of
-    * [[graft.operators.IndexSync.syncDsirIndex]]. Each micro-batch
-    * publishes ONE marked segment carrying the batch's NET profile —
-    * added+changed rows' counts plus removed+changed rows' negated
-    * counts summed ([[graft.operators.Dsir.applyDsirIndexCdc]]);
-    * additive counts subtract exactly, so the chain sum equals the
-    * live corpus's one-shot profile bit-for-bit, and because the
-    * retraction and append share the segment AND its exactly-once
-    * marker, a crash-replayed batch is applied atomically — never the
-    * retraction half twice. Deletes
-    * before the index exists refer to rows never profiled and drop
-    * (retracting them would drive bucket counts negative — caught
-    * loudly at the next load, but better never published).
-    */
-  def maintainDsirIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      textCol: String,
-      oldTextCol: String,
-      target: DataFrame,
-      targetTextCol: String,
-      buckets: Int,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.dsir(textCol, path, Some(IndexFamily.DsirTarget(target, targetTextCol,
-      buckets)), idCol, oldTextCol), stream, statusCol, checkpointDir, compactEvery, vacuumEvery,
-      vacuumRetain)
-
-  /** [[maintainDsirIndex]] for the PER-GROUP artifact
-    * ([[graft.operators.Dsir.buildDsirIndexByGroup]]): the first
-    * non-empty micro-batch fits the fixed per-group target profile and
-    * bootstraps, later batches append their own grouped additive
-    * profile segments; exactly-once via [[applyIndexBatch]] markers,
-    * `compactEvery` collapses the chain in-stream (the grouped compact
-    * is the same [[graft.operators.Dsir.compactDsirIndex]] — it
-    * branches on the stored schema).
-    */
-  def maintainDsirIndexByGroup(
-      stream: DataFrame,
-      textCol: String,
-      groupCol: String,
-      target: DataFrame,
-      targetTextCol: String,
-      targetGroupCol: String,
-      buckets: Int,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.dsirByGroup(textCol, groupCol, path, Some(IndexFamily.DsirTarget(target,
-      targetTextCol, buckets)), targetGroupCol), stream, checkpointDir, compactEvery, vacuumEvery,
-      vacuumRetain)
-
-  /** [[maintainBm25Index]] for the UNIFIED lexical artifact
-    * ([[graft.operators.Search.buildLexicalIndex]] — postings carry tf
-    * AND positions): one stream maintains the single artifact that
-    * BM25 ranking, phrase retrieval, and the fused
-    * [[graft.operators.Search.hybridLexicalPhraseTopK]] all serve
-    * from.
-    */
-  def maintainLexicalIndex(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      termBuckets: Int = 64,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.lexical(idCol, textCol, path), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** [[maintainBm25Index]] for the MinHash near-dup index — the crawl
-    * stream maintains the artifact that [[dedupAgainstMinhashIndex]]
-    * (and the batch dedup joins) probe. Bootstrap parameters apply to
-    * the first non-empty batch; appends band with the index's own
-    * stored meta.
-    */
-  def maintainMinhashIndex(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      n: Int = 3,
-      numHashes: Int = 128,
-      bands: Int = 32,
-      bandBuckets: Int = 64,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.minhash(idCol, textCol, path, n, numHashes, bands, bandBuckets), stream,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainBm25Index]] for the IVF ANN index
-    * ([[graft.operators.SimilaritySearch.buildIvfIndex]]) — the
-    * embedding-crawl twin of the text maintainers: the first non-empty
-    * batch TRAINS the centroids and bootstraps the index; every later
-    * micro-batch assigns its vectors to the existing cells and lands as
-    * an immutable segment ([[graft.operators.SimilaritySearch
-    * .appendToIvfIndex]] — no retrain on the hot path). Serving
-    * ([[graft.operators.SimilaritySearch.searchIvf]]) and the semantic
-    * dedup gate ([[dedupAgainstIvfIndex]]) read the chain live.
-    * Exactly-once via [[applyIndexBatch]] markers; `compactEvery`
-    * collapses the chain in-stream ([[maybeCompact]]). Centroid quality
-    * is the bootstrap batch's — [[graft.operators.Sketches
-    * .embeddingDrift]] against the live corpus is the retrain signal,
-    * and a full rebuild re-trains (policy, not this operator).
-    */
-  def maintainIvfIndex(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.ivf(idCol, vecCol, path, nCentroids, iters), stream, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndex]] for the IVF×PQ index ([[graft.operators
-    * .SimilaritySearch.buildIvfPqIndex]]): bootstrap trains centroids
-    * AND the residual codebooks on the first non-empty batch; appends
-    * encode new vectors with the frozen model (m code bytes each).
-    * The production embedding-ingest shape — ADC serving
-    * ([[graft.operators.SimilaritySearch.searchIvfPq]]) reads the
-    * chain with partition-pruned probes throughout.
-    */
-  def maintainIvfPqIndex(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      m: Int = 32,
-      kCodes: Int = 32,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.ivfPq(idCol, vecCol, path, nCentroids, m, kCodes), stream, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndex]] for the plain PQ index ([[graft.operators
-    * .SimilaritySearch.buildPqIndex]]): bootstrap trains the codebooks
-    * on the first non-empty batch's deterministic sample; every later
-    * micro-batch encodes with the FROZEN codebooks into an immutable
-    * code segment (m bytes per vector — the whole-corpus-in-memory ADC
-    * scan shape). Exactly-once via [[applyIndexBatch]] markers;
-    * `compactEvery` collapses the code chain in-stream
-    * ([[graft.operators.SimilaritySearch.compactPqIndex]] — codes
-    * union unchanged, results identical by construction).
-    */
-  def maintainPqIndex(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      m: Int = 32,
-      kCodes: Int = 32,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.pq(idCol, vecCol, path, m, kCodes), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndex]] for the IVF-SQ8 index ([[graft.operators
-    * .SimilaritySearch.buildIvfSq8Index]]): bootstrap trains the float
-    * centroids on the first non-empty batch; appends assign new
-    * vectors to the frozen cells on their FLOAT values and land
-    * SQ8-quantized (per-vector quantization is centroid-independent,
-    * so at exhaustive probes the maintained chain equals the one-shot
-    * quantized scan EXACTLY). The compact is the cells-schema-agnostic
-    * [[graft.operators.SimilaritySearch.compactIvfIndex]].
-    */
-  def maintainIvfSq8Index(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      nCentroids: Int = 16,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.ivfSq8(idCol, vecCol, path, nCentroids, iters), stream, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** Maintain the decontamination EVAL index ([[graft.operators
-    * .Decontaminate.buildEvalIndex]]) from a stream of ARRIVING
-    * benchmark suites: each micro-batch's eval docs shingle into an
-    * immutable distinct-hash segment (first batch bootstraps, fixing
-    * the shingle width), so the ingest gates
-    * ([[decontaminateGateFromIndex]], [[hybridDecontaminateFlags]])
-    * start screening for a new benchmark the moment it lands — no
-    * rebuild job between "suite published" and "training data
-    * protected". `compactEvery` re-collapses the hash chain in-stream
-    * ([[graft.operators.Decontaminate.compactEvalIndex]]).
-    */
-  def maintainEvalIndex(
-      stream: DataFrame,
-      textCol: String,
-      path: String,
-      checkpointDir: String,
-      n: Int = 8,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.eval(textCol, path, n), stream, checkpointDir, compactEvery, vacuumEvery,
-      vacuumRetain)
-
-  /** [[maintainEvalIndex]] for a CDC CHANGE FEED over the benchmark
-    * suite — the eval-hash retraction maintainer ([[graft.operators
-    * .Decontaminate.deleteFromEvalIndex]]'s streaming composition):
-    * removed+changed benchmark items carry their OLD text
-    * (`oldTextCol`); each batch publishes ONE marked segment with the
-    * net occurrence-count profile (positive adds + negated
-    * withdrawals, [[graft.operators.Decontaminate.applyEvalIndexCdc]]
-    * — atomic under crash-replay, as in [[maintainDsirIndexCdc]], the
-    * other retraction family). A hash shared with a surviving
-    * benchmark keeps gating; one unique to the withdrawn item stops.
-    */
-  def maintainEvalIndexCdc(
-      stream: DataFrame,
-      idCol: String,
-      statusCol: String,
-      textCol: String,
-      oldTextCol: String,
-      path: String,
-      checkpointDir: String,
-      n: Int = 8,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintainCdc(IndexFamily.eval(textCol, path, n, idCol, oldTextCol), stream, statusCol,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainIvfIndex]] for the incremental SemDeDup artifact
-    * ([[graft.operators.SimilaritySearch.buildSemDedupIndex]]): the
-    * first non-empty batch trains the blocking centroids and resolves
-    * its own duplicates; every later micro-batch assigns against the
-    * frozen cells, pairs ONLY within them, and lands as an immutable
-    * segment (+ remap rows where it bridged components) —
-    * [[graft.operators.SimilaritySearch.semDeDupIncremental]].
-    * The dedup DECISIONS stay queryable at any time via
-    * [[graft.operators.SimilaritySearch.semDedupIndexStatus]]; the
-    * keep-the-atypical rule re-resolves per read, so a later batch's
-    * more-atypical member takes over as keeper exactly as a one-shot
-    * run over the union would have chosen.
-    */
-  def maintainSemDedupIndex(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      checkpointDir: String,
-      k: Int,
-      threshold: Double,
-      iters: Int = 5,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.semDedup(idCol, vecCol, path, k, threshold, iters), stream,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
-
-  /** [[maintainBm25Index]] for the perceptual image-hash index
-    * ([[graft.multimodal.Multimodal.buildAHashIndex]]) — the image
-    * crawl's ingest loop: each micro-batch's images are decoded ONCE
-    * into 8-byte hashes and land as an immutable segment; the
-    * [[graft.multimodal.Multimodal.dedupAgainstAHashIndex]] gate then
-    * probes new batches against the whole image corpus without ever
-    * re-decoding it. Exactly-once markers and the `compactEvery`
-    * cadence as in every maintainer here.
-    */
-  def maintainAHashIndex(
-      stream: DataFrame,
-      idCol: String,
-      binCol: String,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.aHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** [[maintainAHashIndex]] with the crop/rescale-robust DCT hash
-    * ([[graft.multimodal.Multimodal.buildPHashIndex]] — the stored
-    * layout is shared, so the same compaction applies); probes come
-    * through `dedupAgainstPHashIndex`.
-    */
-  def maintainPHashIndex(
-      stream: DataFrame,
-      idCol: String,
-      binCol: String,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.pHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** [[maintainAHashIndex]]'s audio-envelope sibling
-    * ([[graft.multimodal.Multimodal.buildAudioHashIndex]] — shared
-    * `hashes` layout, shared compaction); probes come through
-    * `dedupAgainstAudioHashIndex`.
-    */
-  def maintainAudioHashIndex(
-      stream: DataFrame,
-      idCol: String,
-      binCol: String,
-      path: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.audioHash(idCol, binCol, path), stream, checkpointDir, compactEvery,
-      vacuumEvery, vacuumRetain)
-
-  /** Maintain the SHIFT-ROBUST audio subfingerprint index
-    * ([[graft.multimodal.Multimodal.buildAudioFpIndex]]) from a
-    * stream: clips decode once at ingest, each micro-batch appends its
-    * winnowed `(id, fp)` postings as an immutable segment,
-    * exactly-once via batch markers, `compactEvery` collapses the
-    * chain (dropping tombstoned clips physically). The `(windowSamples,
-    * k, w)` parameters are baked into the postings — probes must use
-    * the same values, exactly as the batch lifecycle documents.
-    */
-  def maintainAudioFpIndex(
-      stream: DataFrame,
-      idCol: String,
-      binCol: String,
-      path: String,
-      checkpointDir: String,
-      windowSamples: Int = 400,
-      k: Int = 16,
-      w: Int = 4,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.audioFp(idCol, binCol, path, windowSamples, k, w), stream, checkpointDir,
-      compactEvery, vacuumEvery, vacuumRetain)
-
-  /** Maintain the video SCENE index
-    * ([[graft.multimodal.Multimodal.buildSceneIndex]]) from a stream
-    * of decoded frames `(idCol, frameIdxCol, frameBinCol)`: each
-    * micro-batch's videos are segmented once and their 8-byte scene
-    * rows land as an immutable segment — the shot-reuse/licensing
-    * check becomes an incremental pipeline. A video's frames must
-    * arrive WITHIN one micro-batch (scene segmentation is per-video;
-    * frames split across batches would segment twice) — the natural
-    * shape when the crawl emits whole video documents. Exactly-once
-    * via batch markers; `compactEvery` collapses the chain.
-    */
-  def maintainSceneIndex(
-      stream: DataFrame,
-      idCol: String,
-      frameIdxCol: String,
-      frameBinCol: String,
-      path: String,
-      checkpointDir: String,
-      sceneMaxHamming: Int = 16,
-      compactEvery: Int = 0,
-      vacuumEvery: Int = 0,
-      vacuumRetain: Int = 2): StreamingQuery =
-    maintain(IndexFamily.scene(idCol, frameIdxCol, frameBinCol, path, sceneMaxHamming), stream,
-      checkpointDir, compactEvery, vacuumEvery, vacuumRetain)
 
   /** RETRIEVAL-BASED decontamination gate, hybrid and STATELESS: flag
     * incoming documents that near-match a benchmark item through

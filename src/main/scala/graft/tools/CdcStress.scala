@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, IndexSync, Search, SimilaritySearch}
+import graft.streaming.IndexFamily
 
 /** Scale probe for the CDC → index path: at a steady-state crawl the
   * question is "is syncing a d% delta cheaper than rebuilding?", and
@@ -65,7 +66,7 @@ object CdcStress {
       val synced = java.nio.file.Files.createTempDirectory("cdc_sync").toString
       Search.buildBm25Index(docs, "doc_id", "text", synced)
       t(f"bm25 SYNC (diff + tombstone + delta append)") {
-        IndexSync.syncBm25Index(spark, docs, newSnap, "doc_id", "text", synced)
+        IndexSync.sync(IndexFamily.bm25("doc_id", "text", synced), docs, newSnap)
       }
       val a = Search.bm25SearchIndex(spark, synced,
         Seq("vector", "stream", "spark"), k = 20).collect().toSeq
@@ -97,7 +98,7 @@ object CdcStress {
     val ivfSynced = java.nio.file.Files.createTempDirectory("cdc_ivf_sync").toString
     SimilaritySearch.buildIvfIndex(emb, "vec_id", "embedding", ivfSynced)
     t("ivf SYNC (frozen centroids, ~7.5% delta)") {
-      IndexSync.syncIvfIndex(spark, emb, newEmb, "vec_id", "embedding", ivfSynced)
+      IndexSync.sync(IndexFamily.ivf("vec_id", "embedding", ivfSynced), emb, newEmb)
     }
     val qs = emb.filter(col("vec_id") < 20)
     val recall = SimilaritySearch.recallSummary(
@@ -121,7 +122,7 @@ object CdcStress {
     val mhSynced = java.nio.file.Files.createTempDirectory("cdc_mh_sync").toString
     Dedup.buildMinhashIndex(docs, "doc_id", "text", mhSynced)
     t("minhash SYNC (diff + tombstone + re-sketch, ~7.5% delta)") {
-      IndexSync.syncMinhashIndex(spark, docs, mhNew, "doc_id", "text", mhSynced)
+      IndexSync.sync(IndexFamily.minhash("doc_id", "text", mhSynced), docs, mhNew)
     }
     // serving spot-check: probe a slice against both artifacts
     val probe = base.filter(col("doc_id") % 17 === 0)

@@ -7,7 +7,7 @@ import graft.operators.Search
 
 /** Scale probe for the streaming-maintenance lifecycle: the BM25 index
   * grown as `batches` append segments (the shape a crawl stream
-  * produces via [[graft.streaming.Streaming.maintainBm25Index]]) vs a
+  * produces via [[graft.streaming.Streaming.maintain]]) vs a
   * one-shot build — per-append cost, serving cost against a long
   * segment chain vs the compacted single segment, and the compaction
   * itself. Usage: runMain graft.tools.MaintenanceStress [sfDir] [batches]

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.IndexFamily
 
 /** Multimodal plumbing: binary payload column, partition-batched stub
   * decode (schema + determinism), frame sampling shapes.
@@ -976,9 +977,8 @@ class MultimodalSuite extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("audiofp_maint").toString
     val ckpt = java.nio.file.Files.createTempDirectory("audiofp_maintck").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = Streaming.maintainAudioFpIndex(
-      input.toDF().toDF("id", "payload"), "id", "payload", dir, ckpt,
-      compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.audioFp("id", "payload", dir),
+      input.toDF().toDF("id", "payload"), ckpt, compactEvery = 2)
     try {
       idxClips.grouped(2).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
     } finally q.stop()
@@ -1031,9 +1031,8 @@ class MultimodalSuite extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("scene_maint").toString
     val ckpt = java.nio.file.Files.createTempDirectory("scene_maintck").toString
     val input = MemoryStream[(Long, Int, Array[Byte])]
-    val q = Streaming.maintainSceneIndex(
-      input.toDF().toDF("id", "frame_idx", "payload"),
-      "id", "frame_idx", "payload", dir, ckpt, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.scene("id", "frame_idx", "payload", dir),
+      input.toDF().toDF("id", "frame_idx", "payload"), ckpt, compactEvery = 2)
     try {
       // one whole video per micro-batch (the maintainer contract)
       idxSide.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, rows) =>
@@ -1071,9 +1070,8 @@ class MultimodalSuite extends SparkSpec {
     val aDir = java.nio.file.Files.createTempDirectory("audiohash_maint").toString
     val aCk = java.nio.file.Files.createTempDirectory("audiohash_maintck").toString
     val aIn = MemoryStream[(Long, Array[Byte])]
-    val aq = Streaming.maintainAudioHashIndex(
-      aIn.toDF().toDF("id", "payload"), "id", "payload", aDir, aCk,
-      compactEvery = 2)
+    val aq = Streaming.maintain(IndexFamily.audioHash("id", "payload", aDir),
+      aIn.toDF().toDF("id", "payload"), aCk, compactEvery = 2)
     try {
       wavs.grouped(2).foreach { b => aIn.addData(b.toSeq); aq.processAllAvailable() }
     } finally aq.stop()
@@ -1089,8 +1087,8 @@ class MultimodalSuite extends SparkSpec {
     val pDir = java.nio.file.Files.createTempDirectory("phash_maint").toString
     val pCk = java.nio.file.Files.createTempDirectory("phash_maintck").toString
     val pIn = MemoryStream[(Long, Array[Byte])]
-    val pq = Streaming.maintainPHashIndex(
-      pIn.toDF().toDF("id", "payload"), "id", "payload", pDir, pCk)
+    val pq = Streaming.maintain(IndexFamily.pHash("id", "payload", pDir),
+      pIn.toDF().toDF("id", "payload"), pCk)
     try {
       pngs.grouped(2).foreach { b => pIn.addData(b.toSeq); pq.processAllAvailable() }
     } finally pq.stop()
@@ -1117,10 +1115,8 @@ class MultimodalSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_cdc_sc_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_scck_").toString
     val input = MemoryStream[(Long, String, Seq[(Int, Array[Byte])])]
-    val q = Streaming.maintainSceneIndexCdc(
-      input.toDF().toDF("id", "status", "frames"),
-      "id", "status", "frames", idx, ckpt,
-      frameIdxField = "_1", payloadField = "_2")
+    val q = Streaming.maintainCdc(IndexFamily.scene("id", "_1", "_2", idx,
+      framesCol = Some("frames")), input.toDF().toDF("id", "status", "frames"), "status", ckpt)
     try {
       // bootstrap: video 0 true, video 2 a STALE single-scene cut,
       // video 6 will later be retired
@@ -1167,8 +1163,7 @@ class MultimodalSuite extends SparkSpec {
       .toDF("id", "frame_idx", "payload")
     val idx = java.nio.file.Files.createTempDirectory("graft_sync_scene_").toString
     Multimodal.buildSceneIndex(oldFrames, "id", "frame_idx", "payload", idx)
-    IndexSync.syncSceneIndex(spark, oldFrames, newFrames,
-      "id", "frame_idx", "payload", idx)
+    IndexSync.sync(IndexFamily.scene("id", "frame_idx", "payload", idx), oldFrames, newFrames)
     val fresh = java.nio.file.Files.createTempDirectory("graft_sync_scenef_").toString
     Multimodal.buildSceneIndex(newFrames, "id", "frame_idx", "payload", fresh)
     val probes = (for { v <- Seq(1L, 3L, 5L); fi <- 0 until 9 }
@@ -1181,8 +1176,7 @@ class MultimodalSuite extends SparkSpec {
     assert(!got.contains(6L) && got.contains(2L), s"got $got")
     // a no-change sync publishes nothing
     val before = graft.sources.IndexIO.segments(spark, idx).toSeq
-    IndexSync.syncSceneIndex(spark, newFrames, newFrames,
-      "id", "frame_idx", "payload", idx)
+    IndexSync.sync(IndexFamily.scene("id", "frame_idx", "payload", idx), newFrames, newFrames)
     assert(graft.sources.IndexIO.segments(spark, idx).toSeq == before)
   }
 
@@ -1205,8 +1199,7 @@ class MultimodalSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_sync_scdup_").toString
     Multimodal.buildSceneIndex(clean, "id", "frame_idx", "payload", idx)
     // old snapshot arrives DUPLICATED; content genuinely changed -> must re-detect
-    IndexSync.syncSceneIndex(spark, dup, newFrames,
-      "id", "frame_idx", "payload", idx)
+    IndexSync.sync(IndexFamily.scene("id", "frame_idx", "payload", idx), dup, newFrames)
     val fresh = java.nio.file.Files.createTempDirectory("graft_sync_scdupf_").toString
     Multimodal.buildSceneIndex(newFrames, "id", "frame_idx", "payload", fresh)
     val probes = (for { fi <- 0 until 9 } yield (3L, fi, sceneFrame(pat(2L, fi))))
@@ -1216,8 +1209,8 @@ class MultimodalSuite extends SparkSpec {
     assertSameRows(serve(idx), serve(fresh))
     // and identical content under duplication is still a no-op sync
     val before = graft.sources.IndexIO.segments(spark, idx).toSeq
-    IndexSync.syncSceneIndex(spark, newFrames.union(newFrames), newFrames,
-      "id", "frame_idx", "payload", idx)
+    IndexSync.sync(IndexFamily.scene("id", "frame_idx", "payload", idx), newFrames.union(newFrames),
+      newFrames)
     assert(graft.sources.IndexIO.segments(spark, idx).toSeq == before)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.IndexFamily
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ class IndexSyncSuite extends SparkSpec {
     val synced = tmp("graft_sync_bm25_")
     val fresh = tmp("graft_fresh_bm25_")
     Search.buildBm25Index(oldDocs, "doc_id", "text", synced)
-    IndexSync.syncBm25Index(spark, oldDocs, newDocs, "doc_id", "text", synced)
+    IndexSync.sync(IndexFamily.bm25("doc_id", "text", synced), oldDocs, newDocs)
     Search.buildBm25Index(newDocs, "doc_id", "text", fresh)
     for (terms <- Seq(Seq("vector", "spark"), Seq("fox", "dog"), Seq("retired")))
       assertSameRows(
@@ -53,7 +54,7 @@ class IndexSyncSuite extends SparkSpec {
     val synced = tmp("graft_sync_lex_")
     val fresh = tmp("graft_fresh_lex_")
     Search.buildLexicalIndex(oldDocs, "doc_id", "text", synced)
-    IndexSync.syncLexicalIndex(spark, oldDocs, newDocs, "doc_id", "text", synced)
+    IndexSync.sync(IndexFamily.lexical("doc_id", "text", synced), oldDocs, newDocs)
     Search.buildLexicalIndex(newDocs, "doc_id", "text", fresh)
     assertSameRows(
       Search.bm25SearchIndex(spark, synced, Seq("vector", "spark"), k = 10),
@@ -71,7 +72,7 @@ class IndexSyncSuite extends SparkSpec {
     val synced = tmp("graft_sync_mh_")
     val fresh = tmp("graft_fresh_mh_")
     Dedup.buildMinhashIndex(oldDocs, "doc_id", "text", synced, n = 3)
-    IndexSync.syncMinhashIndex(spark, oldDocs, newDocs, "doc_id", "text", synced)
+    IndexSync.sync(IndexFamily.minhash("doc_id", "text", synced), oldDocs, newDocs)
     Dedup.buildMinhashIndex(newDocs, "doc_id", "text", fresh, n = 3)
     // sketches are content-deterministic, so probing the synced chain
     // must equal probing the fresh build exactly
@@ -93,7 +94,7 @@ class IndexSyncSuite extends SparkSpec {
 
     val ivf = tmp("graft_sync_ivf_")
     SimilaritySearch.buildIvfIndex(oldVecs, "vec_id", "embedding", ivf, nCentroids = 2)
-    IndexSync.syncIvfIndex(spark, oldVecs, newVecs, "vec_id", "embedding", ivf)
+    IndexSync.sync(IndexFamily.ivf("vec_id", "embedding", ivf), oldVecs, newVecs)
     // exhaustive probes == exact top-k over the NEW snapshot
     assertSameRows(
       SimilaritySearch.searchIvf(spark, ivf, queries, "vec_id", "embedding",
@@ -102,7 +103,7 @@ class IndexSyncSuite extends SparkSpec {
 
     val pq = tmp("graft_sync_pq_")
     SimilaritySearch.buildPqIndex(oldVecs, "vec_id", "embedding", pq, m = 2, kCodes = 2)
-    IndexSync.syncPqIndex(spark, oldVecs, newVecs, "vec_id", "embedding", pq)
+    IndexSync.sync(IndexFamily.pq("vec_id", "embedding", pq), oldVecs, newVecs)
     val served = SimilaritySearch.searchPqIndex(spark, pq, queries,
       "vec_id", "embedding", k = 8).select("neighbor_id").as[Long].collect().toSet
     assert(!served.contains(99L), "retired id must not serve")
@@ -113,7 +114,7 @@ class IndexSyncSuite extends SparkSpec {
     val idx = tmp("graft_sync_noop_")
     Search.buildBm25Index(newDocs, "doc_id", "text", idx)
     val before = graft.sources.IndexIO.segments(spark, idx).toSeq
-    IndexSync.syncBm25Index(spark, newDocs, newDocs, "doc_id", "text", idx)
+    IndexSync.sync(IndexFamily.bm25("doc_id", "text", idx), newDocs, newDocs)
     assert(graft.sources.IndexIO.segments(spark, idx).toSeq == before,
       "identical snapshots must not grow the chain")
   }
@@ -150,11 +151,11 @@ class IndexSyncSuite extends SparkSpec {
           String, String, String) => Unit,
          String => DataFrame, Boolean)](
         ((d, i, b, p) => Multimodal.buildAHashIndex(d, i, b, p),
-         (s, o, n, i, b, p) => IndexSync.syncAHashIndex(s, o, n, i, b, p),
+         (s, o, n, i, b, p) => IndexSync.sync(IndexFamily.aHash(i, b, p), o, n),
          p => Multimodal.dedupAgainstAHashIndex(spark, probes0, "id", "img",
            p, maxHamming = 4), true),
         ((d, i, b, p) => Multimodal.buildPHashIndex(d, i, b, p),
-         (s, o, n, i, b, p) => IndexSync.syncPHashIndex(s, o, n, i, b, p),
+         (s, o, n, i, b, p) => IndexSync.sync(IndexFamily.pHash(i, b, p), o, n),
          p => Multimodal.dedupAgainstPHashIndex(spark, probes0, "id", "img",
            p, maxHamming = 4), false))) {
       val idx = tmp("graft_sync_perc_")

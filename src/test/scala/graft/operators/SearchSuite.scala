@@ -66,7 +66,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("persisted index serves the same result as the inline scan") {
     val dir = Files.createTempDirectory("bm25idx").toString
-    Search.buildBm25Index(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildBm25Index(corpus, "doc_id", "text", dir)
     val inline = Search.bm25TopK(corpus, "doc_id", "text", Seq("spark", "filter"), k = 10)
     val served = Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10)
     assertSameRows(inline, served)
@@ -74,8 +74,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("append onto a PRE-denormalization artifact keeps the chain readable; compact migrates") {
     val dir = Files.createTempDirectory("bm25legacy").toString
-    Search.buildBm25Index(corpus.filter(col("doc_id") <= 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.buildBm25Index(corpus.filter(col("doc_id") <= 3), "doc_id", "text", dir)
     // simulate the legacy layout: rewrite the base postings WITHOUT dl
     // (pre-denormalization artifacts on disk look exactly like this)
     val vdir = graft.sources.IndexIO.resolve(spark, dir)
@@ -84,14 +83,13 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     legacy.write.mode("overwrite").parquet(s"$vdir/postings")
     // the append must match the BASE layout — a dl-carrying delta would
     // make chainTable's strict unionByName throw on every later read
-    Search.appendToBm25Index(corpus.filter(col("doc_id") > 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.appendToBm25Index(corpus.filter(col("doc_id") > 3), "doc_id", "text", dir)
     val inline = Search.bm25TopK(corpus, "doc_id", "text",
       Seq("spark", "filter"), k = 10)
     assertSameRows(inline,
       Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10))
     // compaction is the migration point: postings gain dl, serving unchanged
-    Search.compactBm25Index(spark, dir, termBuckets = 4)
+    Search.compactBm25Index(spark, dir)
     val vdir2 = graft.sources.IndexIO.resolve(spark, dir)
     assert(spark.read.parquet(s"$vdir2/postings").columns.contains("dl"))
     assertSameRows(inline,
@@ -102,8 +100,8 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     val bdir = Files.createTempDirectory("lexdiv_b").toString
     val pdir = Files.createTempDirectory("lexdiv_p").toString
     val odir = Files.createTempDirectory("lexdiv_o").toString
-    Search.buildBm25Index(corpus, "doc_id", "text", bdir, termBuckets = 4)
-    Search.buildPositionalIndex(corpus, "doc_id", "text", pdir, termBuckets = 4)
+    Search.buildBm25Index(corpus, "doc_id", "text", bdir)
+    Search.buildPositionalIndex(corpus, "doc_id", "text", pdir)
     // one delete on EACH chain but to DIFFERENT ids: live counts stay
     // equal while the doc sets diverge — the exact mode a count-only
     // check waves through (and the inner lengths join would then
@@ -111,14 +109,14 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     Search.deleteFromBm25Index(spark, bdir, Seq(1L).toDF("doc_id"), "doc_id")
     Search.deleteFromPositionalIndex(spark, pdir, Seq(2L).toDF("doc_id"), "doc_id")
     val e = intercept[IllegalArgumentException] {
-      Search.compactToLexicalIndex(spark, bdir, pdir, odir, termBuckets = 4)
+      Search.compactToLexicalIndex(spark, bdir, pdir, odir)
     }
     assert(e.getMessage.contains("diverged"), e.getMessage)
   }
 
   test("index probe pushes the term filter into the postings scan") {
     val dir = Files.createTempDirectory("bm25idx2").toString
-    Search.buildBm25Index(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildBm25Index(corpus, "doc_id", "text", dir)
     val plan = Search.bm25SearchIndex(spark, dir, Seq("spark"), k = 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("term"),
@@ -127,7 +125,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bm25 serving never reads the lengths table (dl rides the postings)") {
     val dir = Files.createTempDirectory("bm25dl").toString
-    Search.buildBm25Index(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildBm25Index(corpus, "doc_id", "text", dir)
     // dl is denormalized into every posting row, so the serving plan
     // touches ONLY the pruned postings buckets + the one-row stats —
     // at corpus scale the per-query lengths join was the bottleneck
@@ -137,7 +135,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
       s"serving plan still scans the lengths table:\n$plan")
     // the unified lexical layout serves the same way
     val dir2 = Files.createTempDirectory("lexdl").toString
-    Search.buildLexicalIndex(corpus, "doc_id", "text", dir2, termBuckets = 4)
+    Search.buildLexicalIndex(corpus, "doc_id", "text", dir2)
     val plan2 = Search.bm25SearchIndex(spark, dir2, Seq("spark"), k = 5)
       .queryExecution.executedPlan.toString
     assert(!plan2.contains("/lengths"),
@@ -152,7 +150,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("tombstone delete: serving == BM25 over the remaining corpus, no rebuild") {
     val dir = Files.createTempDirectory("bm25del").toString
-    Search.buildBm25Index(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildBm25Index(corpus, "doc_id", "text", dir)
     Search.deleteFromBm25Index(spark, dir,
       Seq(1L, 4L).toDF("doc_id"), "doc_id")
     val remaining = corpus.filter(!$"doc_id".isin(1L, 4L))
@@ -170,7 +168,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(stats.getLong(0) == 3L, s"n_docs ${stats.getLong(0)} after double delete")
     // compaction drops dead rows physically; results identical
     val before = rowSet(Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10))
-    Search.compactBm25Index(spark, dir, termBuckets = 4)
+    Search.compactBm25Index(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(rowSet(Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10)) == before)
     // the compacted postings physically exclude the tombstoned docs
@@ -404,8 +402,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     val lexIdx = dir.resolve("lex").toString
     SimilaritySearch.buildIvfPqIndex(corpus, "vec_id", "embedding", annIdx,
       nCentroids = 4, m = 4, kCodes = 16)
-    Search.buildBm25Index(spark.read.parquet(docsPath), "doc_id", "text",
-      lexIdx, termBuckets = 4)
+    Search.buildBm25Index(spark.read.parquet(docsPath), "doc_id", "text", lexIdx)
     val scan = Search.hybridRrfTopK(
         docs, corpus.filter(col("vec_id") =!= 7), "doc_id", "text",
         "vec_id", "embedding", Seq("spark", "scan"), qv, k = 15, fetchK = 20)
@@ -546,7 +543,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
       (3L, "spark scan filter")
     ).toDF("doc_id", "text")
     val idx = Files.createTempDirectory("pos_idx").toString
-    Search.buildPositionalIndex(docs, "doc_id", "text", idx, termBuckets = 4)
+    Search.buildPositionalIndex(docs, "doc_id", "text", idx)
     val inline = Search.phraseTopK(docs, "doc_id", "text", Seq("spark", "scan"), k = 10)
       .collect().toSeq
     val served = Search.phraseSearchIndex(spark, idx, Seq("spark", "scan"), k = 10)
@@ -557,7 +554,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
   test("positional index probe pushes the term filter into the postings scan") {
     val docs = Seq((1L, "spark scan filter join sort")).toDF("doc_id", "text")
     val idx = Files.createTempDirectory("pos_idx_push").toString
-    Search.buildPositionalIndex(docs, "doc_id", "text", idx, termBuckets = 2)
+    Search.buildPositionalIndex(docs, "doc_id", "text", idx)
     val plan = Search.phraseSearchIndex(spark, idx, Seq("spark", "scan"), k = 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("In(term"),
@@ -607,10 +604,8 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bm25 append: build 3 + append 2 == one-shot build over all 5") {
     val dir = Files.createTempDirectory("bm25app").toString
-    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir, termBuckets = 4)
-    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
+    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text", dir)
     // identical serving to a one-shot build: stats are additive, df
     // resolves across the chain at query time
     assertSameRows(
@@ -626,7 +621,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     assertSameRows(
       Search.bm25TopK(remaining, "doc_id", "text", Seq("spark", "filter"), k = 10),
       Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10))
-    Search.compactBm25Index(spark, dir, termBuckets = 4)
+    Search.compactBm25Index(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assertSameRows(
       Search.bm25TopK(remaining, "doc_id", "text", Seq("spark", "filter"), k = 10),
@@ -643,11 +638,9 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     // append must derive it from the chain (regression: threw
     // path-not-found here, breaking the documented composition)
     val dir = Files.createTempDirectory("bm25delapp").toString
-    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
     Search.deleteFromBm25Index(spark, dir, Seq(2L).toDF("doc_id"), "doc_id")
-    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text", dir)
     val live = corpus.filter($"doc_id" =!= 2L)
     assertSameRows(
       Search.bm25TopK(live, "doc_id", "text", Seq("spark", "filter"), k = 10),
@@ -655,15 +648,13 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     // same composition on a pre-denormalization base: the probe must find
     // the OLDEST postings-bearing segment's layout through the tombstone
     val dir2 = Files.createTempDirectory("bm25delapp_legacy").toString
-    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir2, termBuckets = 4)
+    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir2)
     val v2 = graft.sources.IndexIO.resolve(spark, dir2)
     val legacy = spark.read.parquet(s"$v2/postings").drop("dl")
       .localCheckpoint(true)
     legacy.write.mode("overwrite").parquet(s"$v2/postings")
     Search.deleteFromBm25Index(spark, dir2, Seq(2L).toDF("doc_id"), "doc_id")
-    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir2, termBuckets = 4)
+    Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text", dir2)
     assertSameRows(
       Search.bm25TopK(live, "doc_id", "text", Seq("spark", "filter"), k = 10),
       Search.bm25SearchIndex(spark, dir2, Seq("spark", "filter"), k = 10))
@@ -671,12 +662,10 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("lexical delete-then-append: layout probe survives a tombstone-only segment") {
     val dir = Files.createTempDirectory("lexdelapp").toString
-    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir)
     // the stats-correcting delete: BOTH legs stay exact after the append
     Search.deleteFromBm25Index(spark, dir, Seq(2L).toDF("doc_id"), "doc_id")
-    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text", dir)
     val live = corpus.filter($"doc_id" =!= 2L)
     assertSameRows(
       Search.bm25TopK(live, "doc_id", "text", Seq("spark", "filter"), k = 10),
@@ -691,11 +680,9 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     // BM25 leg serves with stats as-of the last stats-publishing op by
     // documented contract, so only its liveness is asserted here.
     val dir2 = Files.createTempDirectory("lexdelapp_pos").toString
-    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir2, termBuckets = 4)
+    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir2)
     Search.deleteFromPositionalIndex(spark, dir2, Seq(2L).toDF("doc_id"), "doc_id")
-    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir2, termBuckets = 4)
+    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text", dir2)
     assertSameRows(
       Search.phraseTopK(live, "doc_id", "text", Seq("scan", "filter"), k = 10),
       Search.phraseSearchIndex(spark, dir2, Seq("scan", "filter"), k = 10))
@@ -705,10 +692,8 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("positional append: served phrase results == inline scan over the union") {
     val dir = Files.createTempDirectory("posapp").toString
-    Search.buildPositionalIndex(corpus.filter($"doc_id" <= 2), "doc_id", "text",
-      dir, termBuckets = 4)
-    Search.appendToPositionalIndex(corpus.filter($"doc_id" > 2), "doc_id", "text",
-      dir, termBuckets = 4)
+    Search.buildPositionalIndex(corpus.filter($"doc_id" <= 2), "doc_id", "text", dir)
+    Search.appendToPositionalIndex(corpus.filter($"doc_id" > 2), "doc_id", "text", dir)
     assertSameRows(
       Search.phraseTopK(corpus, "doc_id", "text", Seq("scan", "filter"), k = 10),
       Search.phraseSearchIndex(spark, dir, Seq("scan", "filter"), k = 10))
@@ -718,7 +703,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     assertSameRows(
       Search.phraseTopK(remaining, "doc_id", "text", Seq("scan", "filter"), k = 10),
       Search.phraseSearchIndex(spark, dir, Seq("scan", "filter"), k = 10))
-    Search.compactPositionalIndex(spark, dir, termBuckets = 4)
+    Search.compactPositionalIndex(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assertSameRows(
       Search.phraseTopK(remaining, "doc_id", "text", Seq("scan", "filter"), k = 10),
@@ -735,7 +720,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("unified lexical index serves BM25, phrase, and the fused hybrid") {
     val dir = Files.createTempDirectory("lexuni").toString
-    Search.buildLexicalIndex(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildLexicalIndex(corpus, "doc_id", "text", dir)
     // BM25 serving prunes positions — identical to the inline scan
     assertSameRows(
       Search.bm25TopK(corpus, "doc_id", "text", Seq("spark", "filter"), k = 10),
@@ -766,10 +751,8 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(got == expect)
     // append lifecycle: additive stats, chain-resolved df, positions ride along
     val dir2 = Files.createTempDirectory("lexuni2").toString
-    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir2, termBuckets = 4)
-    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir2, termBuckets = 4)
+    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir2)
+    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text", dir2)
     assertSameRows(
       Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10),
       Search.bm25SearchIndex(spark, dir2, Seq("spark", "filter"), k = 10))
@@ -779,14 +762,12 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     // pre-denormalization lexical artifact (base postings without dl):
     // the append must match the base layout or the chain union bricks
     val dir3 = Files.createTempDirectory("lexuni_legacy").toString
-    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      dir3, termBuckets = 4)
+    Search.buildLexicalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text", dir3)
     val v3 = graft.sources.IndexIO.resolve(spark, dir3)
     val legacy = spark.read.parquet(s"$v3/postings").drop("dl")
       .localCheckpoint(true)
     legacy.write.mode("overwrite").parquet(s"$v3/postings")
-    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text",
-      dir3, termBuckets = 4)
+    Search.appendToLexicalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text", dir3)
     assertSameRows(
       Search.bm25SearchIndex(spark, dir, Seq("spark", "filter"), k = 10),
       Search.bm25SearchIndex(spark, dir3, Seq("spark", "filter"), k = 10))
@@ -797,7 +778,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("unified lexical index: delete + compact keep BOTH retrievers green") {
     val dir = Files.createTempDirectory("lexuni_del").toString
-    Search.buildLexicalIndex(corpus, "doc_id", "text", dir, termBuckets = 4)
+    Search.buildLexicalIndex(corpus, "doc_id", "text", dir)
     // deleteFromBm25Index works unchanged on the unified layout (the
     // artifact carries lengths + stats), and the tombstone chain
     // applies to BOTH serving paths
@@ -811,7 +792,7 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
       Search.phraseSearchIndex(spark, dir, Seq("scan", "filter"), k = 10))
     // compactBm25Index rewrites the full postings schema, so the
     // positional payload survives compaction
-    Search.compactBm25Index(spark, dir, termBuckets = 4)
+    Search.compactBm25Index(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(spark.read.parquet(
         graft.sources.IndexIO.resolve(spark, dir) + "/postings")
@@ -825,14 +806,12 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     val bm = Files.createTempDirectory("lexmerge_bm").toString
     val pos = Files.createTempDirectory("lexmerge_pos").toString
     val out = Files.createTempDirectory("lexmerge_out").toString
-    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", bm,
-      termBuckets = 4)
-    Search.buildPositionalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text",
-      pos, termBuckets = 4)
+    Search.buildBm25Index(corpus.filter($"doc_id" <= 3), "doc_id", "text", bm)
+    Search.buildPositionalIndex(corpus.filter($"doc_id" <= 3), "doc_id", "text", pos)
     // lockstep appends, then one consolidation compact
     Search.appendToBm25Index(corpus.filter($"doc_id" > 3), "doc_id", "text", bm)
     Search.appendToPositionalIndex(corpus.filter($"doc_id" > 3), "doc_id", "text", pos)
-    Search.compactToLexicalIndex(spark, bm, pos, out, termBuckets = 4)
+    Search.compactToLexicalIndex(spark, bm, pos, out)
     assert(graft.sources.IndexIO.segments(spark, out).length == 1)
     assertSameRows(
       Search.bm25TopK(corpus, "doc_id", "text", Seq("spark", "filter"), k = 10),

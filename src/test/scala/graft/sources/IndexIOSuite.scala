@@ -585,9 +585,9 @@ class IndexIOSuite extends SparkSpec {
       (3L, "joins on ranges"), (4L, "fast range joins in spark"))
       .toDF("doc_id", "text")
     graft.operators.Search.buildBm25Index(docs.filter(col("doc_id") <= 2),
-      "doc_id", "text", base, termBuckets = 2)
+      "doc_id", "text", base)
     graft.operators.Search.appendToBm25Index(docs.filter(col("doc_id") > 2),
-      "doc_id", "text", base, termBuckets = 2)
+      "doc_id", "text", base)
     graft.operators.Search.deleteFromBm25Index(spark, base,
       Seq(2L).toDF("doc_id"), "doc_id")
     assert(IndexIO.segments(spark, base).size == 3)

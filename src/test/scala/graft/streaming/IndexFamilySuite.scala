@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -8,12 +9,14 @@ import org.apache.spark.sql.types.StructType
 import graft.SparkSpec
 import graft.multimodal.Multimodal
 import graft.operators.{CorpusDiff, Decontaminate, Dedup, Dsir, IndexSync, Search, SimilaritySearch}
+import graft.sources.IndexIO
 
 /** Every [[IndexFamily]] constructor through both change-set entries:
   * a snapshot sync ([[IndexSync.sync]]) and a change feed
   * ([[Streaming.maintainCdc]]) from the old snapshot to the new one —
   * one id added, one changed, one removed — must serve exactly what a
-  * one-shot build on the new snapshot serves, and serve its live ids.
+  * one-shot build on the new snapshot serves, and serve its live ids;
+  * a replay of the change-feed batch must publish nothing.
   */
 class IndexFamilySuite extends SparkSpec {
   import spark.implicits._
@@ -200,6 +203,9 @@ class IndexFamilySuite extends SparkSpec {
   /** Bootstrap `family` from `old` through a change feed, then feed the
     * `old -> next` change set as one batch: changed and removed rows
     * carry their old text in `old_text`, removed rows their old content.
+    * Then replay the change batch: with its commit forgotten, the
+    * restarted query runs it again, and its marker must keep the replay
+    * from publishing.
     */
   private def feed(family: IndexFamily, old: DataFrame, next: DataFrame): Unit = {
     val id = old.columns.head
@@ -213,13 +219,23 @@ class IndexFamilySuite extends SparkSpec {
       lit(null).cast("string").as("old_text"): _*)
     val schema = StructType(changes.schema.map(_.copy(nullable = true)))
     val input = MemoryStream[Row](Encoders.row(schema), spark.sqlContext)
-    val q = Streaming.maintainCdc(family, input.toDF(), "status", tmp("graft_family_ck_"))
+    val ckpt = tmp("graft_family_ck_")
+    def start() = Streaming.maintainCdc(family, input.toDF(), "status", ckpt)
+    val q = start()
     try {
       input.addData(boot.collect().toSeq: _*)
       q.processAllAvailable()
       input.addData(changes.collect().toSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
+    val v = IndexIO.currentVersionId(spark, family.path)
+    val fs = new Path(ckpt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (f <- Seq("commits/1", "commits/.1.crc")) fs.delete(new Path(ckpt, f), false)
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0),
+      "batch 1 was not replayed")
+    assert(IndexIO.currentVersionId(spark, family.path) == v, "the replayed batch published")
   }
 
   for (c <- cases)

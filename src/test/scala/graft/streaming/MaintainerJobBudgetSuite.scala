@@ -39,8 +39,8 @@ class MaintainerJobBudgetSuite extends SparkSpec {
   test("maintainBm25Index: one append batch stays within 5 Spark jobs") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainBm25Index(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", tmp("graft_jb_bm25_"), tmp("graft_jb_bm25ck_"))
+    val q = Streaming.maintain(IndexFamily.bm25("doc_id", "text", tmp("graft_jb_bm25_")),
+      input.toDF().toDF("doc_id", "text"), tmp("graft_jb_bm25ck_"))
     val jobs = try {
       input.addData((1L to 8L).map(i => (i, text(i))): _*)
       q.processAllAvailable()
@@ -56,10 +56,9 @@ class MaintainerJobBudgetSuite extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val docs = (0L until 12L).map(i => (i, text(i))).toDF("doc_id", "text")
     val input = MemoryStream[(Long, String, String, String)]
-    val q = Streaming.maintainDsirIndexCdc(
-      input.toDF().toDF("doc_id", "status", "text", "old_text"),
-      "doc_id", "status", "text", "old_text", docs, "text", 64,
-      tmp("graft_jb_dsir_"), tmp("graft_jb_dsirck_"))
+    val q = Streaming.maintainCdc(IndexFamily.dsir("text", tmp("graft_jb_dsir_"),
+      Some(IndexFamily.DsirTarget(docs, "text", 64))),
+      input.toDF().toDF("doc_id", "status", "text", "old_text"), "status", tmp("graft_jb_dsirck_"))
     val jobs = try {
       input.addData((0L until 8L).map(i => (i, "added", text(i), null: String)): _*)
       q.processAllAvailable()
@@ -79,7 +78,7 @@ class MaintainerJobBudgetSuite extends SparkSpec {
     val next = ((2L to 10L).map(i => (i, if (i == 3L) text(i) + " edited" else text(i))) :+
       (11L, text(11))).toDF("doc_id", "text")
     graft.operators.Search.buildBm25Index(old, "doc_id", "text", path)
-    val jobs = jobsOf(IndexSync.syncBm25Index(spark, old, next, "doc_id", "text", path))
+    val jobs = jobsOf(IndexSync.sync(IndexFamily.bm25("doc_id", "text", path), old, next))
     assert(jobs <= 15, s"$jobs Spark jobs for one sync")
   }
 }

@@ -637,9 +637,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("bm25_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainBm25Index(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt,
-      termBuckets = 3)
+    val q = Streaming.maintain(IndexFamily.bm25("doc_id", "text", dir),
+      input.toDF().toDF("doc_id", "text"), ckpt)
     try {
       input.addData(docs(0), docs(1)) // bootstraps
       q.processAllAvailable()
@@ -670,7 +669,7 @@ class StreamingSuite extends SparkSpec {
     assert(graft.sources.IndexIO.resolve(spark, dir) == v0)
     // compaction (a FULL publish) carries the applied-batch markers, so
     // a post-compaction replay is still recognized
-    Search.compactBm25Index(spark, dir, termBuckets = 3)
+    Search.compactBm25Index(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(graft.sources.IndexIO.segmentMarkers(spark, dir) == markers0)
     assertSameRows(
@@ -682,9 +681,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt2 = java.nio.file.Files.createTempDirectory("bm25_maint_ck2").toString
     val input2 = MemoryStream[(Long, String)]
     input2.addData((6L, "spark filter spark"))
-    val q2 = Streaming.maintainBm25Index(
-      input2.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt2,
-      termBuckets = 3)
+    val q2 = Streaming.maintain(IndexFamily.bm25("doc_id", "text", dir),
+      input2.toDF().toDF("doc_id", "text"), ckpt2)
     try q2.processAllAvailable() finally q2.stop()
     val withSix = (docs :+ (6L, "spark filter spark")).toDF("doc_id", "text")
     assertSameRows(
@@ -704,9 +702,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("lex_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainLexicalIndex(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt,
-      termBuckets = 3)
+    val q = Streaming.maintain(IndexFamily.lexical("doc_id", "text", dir),
+      input.toDF().toDF("doc_id", "text"), ckpt)
     try {
       input.addData(docs(0), docs(1)); q.processAllAvailable()
       input.addData(docs(2), docs(3)); q.processAllAvailable()
@@ -728,8 +725,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("mh_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainMinhashIndex(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt, n = 3)
+    val q = Streaming.maintain(IndexFamily.minhash("doc_id", "text", dir, n = 3),
+      input.toDF().toDF("doc_id", "text"), ckpt)
     try {
       input.addData((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       q.processAllAvailable()
@@ -772,9 +769,8 @@ class StreamingSuite extends SparkSpec {
     // compactEvery = 2: every append that grows the chain to 2 segments
     // immediately collapses it — the stream crosses TWO compact
     // boundaries and serving must not notice either
-    val q = Streaming.maintainIvfIndex(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      dir, ckpt, nCentroids = 2, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.ivf("vec_id", "embedding", dir, nCentroids = 2),
+      input.toDF().toDF("vec_id", "embedding"), ckpt, compactEvery = 2)
     try {
       input.addData(all.take(3)); q.processAllAvailable()   // bootstrap (trains)
       input.addData(all.slice(3, 6)); q.processAllAvailable() // append -> compact
@@ -816,9 +812,9 @@ class StreamingSuite extends SparkSpec {
     // compactEvery = 2: every append immediately compacts to a FULL
     // publish, orphaning the previous chain — exactly the publish
     // pattern that accumulates retired version dirs without vacuum
-    val q = Streaming.maintainBm25Index(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt,
-      compactEvery = 2, vacuumEvery = 1, vacuumRetain = 2)
+    val q = Streaming.maintain(IndexFamily.bm25("doc_id", "text", idx),
+      input.toDF().toDF("doc_id", "text"), ckpt, compactEvery = 2, vacuumEvery = 1,
+      vacuumRetain = 2)
     def versionDirs(): Set[String] = {
       val d = new java.io.File(idx)
       d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("v-"))
@@ -905,9 +901,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_lexck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String)]
-    val q = Streaming.maintainLexicalIndexCdc(
-      input.toDF().toDF("doc_id", "status", "text"),
-      "doc_id", "status", "text", idx, ckpt)
+    val q = Streaming.maintainCdc(IndexFamily.lexical("doc_id", "text", idx),
+      input.toDF().toDF("doc_id", "status", "text"), "status", ckpt)
     try {
       input.addData(
         (1L, "added", "the quick brown fox"),
@@ -941,9 +936,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ivfck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Array[Float])]
-    val q = Streaming.maintainIvfIndexCdc(
-      input.toDF().toDF("vec_id", "status", "embedding"),
-      "vec_id", "status", "embedding", idx, ckpt, nCentroids = 2)
+    val q = Streaming.maintainCdc(IndexFamily.ivf("vec_id", "embedding", idx, nCentroids = 2),
+      input.toDF().toDF("vec_id", "status", "embedding"), "status", ckpt)
     try {
       input.addData((1 to 8).map(i =>
         (i.toLong, "added", if (i == 3) vec(3).map(-_) else vec(i))): _*)
@@ -973,9 +967,8 @@ class StreamingSuite extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
     // compactEvery = 2: the code chain collapses twice mid-stream
-    val q = Streaming.maintainPqIndex(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      dir, ckpt, m = 2, kCodes = 2, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.pq("vec_id", "embedding", dir, m = 2, kCodes = 2),
+      input.toDF().toDF("vec_id", "embedding"), ckpt, compactEvery = 2)
     try {
       input.addData(all.take(3)); q.processAllAvailable()      // bootstrap (trains)
       input.addData(all.slice(3, 6)); q.processAllAvailable()  // append -> compact
@@ -1017,9 +1010,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("sq8_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.maintainIvfSq8Index(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      dir, ckpt, nCentroids = 2, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.ivfSq8("vec_id", "embedding", dir, nCentroids = 2),
+      input.toDF().toDF("vec_id", "embedding"), ckpt, compactEvery = 2)
     try {
       input.addData(all.take(3)); q.processAllAvailable()
       input.addData(all.slice(3, 6)); q.processAllAvailable()
@@ -1056,9 +1048,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_evalm_ck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainEvalIndex(
-      input.toDF().toDF("doc_id", "text"), "text", idx, ckpt,
-      n = 3, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.eval("text", idx, n = 3),
+      input.toDF().toDF("doc_id", "text"), ckpt, compactEvery = 2)
     try {
       // suite A lands: gate must screen for it from this moment
       input.addData((100L, "the quick brown fox jumps over the lazy dog"))
@@ -1092,9 +1083,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("ivfpq_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.maintainIvfPqIndex(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      dir, ckpt, nCentroids = 2, m = 4, kCodes = 2)
+    val q = Streaming.maintain(IndexFamily.ivfPq("vec_id", "embedding", dir, nCentroids = 2, m = 4,
+      kCodes = 2), input.toDF().toDF("vec_id", "embedding"), ckpt)
     try {
       input.addData(all.take(4)); q.processAllAvailable()  // trains model
       input.addData(all.drop(4)); q.processAllAvailable()  // encodes + appends
@@ -1127,9 +1117,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("semdd_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Double])]
-    val q = Streaming.maintainSemDedupIndex(
-      input.toDF().toDF("id", "emb"), "id", "emb", dir, ckpt,
-      k = 2, threshold = 0.95)
+    val q = Streaming.maintain(IndexFamily.semDedup("id", "emb", dir, k = 2, threshold = 0.95),
+      input.toDF().toDF("id", "emb"), ckpt)
     try {
       input.addData(baseA); q.processAllAvailable()   // bootstrap (trains)
       input.addData(batchB); q.processAllAvailable()  // incremental resolve
@@ -1177,9 +1166,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("ahash_maint_ck").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = Streaming.maintainAHashIndex(
-      input.toDF().toDF("doc_id", "payload"), "doc_id", "payload", dir, ckpt,
-      compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.aHash("doc_id", "payload", dir),
+      input.toDF().toDF("doc_id", "payload"), ckpt, compactEvery = 2)
     try {
       input.addData(all.take(2)); q.processAllAvailable()
       input.addData(all.slice(2, 4)); q.processAllAvailable() // -> compact
@@ -1215,7 +1203,7 @@ class StreamingSuite extends SparkSpec {
       (101L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val lexIdx = java.nio.file.Files.createTempDirectory("hyb_lex").toString
     val annIdx = java.nio.file.Files.createTempDirectory("hyb_ann").toString
-    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx, termBuckets = 2)
+    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx)
     SimilaritySearch.buildIvfIndex(evalEmb, "vec_id", "embedding", annIdx,
       nCentroids = 2)
     val rows = Seq(
@@ -1246,7 +1234,7 @@ class StreamingSuite extends SparkSpec {
 
     // live MemoryStream: stateless append, identical flags
     val lexIdx2 = java.nio.file.Files.createTempDirectory("hyb_lex2").toString
-    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx2, termBuckets = 2)
+    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx2)
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Seq[Double])]
     val gated = Streaming.hybridDecontaminateFlags(
@@ -1416,8 +1404,8 @@ class StreamingSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_gen_idx_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_gen_ck_").toString
     val in1 = MemoryStream[(Long, String)]
-    val q1 = Streaming.maintainBm25Index(
-      in1.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt)
+    val q1 = Streaming.maintain(IndexFamily.bm25("doc_id", "text", idx),
+      in1.toDF().toDF("doc_id", "text"), ckpt)
     try { in1.addData((1L, "alpha beta")); q1.processAllAvailable() }
     finally q1.stop()
     // wipe the checkpoint (the standard remedy after corruption) and
@@ -1430,8 +1418,8 @@ class StreamingSuite extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
     val in2 = MemoryStream[(Long, String)]
-    val q2 = Streaming.maintainBm25Index(
-      in2.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt)
+    val q2 = Streaming.maintain(IndexFamily.bm25("doc_id", "text", idx),
+      in2.toDF().toDF("doc_id", "text"), ckpt)
     try { in2.addData((2L, "gamma delta")); q2.processAllAvailable() }
     finally q2.stop()
     val served = Search.bm25SearchIndex(spark, idx, Seq("gamma"), k = 5)
@@ -1454,8 +1442,8 @@ class StreamingSuite extends SparkSpec {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(p, true).close()
     val in = MemoryStream[(Long, String)]
-    val q = Streaming.maintainBm25Index(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt)
+    val q = Streaming.maintain(IndexFamily.bm25("doc_id", "text", idx),
+      in.toDF().toDF("doc_id", "text"), ckpt)
     try { in.addData((1L, "alpha beta")); q.processAllAvailable() }
     finally q.stop()
     // the debris was reclaimed and replaced by a COMPLETE 16-char id
@@ -1477,9 +1465,8 @@ class StreamingSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_dsir_maint_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_dsir_ck_").toString
     val input = MemoryStream[(Long, String)]
-    val q = Streaming.maintainDsirIndex(
-      input.toDF().toDF("doc_id", "text"), "text",
-      target, "text", B, idx, ckpt)
+    val q = Streaming.maintain(IndexFamily.dsir("text", idx,
+      Some(IndexFamily.DsirTarget(target, "text", B))), input.toDF().toDF("doc_id", "text"), ckpt)
     try {
       val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       rows.grouped(8).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
@@ -1511,9 +1498,9 @@ class StreamingSuite extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     // compactEvery = 2: each append that grows the chain to 2 segments
     // collapses it — the stream crosses two compact boundaries
-    val q = Streaming.maintainDsirIndex(
-      input.toDF().toDF("doc_id", "text"), "text",
-      target, "text", B, idx, ckpt, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.dsir("text", idx,
+      Some(IndexFamily.DsirTarget(target, "text", B))), input.toDF().toDF("doc_id", "text"), ckpt,
+      compactEvery = 2)
     try {
       val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       rows.grouped(8).foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
@@ -1574,10 +1561,9 @@ class StreamingSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_dsir_cdc_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_dsir_cdcck_").toString
     val input = MemoryStream[(Long, String, String, String)]
-    val q = Streaming.maintainDsirIndexCdc(
-      input.toDF().toDF("doc_id", "status", "text", "old_text"),
-      "doc_id", "status", "text", "old_text",
-      target, "text", B, idx, ckpt, compactEvery = 3)
+    val q = Streaming.maintainCdc(IndexFamily.dsir("text", idx,
+      Some(IndexFamily.DsirTarget(target, "text", B))),
+      input.toDF().toDF("doc_id", "status", "text", "old_text"), "status", ckpt, compactEvery = 3)
     try {
       // a delete-only FIRST batch drops (rows never profiled)
       input.addData((999L, "removed", null: String, "never indexed text"))
@@ -1621,9 +1607,9 @@ class StreamingSuite extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft_dsir_gm_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_dsir_gmck_").toString
     val input = MemoryStream[(Long, String, String)]
-    val q = Streaming.maintainDsirIndexByGroup(
-      input.toDF().toDF("doc_id", "lang", "text"), "text", "lang",
-      target, "text", "lang", B, idx, ckpt, compactEvery = 2)
+    val q = Streaming.maintain(IndexFamily.dsirByGroup("text", "lang", idx,
+      Some(IndexFamily.DsirTarget(target, "text", B)), "lang"),
+      input.toDF().toDF("doc_id", "lang", "text"), ckpt, compactEvery = 2)
     try {
       val rows = docs.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
@@ -1888,11 +1874,11 @@ class StreamingSuite extends SparkSpec {
     val synced = java.nio.file.Files.createTempDirectory("graft_evsync_").toString
     Decontaminate.buildEvalIndex(oldSuite, "text", synced, n = 3)
     assert(keeps(synced) == Set(1L))
-    IndexSync.syncEvalIndex(spark, oldSuite, newSuite, "doc_id", "text", synced)
+    IndexSync.sync(IndexFamily.eval("text", synced), oldSuite, newSuite)
     assert(keeps(synced) == want)
     // no-change sync publishes nothing
     val before = graft.sources.IndexIO.segments(spark, synced).toSeq
-    IndexSync.syncEvalIndex(spark, newSuite, newSuite, "doc_id", "text", synced)
+    IndexSync.sync(IndexFamily.eval("text", synced), newSuite, newSuite)
     assert(graft.sources.IndexIO.segments(spark, synced).toSeq == before)
 
     // CDC stream: delete-only first batch no-ops, then bootstrap + diff
@@ -1900,10 +1886,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_evcdc_ck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String, String)]
-    val q = Streaming.maintainEvalIndexCdc(
-      input.toDF().toDF("doc_id", "status", "text", "old_text"),
-      "doc_id", "status", "text", "old_text", idx, ckpt, n = 3,
-      compactEvery = 2)
+    val q = Streaming.maintainCdc(IndexFamily.eval("text", idx, n = 3),
+      input.toDF().toDF("doc_id", "status", "text", "old_text"), "status", ckpt, compactEvery = 2)
     try {
       input.addData((999L, "removed", null: String, "never indexed text"))
       q.processAllAvailable()
@@ -2126,9 +2110,8 @@ class StreamingSuite extends SparkSpec {
     val idx2 = java.nio.file.Files.createTempDirectory("graft_cdc_df2_").toString
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_cdc_df2ck_").toString
     val in2 = MemoryStream[(Long, String, Array[Float])]
-    val q2 = Streaming.maintainIvfIndexCdc(
-      in2.toDF().toDF("vec_id", "status", "embedding"),
-      "vec_id", "status", "embedding", idx2, ckpt2, nCentroids = 2)
+    val q2 = Streaming.maintainCdc(IndexFamily.ivf("vec_id", "embedding", idx2, nCentroids = 2),
+      in2.toDF().toDF("vec_id", "status", "embedding"), "status", ckpt2)
     try {
       in2.addData((9L, "removed", Array.empty[Float]))
       q2.processAllAvailable() // must not throw (no k-means on 0 rows)
@@ -2173,9 +2156,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_mhck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String)]
-    val q = Streaming.maintainMinhashIndexCdc(
-      input.toDF().toDF("doc_id", "status", "text"),
-      "doc_id", "status", "text", idx, ckpt)
+    val q = Streaming.maintainCdc(IndexFamily.minhash("doc_id", "text", idx),
+      input.toDF().toDF("doc_id", "status", "text"), "status", ckpt)
     try {
       input.addData(
         (1L, "added", "alpha beta gamma delta epsilon zeta"),
@@ -2228,9 +2210,8 @@ class StreamingSuite extends SparkSpec {
       (5L, "removed", Array.empty[Float]),
       (11L, "added", vec(1).map(x => (x * 1.0001f)))) // near-dup of 1
     val input = MemoryStream[(Long, String, Array[Float])]
-    val q = Streaming.maintainSemDedupIndexCdc(
-      input.toDF().toDF("id", "status", "embedding"),
-      "id", "status", "embedding", idx, ckpt, k = 2, threshold = 0.995)
+    val q = Streaming.maintainCdc(IndexFamily.semDedup("id", "embedding", idx, k = 2,
+      threshold = 0.995), input.toDF().toDF("id", "status", "embedding"), "status", ckpt)
     try {
       input.addData(boot: _*); q.processAllAvailable()
       input.addData(feed: _*); q.processAllAvailable()
@@ -2270,9 +2251,8 @@ class StreamingSuite extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ahck_").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Array[Byte])]
-    val q = Streaming.maintainAHashIndexCdc(
-      input.toDF().toDF("id", "status", "img"),
-      "id", "status", "img", idx, ckpt)
+    val q = Streaming.maintainCdc(IndexFamily.aHash("id", "img", idx),
+      input.toDF().toDF("id", "status", "img"), "status", ckpt)
     try {
       input.addData((1L, "added", dark), (2L, "added", mid)); q.processAllAvailable()
       // image 1 re-encoded to a different render; image 2 taken down
@@ -2308,9 +2288,8 @@ class StreamingSuite extends SparkSpec {
     val pqIdx = java.nio.file.Files.createTempDirectory("graft_cdc_pq_").toString
     val pqCk = java.nio.file.Files.createTempDirectory("graft_cdc_pqck_").toString
     val in1 = MemoryStream[(Long, String, Array[Float])]
-    val q1 = Streaming.maintainPqIndexCdc(
-      in1.toDF().toDF("vec_id", "status", "embedding"),
-      "vec_id", "status", "embedding", pqIdx, pqCk, m = 2, kCodes = 2)
+    val q1 = Streaming.maintainCdc(IndexFamily.pq("vec_id", "embedding", pqIdx, m = 2, kCodes = 2),
+      in1.toDF().toDF("vec_id", "status", "embedding"), "status", pqCk)
     try {
       in1.addData(boot: _*); q1.processAllAvailable()
       in1.addData(feed: _*); q1.processAllAvailable()
@@ -2331,9 +2310,8 @@ class StreamingSuite extends SparkSpec {
     val sqIdx = java.nio.file.Files.createTempDirectory("graft_cdc_sq_").toString
     val sqCk = java.nio.file.Files.createTempDirectory("graft_cdc_sqck_").toString
     val in2 = MemoryStream[(Long, String, Array[Float])]
-    val q2 = Streaming.maintainIvfSq8IndexCdc(
-      in2.toDF().toDF("vec_id", "status", "embedding"),
-      "vec_id", "status", "embedding", sqIdx, sqCk, nCentroids = 2)
+    val q2 = Streaming.maintainCdc(IndexFamily.ivfSq8("vec_id", "embedding", sqIdx, nCentroids = 2),
+      in2.toDF().toDF("vec_id", "status", "embedding"), "status", sqCk)
     try {
       in2.addData(boot: _*); q2.processAllAvailable()
       in2.addData(feed: _*); q2.processAllAvailable()
@@ -2508,8 +2486,8 @@ class StreamingSuite extends SparkSpec {
   test("CDC fold: lexical folded compaction == delete, append, then compact") {
     import graft.operators.Search
     foldMatchesDeleteAppendCompact(
-      (df, path, ck, every) => Streaming.maintainLexicalIndexCdc(df, "doc_id", "status",
-        "text", path, ck, compactEvery = every),
+      (df, path, ck, every) => Streaming.maintainCdc(IndexFamily.lexical("doc_id", "text", path),
+        df, "status", ck, compactEvery = every),
       Seq[String => org.apache.spark.sql.DataFrame](
         p => Search.bm25SearchIndex(spark, p, Seq("common", "again"), k = 10),
         p => Search.phraseSearchIndex(spark, p, Seq("common", "words"), k = 10),
