@@ -110,76 +110,61 @@ object SparkEntry {
       val v = if (bright) 215 else 40
       img.setRGB(x, y, (v << 16) | (v << 8) | v)
     }
+    pngBytes(img)
+  }
+
+  /** `img` encoded as PNG bytes. */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
     val buf = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", buf)
     buf.toByteArray
   }
 
-  /** The nine pHash-gate payloads: three geometric patterns
-    * (diagonal / circle / wedge) × (64² original, 96² re-render,
-    * 4px-cropped 56²) — index = pattern * 3 + variant. Same
-    * construction as the inline renders of the batch pHash gates;
-    * margins pinned by tools/PHashProbe (same-pattern ≤15 bits,
-    * cross ≥22).
+  /** A `w`×`h` two-tone render of the pHash-gate pattern `kind`: 1 a
+    * diagonal, 2 a disc, any other a corner wedge.
     */
-  private lazy val phashPayloads: IndexedSeq[Array[Byte]] = {
-    def render(kind: Int, w: Int, h: Int): java.awt.image.BufferedImage = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h) {
-        val fx = x.toDouble / w
-        val fy = y.toDouble / h
-        val bright = kind match {
-          case 1 => fx > fy
-          case 2 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
-          case _ => fx + fy < 0.7
-        }
-        val v = if (bright) 210 else 45
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      img
-    }
-    def png(img: java.awt.image.BufferedImage): Array[Byte] = {
-      val buf = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", buf)
-      buf.toByteArray
-    }
-    (for (kind <- Seq(1, 2, 4); v <- 0 until 3) yield v match {
-      case 0 => png(render(kind, 64, 64))
-      case 1 => png(render(kind, 96, 96))
-      case _ =>
-        val base = render(kind, 64, 64)
-        val sub = base.getSubimage(4, 4, 56, 56)
-        val out = new java.awt.image.BufferedImage(
-          56, 56, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        try g.drawImage(sub, 0, 0, null) finally g.dispose()
-        png(out)
-    }).toIndexedSeq
-  }
-
-  /** The three 64² scene-gate patterns (diagonal / circle / corner
-    * wedge — the pHash-margin shapes: same pattern hashes identically
-    * here, distinct patterns sit ≥22 bits apart).
-    */
-  private lazy val scenePng: IndexedSeq[Array[Byte]] = (0 until 3).map { kind =>
+  private def patternImage(kind: Int, w: Int, h: Int): java.awt.image.BufferedImage = {
     val img = new java.awt.image.BufferedImage(
-      64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 64; y <- 0 until 64) {
-      val fx = x / 64.0
-      val fy = y / 64.0
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (x <- 0 until w; y <- 0 until h) {
+      val fx = x.toDouble / w
+      val fy = y.toDouble / h
       val bright = kind match {
-        case 0 => fx > fy
-        case 1 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
+        case 1 => fx > fy
+        case 2 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
         case _ => fx + fy < 0.7
       }
       val v = if (bright) 210 else 45
       img.setRGB(x, y, (v << 16) | (v << 8) | v)
     }
-    val buf = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", buf)
-    buf.toByteArray
+    img
   }
+
+  /** The nine pHash-gate payloads: three geometric patterns
+    * ([[patternImage]] 1, 2, 4) × (64² original, 96² re-render,
+    * 4px-cropped 56²) — index = pattern * 3 + variant, assigned by
+    * doc_id % 9. Margins pinned by tools/PHashProbe (same-pattern ≤15
+    * bits, cross ≥22).
+    */
+  private lazy val phashPayloads: IndexedSeq[Array[Byte]] =
+    (for (kind <- Seq(1, 2, 4); v <- 0 until 3) yield v match {
+      case 0 => pngBytes(patternImage(kind, 64, 64))
+      case 1 => pngBytes(patternImage(kind, 96, 96))
+      case _ =>
+        val sub = patternImage(kind, 64, 64).getSubimage(4, 4, 56, 56)
+        val out = new java.awt.image.BufferedImage(
+          56, 56, java.awt.image.BufferedImage.TYPE_INT_RGB)
+        val g = out.createGraphics()
+        try g.drawImage(sub, 0, 0, null) finally g.dispose()
+        pngBytes(out)
+    }).toIndexedSeq
+
+  /** The three 64² scene-gate patterns ([[patternImage]] 1, 2, 4 — the
+    * pHash-margin shapes: same pattern hashes identically here,
+    * distinct patterns sit ≥22 bits apart).
+    */
+  private lazy val scenePng: IndexedSeq[Array[Byte]] =
+    Seq(1, 2, 4).map(kind => pngBytes(patternImage(kind, 64, 64))).toIndexedSeq
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -737,8 +722,8 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val idx = scratch("minhash_deleted_idx", dir)
       Dedup.buildMinhashIndex(d.filter(col("doc_id") % 2 === 1), "doc_id", "text", idx)
-      Dedup.deleteFromMinhashIndex(s,
-        idx, d.filter(col("doc_id") % 10 === 5).select("doc_id"), "doc_id")
+      IndexFamily.Stored.minhash("doc_id", idx)
+        .delete(d.filter(col("doc_id") % 10 === 5).select("doc_id"))
       Dedup.dedupAgainstMinhashIndex(s, d.filter(col("doc_id") % 2 === 0),
           "doc_id", "text", idx, threshold = 0.8)
         .select(col("id_left"), col("id_right"), col("intersection"),
@@ -1139,8 +1124,8 @@ object SparkEntry {
           "vec_id", "embedding", idx, k = 8, threshold = 0.45)
         SimilaritySearch.semDeDupIncremental(s, idx,
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
-        SimilaritySearch.deleteFromSemDedupIndex(s, idx,
-          e.filter(col("vec_id") % 10 === 0).select("vec_id"), "vec_id")
+        IndexFamily.Stored.semDedup("vec_id", idx)
+          .delete(e.filter(col("vec_id") % 10 === 0).select("vec_id"))
       }
       SimilaritySearch.semDedupIndexStatus(s, idx)
         .groupBy(col("cluster"))
@@ -1433,7 +1418,7 @@ object SparkEntry {
     }),
     "ann_topk_ivf_deleted" -> ((s, dir) => {
       // ANN index DELETE lifecycle: full-corpus index, vectors with
-      // vec_id % 7 = 3 tombstoned (deleteFromAnnIndex — an immutable
+      // vec_id % 7 = 3 tombstoned (the IVF family's delete — an immutable
       // delta segment; searches anti-join the broadcast tombstones),
       // then recall measured against the exact top-k over the LIVE
       // corpus — a surviving deleted neighbor would displace a correct
@@ -1442,8 +1427,8 @@ object SparkEntry {
       val q = e.filter(col("vec_id") < 20)
       val idx = scratch("ivf_deleted_idx", dir)
       SimilaritySearch.buildIvfIndex(e, "vec_id", "embedding", idx)
-      SimilaritySearch.deleteFromAnnIndex(s, idx,
-        e.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
+      IndexFamily.Stored.ivf("vec_id", idx)
+        .delete(e.filter(col("vec_id") % 7 === 3).select("vec_id"))
       SimilaritySearch.recallSummary(
         SimilaritySearch.searchIvf(s, idx, q, "vec_id", "embedding", k = 5),
         SimilaritySearch.bruteForceTopK(q, e.filter(col("vec_id") % 7 =!= 3),
@@ -1986,27 +1971,8 @@ object SparkEntry {
       // noise/brightness/re-encode is pinned in MultimodalSuite; the
       // gate pins hash determinism + the blocked Hamming join.
       val d = t(s, dir, "documents").select("doc_id")
-      def render(k: Int): Array[Byte] = {
-        val img = new java.awt.image.BufferedImage(
-          64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until 64; y <- 0 until 64) {
-          val bright = k match {
-            case 0 => x < 32
-            case 1 => y < 32
-            case 2 => ((x / 8) + (y / 8)) % 2 == 0
-            case 3 => (x / 16) % 2 == 0
-            case _ => x > y
-          }
-          val v = if (bright) 215 else 40
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-        }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
-      val pngs = (0 until 5).map(render)
       val withP = d.withColumn("payload",
-        element_at(array(pngs.map(lit(_)): _*), (col("doc_id") % 5).cast("int") + 1))
+        element_at(array(classPngs.map(lit(_)): _*), (col("doc_id") % 5).cast("int") + 1))
       Multimodal.imageNearDupPairs(withP, "doc_id", "payload", maxHamming = 0)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     }),
@@ -2016,27 +1982,8 @@ object SparkEntry {
       // the corpus re-decoding — radius-0 matches ≡ same-class
       // (odd, even) pairs from the assignment rule.
       val d = t(s, dir, "documents").select("doc_id")
-      def render(k: Int): Array[Byte] = {
-        val img = new java.awt.image.BufferedImage(
-          64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until 64; y <- 0 until 64) {
-          val bright = k match {
-            case 0 => x < 32
-            case 1 => y < 32
-            case 2 => ((x / 8) + (y / 8)) % 2 == 0
-            case 3 => (x / 16) % 2 == 0
-            case _ => x > y
-          }
-          val v = if (bright) 215 else 40
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-        }
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
-      val pngs = (0 until 5).map(render)
       val withP = d.withColumn("payload",
-        element_at(array(pngs.map(lit(_)): _*), (col("doc_id") % 5).cast("int") + 1))
+        element_at(array(classPngs.map(lit(_)): _*), (col("doc_id") % 5).cast("int") + 1))
       val idx = scratch("ahash_index", dir)
       if (!graft.sources.IndexIO.exists(s, idx))
         Multimodal.buildAHashIndex(
@@ -2111,41 +2058,8 @@ object SparkEntry {
       // assignment rule alone. aHash would NOT pass this gate: crops
       // and rescales of these patterns move whole aHash rows.
       val d = t(s, dir, "documents").select("doc_id")
-      def render(kind: Int, w: Int, h: Int): java.awt.image.BufferedImage = {
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until w; y <- 0 until h) {
-          val fx = x.toDouble / w
-          val fy = y.toDouble / h
-          val bright = kind match {
-            case 1 => fx > fy
-            case 2 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
-            case _ => fx + fy < 0.7
-          }
-          val v = if (bright) 210 else 45
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-        }
-        img
-      }
-      def png(img: java.awt.image.BufferedImage): Array[Byte] = {
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
-      val payloads = for (kind <- Seq(1, 2, 4); v <- 0 until 3) yield v match {
-        case 0 => png(render(kind, 64, 64))
-        case 1 => png(render(kind, 96, 96))
-        case _ =>
-          val base = render(kind, 64, 64)
-          val sub = base.getSubimage(4, 4, 56, 56)
-          val out = new java.awt.image.BufferedImage(
-            56, 56, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          try g.drawImage(sub, 0, 0, null) finally g.dispose()
-          png(out)
-      }
       val withP = d.withColumn("payload",
-        element_at(array(payloads.map(lit(_)): _*), (col("doc_id") % 9).cast("int") + 1))
+        element_at(array(phashPayloads.map(lit(_)): _*), (col("doc_id") % 9).cast("int") + 1))
       Multimodal.imageNearDupPairsPhash(withP, "doc_id", "payload", maxHamming = 16)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     }),
@@ -2157,7 +2071,7 @@ object SparkEntry {
       // the probe sees pairs across rescale/crop variants, which the
       // aHash index cannot (MultimodalSuite pins the margins).
       val d = t(s, dir, "documents").select("doc_id")
-      val payloads = phashGatePayloads()
+      val payloads = phashPayloads
       val withP = d.withColumn("payload",
         element_at(array(payloads.map(lit(_)): _*), (col("doc_id") % 9).cast("int") + 1))
       val idx = scratch("phash_index", dir)
@@ -2209,34 +2123,13 @@ object SparkEntry {
       // frames.
       val d = t(s, dir, "documents").select("doc_id")
         .filter(col("doc_id") % 7 === 0)
-      def render(kind: Int, w: Int, h: Int): java.awt.image.BufferedImage = {
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until w; y <- 0 until h) {
-          val fx = x.toDouble / w
-          val fy = y.toDouble / h
-          val bright = kind match {
-            case 1 => fx > fy
-            case 2 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
-            case _ => fx + fy < 0.7
-          }
-          val v = if (bright) 210 else 45
-          img.setRGB(x, y, (v << 16) | (v << 8) | v)
-        }
-        img
-      }
-      def png(img: java.awt.image.BufferedImage): Array[Byte] = {
-        val buf = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", buf)
-        buf.toByteArray
-      }
       val kinds = Seq(1, 2, 4)
       // frame fi of class cls shows pattern kinds((cls + fi) % 3); one
       // frame array per (class, variant) cell, picked by doc_id
       val frameArrays = for (cls <- 0 until 3; v <- 0 until 2) yield {
         val side = if (v == 0) 64 else 96
         array((0 until 3).map(fi =>
-          lit(png(render(kinds((cls + fi) % 3), side, side)))): _*)
+          lit(pngBytes(patternImage(kinds((cls + fi) % 3), side, side)))): _*)
       }
       val frames = d
         .withColumn("frames",
@@ -2258,18 +2151,7 @@ object SparkEntry {
       // scene table is the closed-form rule the oracle replays. One
       // shuffle co-locates each video's frames for the lag/cumsum
       // window; the rollup is a partial-agg groupBy.
-      val d = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 11 === 0)
-      val frameArrays = (0 until 3).map { c =>
-        array((0 until 9).map { fi =>
-          lit(scenePng(if (fi <= 2 + c) c else (c + 1) % 3))
-        }: _*)
-      }
-      val frames = d
-        .withColumn("frames",
-          element_at(array(frameArrays: _*), (col("doc_id") % 3).cast("int") + 1))
-        .select(col("doc_id"),
-          posexplode(col("frames")).as(Seq("frame_idx", "frame_bytes")))
+      val frames = sceneFrames(s, dir)
       Multimodal.videoScenes(frames, "doc_id", "frame_idx", "frame_bytes",
           maxHamming = 16)
         .select(col("doc_id"), col("scene_idx"), col("start_frame"),
@@ -2283,18 +2165,7 @@ object SparkEntry {
       // second shot equals video (c+1)%3's first). Oracle = the
       // (doc_id % 3 + scene) % 3 pattern rule with struct-ordered
       // exactly-once pairs.
-      val d = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 11 === 0)
-      val frameArrays = (0 until 3).map { c =>
-        array((0 until 9).map { fi =>
-          lit(scenePng(if (fi <= 2 + c) c else (c + 1) % 3))
-        }: _*)
-      }
-      val frames = d
-        .withColumn("frames",
-          element_at(array(frameArrays: _*), (col("doc_id") % 3).cast("int") + 1))
-        .select(col("doc_id"),
-          posexplode(col("frames")).as(Seq("frame_idx", "frame_bytes")))
+      val frames = sceneFrames(s, dir)
       Multimodal.videoSceneNearDupPairs(frames, "doc_id", "frame_idx",
           "frame_bytes", sceneMaxHamming = 16, pairMaxHamming = 10)
     }),
@@ -2304,18 +2175,7 @@ object SparkEntry {
       // index, odd docs' scenes probe it without the corpus
       // re-decoding — matches ≡ the (odd, even) same-pattern scene
       // pairs from the (doc_id % 3 + scene) % 3 rule.
-      val d = t(s, dir, "documents").select("doc_id")
-        .filter(col("doc_id") % 11 === 0)
-      val frameArrays = (0 until 3).map { c =>
-        array((0 until 9).map { fi =>
-          lit(scenePng(if (fi <= 2 + c) c else (c + 1) % 3))
-        }: _*)
-      }
-      val frames = d
-        .withColumn("frames",
-          element_at(array(frameArrays: _*), (col("doc_id") % 3).cast("int") + 1))
-        .select(col("doc_id"),
-          posexplode(col("frames")).as(Seq("frame_idx", "frame_bytes")))
+      val frames = sceneFrames(s, dir)
       val idx = scratch("scene_index", dir)
       if (!graft.sources.IndexIO.exists(s, idx))
         Multimodal.buildSceneIndex(
@@ -2968,7 +2828,7 @@ object SparkEntry {
       // dying hashes and decodes ONLY the added/changed media; the
       // odd-doc probe then equals the one-shot oracle verbatim.
       val d = t(s, dir, "documents").select("doc_id")
-      val payloads = phashGatePayloads()
+      val payloads = phashPayloads
       def pay(idExpr: Column): Column =
         element_at(array(payloads.map(lit(_)): _*), (idExpr % 9).cast("int") + 1)
       val withP = d.withColumn("payload", pay(col("doc_id")))
@@ -3088,7 +2948,7 @@ object SparkEntry {
       // embedding snapshot, batch 2 applies the diff — re-embedded
       // vectors tombstone-then-re-resolve, takedowns drop. The claim
       // is stream ≡ batch LIFECYCLE identity: the same bootstrap + the
-      // same change sets through the batch API (deleteFromSemDedupIndex
+      // same change sets through the batch API (the family's delete
       // + applySemDedupBatch) land an IDENTICAL per-doc resolved state
       // — deterministic trainer, same frozen centroids, same per-batch
       // contraction. n_members = the live corpus size (SQL-derivable),
@@ -3123,8 +2983,8 @@ object SparkEntry {
       val dels = batch2.collect { case (id, st, _) if st != "added" => id }
       val apps = batch2.collect { case (id, st, v) if st != "removed" => (id, v) }
       if (dels.nonEmpty)
-        SimilaritySearch.deleteFromSemDedupIndex(s, bidx,
-          dels.toDF("vec_id"), "vec_id")
+        IndexFamily.Stored.semDedup("vec_id", bidx)
+          .delete(dels.toDF("vec_id"))
       if (apps.nonEmpty)
         SimilaritySearch.applySemDedupBatch(s, bidx,
           apps.toDF("vec_id", "embedding"), "vec_id", "embedding")
@@ -4764,54 +4624,6 @@ object SparkEntry {
       |SELECT s1.doc_id, s1.source,
       |       substr(t1, 1, length(t1) - lcs) AS stripped
       |FROM s1 JOIN l2 ON s1.source = l2.source""".stripMargin
-
-  /** Drive a maintainer over an in-memory stream: one StreamingQuery,
-    * each batch fully processed before the next arrives (deterministic
-    * bootstrap → append → compact sequencing), stopped when drained.
-    */
-  /** The nine geometric-variant PNGs of the pHash gates: three
-    * patterns (diagonal, disc, wedge) × (64² original, 96² rescale,
-    * 56² crop) — index = (doc_id % 9), same-pattern variants land
-    * within Hamming radius 16 of each other under [[graft.multimodal
-    * .Multimodal.pHash64]], cross-pattern outside (MultimodalSuite
-    * pins the margins). Shared by the one-shot indexed gate and the
-    * snapshot-sync gate.
-    */
-  private def phashGatePayloads(): Seq[Array[Byte]] = {
-    def render(kind: Int, w: Int, h: Int): java.awt.image.BufferedImage = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h) {
-        val fx = x.toDouble / w
-        val fy = y.toDouble / h
-        val bright = kind match {
-          case 1 => fx > fy
-          case 2 => (fx - 0.5) * (fx - 0.5) + (fy - 0.5) * (fy - 0.5) < 0.09
-          case _ => fx + fy < 0.7
-        }
-        val v = if (bright) 210 else 45
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      img
-    }
-    def png(img: java.awt.image.BufferedImage): Array[Byte] = {
-      val buf = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", buf)
-      buf.toByteArray
-    }
-    for (kind <- Seq(1, 2, 4); v <- 0 until 3) yield v match {
-      case 0 => png(render(kind, 64, 64))
-      case 1 => png(render(kind, 96, 96))
-      case _ =>
-        val base = render(kind, 64, 64)
-        val sub = base.getSubimage(4, 4, 56, 56)
-        val out = new java.awt.image.BufferedImage(
-          56, 56, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        try g.drawImage(sub, 0, 0, null) finally g.dispose()
-        png(out)
-    }
-  }
 
   /** One gate's micro-batches, typed for a `MemoryStream`, and the
     * column names of the stream they feed.

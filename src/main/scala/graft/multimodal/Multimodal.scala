@@ -903,8 +903,9 @@ object Multimodal {
     * image corpus WITHOUT re-decoding it ([[dedupAgainstAHashIndex]]),
     * the [[graft.operators.Dedup.buildMinhashIndex]] lifecycle for
     * pixels. Atomic versioned publish via IndexIO; `append` grows the
-    * index by immutable segments, `delete` publishes takedown
-    * tombstones readers anti-join.
+    * index by immutable segments; [[graft.streaming.IndexFamily.aHash]]'s
+    * `delete` publishes takedown tombstones readers anti-join, and its
+    * `compact` collapses the chain.
     */
   def buildAHashIndex(df: DataFrame, idCol: String, binCol: String,
       path: String, marker: Option[String] = None): Unit = {
@@ -925,42 +926,6 @@ object Multimodal {
     graft.sources.IndexIO.publishDelta(spark, path, marker) { vdir =>
       withAHash(df, binCol, Seq(idCol))
         .write.mode("overwrite").parquet(s"$vdir/hashes")
-    }
-    ()
-  }
-
-  /** Collapse a perceptual-hash chain ([[appendToAHashIndex]] /
-    * [[deleteFromAHashIndex]] segments) to ONE segment of live hashes —
-    * identical probe results by construction; applied-batch markers
-    * carry forward through the full publish, so a streaming maintainer
-    * ([[graft.streaming.Streaming.maintain]]) can compact
-    * mid-stream without re-applying batches. No-op on a single-segment
-    * index.
-    */
-  def compactAHashIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String): Unit = {
-    if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val data = graft.sources.IndexIO.chainTable(spark, path, "hashes")
-      .getOrElse(throw new IllegalStateException(
-        s"compactAHashIndex: no hashes at $path"))
-    val live = graft.sources.IndexIO.withoutTombstoned(
-      data, graft.sources.IndexIO.chainTable(spark, path, "tombstones"), idCol)
-    graft.sources.IndexIO.publish(spark, path) { nv =>
-      live.write.mode("overwrite").parquet(s"$nv/hashes")
-    }
-    ()
-  }
-
-  /** Publish takedown tombstones — deleted ids stop matching without a
-    * rebuild (readers anti-join; re-appending later resurrects).
-    */
-  def deleteFromAHashIndex(ids: DataFrame, idCol: String, path: String,
-      marker: Option[String] = None): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { vdir =>
-      ids.select(col(idCol)).distinct()
-        .write.mode("overwrite").parquet(s"$vdir/tombstones")
     }
     ()
   }
@@ -992,17 +957,13 @@ object Multimodal {
   }
 
   /** Probe an audio batch against a [[buildAudioHashIndex]] artifact
-    * (tombstones via [[deleteFromAHashIndex]] — the layout is shared).
+    * (tombstones as the aHash index's — the layout is shared).
     */
   def dedupAgainstAudioHashIndex(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, binCol: String, path: String,
       maxHamming: Int = 7): DataFrame = {
-    val data = graft.sources.IndexIO.chainTable(spark, path, "hashes")
-      .getOrElse(throw new IllegalStateException(
-        s"dedupAgainstAudioHashIndex: no hashes at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
+    val live = graft.sources.IndexIO.liveTable(spark, path, "hashes", idCol)
     graft.operators.Dedup.hammingJoin64(
         withAudioHash(batch, binCol, Seq(idCol)), idCol, "audio_hash",
         live.withColumnRenamed(idCol, "__index_id"), "__index_id", "ahash",
@@ -1039,7 +1000,7 @@ object Multimodal {
 
   /** Probe a batch against a [[buildPHashIndex]] artifact — the
     * [[dedupAgainstAHashIndex]] machinery with the batch hashed by
-    * [[pHash64]]; tombstones via [[deleteFromAHashIndex]] (shared
+    * [[pHash64]]; tombstones as the aHash index's (shared
     * layout). Streaming batches stay a stateless blocked
     * stream-static join like the aHash gate.
     */
@@ -1047,11 +1008,7 @@ object Multimodal {
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, binCol: String, path: String,
       maxHamming: Int = 16): DataFrame = {
-    val data = graft.sources.IndexIO.chainTable(spark, path, "hashes")
-      .getOrElse(throw new IllegalStateException(
-        s"dedupAgainstPHashIndex: no hashes at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
+    val live = graft.sources.IndexIO.liveTable(spark, path, "hashes", idCol)
     graft.operators.Dedup.hammingJoin64(
         withPHash(batch, binCol, Seq(idCol)), idCol, "phash",
         live.withColumnRenamed(idCol, "__index_id"), "__index_id", "ahash",
@@ -1070,11 +1027,7 @@ object Multimodal {
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
       idCol: String, binCol: String, path: String,
       maxHamming: Int = 7): DataFrame = {
-    val data = graft.sources.IndexIO.chainTable(spark, path, "hashes")
-      .getOrElse(throw new IllegalStateException(
-        s"dedupAgainstAHashIndex: no hashes at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
+    val live = graft.sources.IndexIO.liveTable(spark, path, "hashes", idCol)
     graft.operators.Dedup.hammingJoin64(
         withAHash(batch, binCol, Seq(idCol)), idCol, "ahash",
         live.withColumnRenamed(idCol, "__index_id"), "__index_id", "ahash",
@@ -1118,40 +1071,6 @@ object Multimodal {
     ()
   }
 
-  /** Publish takedown tombstones for the subfingerprint index. */
-  def deleteFromAudioFpIndex(ids: DataFrame, idCol: String,
-      path: String, marker: Option[String] = None): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { vdir =>
-      ids.select(col(idCol)).distinct()
-        .write.mode("overwrite").parquet(s"$vdir/tombstones")
-    }
-    ()
-  }
-
-  /** Rewrite the subfingerprint index as ONE fresh segment with
-    * tombstoned clips dropped PHYSICALLY — the periodic maintenance
-    * step after many [[appendToAudioFpIndex]] deltas and takedowns
-    * (the [[graft.operators.SimilaritySearch.compactIvfIndex]]
-    * pattern: the new version carries no tombstone table forward, so
-    * a later re-append resurrects an id cleanly). No-op on a
-    * single-segment index.
-    */
-  def compactAudioFpIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String): Unit = {
-    if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val data = graft.sources.IndexIO.chainTable(spark, path, "postings")
-      .getOrElse(throw new IllegalStateException(
-        s"compactAudioFpIndex: no postings at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
-    graft.sources.IndexIO.publish(spark, path) { vdir =>
-      live.write.mode("overwrite").parquet(s"$vdir/postings")
-    }
-    ()
-  }
-
   /** Probe a batch against a [[buildAudioFpIndex]] artifact: the batch
     * is decoded once, its fingerprints equi-join the live postings
     * (only rows of SHARED fingerprints move), and a pair survives with
@@ -1174,11 +1093,7 @@ object Multimodal {
       hotFingerprintCutoff: Long = Long.MaxValue): DataFrame = {
     require(minShared >= 1,
       s"dedupAgainstAudioFpIndex: minShared must be >= 1, got $minShared")
-    val data = graft.sources.IndexIO.chainTable(spark, path, "postings")
-      .getOrElse(throw new IllegalStateException(
-        s"dedupAgainstAudioFpIndex: no postings at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live0 = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
+    val live0 = graft.sources.IndexIO.liveTable(spark, path, "postings", idCol)
       .withColumnRenamed(idCol, "index_id")
     val live =
       if (hotFingerprintCutoff == Long.MaxValue) live0
@@ -1393,38 +1308,6 @@ object Multimodal {
     ()
   }
 
-  /** Publish takedown tombstones for whole videos. */
-  def deleteFromSceneIndex(ids: DataFrame, idCol: String,
-      path: String, marker: Option[String] = None): Unit = {
-    val spark = ids.sparkSession
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { vdir =>
-      ids.select(col(idCol)).distinct()
-        .write.mode("overwrite").parquet(s"$vdir/tombstones")
-    }
-    ()
-  }
-
-  /** Collapse a scene chain to ONE segment of live scene rows —
-    * tombstoned videos dropped physically, probe results identical by
-    * construction, applied-batch markers carried through the full
-    * publish (the [[compactAHashIndex]] pattern). No-op on a
-    * single-segment index.
-    */
-  def compactSceneIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String): Unit = {
-    if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val data = graft.sources.IndexIO.chainTable(spark, path, "scenes")
-      .getOrElse(throw new IllegalStateException(
-        s"compactSceneIndex: no scenes at $path"))
-    val live = graft.sources.IndexIO.withoutTombstoned(
-      data, graft.sources.IndexIO.chainTable(spark, path, "tombstones"), idCol)
-    graft.sources.IndexIO.publish(spark, path) { nv =>
-      live.write.mode("overwrite").parquet(s"$nv/scenes")
-    }
-    ()
-  }
-
   /** Probe a batch's decoded frames against a [[buildSceneIndex]]
     * artifact: the batch is segmented once, its keyframes meet the
     * stored 8-byte scene rows through the collapsed pigeonhole
@@ -1437,11 +1320,7 @@ object Multimodal {
       idCol: String, frameIdxCol: String, frameBinCol: String,
       path: String, sceneMaxHamming: Int = 16,
       pairMaxHamming: Int = 10): DataFrame = {
-    val data = graft.sources.IndexIO.chainTable(spark, path, "scenes")
-      .getOrElse(throw new IllegalStateException(
-        s"dedupAgainstSceneIndex: no scenes at $path"))
-    val tomb = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    val live = graft.sources.IndexIO.withoutTombstoned(data, tomb, idCol)
+    val live = graft.sources.IndexIO.liveTable(spark, path, "scenes", idCol)
       .select(struct(col(idCol), col("scene_idx")).as("__ik"),
         col("scene_phash").as("__iph"))
     val probe = videoScenes(frames, idCol, frameIdxCol, frameBinCol,

@@ -108,7 +108,7 @@ object BpeTokenizer {
     * atomic under readers). Same contract as the other trained model
     * artifacts (IVF centroids, PQ codebooks, LM count cutoffs), unlike
     * ROW-holding indexes (BM25 postings, ANN cells, minhash bands),
-    * which take [[graft.sources.IndexIO.withoutTombstoned]] deletes.
+    * which take tombstone deletes ([[graft.sources.IndexIO.delete]]).
     */
   def buildBpeIndex(docs: DataFrame, textCol: String, path: String,
       trainWords: Int = 4096, numMerges: Int = 256): Unit = {

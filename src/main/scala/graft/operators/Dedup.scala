@@ -437,7 +437,7 @@ object Dedup {
   def buildMinhashIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
       n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      bandBuckets: Int = 64, marker: Option[String] = None): Unit = {
+      marker: Option[String] = None): Unit = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
     val spark = docs.sparkSession
     // all three tables land in a fresh version dir; the _LATEST pointer
@@ -504,7 +504,7 @@ object Dedup {
     */
   def appendToMinhashIndex(
       docs: DataFrame, idCol: String, textCol: String, path: String,
-      bandBuckets: Int = 64, marker: Option[String] = None): Unit = {
+      marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     val vdir = graft.sources.IndexIO.resolve(spark, path)
     val (n, numHashes, bands) = readMinhashMeta(spark, vdir)
@@ -526,27 +526,6 @@ object Dedup {
     ()
   }
 
-  /** Publish a TOMBSTONE segment deleting `ids` from a
-    * [[buildMinhashIndex]] index — the takedown/revocation path a crawl
-    * corpus needs, WITHOUT rebuilding: the existing segments stay
-    * immutable; searches anti-join the (tiny, broadcast) tombstone set;
-    * [[compactMinhashIndex]] drops the rows physically. Log-structured
-    * semantics ([[graft.sources.IndexIO.withoutTombstoned]]): the
-    * delete covers data indexed BEFORE it; a later append of the same
-    * id resurrects it.
-    */
-  def deleteFromMinhashIndex(
-      spark: SparkSession, path: String, ids: DataFrame, idCol: String,
-      marker: Option[String] = None): Unit = {
-    val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = readMinhashMeta(spark, vdir)
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).as("doc_id")), seg)
-      writeMinhashMeta(spark, seg, meta)
-    }
-    ()
-  }
-
   /** Compact an append chain back to ONE co-clustered segment — from
     * the index's own data, never the corpus text: sketches carry the
     * full 8-byte-per-shingle payload, so the merged postings re-derive
@@ -556,17 +535,16 @@ object Dedup {
     * clustered tables); tombstoned docs are dropped PHYSICALLY and the
     * tombstones themselves are not carried forward. Publishes as a
     * fresh single-segment version, pre-flip readers keep their chain.
-    * No-op on an unchained index.
+    * No-op on an unchained index. Deletes are
+    * [[graft.streaming.IndexFamily.Stored.minhash]]'s `delete`, which carries
+    * the meta forward.
     */
-  def compactMinhashIndex(
-      spark: SparkSession, path: String, bandBuckets: Int = 64): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, path)
+  def compactMinhashIndex(spark: SparkSession, path: String): Unit = {
+    val segs = graft.sources.IndexIO.chain(spark, path)
     if (segs.length <= 1) return
-    val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val meta = readMinhashMeta(spark, vdir)
-    val sketches = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "sketches").get,
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"), "doc_id")
+    // the chain's last segment is its version's own directory
+    val meta = readMinhashMeta(spark, segs.last.dir)
+    val sketches = graft.sources.IndexIO.liveTable(spark, segs, "sketches", "doc_id").get
     graft.sources.IndexIO.publish(spark, path) { nv =>
       sketches.write.mode("overwrite").parquet(s"$nv/sketches")
       graft.sources.IndexIO.readTable(spark, s"$nv/sketches")
@@ -582,23 +560,20 @@ object Dedup {
   def dedupAgainstMinhashIndex(
       spark: SparkSession, delta: DataFrame, idCol: String, textCol: String,
       path: String, threshold: Double = 0.6): DataFrame = {
-    val vdir = graft.sources.IndexIO.resolve(spark, path)
     // the index may be an append CHAIN: union the immutable segments
-    // (one for a plain build). Parameters come from the resolved
-    // version's meta; appends copy them forward, so the chain is
+    // (one for a plain build), all of ONE resolved version. Parameters
+    // come from that version's meta (its own directory, the chain's last
+    // segment); appends copy them forward, so the chain is
     // self-consistent by construction. Tombstoned docs are filtered
     // from the SKETCHES only — a dead doc's postings may still raise a
     // candidate, but the pair dies at the inner sketch join, so one
     // broadcast anti-join covers the delete (postings stay untouched).
-    val tombs = graft.sources.IndexIO.chainTable(spark, path, "tombstones")
-    def table(name: String): DataFrame = {
-      val data = graft.sources.IndexIO.chainTable(spark, path, name).getOrElse(
-        throw new IllegalStateException(s"index at $path has no $name table"))
-      if (name == "sketches")
-        graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
-      else data.drop("__seg")
-    }
-    val (n, numHashes, bands) = readMinhashMeta(spark, vdir)
+    val segs = graft.sources.IndexIO.chain(spark, path)
+    def table(name: String): DataFrame = (
+      if (name == "sketches") graft.sources.IndexIO.liveTable(spark, segs, name, "doc_id")
+      else graft.sources.IndexIO.chainTableOf(spark, segs, name).map(_.drop("__seg"))
+    ).getOrElse(throw new IllegalStateException(s"index at $path has no $name table"))
+    val (n, numHashes, bands) = readMinhashMeta(spark, segs.last.dir)
     val sh = delta
       .select(col(idCol).as("__id"), TextFunctions.shingles(col(textCol), n).as("__s"))
       .filter(size(col("__s")) > 0)

@@ -7,10 +7,10 @@ import graft.streaming.IndexFamily
 /** CDC → index synchronization: make a persisted index match a NEW
   * corpus snapshot in one call, by feeding [[CorpusDiff.diff]]'s
   * change sets through the family's existing lifecycle operations —
-  * tombstone the `removed` + `changed` ids first
-  * (`deleteFrom*`/`deleteFromAnnIndex`), then append the `added` +
-  * `changed` rows (`appendTo*`). The tombstones are LOG-ORDERED
-  * ([[graft.sources.IndexIO.withoutTombstoned]]), so the re-appended
+  * tombstone the `removed` + `changed` ids first (the family's
+  * `delete`), then append the `added` + `changed` rows (`appendTo*`).
+  * The tombstones are LOG-ORDERED
+  * ([[graft.sources.IndexIO.liveTable]]), so the re-appended
   * version of a changed doc lands AFTER its tombstone and serves —
   * the index ends exactly as a one-shot build on the new snapshot
   * would, without touching the unchanged rows.

@@ -139,7 +139,7 @@ object Search {
       // the serving bottleneck; lengths persists only for delete-time
       // stats correction and old-layout readers)
       writeByTerm(docPostings(docs, col(idCol), textCol, withDl = true,
-        withPositions = false), s"$vdir/postings")
+        withPositions = false), vdir)
       writeLengthsAndStats(docs.sparkSession, docLengths(docs, col(idCol), textCol), vdir)
     }
     ()
@@ -173,13 +173,17 @@ object Search {
     docs.select(id.as("doc_id"), size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"))
       .filter(col("dl") > 0)
 
-  /** Write a postings table clustered by term: hash-shuffled on term,
-    * AQE sizing the partition count from the actual bytes, rows sorted
-    * by (term, doc_id) within each file for row-group pruning.
+  /** The postings table, clustered by term: every postings writer and the
+    * positional compaction lay it out through [[writeByTerm]].
+    */
+  private val PostingsByTerm = graft.sources.IndexIO.DataTable("postings", clusterBy = Seq("term"))
+
+  /** Write `postings` as the postings table of version or segment `dir`,
+    * clustered by term and sorted by (term, doc_id) within each file
+    * ([[graft.sources.IndexIO.writeTable]]).
     */
   private def writeByTerm(postings: DataFrame, dir: String): Unit =
-    postings.repartition(col("term")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(dir)
+    graft.sources.IndexIO.writeTable(postings, PostingsByTerm, "doc_id", dir)
 
   /** Write `lengths` into version `vdir` and its one-row `stats` beside
     * it: `n_docs`/`total_dl` are observed on the lengths write itself,
@@ -244,16 +248,22 @@ object Search {
     // compactBm25Index migrates it to the denormalized one.
     val baseHasDl = chainPostingsHaveDl(spark, path, segs)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      writeByTerm(docPostings(docs, id, textCol, baseHasDl, withPositions), s"$seg/postings")
+      writeByTerm(docPostings(docs, id, textCol, baseHasDl, withPositions), seg)
       lengths.write.mode("overwrite").parquet(s"$seg/lengths")
       writeStats(spark, seg,
         prev.getLong(0) + addN, prev.getLong(1) + addS)
     }
   }
 
+  /** The tombstone layout of the postings families ([[buildBm25Index]],
+    * [[buildLexicalIndex]]): keyed by `doc_id`, no model tables. Their
+    * delete and compaction rewrite the stats, so it names no data tables.
+    */
+  private val PostingsLayout = graft.sources.IndexIO.TombstoneLayout(Nil, Nil, "doc_id")
+
   /** Tombstone-delete docs from a [[buildBm25Index]] index WITHOUT a
-    * rebuild (the takedown path, mirroring
-    * [[SimilaritySearch.deleteFromAnnIndex]]): publishes a delta
+    * rebuild (the takedown path, the [[graft.sources.IndexIO.delete]]
+    * every tombstone family runs): publishes a delta
     * segment carrying the tombstone ids plus CORRECTED corpus stats
     * (N and total length shrink by the deleted docs' live lengths —
     * serving stays O(1), no stats rescan per query). Readers anti-join
@@ -270,19 +280,17 @@ object Search {
     // the stats (double-deleting an id must not subtract twice). A semi
     // join counts each live doc once however often the batch names it,
     // so the correction needs no distinct of the ids. The ids are
-    // takedown-sized (withoutTombstoned's assumption) but carry no size
-    // statistics, so the hint keeps the join from shuffling both sides
-    val del = liveTable(spark, path, segs, "lengths")
+    // takedown-sized (the tombstone anti-join's assumption) but carry no
+    // size statistics, so the hint keeps the join from shuffling both sides
+    val del = liveLengths(spark, path, segs)
       .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
       .head()
     val stats = chainStatsRow(spark, path, segs)
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      graft.sources.IndexIO.writeTombstones(batchIds, seg)
+    graft.sources.IndexIO.delete(spark, path, PostingsLayout, batchIds, marker) { seg =>
       writeStats(spark, seg,
         stats.getLong(0) - del.getLong(0), stats.getLong(1) - del.getLong(1))
     }
-    ()
   }
 
   /** A CDC micro-batch to fold into a compaction: `dels` holds the ids
@@ -316,12 +324,13 @@ object Search {
       spark: SparkSession, path: String, batch: Option[CdcBatch] = None): Unit = {
     val segs = graft.sources.IndexIO.chain(spark, path)
     if (batch.isEmpty && segs.length <= 1) return
-    val batchTombs = for (b <- batch; d <- b.dels)
-      yield d.select(col(b.idCol).cast("long").as("doc_id"), lit(segs.length).as("__seg"))
-    val tombs = (graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones") ++ batchTombs)
-      .reduceOption(_.unionByName(_))
-    val postings0 = liveRows(spark, path, segs, "postings", tombs)
-    val lengths0 = liveRows(spark, path, segs, "lengths", tombs)
+    val batchDels = for (b <- batch; d <- b.dels)
+      yield d.select(col(b.idCol).cast("long").as("doc_id"))
+    val tables = Seq("postings", "lengths")
+    val Seq(postings0, lengths0) = tables
+      .zip(graft.sources.IndexIO.liveTables(spark, segs, tables, "doc_id", batchDels))
+      .map { case (name, live) => live.getOrElse(
+        throw new IllegalStateException(s"BM25 index at $path has no $name table")) }
     // compaction is the layout-migration point: a pre-denormalization
     // artifact's postings gain the dl column here (one build-time
     // join), so serving drops the lengths join from this version on
@@ -337,31 +346,17 @@ object Search {
     val postings = added.fold(livePostings)(a => livePostings.unionByName(a._1))
     val lengths = added.fold(lengths0)(a => lengths0.unionByName(a._2))
     graft.sources.IndexIO.publish(spark, path, batch.map(_.marker)) { nv =>
-      writeByTerm(postings, s"$nv/postings")
+      writeByTerm(postings, nv)
       writeLengthsAndStats(spark, lengths, nv)
     }
     ()
   }
 
-  /** A table of the resolved chain `segs` of the index at `path`, with
-    * the tombstone anti-join applied ([[
-    * graft.sources.IndexIO.withoutTombstoned]] — log-ordered, so only
-    * rows indexed BEFORE the delete die).
-    */
-  private def liveTable(
-      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment],
-      name: String): DataFrame =
-    liveRows(spark, path, segs, name,
-      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"))
-
-  /** [[liveTable]] against the tombstone sets `tombs`. */
-  private def liveRows(
-      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment],
-      name: String, tombs: Option[DataFrame]): DataFrame =
-    graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTableOf(spark, segs, name).getOrElse(
-        throw new IllegalStateException(s"BM25 index at $path has no $name table")),
-      tombs, "doc_id")
+  /** The live `lengths` of the resolved chain `segs` of the BM25 index at `path`. */
+  private def liveLengths(
+      spark: SparkSession, path: String, segs: Seq[graft.sources.IndexIO.Segment]): DataFrame =
+    graft.sources.IndexIO.liveTable(spark, segs, "lengths", "doc_id").getOrElse(
+      throw new IllegalStateException(s"BM25 index at $path has no lengths table"))
 
   /** Whether the chain's postings carry the denormalized `dl` column.
     * Probed from the OLDEST postings-bearing segment, never from the
@@ -436,17 +431,14 @@ object Search {
     // tombstone segments) landing mid-call cannot pair one version's
     // postings with another's tombstones and resurrect deleted docs
     val segs = graft.sources.IndexIO.chain(spark, path)
-    val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
-        throw new IllegalStateException(s"BM25 index at $path has no postings table"))
-        .filter(col("term").isin(terms: _*)),
-      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
-      "doc_id")
+    val postings = graft.sources.IndexIO.liveTable(spark, segs, "postings", "doc_id")
+      .getOrElse(throw new IllegalStateException(s"BM25 index at $path has no postings table"))
+      .filter(col("term").isin(terms: _*))
     // lengths is BY-NAME into the scorer: the current layout carries dl
     // in every posting row, so resolving the corpus-sized lengths chain
     // (one listing + footer read per segment, per query) only happens
     // for pre-denormalization artifacts that actually join it
-    def lengths = liveTable(spark, path, segs, "lengths")
+    def lengths = liveLengths(spark, path, segs)
     val stats = chainStats(spark, path, segs)
     bm25ScoreIndexed(postings, lengths, stats, k, k1, b)
   }
@@ -1044,13 +1036,8 @@ object Search {
         posexplode(checkedPhrase).as(Seq("__pi", "__t")))
       .localCheckpoint(true) // scanned for the term set AND the join
     val terms = slots.select("__t").distinct().collect().map(_.getString(0))
-    val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "postings").getOrElse(
-        throw new IllegalStateException(
-          s"positional index at $path has no postings table"))
-        .filter(col("term").isin(terms.toIndexedSeq: _*)),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
-      "doc_id")
+    val postings = graft.sources.IndexIO.liveTable(spark, path, "postings", "doc_id")
+      .filter(col("term").isin(terms.toIndexedSeq: _*))
     val votes = postings
       .select(col("doc_id").as("__id"), col("term").as("__t"),
         explode(col("positions")).as("__pos"))
@@ -1163,7 +1150,7 @@ object Search {
             withPositions = true)).as("__p"))
         .select(col("__p.term").as("term"), col("doc_id"),
           col("__p.positions").as("positions"))
-      writeByTerm(postings, s"$vdir/postings")
+      writeByTerm(postings, vdir)
     }
     ()
   }
@@ -1194,10 +1181,16 @@ object Search {
       .localCheckpoint(true) // probed for emptiness, then written
     if (postings.isEmpty) return
     graft.sources.IndexIO.publishDelta(spark, path) { seg =>
-      writeByTerm(postings, s"$seg/postings")
+      writeByTerm(postings, seg)
     }
     ()
   }
+
+  /** The tombstone layout of a [[buildPositionalIndex]] index: its
+    * term-clustered postings keyed by `doc_id`; no model tables.
+    */
+  private val PositionalLayout =
+    graft.sources.IndexIO.TombstoneLayout(Seq(PostingsByTerm), Nil, "doc_id")
 
   /** Tombstone-delete docs from a [[buildPositionalIndex]] index — a
     * tombstone-only delta segment, no stats to correct (the positional
@@ -1205,28 +1198,16 @@ object Search {
     * [[phraseSearchIndexBatch]]) anti-join the chain log-ordered.
     */
   def deleteFromPositionalIndex(
-      spark: SparkSession, path: String, ids: DataFrame, idCol: String): Unit = {
-    graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.publishDelta(spark, path) { seg =>
-      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).cast("long").as("doc_id")), seg)
-    }
-    ()
-  }
+      spark: SparkSession, path: String, ids: DataFrame, idCol: String): Unit =
+    graft.sources.IndexIO.delete(spark, path, PositionalLayout,
+      ids.select(col(idCol).cast("long").as("doc_id")), None)(_ => ())
 
   /** Collapse an appended/tombstoned [[buildPositionalIndex]] chain to
     * ONE segment of live rows, re-bucketed by term — identical serving
-    * results by construction, mirrors [[compactBm25Index]].
+    * results by construction ([[graft.sources.IndexIO.compact]]).
     */
-  def compactPositionalIndex(
-      spark: SparkSession, path: String): Unit = {
-    val segs = graft.sources.IndexIO.chain(spark, path)
-    if (segs.length <= 1) return
-    val postings = liveTable(spark, path, segs, "postings")
-    graft.sources.IndexIO.publish(spark, path) { nv =>
-      writeByTerm(postings, s"$nv/postings")
-    }
-    ()
-  }
+  def compactPositionalIndex(spark: SparkSession, path: String): Unit =
+    graft.sources.IndexIO.compact(spark, path, PositionalLayout)
 
   /** Serve [[phraseTopK]] from a [[buildPositionalIndex]] index: the
     * postings scan carries a pushed-down `term IN (…)` filter (row-
@@ -1245,13 +1226,8 @@ object Search {
     import spark.implicits._
     val m = phrase.length
     val slots = phrase.zipWithIndex.map { case (t, i) => (i, t) }.toDF("__pi", "__t")
-    val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "postings").getOrElse(
-        throw new IllegalStateException(
-          s"positional index at $path has no postings table"))
-        .filter(col("term").isin(phrase.distinct: _*)),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
-      "doc_id")
+    val postings = graft.sources.IndexIO.liveTable(spark, path, "postings", "doc_id")
+      .filter(col("term").isin(phrase.distinct: _*))
     val votes = postings
       .select(col("doc_id").as("__id"), col("term").as("__t"),
         explode(col("positions")).as("__pos"))
@@ -1280,8 +1256,7 @@ object Search {
       marker: Option[String] = None): Unit = {
     val id = col(idCol).cast("long")
     graft.sources.IndexIO.publish(docs.sparkSession, path, marker) { vdir =>
-      writeByTerm(docPostings(docs, id, textCol, withDl = true, withPositions = true),
-        s"$vdir/postings")
+      writeByTerm(docPostings(docs, id, textCol, withDl = true, withPositions = true), vdir)
       writeLengthsAndStats(docs.sparkSession, docLengths(docs, id, textCol), vdir)
     }
     ()
@@ -1321,9 +1296,8 @@ object Search {
       positionalPath: String,
       outPath: String): Unit = {
     val bm25Segs = graft.sources.IndexIO.chain(spark, bm25Path)
-    val lengths = liveTable(spark, bm25Path, bm25Segs, "lengths")
-    val posBare = liveTable(spark, positionalPath,
-      graft.sources.IndexIO.chain(spark, positionalPath), "postings")
+    val lengths = liveLengths(spark, bm25Path, bm25Segs)
+    val posBare = graft.sources.IndexIO.liveTable(spark, positionalPath, "postings", "doc_id")
       .select(col("term"), col("doc_id"),
         size(col("positions")).cast("long").as("tf"), col("positions"))
     // dl joins in ONCE here (a compact is a build-time job) so the
@@ -1351,7 +1325,7 @@ object Search {
         s"covers $nPos live docs, BM25 stats say $nDocs, and $mism doc ids " +
         s"are in one chain but not the other; rebuild instead")
     graft.sources.IndexIO.publish(spark, outPath) { nv =>
-      writeByTerm(posLive, s"$nv/postings")
+      writeByTerm(posLive, nv)
       lengths.write.mode("overwrite").parquet(s"$nv/lengths")
       writeStats(spark, nv, nDocs, stats.getLong(1))
     }
@@ -1393,17 +1367,14 @@ object Search {
     // bucket scan, and the eager checkpoint pins the single read that
     // both legs consume
     val segs = graft.sources.IndexIO.chain(spark, path)
-    val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTableOf(spark, segs, "postings").getOrElse(
-        throw new IllegalStateException(
-          s"lexical index at $path has no postings table"))
-        .filter(col("term").isin(allTerms: _*)),
-      graft.sources.IndexIO.chainTableOf(spark, segs, "tombstones"),
-      "doc_id")
+    val postings = graft.sources.IndexIO.liveTable(spark, segs, "postings", "doc_id")
+      .getOrElse(throw new IllegalStateException(
+        s"lexical index at $path has no postings table"))
+      .filter(col("term").isin(allTerms: _*))
       .localCheckpoint(true)
     // by-name into the scorer (see bm25SearchIndex): only resolved for
     // pre-denormalization artifacts whose postings lack dl
-    def lengths = liveTable(spark, path, segs, "lengths")
+    def lengths = liveLengths(spark, path, segs)
     val stats = chainStats(spark, path, segs)
 
     val lexCols =

@@ -24,47 +24,6 @@ import graft.functions.VectorFunctions
   */
 object SimilaritySearch {
 
-  /** Publish a TOMBSTONE segment deleting `ids` from ANY persisted ANN
-    * index ([[buildIvfIndex]], [[buildIvfSq8Index]], [[buildPqIndex]],
-    * [[buildIvfPqIndex]]) — the takedown/revocation path, WITHOUT a
-    * rebuild: data segments stay immutable; searches anti-join the
-    * (tiny, broadcast) tombstone set; the index's compact drops dead
-    * rows physically. Log-structured semantics
-    * ([[graft.sources.IndexIO.withoutTombstoned]]): the delete covers
-    * vectors indexed BEFORE it; a later append of the same id
-    * resurrects it. The current version's model tables (centroids /
-    * codebook / meta — whichever the index carries) are copied forward
-    * so append/search keep resolving them from the newest segment.
-    */
-  def deleteFromAnnIndex(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      ids: DataFrame, idCol: String,
-      marker: Option[String] = None): Unit = {
-    val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    graft.sources.IndexIO.publishDelta(spark, indexDir, marker) { seg =>
-      for (t <- Seq("centroids", "codebook", "meta"))
-        graft.sources.IndexIO.copyRowsIfExists(spark, s"$vdir/$t", s"$seg/$t")
-      graft.sources.IndexIO.writeTombstones(ids.select(col(idCol).as("neighbor_id")), seg)
-    }
-    ()
-  }
-
-  /** Union of a persisted ANN chain's `name` table with tombstoned rows
-    * filtered out ([[graft.sources.IndexIO.withoutTombstoned]] — the
-    * log-ordered anti-join). All index-family searches and compactions
-    * read their cells/codes through this, so a [[deleteFromAnnIndex]]
-    * takes effect on every path without per-index plumbing.
-    */
-  private def liveChain(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      name: String): DataFrame = {
-    val data = graft.sources.IndexIO.chainTable(spark, indexDir, name).getOrElse(
-      throw new IllegalStateException(s"ANN index at $indexDir has no $name table"))
-    graft.sources.IndexIO.withoutTombstoned(
-      data, graft.sources.IndexIO.chainTable(spark, indexDir, "tombstones"),
-      "neighbor_id")
-  }
-
   /** True when the query side's estimated size exceeds the session
     * broadcast threshold — the foot-gun guard for [[bruteForceTopK]],
     * which broadcasts the query set with a non-equi condition.
@@ -738,20 +697,19 @@ object SimilaritySearch {
     */
   private def resolvedSemDedupMembers(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    // takedowns ([[deleteFromSemDedupIndex]]) anti-join here, BEFORE
-    // the remap fold and the keeper recompute: a removed member leaves
-    // every downstream view (status, compaction, the batch×member pair
-    // search), and the keep-the-atypical rule re-elects among the
-    // survivors with no segment rewrite. Log-ordered like every chain
-    // tombstone: re-appending an id later resurrects it.
-    val members = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, path, "members")
-        .getOrElse(throw new IllegalStateException(
-          s"SemDeDup index at $path has no members table")),
-      graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
-      "neighbor_id")
-    val remaps = graft.sources.IndexIO.segments(spark, path).flatMap(s =>
-      graft.sources.IndexIO.readTableIfExists(spark, s"$s/remaps"))
+    // takedowns ([[graft.streaming.IndexFamily.semDedup]]'s delete)
+    // anti-join here, BEFORE the remap fold and the keeper recompute: a
+    // removed member leaves every downstream view (status, compaction,
+    // the batch×member pair search), and the keep-the-atypical rule
+    // re-elects among the survivors with no segment rewrite. Log-ordered
+    // like every chain tombstone: re-appending an id later resurrects
+    // it. Members, tombstones and remaps come from one resolved chain.
+    val segs = graft.sources.IndexIO.chain(spark, path)
+    val members = graft.sources.IndexIO.liveTable(spark, segs, "members", "neighbor_id")
+      .getOrElse(throw new IllegalStateException(
+        s"SemDeDup index at $path has no members table"))
+    val remaps = segs.filter(_.holds("remaps")).flatMap(s =>
+      graft.sources.IndexIO.readTableIfExists(spark, s"${s.dir}/remaps"))
     remaps.foldLeft(members) { (acc, r) =>
       acc.join(
           broadcast(r.select(col("from").as("__rf"), col("to").as("__rt"))),
@@ -871,33 +829,6 @@ object SimilaritySearch {
         (col("ccos") / lit(10000.0)).as("centroid_cos"),
         when(col("__n") > 1, col("component")).as("component"),
         (col("neighbor_id") === col("__keep")).as("kept"))
-  }
-
-  /** Takedown tombstones for a SemDeDup artifact: the deleted ids stop
-    * existing in every downstream view — [[semDedupIndexStatus]] drops
-    * their rows and RE-ELECTS each affected component's keeper among
-    * the survivors (the keep-the-atypical rule recomputes at read, so
-    * removing a keeper needs no rewrite), and later
-    * [[applySemDedupBatch]] batches no longer pair against them. One
-    * immutable tombstone segment; log-ordered, so re-appending an id
-    * afterwards resurrects it; [[compactSemDedupIndex]] drops
-    * tombstoned members physically and retires the tombstones.
-    */
-  def deleteFromSemDedupIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String,
-      marker: Option[String] = None): Unit = {
-    val vdir = graft.sources.IndexIO.resolve(spark, path)
-    graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      // the model tables ride in EVERY segment (the deleteFromAnnIndex
-      // rule), so later appends/compactions resolve them from the
-      // latest version dir even when that version is this takedown
-      for (t <- Seq("centroids", "meta"))
-        graft.sources.IndexIO.copyRows(spark, s"$vdir/$t", s"$seg/$t")
-      graft.sources.IndexIO.writeTombstones(
-        ids.select(col(idCol).cast("long").as("neighbor_id")), seg)
-    }
-    ()
   }
 
   /** Collapse a [[semDeDupIncremental]] chain to ONE segment: members
@@ -1197,28 +1128,6 @@ object SimilaritySearch {
     ()
   }
 
-  /** Compact an IVF append chain to one segment: union the chain's
-    * cells and rewrite them as a single cell-partitioned table (one
-    * directory per cell again, instead of one per cell per segment),
-    * centroids carried forward. Publishes as a fresh single-segment
-    * version; pre-flip readers keep their chain. No-op on an unchained
-    * index.
-    */
-  def compactIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, indexDir)
-    if (segs.length <= 1) return
-    val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    // liveChain: tombstoned rows die physically here, and the fresh
-    // single-segment publish carries no tombstone table forward
-    val cells = liveChain(spark, indexDir, "cells")
-    graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$nv/centroids")
-      cells.write.mode("overwrite").partitionBy("cell").parquet(s"$nv/cells")
-    }
-    ()
-  }
-
   /** IVF-SQ8 persisted index: same learned cells as [[buildIvfIndex]],
     * but the stored vectors are SQ8-quantized structs — ~8× smaller
     * cells on disk and over the wire, and probe-time scoring runs the
@@ -1252,9 +1161,8 @@ object SimilaritySearch {
     * a row to the wrong cell), the new rows SQ8-quantize into a fresh
     * immutable segment, centroids copied forward. Empty batches no-op;
     * dimension mismatches fail loudly ([[appendToIvfIndex]]'s
-    * contracts). Deletes ([[deleteFromAnnIndex]]) and
-    * [[compactIvfIndex]] already work on the chain (both are
-    * cells-schema-agnostic).
+    * contracts). [[graft.streaming.IndexFamily.ivfSq8]]'s delete and
+    * compaction work on the chain as the IVF family's do.
     */
   def appendToIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
@@ -1294,7 +1202,7 @@ object SimilaritySearch {
     val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
-    val cells = liveChain(spark, indexDir, "cells")
+    val cells = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("neighbor_id"), col("qvec").as("__cq"), col("cell").as("__cell"))
     val q = prepared(queries, idCol, vecCol, "query_id", "__qv", "__qn")
     val probed = probeCells(q, cents, nProbe)
@@ -1329,7 +1237,7 @@ object SimilaritySearch {
     // the index may be an append chain (appendToIvfIndex): union the
     // immutable segments' cells; cell-partition pruning applies per
     // segment scan, so probes still skip unprobed directories
-    val cells = liveChain(spark, indexDir, "cells")
+    val cells = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("neighbor_id"), col("vec").as("__cv"), col("norm").as("__cn"),
         col("cell").as("__cell"))
     val q = prepared(queries, idCol, vecCol, "query_id", "__qv", "__qn")
@@ -1359,7 +1267,7 @@ object SimilaritySearch {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell"), col("centroid"))
-    val quantized = liveChain(spark, indexDir, "cells")
+    val quantized = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("cell"))
       .join(broadcast(cents), "cell")
       .select(col("centroid").as("__vec"))
@@ -1417,7 +1325,7 @@ object SimilaritySearch {
     val cents = readCentroids(spark, vdir)
     require(nProbe >= 1 && nProbe <= cents.length,
       s"dedupAgainstIvfIndex: nProbe $nProbe outside [1, ${cents.length}]")
-    val cells = liveChain(spark, indexDir, "cells")
+    val cells = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("neighbor_id"), col("vec").as("__cv"), col("norm").as("__cn"),
         col("cell").as("__cell"))
     prepared(probes, idCol, vecCol, "query_id", "__qv", "__qn")
@@ -1881,35 +1789,6 @@ object SimilaritySearch {
     ()
   }
 
-  /** Collapse an [[appendToIvfPqIndex]] chain to ONE cell-partitioned
-    * segment, from the stored codes alone. Identical results by
-    * construction (code rows unioned unchanged).
-    */
-  def compactIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, indexDir)
-    if (segs.length <= 1) return
-    val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val cells = liveChain(spark, indexDir, "cells")
-    // vectors side-file is optional (indexes built before it existed);
-    // carry it forward when present so rerank stays self-contained
-    val vecs = graft.sources.IndexIO.chainTable(spark, indexDir, "vectors")
-      .map(v => graft.sources.IndexIO.withoutTombstoned(
-        v, graft.sources.IndexIO.chainTable(spark, indexDir, "tombstones"),
-        "neighbor_id"))
-    // a meta-partitioned index compacts to the same (cell, meta) layout
-    val partCols =
-      if (cells.schema.fieldNames.contains("meta")) Seq("cell", "meta")
-      else Seq("cell")
-    graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      graft.sources.IndexIO.copyRows(spark, s"$vdir/centroids", s"$nv/centroids")
-      graft.sources.IndexIO.copyRows(spark, s"$vdir/codebook", s"$nv/codebook")
-      cells.write.mode("overwrite").partitionBy(partCols: _*).parquet(s"$nv/cells")
-      vecs.foreach(_.write.mode("overwrite").parquet(s"$nv/vectors"))
-    }
-    ()
-  }
-
   /** Serve top-k from a persisted [[buildIvfPqIndex]] index: the float
     * corpus is never read — centroid pick from the k-row broadcast
     * table, candidate scan partition-pruned to the probed cells, each
@@ -1924,7 +1803,7 @@ object SimilaritySearch {
     val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
-    val codes = liveChain(spark, indexDir, "cells")
+    val codes = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("neighbor_id"), col("codes"), col("rnorm"),
         col("cell").as("__cell"))
     val q = prepared(queries, idCol, vecCol, "query_id", "__qv", "__qn")
@@ -1951,7 +1830,7 @@ object SimilaritySearch {
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
     val allow = allowed.select(col(idCol).as("neighbor_id")).distinct()
-    val codes = liveChain(spark, indexDir, "cells")
+    val codes = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
       .select(col("neighbor_id"), col("codes"), col("rnorm"),
         col("cell").as("__cell"))
       .join(allow, Seq("neighbor_id"), "left_semi")
@@ -1982,7 +1861,7 @@ object SimilaritySearch {
     val cents = graft.sources.IndexIO.readTable(spark, s"$vdir/centroids")
       .select(col("cell").as("__cell"), col("centroid").as("__ctv"),
         col("cnorm").as("__ctn"))
-    val chain = liveChain(spark, indexDir, "cells")
+    val chain = graft.sources.IndexIO.liveTable(spark, indexDir, "cells", "neighbor_id")
     require(chain.schema.fieldNames.contains("meta"),
       s"searchIvfPqWhereMeta: index at $indexDir was not built with a metaCol " +
         "(cells carry no meta partition column)")
@@ -2033,14 +1912,12 @@ object SimilaritySearch {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       kShortlist: Int = 0, nProbe: Int = 4): DataFrame = {
-    val vecs = graft.sources.IndexIO.chainTable(spark, indexDir, "vectors")
+    val live = graft.sources.IndexIO.liveTable(spark,
+        graft.sources.IndexIO.chain(spark, indexDir), "vectors", "neighbor_id")
       .getOrElse(throw new IllegalStateException(
         s"ANN index at $indexDir has no vectors side-file (built before " +
           "self-contained rerank existed) — rebuild the index, or pass an " +
           "explicit rescore corpus"))
-    val live = graft.sources.IndexIO.withoutTombstoned(
-      vecs, graft.sources.IndexIO.chainTable(spark, indexDir, "tombstones"),
-      "neighbor_id")
       .select(col("neighbor_id"), col("vec").as("__cv"), col("vnorm").as("__cn"))
     rerankShortlist(spark, indexDir, queries, live, idCol, vecCol, k,
       kShortlist, nProbe)
@@ -2147,25 +2024,6 @@ object SimilaritySearch {
     ()
   }
 
-  /** Collapse a [[appendToPqIndex]] chain back to ONE segment — rebuilt
-    * from the stored codes alone (the float corpus is never read),
-    * published atomically so readers flip from the old chain to the
-    * compacted version in one pointer move. Results are identical by
-    * construction: the code rows are unioned unchanged.
-    */
-  def compactPqIndex(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    val segs = graft.sources.IndexIO.segments(spark, indexDir)
-    if (segs.length <= 1) return
-    val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
-    val codes = liveChain(spark, indexDir, "codes")
-    graft.sources.IndexIO.publish(spark, indexDir) { nv =>
-      graft.sources.IndexIO.copyRows(spark, s"$vdir/codebook", s"$nv/codebook")
-      codes.write.mode("overwrite").parquet(s"$nv/codes")
-    }
-    ()
-  }
-
   /** Serve top-k from a persisted PQ index: the float corpus is never
     * read — only `m` code bytes + one norm per row cross the scan, and
     * each pair costs `m` table-lookup adds. Index parameters come from
@@ -2176,7 +2034,7 @@ object SimilaritySearch {
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val vdir = graft.sources.IndexIO.resolve(spark, indexDir)
     val (m, kCodes, subDim, cb) = readCodebook(spark, vdir)
-    val codes = liveChain(spark, indexDir, "codes")
+    val codes = graft.sources.IndexIO.liveTable(spark, indexDir, "codes", "neighbor_id")
     import org.apache.spark.sql.GraftInternals.{toColumn, toExpression}
     val q = prepared(queries, idCol, vecCol, "query_id", "__qv", "__qn")
       .select(col("query_id"), col("__qn"),

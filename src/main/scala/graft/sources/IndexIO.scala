@@ -90,6 +90,12 @@ import org.apache.spark.sql.SparkSession
   *     vacuum skips it; committed versions within retention are
   *     pruning roots.
   *
+  * Deletes are log-ordered: a delete segment's `tombstones` table names
+  * ids whose rows in EARLIER segments are dead. The format stays behind
+  * this object: readers take a table's live rows from one resolved chain
+  * ([[liveTable]]), and a family's [[TombstoneLayout]] drives the one
+  * tombstone [[delete]] and the one copy [[compact]].
+  *
   * Reads ([[readTable]], [[chainTable]]) take each segment table's
   * schema from one parquet footer on the driver, with no
   * schema-inference Spark job. Small tables the driver holds anyway
@@ -112,6 +118,8 @@ object IndexIO {
   private val SegmentsFile = "_SEGMENTS"
   private val PinSep = "@v="
   private val AppendLockFile = "_APPEND_LOCK"
+  /** The table a delete segment keeps its ids in. */
+  private val Tombstones = "tombstones"
 
   /** How long a held append lock is trusted before a competing
     * publisher treats it as a crash leftover and takes it over. Delta
@@ -713,7 +721,9 @@ object IndexIO {
 
   /** [[segments]] with the tables each segment holds, for
     * [[chainTableOf]]: a reader that needs several tables of ONE
-    * version resolves the chain once and builds every read from it.
+    * version resolves the chain once and builds every read from it. The
+    * last segment is the version's own directory, where the model tables
+    * every segment carries forward live.
     */
   def chain(spark: SparkSession, path: String): Seq[Segment] = {
     val vdir = new Path(resolve(spark, path))
@@ -960,26 +970,29 @@ object IndexIO {
     * driver — every probe unions one scan per segment), applied-batch
     * marker count (how many stream batches the chain contains), and
     * the `table`'s total / live / tombstoned row counts under the
-    * log-ordered delete semantics ([[withoutTombstoned]]). Works on a
-    * [[pin]]ned path too (describes THAT version; the version count
-    * still reports the whole directory). Driver cost: one chain
-    * listing + three counting jobs over the chain's slim tables —
-    * never the corpus.
+    * log-ordered delete semantics ([[withoutTombstoned]]), all from one
+    * resolved chain. Works on a [[pin]]ned path too (describes THAT
+    * version; the version count still reports the whole directory).
+    * Driver cost: one chain listing + three counting jobs over the
+    * chain's slim tables — never the corpus.
     */
   def describe(spark: SparkSession, path: String,
       table: String, idCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.lit
     import spark.implicits._
     val nVersions = versions(spark, splitPin(path)._1).size.toLong
-    val segs = segments(spark, path)
-    val markers = segmentMarkers(spark, path)
-    val data = chainTable(spark, path, table)
-    val tomb = chainTable(spark, path, "tombstones")
+    val segs = chain(spark, path)
+    // the chain's last segment is its version's own directory
+    val vdir = new Path(segs.last.dir)
+    val markers = readAggregatedMarkers(
+      vdir.getFileSystem(spark.sparkContext.hadoopConfiguration), vdir, segs)
+    val data = chainTableOf(spark, segs, table)
+    val tomb = chainTableOf(spark, segs, Tombstones)
     val total = data.map(_.count()).getOrElse(0L)
     val live = data.map(d => withoutTombstoned(d, tomb, idCol).count())
       .getOrElse(0L)
     val nTombIds = tomb.map(_.select(idCol).distinct().count()).getOrElse(0L)
-    Seq((nVersions, segs.size.toLong, markers.size.toLong,
+    Seq((nVersions, segs.size.toLong, markers.distinct.size.toLong,
         total, live, nTombIds))
       .toDF("n_versions", "n_segments", "n_markers",
         "n_rows_total", "n_rows_live", "n_tombstone_ids")
@@ -1017,7 +1030,131 @@ object IndexIO {
     * broadcast makes too).
     */
   private[graft] def writeTombstones(ids: org.apache.spark.sql.DataFrame, seg: String): Unit =
-    ids.coalesce(1).distinct().write.mode("overwrite").parquet(s"$seg/tombstones")
+    ids.coalesce(1).distinct().write.mode("overwrite").parquet(s"$seg/$Tombstones")
+
+  /** How a tombstone index family lays out a version:
+    *
+    *  - `data`: the tables a copy compaction ([[compact]]) rewrites
+    *    from their live rows; none for a family that compacts by
+    *    rewriting its rows;
+    *  - `carried`: the model tables (centroids, codebooks, meta) that
+    *    every segment copies forward from the version before it, so
+    *    appends and probes read them from the newest version;
+    *  - `key`: the id column the data rows and the tombstones share.
+    */
+  final case class TombstoneLayout(data: Seq[DataTable], carried: Seq[String], key: String)
+
+  /** A data table of a [[TombstoneLayout]] and the layout a compaction
+    * writes it in: partitioned by those `partitionBy` columns its rows
+    * have, or hash-clustered on `clusterBy` and sorted by it and the key
+    * within each file. A table that is not `required` may be missing
+    * from a chain written before the family had it.
+    */
+  final case class DataTable(name: String, partitionBy: Seq[String] = Nil,
+      clusterBy: Seq[String] = Nil, required: Boolean = true)
+
+  /** Table `name` of the resolved chain `segs`, minus every row whose
+    * `key` a LATER segment's tombstones name ([[withoutTombstoned]]);
+    * None when no segment holds the table. Rows and tombstones come from
+    * one chain, so a publish landing mid-read cannot pair one version's
+    * rows with another version's tombstones.
+    */
+  def liveTable(spark: SparkSession, segs: Seq[Segment], name: String, key: String)
+      : Option[org.apache.spark.sql.DataFrame] =
+    liveTables(spark, segs, Seq(name), key).head
+
+  /** [[liveTable]] of the chain `path` resolves to now, for a reader
+    * that needs one table; a loud error when no segment holds it.
+    */
+  def liveTable(spark: SparkSession, path: String, name: String, key: String)
+      : org.apache.spark.sql.DataFrame =
+    liveTable(spark, chain(spark, path), name, key).getOrElse(
+      throw new IllegalStateException(s"index at $path has no $name table"))
+
+  /** [[liveTable]] for each of `names`, reading the chain's tombstones
+    * once. `after`, ids in column `key`, is one more tombstone set,
+    * ordered after the whole chain: the deletes of a change batch that a
+    * compaction folds in.
+    */
+  private[graft] def liveTables(spark: SparkSession, segs: Seq[Segment], names: Seq[String],
+      key: String, after: Option[org.apache.spark.sql.DataFrame] = None)
+      : Seq[Option[org.apache.spark.sql.DataFrame]] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val tombs = (chainTableOf(spark, segs, Tombstones) ++
+        after.map(_.select(col(key), lit(segs.length).as("__seg"))))
+      .reduceOption(_.unionByName(_))
+    names.map(chainTableOf(spark, segs, _).map(withoutTombstoned(_, tombs, key)))
+  }
+
+  /** Tombstone-delete `ids`, a one-column frame named `layout.key`, from
+    * the index at `path`: one [[publishDelta]] segment holding the
+    * current version's `layout.carried` tables (a missing one fails
+    * loudly) and the distinct ids as its tombstones
+    * ([[writeTombstones]]); `also` writes whatever else the segment
+    * carries. Readers drop the rows the ids name from every earlier
+    * segment ([[liveTable]]); a later append of an id resurrects it.
+    */
+  def delete(spark: SparkSession, path: String, layout: TombstoneLayout,
+      ids: org.apache.spark.sql.DataFrame, marker: Option[String])(
+      also: String => Unit): Unit = {
+    require(ids.columns.toSeq == Seq(layout.key),
+      s"IndexIO.delete: ids must be one column named ${layout.key}, got " +
+        ids.columns.mkString(", "))
+    publishDelta(spark, path, marker) { seg =>
+      // under a delta publish's lock, the current version is the parent
+      if (layout.carried.nonEmpty) {
+        val vdir = resolve(spark, path)
+        layout.carried.foreach(t => copyRows(spark, s"$vdir/$t", s"$seg/$t"))
+      }
+      writeTombstones(ids, seg)
+      also(seg)
+    }
+    ()
+  }
+
+  /** Collapse the chain at `path` to ONE segment: each `layout.data`
+    * table's live rows in its [[DataTable]] layout, and the version's
+    * `layout.carried` tables. Tombstoned rows are dropped physically and
+    * no tombstones carry forward, so a later append of an id resurrects
+    * it cleanly; applied-batch markers carry forward (a full
+    * [[publish]]). Serving results are identical by construction. A
+    * chain of one segment is left as it is.
+    */
+  def compact(spark: SparkSession, path: String, layout: TombstoneLayout): Unit = {
+    val segs = chain(spark, path)
+    if (segs.length <= 1) return
+    // the chain's last segment is its version's own directory
+    val vdir = segs.last.dir
+    val live = layout.data.zip(liveTables(spark, segs, layout.data.map(_.name), layout.key))
+      .flatMap { case (t, rows) =>
+        if (t.required && rows.isEmpty)
+          throw new IllegalStateException(s"IndexIO.compact: no ${t.name} table at $path")
+        rows.map(t -> _)
+      }
+    publish(spark, path) { nv =>
+      layout.carried.foreach(t => copyRows(spark, s"$vdir/$t", s"$nv/$t"))
+      live.foreach { case (t, rows) => writeTable(rows, t, layout.key, nv) }
+    }
+    ()
+  }
+
+  /** Write `rows` as table `t` of the version or segment `dir`, in `t`'s
+    * layout: partitioned by those `t.partitionBy` columns the rows have,
+    * or hash-shuffled on `t.clusterBy` (AQE sizing the partition count
+    * from the actual bytes) and sorted by it and `key` within each file,
+    * for row-group pruning.
+    */
+  private[graft] def writeTable(rows: org.apache.spark.sql.DataFrame, t: DataTable, key: String,
+      dir: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val laid =
+      if (t.clusterBy.isEmpty) rows
+      else rows.repartition(t.clusterBy.map(col): _*)
+        .sortWithinPartitions((t.clusterBy :+ key).map(col): _*)
+    val parts = t.partitionBy.filter(rows.columns.contains)
+    val w = laid.write.mode("overwrite")
+    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(s"$dir/${t.name}")
+  }
 
   private def versionDir(base: Path, version: String): Path =
     new Path(base, s"v-$version")

@@ -23,7 +23,9 @@ import graft.sources.IndexIO
   *  - TOMBSTONE families (all but the three below) delete first — a
   *    log-ordered segment of the dying ids, so a changed row's new
   *    version, appended after it, serves — then append. An empty half
-  *    publishes nothing, and a marker rides the last publish.
+  *    publishes nothing, and a marker rides the last publish. The
+  *    family's delete and compaction are its [[IndexFamily.Stored]]
+  *    value, which a batch caller also builds on its own.
   *  - RETRACTION families — [[IndexFamily.dsir]],
   *    [[IndexFamily.dsirByGroup]] and [[IndexFamily.eval]] — hold
   *    additive counts, so a delete must unsee the retired rows' counts
@@ -48,9 +50,22 @@ final class IndexFamily private (
     diffKey: DataFrame => DataFrame,
     private[graft] val build: (DataFrame, Option[String]) => Unit,
     private[graft] val append: (DataFrame, Option[String]) => Unit,
-    deletes: Either[IndexFamily.Retraction, (DataFrame, Option[String]) => Unit],
-    private[graft] val compact: SparkSession => Unit,
+    deletes: Either[IndexFamily.Retraction, IndexFamily.Stored],
+    compaction: SparkSession => Unit,
     private[graft] val fold: Option[(SparkSession, ChangeSet, String) => Unit] = None) {
+
+  /** Delete `rows` from the committed index. A tombstone family reads
+    * only the rows' `idCol`; a retraction family takes the retired rows
+    * themselves (its text column, and its group column when it has one)
+    * and unsees their counts.
+    */
+  def delete(rows: DataFrame): Unit = applyChanges(ChangeSet(None, Some(rows)), None)
+
+  /** Collapse the committed index's chain to one segment of live rows;
+    * applied-batch markers carry forward. A one-segment chain is left as
+    * it is.
+    */
+  def compact(spark: SparkSession): Unit = compaction(spark)
 
   /** The change set of one change-feed micro-batch (status in `statusCol`). */
   private[graft] def feedChanges(batch: DataFrame, statusCol: String): ChangeSet =
@@ -81,8 +96,8 @@ final class IndexFamily private (
         // an empty half is an empty frame of the other half's shape
         r.publish(cs.adds.getOrElse(cs.dels.get.limit(0)), cs.dels.getOrElse(cs.adds.get.limit(0)),
           marker)
-      case Right(delete) =>
-        cs.dels.foreach(delete(_, marker.filter(_ => cs.adds.isEmpty)))
+      case Right(stored) =>
+        cs.dels.foreach(stored.deleteMarked(_, marker.filter(_ => cs.adds.isEmpty)))
         cs.adds.foreach { a =>
           if (!IndexIO.commits(append(a, marker)) && cs.dels.nonEmpty)
             marker.foreach(m => IndexIO.publishDelta(a.sparkSession, path, m)(_ => ()))
@@ -131,12 +146,108 @@ object IndexFamily {
   private final case class Retraction(
       retired: DataFrame => DataFrame, publish: (DataFrame, DataFrame, Option[String]) => Unit)
 
-  /** A tombstone family whose snapshots diff on `content`. */
-  private def tombstoned(path: String, idCol: String, content: String)(
-      build: Write, append: Write, delete: Write, compact: SparkSession => Unit,
+  /** A committed tombstone index's batch reach: [[delete]] and
+    * [[compact]] read only the index's `path`, the rows' id column and
+    * the family's layout, so a batch caller names no build parameter.
+    * The companion has one constructor per tombstone family, each taking
+    * `(idCol, path)`; the family's value holds the same one.
+    */
+  final class Stored private (val path: String, private[IndexFamily] val idCol: String,
+      private[streaming] val deleteMarked: Write, compaction: SparkSession => Unit) {
+
+    /** Tombstone the rows `ids` names in its id column: one segment. */
+    def delete(ids: DataFrame): Unit = deleteMarked(ids, None)
+
+    /** Collapse the chain to one segment of live rows; applied-batch
+      * markers carry forward. A one-segment chain is left as it is.
+      */
+    def compact(spark: SparkSession): Unit = compaction(spark)
+  }
+
+  object Stored {
+    /** Deletes and compacts through [[graft.sources.IndexIO.delete]] and
+      * [[graft.sources.IndexIO.compact]] over `layout`, unless the family
+      * rewrites rows in a `delete` or `compact` of its own.
+      */
+    private def of(idCol: String, path: String, layout: IndexIO.TombstoneLayout)(
+        delete: Option[Write] = None, compact: Option[SparkSession => Unit] = None): Stored =
+      new Stored(path, idCol,
+        delete.getOrElse((d, m) => IndexIO.delete(d.sparkSession, path, layout,
+          d.select(col(idCol).as(layout.key)), m)(_ => ())),
+        compact.getOrElse(IndexIO.compact(_, path, layout)))
+
+    /** The postings families' stats-correcting delete and their
+      * compaction (the full postings schema, positions included).
+      */
+    def bm25(idCol: String, path: String): Stored = new Stored(path, idCol,
+      (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol, m),
+      Search.compactBm25Index(_, path))
+
+    /** [[bm25]]: the doc-id tombstone covers both serving paths. */
+    def lexical(idCol: String, path: String): Stored = bm25(idCol, path)
+
+    /** Deletes carry the meta forward; compaction re-derives the postings
+      * from the live sketches.
+      */
+    def minhash(idCol: String, path: String): Stored =
+      of(idCol, path, IndexIO.TombstoneLayout(Nil, Seq("meta"), "doc_id"))(
+        compact = Some(Dedup.compactMinhashIndex(_, path)))
+
+    /** The `cells` table of the IVF families, partitioned by cell (and by
+      * meta too on an IVF-PQ index built with a meta column).
+      */
+    private val cells = IndexIO.DataTable("cells", partitionBy = Seq("cell", "meta"))
+
+    def ivf(idCol: String, path: String): Stored =
+      of(idCol, path, IndexIO.TombstoneLayout(Seq(cells), Seq("centroids"), "neighbor_id"))()
+
+    def ivfSq8(idCol: String, path: String): Stored = ivf(idCol, path)
+
+    def pq(idCol: String, path: String): Stored = of(idCol, path,
+      IndexIO.TombstoneLayout(Seq(IndexIO.DataTable("codes")), Seq("codebook"), "neighbor_id"))()
+
+    /** The `vectors` rerank side-file is compacted when the index has one. */
+    def ivfPq(idCol: String, path: String): Stored = of(idCol, path, IndexIO.TombstoneLayout(
+      Seq(cells, IndexIO.DataTable("vectors", required = false)), Seq("centroids", "codebook"),
+      "neighbor_id"))()
+
+    /** Deletes carry the blocking model forward; compaction rewrites the
+      * members with their resolved labels.
+      */
+    def semDedup(idCol: String, path: String): Stored = of(idCol, path,
+      IndexIO.TombstoneLayout(Nil, Seq("centroids", "meta"), "neighbor_id"))(
+      compact = Some(SimilaritySearch.compactSemDedupIndex(_, path)))
+
+    /** The perceptual-hash families' shared 8-byte `hashes` table. */
+    private def hashes(idCol: String, path: String): Stored =
+      of(idCol, path, IndexIO.TombstoneLayout(Seq(IndexIO.DataTable("hashes")), Nil, idCol))()
+
+    def aHash(idCol: String, path: String): Stored = hashes(idCol, path)
+    def pHash(idCol: String, path: String): Stored = hashes(idCol, path)
+    def audioHash(idCol: String, path: String): Stored = hashes(idCol, path)
+
+    def audioFp(idCol: String, path: String): Stored =
+      of(idCol, path, IndexIO.TombstoneLayout(Seq(IndexIO.DataTable("postings")), Nil, idCol))()
+
+    def scene(idCol: String, path: String): Stored =
+      of(idCol, path, IndexIO.TombstoneLayout(Seq(IndexIO.DataTable("scenes")), Nil, idCol))()
+  }
+
+  /** A tombstone family of `stored` whose snapshots diff on `diffKey`. */
+  private def tombstoned(stored: Stored, diffKey: DataFrame => DataFrame)(
+      build: Write, append: Write,
       fold: Option[(SparkSession, ChangeSet, String) => Unit] = None): IndexFamily =
-    new IndexFamily(path, idCol, _.select(idCol, content), build, append, Right(delete),
-      compact, fold)
+    new IndexFamily(stored.path, stored.idCol, diffKey, build, append, Right(stored),
+      stored.compact, fold)
+
+  /** A tombstone family of `stored` whose snapshots diff on its id and
+    * `valueCol`: a vector family appends with the frozen model trained at
+    * bootstrap; a binary column diffs by content hash like text, so a
+    * re-encoded blob is a changed row and only it decodes again.
+    */
+  private def byValue(stored: Stored, valueCol: String)(build: Write, append: Write)
+      : IndexFamily =
+    tombstoned(stored, _.select(stored.idCol, valueCol))(build, append)
 
   /** The fixed target corpus a DSIR bootstrap profiles: `df`'s `textCol`
     * hashed into `buckets` buckets.
@@ -161,37 +272,21 @@ object IndexFamily {
       (a, m) => Search.buildLexicalIndex(a, idCol, textCol, path, marker = m),
       (a, m) => Search.appendToLexicalIndex(a, idCol, textCol, path, marker = m))
 
-  /** The postings families' shared delete (stats-correcting), compaction
-    * (the full postings schema, positions included) and CDC fold.
-    */
+  /** The postings families' shared [[Stored.bm25]] and CDC fold. */
   private def postings(idCol: String, textCol: String, path: String)(
       build: Write, append: Write): IndexFamily =
-    tombstoned(path, idCol, textCol)(build, append,
-      (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol, m),
-      s => Search.compactBm25Index(s, path),
+    tombstoned(Stored.bm25(idCol, path), _.select(idCol, textCol))(build, append,
       Some((s, cs, m) => Search.compactBm25Index(s, path,
         Some(Search.CdcBatch(cs.dels, cs.adds, idCol, textCol, m)))))
 
   /** [[graft.operators.Dedup.buildMinhashIndex]]: appends band with the
-    * index's own stored meta.
+    * index's own stored meta ([[Stored.minhash]]).
     */
   def minhash(idCol: String, textCol: String, path: String, n: Int = 3,
-      numHashes: Int = 128, bands: Int = 32, bandBuckets: Int = 64): IndexFamily =
-    tombstoned(path, idCol, textCol)(
-      (a, m) => Dedup.buildMinhashIndex(a, idCol, textCol, path, n, numHashes, bands,
-        bandBuckets, m),
-      (a, m) => Dedup.appendToMinhashIndex(a, idCol, textCol, path, bandBuckets, m),
-      (d, m) => Dedup.deleteFromMinhashIndex(d.sparkSession, path, d, idCol, m),
-      s => Dedup.compactMinhashIndex(s, path, bandBuckets))
-
-  /** A vector family: deletes through the cells-schema-agnostic
-    * [[graft.operators.SimilaritySearch.deleteFromAnnIndex]], appends
-    * with the frozen model trained at bootstrap.
-    */
-  private def ann(idCol: String, vecCol: String, path: String)(
-      build: Write, append: Write, compact: SparkSession => Unit): IndexFamily =
-    tombstoned(path, idCol, vecCol)(build, append,
-      (d, m) => SimilaritySearch.deleteFromAnnIndex(d.sparkSession, path, d, idCol, m), compact)
+      numHashes: Int = 128, bands: Int = 32): IndexFamily =
+    byValue(Stored.minhash(idCol, path), textCol)(
+      (a, m) => Dedup.buildMinhashIndex(a, idCol, textCol, path, n, numHashes, bands, m),
+      (a, m) => Dedup.appendToMinhashIndex(a, idCol, textCol, path, m))
 
   /** [[graft.operators.SimilaritySearch.buildIvfIndex]]: added and
     * changed vectors assign to the FROZEN centroids (no retrain on the
@@ -200,10 +295,9 @@ object IndexFamily {
     */
   def ivf(idCol: String, vecCol: String, path: String, nCentroids: Int = 16,
       iters: Int = 5): IndexFamily =
-    ann(idCol, vecCol, path)(
+    byValue(Stored.ivf(idCol, path), vecCol)(
       (a, m) => SimilaritySearch.buildIvfIndex(a, idCol, vecCol, path, nCentroids, iters, m),
-      (a, m) => SimilaritySearch.appendToIvfIndex(a.sparkSession, path, a, idCol, vecCol, m),
-      s => SimilaritySearch.compactIvfIndex(s, path))
+      (a, m) => SimilaritySearch.appendToIvfIndex(a.sparkSession, path, a, idCol, vecCol, m))
 
   /** [[graft.operators.SimilaritySearch.buildIvfSq8Index]]: float
     * centroids, SQ8-quantized cells. Appends assign on the float values
@@ -213,69 +307,55 @@ object IndexFamily {
     */
   def ivfSq8(idCol: String, vecCol: String, path: String, nCentroids: Int = 16,
       iters: Int = 5): IndexFamily =
-    ann(idCol, vecCol, path)(
+    byValue(Stored.ivfSq8(idCol, path), vecCol)(
       (a, m) => SimilaritySearch.buildIvfSq8Index(a, idCol, vecCol, path, nCentroids, iters, m),
-      (a, m) => SimilaritySearch.appendToIvfSq8Index(a.sparkSession, path, a, idCol, vecCol, m),
-      s => SimilaritySearch.compactIvfIndex(s, path))
+      (a, m) => SimilaritySearch.appendToIvfSq8Index(a.sparkSession, path, a, idCol, vecCol, m))
 
   /** [[graft.operators.SimilaritySearch.buildPqIndex]]: the flat PQ code table. */
   def pq(idCol: String, vecCol: String, path: String, m: Int = 32,
       kCodes: Int = 32): IndexFamily =
-    ann(idCol, vecCol, path)(
+    byValue(Stored.pq(idCol, path), vecCol)(
       (a, mk) => SimilaritySearch.buildPqIndex(a, idCol, vecCol, path, m = m,
         kCodes = kCodes, marker = mk),
-      (a, mk) => SimilaritySearch.appendToPqIndex(a, idCol, vecCol, path, mk),
-      s => SimilaritySearch.compactPqIndex(s, path))
+      (a, mk) => SimilaritySearch.appendToPqIndex(a, idCol, vecCol, path, mk))
 
   /** [[graft.operators.SimilaritySearch.buildIvfPqIndex]]: frozen
     * centroids AND codebooks encode every later row.
     */
   def ivfPq(idCol: String, vecCol: String, path: String, nCentroids: Int = 16,
       m: Int = 32, kCodes: Int = 32): IndexFamily =
-    ann(idCol, vecCol, path)(
+    byValue(Stored.ivfPq(idCol, path), vecCol)(
       (a, mk) => SimilaritySearch.buildIvfPqIndex(a, idCol, vecCol, path,
         nCentroids = nCentroids, m = m, kCodes = kCodes, marker = mk),
-      (a, mk) => SimilaritySearch.appendToIvfPqIndex(a, idCol, vecCol, path, marker = mk),
-      s => SimilaritySearch.compactIvfPqIndex(s, path))
+      (a, mk) => SimilaritySearch.appendToIvfPqIndex(a, idCol, vecCol, path, marker = mk))
 
   /** [[graft.operators.SimilaritySearch.buildSemDedupIndex]]: appends
-    * resolve against the frozen blocking model; a deleted keeper's
-    * cluster re-elects at read.
+    * resolve against the frozen blocking model ([[Stored.semDedup]]); a
+    * deleted member leaves every view, and its component's keeper
+    * re-elects at read.
     */
   def semDedup(idCol: String, vecCol: String, path: String, k: Int, threshold: Double,
       iters: Int = 5): IndexFamily =
-    tombstoned(path, idCol, vecCol)(
+    byValue(Stored.semDedup(idCol, path), vecCol)(
       (a, m) => SimilaritySearch.buildSemDedupIndex(a, idCol, vecCol, path, k, threshold,
         iters, m),
-      (a, m) => SimilaritySearch.applySemDedupBatch(a.sparkSession, path, a, idCol, vecCol, m),
-      (d, m) => SimilaritySearch.deleteFromSemDedupIndex(d.sparkSession, path, d, idCol, m),
-      s => SimilaritySearch.compactSemDedupIndex(s, path))
-
-  /** A perceptual-hash family over the shared 8-byte `hashes` layout:
-    * the binary column diffs by content hash like text, so a re-encoded
-    * blob is a changed row and only it decodes again.
-    */
-  private def hashes(idCol: String, binCol: String, path: String)(
-      build: Write, append: Write): IndexFamily =
-    tombstoned(path, idCol, binCol)(build, append,
-      (d, m) => Multimodal.deleteFromAHashIndex(d, idCol, path, m),
-      s => Multimodal.compactAHashIndex(s, path, idCol))
+      (a, m) => SimilaritySearch.applySemDedupBatch(a.sparkSession, path, a, idCol, vecCol, m))
 
   /** [[graft.multimodal.Multimodal.buildAHashIndex]]: image average-hash. */
   def aHash(idCol: String, binCol: String, path: String): IndexFamily =
-    hashes(idCol, binCol, path)(
+    byValue(Stored.aHash(idCol, path), binCol)(
       (a, m) => Multimodal.buildAHashIndex(a, idCol, binCol, path, m),
       (a, m) => Multimodal.appendToAHashIndex(a, idCol, binCol, path, m))
 
   /** [[graft.multimodal.Multimodal.buildPHashIndex]]: the crop/rescale-robust DCT hash. */
   def pHash(idCol: String, binCol: String, path: String): IndexFamily =
-    hashes(idCol, binCol, path)(
+    byValue(Stored.pHash(idCol, path), binCol)(
       (a, m) => Multimodal.buildPHashIndex(a, idCol, binCol, path, m),
       (a, m) => Multimodal.appendToPHashIndex(a, idCol, binCol, path, m))
 
   /** [[graft.multimodal.Multimodal.buildAudioHashIndex]]: the audio envelope hash. */
   def audioHash(idCol: String, binCol: String, path: String): IndexFamily =
-    hashes(idCol, binCol, path)(
+    byValue(Stored.audioHash(idCol, path), binCol)(
       (a, m) => Multimodal.buildAudioHashIndex(a, idCol, binCol, path, m),
       (a, m) => Multimodal.appendToAudioHashIndex(a, idCol, binCol, path, m))
 
@@ -285,11 +365,9 @@ object IndexFamily {
     */
   def audioFp(idCol: String, binCol: String, path: String, windowSamples: Int = 400,
       k: Int = 16, w: Int = 4): IndexFamily =
-    tombstoned(path, idCol, binCol)(
+    byValue(Stored.audioFp(idCol, path), binCol)(
       (a, m) => Multimodal.buildAudioFpIndex(a, idCol, binCol, path, windowSamples, k, w, m),
-      (a, m) => Multimodal.appendToAudioFpIndex(a, idCol, binCol, path, windowSamples, k, w, m),
-      (d, m) => Multimodal.deleteFromAudioFpIndex(d, idCol, path, m),
-      s => Multimodal.compactAudioFpIndex(s, path, idCol))
+      (a, m) => Multimodal.appendToAudioFpIndex(a, idCol, binCol, path, windowSamples, k, w, m))
 
   /** [[graft.multimodal.Multimodal.buildSceneIndex]] over frame rows
     * `(idCol, frameIdxCol, frameBinCol)`; a video's frames must arrive
@@ -315,13 +393,11 @@ object IndexFamily {
       .distinct()
       .groupBy(col(idCol)).agg(bit_xor(col("__graft_fh")).as("__graft_fp")))(
       f => df.select(idCol, f))
-    new IndexFamily(path, idCol, fingerprint,
+    tombstoned(Stored.scene(idCol, path), fingerprint)(
       (a, m) => Multimodal.buildSceneIndex(frames(a), idCol, frameIdxCol, frameBinCol, path,
         sceneMaxHamming, m),
       (a, m) => Multimodal.appendToSceneIndex(frames(a), idCol, frameIdxCol, frameBinCol, path,
-        sceneMaxHamming, m),
-      Right((d, m) => Multimodal.deleteFromSceneIndex(d, idCol, path, m)),
-      s => Multimodal.compactSceneIndex(s, path, idCol))
+        sceneMaxHamming, m))
   }
 
   /** [[graft.operators.Dsir.buildDsirIndex]]: a retraction family with no

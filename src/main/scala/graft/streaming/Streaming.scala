@@ -583,19 +583,16 @@ object Streaming {
     // re-lists files under these frozen segment dirs, so a concurrent
     // index rebuild/append (which publishes a sibling version and flips
     // _LATEST) can never tear the long-running gate mid-stream
-    val vdir = graft.sources.IndexIO.resolve(spark, indexPath)
-    // chainTable skips tombstone-only delete segments (they carry no
-    // postings/sketches); deleted docs are filtered from the STATIC
-    // sketches side, so the stream-static join stays stateless
-    val tombs = graft.sources.IndexIO.chainTable(spark, indexPath, "tombstones")
-    def table(name: String): DataFrame = {
-      val data = graft.sources.IndexIO.chainTable(spark, indexPath, name).getOrElse(
-        throw new IllegalStateException(s"index at $indexPath has no $name table"))
-      if (name == "sketches")
-        graft.sources.IndexIO.withoutTombstoned(data, tombs, "doc_id")
-      else data.drop("__seg")
-    }
-    val meta = graft.sources.IndexIO.readRows(spark, s"$vdir/meta").head
+    val segs = graft.sources.IndexIO.chain(spark, indexPath)
+    // tombstone-only delete segments carry no postings/sketches; deleted
+    // docs are filtered from the STATIC sketches side, so the
+    // stream-static join stays stateless
+    def table(name: String): DataFrame = (
+      if (name == "sketches") graft.sources.IndexIO.liveTable(spark, segs, name, "doc_id")
+      else graft.sources.IndexIO.chainTableOf(spark, segs, name).map(_.drop("__seg"))
+    ).getOrElse(throw new IllegalStateException(s"index at $indexPath has no $name table"))
+    // the version's meta lives in its own directory, the chain's last segment
+    val meta = graft.sources.IndexIO.readRows(spark, s"${segs.last.dir}/meta").head
     val (n, numHashes, bands) =
       (meta.getAs[Int]("n"), meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"))
     val sh = stream
@@ -1119,15 +1116,9 @@ object Streaming {
     import graft.functions.TextFunctions
     require(minContainment >= 0.0 && minContainment <= 1.0,
       s"hybridDecontaminateFlags: minContainment outside [0,1]: $minContainment")
-    // resolve the committed versions ONCE at plan time (the long-running
+    // resolve the committed version ONCE at plan time (the long-running
     // gate must not tear across a concurrent index publish)
-    graft.sources.IndexIO.resolve(spark, lexIndexPath)
-    val tombs = graft.sources.IndexIO.chainTable(spark, lexIndexPath, "tombstones")
-    val postings = graft.sources.IndexIO.withoutTombstoned(
-      graft.sources.IndexIO.chainTable(spark, lexIndexPath, "postings").getOrElse(
-        throw new IllegalStateException(
-          s"lexical index at $lexIndexPath has no postings table")),
-      tombs, "doc_id")
+    val postings = graft.sources.IndexIO.liveTable(spark, lexIndexPath, "postings", "doc_id")
       .select(col("term").as("__t"), col("doc_id").as("eval_id"))
     val grid = math.round(minContainment * 10000)
 

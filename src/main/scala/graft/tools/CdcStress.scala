@@ -177,13 +177,13 @@ object CdcStress {
       val mhIdx = java.nio.file.Files.createTempDirectory(s"cdc_sc_mh_$m").toString
       Dedup.buildMinhashIndex(corpusM, "doc_id", "text", mhIdx)
       t(f"minhash maintainer batch @ ${m}x corpus ($nM docs)") {
-        Dedup.deleteFromMinhashIndex(spark, mhIdx, deltaIds, "doc_id")
+        IndexFamily.Stored.minhash("doc_id", mhIdx).delete(deltaIds)
         Dedup.appendToMinhashIndex(deltaDocs, "doc_id", "text", mhIdx)
       }
       val ivIdx = java.nio.file.Files.createTempDirectory(s"cdc_sc_iv_$m").toString
       SimilaritySearch.buildIvfIndex(embM, "vec_id", "embedding", ivIdx)
       t(f"ivf maintainer batch @ ${m}x corpus ($nE vecs)") {
-        SimilaritySearch.deleteFromAnnIndex(spark, ivIdx, deltaVecIds, "vec_id")
+        IndexFamily.Stored.ivf("vec_id", ivIdx).delete(deltaVecIds)
         SimilaritySearch.appendToIvfIndex(spark, ivIdx, deltaVecs, "vec_id",
           "embedding")
       }

@@ -487,7 +487,7 @@ class MultimodalSuite extends SparkSpec {
     } yield (a, sa, b, sb, 0)).toSet
     assert(probe() == naive)
     // tombstoning an index VIDEO drops all its scenes; re-append resurrects
-    Multimodal.deleteFromSceneIndex(Seq(0L).toDF("id"), "id", p)
+    IndexFamily.Stored.scene("id", p).delete(Seq(0L).toDF("id"))
     assert(probe() == naive.filterNot(_._3 == 0L))
     Multimodal.appendToSceneIndex(
       idxSide.filter($"id" === 0L), "id", "frame_idx", "payload", p)
@@ -525,12 +525,11 @@ class MultimodalSuite extends SparkSpec {
     assert(naive.nonEmpty)
     // tombstones: a deleted index clip stops matching without rebuild
     val victim = naive.head._2
-    Multimodal.deleteFromAudioFpIndex(
-      Seq(victim).toDF("id"), "id", p)
+    IndexFamily.Stored.audioFp("id", p).delete(Seq(victim).toDF("id"))
     assert(probe() == naive.filterNot(_._2 == victim))
     // compaction: tombstoned rows die physically, one fresh segment,
     // probes unchanged; re-appending the victim resurrects it
-    Multimodal.compactAudioFpIndex(spark, p, "id")
+    IndexFamily.Stored.audioFp("id", p).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, p).length == 1)
     assert(probe() == naive.filterNot(_._2 == victim))
     Multimodal.appendToAudioFpIndex(
@@ -604,8 +603,35 @@ class MultimodalSuite extends SparkSpec {
     assert(naive.nonEmpty)
     // takedown: the deleted index id stops matching without a rebuild
     val victim = naive.head._2
-    Multimodal.deleteFromAHashIndex(Seq(victim).toDF("id"), "id", p)
+    IndexFamily.Stored.aHash("id", p).delete(Seq(victim).toDF("id"))
     assert(probe() == naive.filterNot(_._2 == victim))
+  }
+
+  test("dedupAgainstAHashIndex reads one version: a compaction mid-call cannot resurrect a " +
+      "delete") {
+    import graft.operators.{CompactOnOpenAbstractFileSystem, CompactOnOpenFileSystem}
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.cmpctfs.impl", classOf[CompactOnOpenFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.cmpctfs.impl",
+      classOf[CompactOnOpenAbstractFileSystem].getName)
+    val base = s"cmpctfs://${java.nio.file.Files.createTempDirectory("graft_ahash_onever_")}/idx"
+    val imgs = (0 until 6).map(i => (i.toLong, gradImage(500 + i, 0, 0)))
+    Multimodal.buildAHashIndex(imgs.take(3).toDF("id", "payload"), "id", "payload", base)
+    Multimodal.appendToAHashIndex(imgs.drop(3).toDF("id", "payload"), "id", "payload", base)
+    IndexFamily.Stored.aHash("id", base).delete(Seq(1L).toDF("id"))
+    val probes = imgs.take(2).map { case (i, b) => (i + 100L, b) }.toDF("id", "payload")
+    CompactOnOpenFileSystem.fired = false
+    CompactOnOpenFileSystem.onPointerOpen =
+      Some(() => IndexFamily.Stored.aHash("id", base).compact(spark))
+    val served =
+      try Multimodal.dedupAgainstAHashIndex(spark, probes, "id", "payload", base, maxHamming = 0)
+      finally CompactOnOpenFileSystem.onPointerOpen = None
+    assert(CompactOnOpenFileSystem.fired, "the compaction hook never ran")
+    assert(graft.sources.IndexIO.segments(spark, base).size == 1)
+    val got = served.select("index_id").as[Long].collect().toSet
+    assert(!got.contains(1L), "deleted image 1 came back")
+    // the six images are one noise-free checkerboard: every live id matches
+    assert(got == Set(0L, 2L, 3L, 4L, 5L))
   }
 
   test("image dedup gate serves a STREAM: MemoryStream probe == batch probe") {
@@ -790,7 +816,7 @@ class MultimodalSuite extends SparkSpec {
     assert(naive.forall { case (a, b, _) => a % 3 == b % 3 })
     // tombstone a victim: its matches vanish, others stay
     val victim = naive.head._2
-    Multimodal.deleteFromAHashIndex(Seq(victim).toDF("id"), "id", p)
+    IndexFamily.Stored.pHash("id", p).delete(Seq(victim).toDF("id"))
     assert(probe() == naive.filterNot(_._2 == victim))
   }
 

@@ -568,7 +568,7 @@ class DedupSuite extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run() == Set((2L, 1L), (4L, 3L)))
     // takedown of doc 3: matches against it vanish, doc 1 unaffected
-    Dedup.deleteFromMinhashIndex(spark, dir, Seq(3L).toDF("doc_id"), "doc_id")
+    graft.streaming.IndexFamily.Stored.minhash("doc_id", dir).delete(Seq(3L).toDF("doc_id"))
     assert(run() == Set((2L, 1L)))
     // re-appending the doc AFTER its delete resurrects it (log order:
     // the tombstone only covers data indexed before it)
@@ -578,7 +578,7 @@ class DedupSuite extends SparkSpec {
     assert(run() == Set((2L, 1L), (4L, 3L)))
     // delete again, then compact: one physical segment, no tombstone
     // table carried forward, deleted doc gone from the stored sketches
-    Dedup.deleteFromMinhashIndex(spark, dir, Seq(3L).toDF("doc_id"), "doc_id")
+    graft.streaming.IndexFamily.Stored.minhash("doc_id", dir).delete(Seq(3L).toDF("doc_id"))
     Dedup.compactMinhashIndex(spark, dir)
     val segs = graft.sources.IndexIO.segments(spark, dir)
     assert(segs.length == 1)

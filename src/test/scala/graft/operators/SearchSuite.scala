@@ -896,6 +896,32 @@ class SearchSuite extends SparkSpec with AdaptiveSparkPlanHelper {
       Search.bm25TopK(docs.filter($"doc_id" =!= 2L), "doc_id", "text", terms, k = 10),
       served)
   }
+
+  test("phraseSearchIndex reads one version: a compaction mid-call cannot resurrect a delete") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.cmpctfs.impl", classOf[CompactOnOpenFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.cmpctfs.impl",
+      classOf[CompactOnOpenAbstractFileSystem].getName)
+    val base = s"cmpctfs://${Files.createTempDirectory("graft_pos_onever_")}/idx"
+    val docs = Seq((1L, "scan then filter rows"), (2L, "scan then filter again"),
+      (3L, "filter before scan"), (4L, "a scan then filter pass")).toDF("doc_id", "text")
+    Search.buildPositionalIndex(docs.filter($"doc_id" <= 2), "doc_id", "text", base)
+    Search.appendToPositionalIndex(docs.filter($"doc_id" > 2), "doc_id", "text", base)
+    Search.deleteFromPositionalIndex(spark, base, Seq(2L).toDF("doc_id"), "doc_id")
+    val phrase = Seq("scan", "then", "filter")
+    CompactOnOpenFileSystem.fired = false
+    CompactOnOpenFileSystem.onPointerOpen =
+      Some(() => Search.compactPositionalIndex(spark, base))
+    val served =
+      try Search.phraseSearchIndex(spark, base, phrase, k = 10)
+      finally CompactOnOpenFileSystem.onPointerOpen = None
+    assert(CompactOnOpenFileSystem.fired, "the compaction hook never ran")
+    assert(graft.sources.IndexIO.segments(spark, base).size == 1)
+    assert(!served.collect().exists(_.getLong(0) == 2L), "deleted doc 2 came back")
+    assertSameRows(
+      Search.phraseTopK(docs.filter($"doc_id" =!= 2L), "doc_id", "text", phrase, k = 10),
+      served)
+  }
 }
 
 /** The local file system under the `cmpctfs` scheme, with a one-shot hook

@@ -448,8 +448,8 @@ class SimilaritySearchSuite extends SparkSpec {
     // takedown of the Y KEEPER: the row vanishes from every view and
     // the keep-the-atypical rule RE-ELECTS among the survivors — no
     // segment rewrite
-    SimilaritySearch.deleteFromSemDedupIndex(spark, dir,
-      Seq(12L).toDF("id"), "id")
+    graft.streaming.IndexFamily.Stored.semDedup("id", dir)
+      .delete(Seq(12L).toDF("id"))
     val afterDel = status()
     assert(!afterDel.contains(12L))
     assert(afterDel.size == 9)
@@ -569,8 +569,7 @@ class SimilaritySearchSuite extends SparkSpec {
     assert(moved.getDouble(2) < 0.9 && moved.getDouble(2) < self.getDouble(2),
       s"drifted corpus must pull the cosine down: ${moved.getDouble(2)}")
     // tombstoned vectors leave the quantized side of the signal
-    SimilaritySearch.deleteFromAnnIndex(spark, dir,
-      (0 until 30).toDF("id"), "id")
+    graft.streaming.IndexFamily.Stored.ivf("id", dir).delete((0 until 30).toDF("id"))
     val afterDel = SimilaritySearch.ivfIndexDrift(spark, dir, vecs, "emb").head
     assert(afterDel.getLong(0) == 90L)
   }
@@ -604,7 +603,7 @@ class SimilaritySearchSuite extends SparkSpec {
     val bigger = key(SimilaritySearch.searchIvf(spark, dir, q, "id", "emb", k = 3, nProbe = 4))
     assert(bigger.size == 30)
     // compaction collapses the chain to one segment, results unchanged
-    SimilaritySearch.compactIvfIndex(spark, dir)
+    graft.streaming.IndexFamily.Stored.ivf("id", dir).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(key(SimilaritySearch.searchIvf(spark, dir, q, "id", "emb", k = 3, nProbe = 4))
       == bigger)
@@ -621,7 +620,7 @@ class SimilaritySearchSuite extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
     SimilaritySearch.buildIvfIndex(vecs, "id", "emb", dir, nCentroids = 4, iters = 3)
     val deleted = vecs.filter($"id" % 5 === 0)
-    SimilaritySearch.deleteFromAnnIndex(spark, dir, deleted.select("id"), "id")
+    graft.streaming.IndexFamily.Stored.ivf("id", dir).delete(deleted.select("id"))
     val q = vecs.filter($"id" < 10)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toSet
@@ -636,8 +635,8 @@ class SimilaritySearchSuite extends SparkSpec {
     assert(run() == key(SimilaritySearch.bruteForceTopK(q, vecs, "id", "emb", k = 3)))
     // delete again + compact: one physical segment, tombstones not
     // carried forward, dead rows out of the stored cells
-    SimilaritySearch.deleteFromAnnIndex(spark, dir, deleted.select("id"), "id")
-    SimilaritySearch.compactIvfIndex(spark, dir)
+    graft.streaming.IndexFamily.Stored.ivf("id", dir).delete(deleted.select("id"))
+    graft.streaming.IndexFamily.Stored.ivf("id", dir).compact(spark)
     val segs = graft.sources.IndexIO.segments(spark, dir)
     assert(segs.length == 1)
     assert(!new java.io.File(s"${segs.head}/tombstones").exists)
@@ -655,13 +654,12 @@ class SimilaritySearchSuite extends SparkSpec {
     }.toDF("id", "emb")
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_del").toString
     SimilaritySearch.buildPqIndex(vecs, "id", "emb", dir, m = 4, kCodes = 8)
-    SimilaritySearch.deleteFromAnnIndex(spark, dir,
-      vecs.filter($"id" < 40).select("id"), "id")
+    graft.streaming.IndexFamily.Stored.pq("id", dir).delete(vecs.filter($"id" < 40).select("id"))
     val q = vecs.filter($"id" < 5)
     def ids() = SimilaritySearch.searchPqIndex(spark, dir, q, "id", "emb", k = 5)
       .collect().map(_.getInt(1)).toSet
     assert(ids().forall(_ >= 40), "deleted code rows must not be scored")
-    SimilaritySearch.compactPqIndex(spark, dir)
+    graft.streaming.IndexFamily.Stored.pq("id", dir).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(ids().forall(_ >= 40))
     // append after compaction keeps working on the compacted chain
@@ -731,7 +729,7 @@ class SimilaritySearchSuite extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
     assert(served == brute)
     // delete + compact compose on the chain (both cells-schema-agnostic)
-    SimilaritySearch.deleteFromAnnIndex(spark, dir, Seq(35).toDF("id"), "id")
+    graft.streaming.IndexFamily.Stored.ivfSq8("id", dir).delete(Seq(35).toDF("id"))
     val afterDel = SimilaritySearch.searchIvfSq8(spark, dir, q, "id", "emb",
         k = 5, nProbe = 4)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
@@ -739,7 +737,7 @@ class SimilaritySearchSuite extends SparkSpec {
         "id", "emb", k = 5)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
     assert(afterDel == bruteDel)
-    SimilaritySearch.compactIvfIndex(spark, dir)
+    graft.streaming.IndexFamily.Stored.ivfSq8("id", dir).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     val afterCompact = SimilaritySearch.searchIvfSq8(spark, dir, q, "id", "emb",
         k = 5, nProbe = 4)
@@ -927,7 +925,7 @@ class SimilaritySearchSuite extends SparkSpec {
       assert(allCodes(1000 + i) == allCodes(i), s"codes differ for duplicate $i")
     // compaction: one segment, identical search results
     val before = asSet(SimilaritySearch.searchPqIndex(spark, idx, vecs, "id", "emb", k = 3))
-    SimilaritySearch.compactPqIndex(spark, idx)
+    graft.streaming.IndexFamily.Stored.pq("id", idx).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, idx).length == 1)
     assert(asSet(SimilaritySearch.searchPqIndex(spark, idx, vecs, "id", "emb", k = 3)) == before)
   }
@@ -1021,7 +1019,7 @@ class SimilaritySearchSuite extends SparkSpec {
     assert(ex.getMessage.contains("dim"), ex.getMessage)
     // compaction: one segment, identical results
     val before = asSet(SimilaritySearch.searchIvfPq(spark, idx, vecs, "id", "emb", k = 3))
-    SimilaritySearch.compactIvfPqIndex(spark, idx)
+    graft.streaming.IndexFamily.Stored.ivfPq("id", idx).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, idx).length == 1)
     assert(asSet(SimilaritySearch.searchIvfPq(spark, idx, vecs, "id", "emb", k = 3)) == before)
     // the probe is a partition-pruned scan: cells live as cell=N dirs
@@ -1129,8 +1127,7 @@ class SimilaritySearchSuite extends SparkSpec {
     }
     SimilaritySearch.appendToIvfPqIndex(extra, "id", "emb", idx,
       metaCol = Some("src"))
-    SimilaritySearch.deleteFromAnnIndex(spark, idx,
-      Seq(3, 63).toDF("id"), "id")
+    graft.streaming.IndexFamily.Stored.ivfPq("id", idx).delete(Seq(3, 63).toDF("id"))
     val q = base.filter($"id" < 6).select("id", "emb")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSet
@@ -1139,7 +1136,7 @@ class SimilaritySearchSuite extends SparkSpec {
     // appended rows are visible through the meta scope; deleted ids are not
     assert(before.nonEmpty)
     assert(!before.exists(p => p._2 == 3 || p._2 == 63), "tombstoned id served")
-    SimilaritySearch.compactIvfPqIndex(spark, idx)
+    graft.streaming.IndexFamily.Stored.ivfPq("id", idx).compact(spark)
     val after = pairs(SimilaritySearch.searchIvfPqWhereMeta(spark, idx, q,
       "id", "emb", k = 3, metaValues = Seq("src0", "src2"), nProbe = 4))
     assert(after == before, "compaction changed meta-scoped results")
@@ -1219,7 +1216,7 @@ class SimilaritySearchSuite extends SparkSpec {
       assert(got(1000 + i) == got(i),
         s"appended duplicate of $i rescored differently")
     // delete id 2: the tombstone must hide it from the rescore stage
-    SimilaritySearch.deleteFromAnnIndex(spark, idx, Seq(2).toDF("id"), "id")
+    graft.streaming.IndexFamily.Stored.ivfPq("id", idx).delete(Seq(2).toDF("id"))
     val afterDelete = SimilaritySearch.searchIvfPqRerank(spark, idx, q,
       "id", "emb", k = 160, kShortlist = 200, nProbe = 4)
     assert(!ids(afterDelete).contains(2), "deleted id 2 still in rerank")
@@ -1227,7 +1224,7 @@ class SimilaritySearchSuite extends SparkSpec {
     // compact collapses the chain; rerank results survive unchanged
     val before = afterDelete.collect()
       .map(r => (r.getInt(0), r.getInt(1), math.round(r.getDouble(2) * 1e9))).toSet
-    SimilaritySearch.compactIvfPqIndex(spark, idx)
+    graft.streaming.IndexFamily.Stored.ivfPq("id", idx).compact(spark)
     assert(graft.sources.IndexIO.segments(spark, idx).length == 1)
     val afterCompact = SimilaritySearch.searchIvfPqRerank(spark, idx, q,
       "id", "emb", k = 160, kShortlist = 200, nProbe = 4)

@@ -16,7 +16,9 @@ import graft.sources.IndexIO
   * ([[Streaming.maintainCdc]]) from the old snapshot to the new one —
   * one id added, one changed, one removed — must serve exactly what a
   * one-shot build on the new snapshot serves, and serve its live ids;
-  * a replay of the change-feed batch must publish nothing.
+  * a replay of the change-feed batch must publish nothing. A tombstone
+  * family's compaction of the fed chain must leave one segment, the same
+  * served output and the same applied-batch markers.
   */
 class IndexFamilySuite extends SparkSpec {
   import spark.implicits._
@@ -200,6 +202,9 @@ class IndexFamilySuite extends SparkSpec {
     Case("eval", IndexFamily.eval("text", _, n = 3), () => texts,
       Decontaminate.evalIndexHashes(spark, _), None))
 
+  /** The families that retract counts instead of writing tombstones. */
+  private val retractions = Set("dsir", "dsirByGroup", "eval")
+
   /** Bootstrap `family` from `old` through a change feed, then feed the
     * `old -> next` change set as one batch: changed and removed rows
     * carry their old text in `old_text`, removed rows their old content.
@@ -255,5 +260,66 @@ class IndexFamilySuite extends SparkSpec {
       c.servedIds.foreach { ids =>
         assert(want.select(ids).as[Long].collect().toSet == newIds.toSet, "served live ids")
       }
+      if (!retractions(c.name)) {
+        val markers = IndexIO.segmentMarkers(spark, fed)
+        assert(IndexIO.segments(spark, fed).size > 1, "the fed chain is one segment already")
+        c.family(fed).compact(spark)
+        assert(IndexIO.segments(spark, fed).size == 1, "compaction left several segments")
+        assertSameRows(c.serve(fed), want)
+        assert(IndexIO.segmentMarkers(spark, fed) == markers, "compaction changed the markers")
+      }
     }
+
+  /** Spark jobs, and stages in them, started while `f` runs. */
+  private def jobsAndStages(f: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        stages.addAndGet(js.stageInfos.size)
+        ()
+      }
+    }
+    org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      f
+      org.apache.spark.graft.runtime.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    (jobs.get, stages.get)
+  }
+
+  test("IndexFamily delete: aHash, audioFp and scene tombstone in one Spark job with no " +
+      "Exchange") {
+    val media = Seq[(String, String => IndexFamily, DataFrame, String)](
+      ("aHash", IndexFamily.aHash("doc_id", "payload", _), images._1, "hashes"),
+      ("audioFp", IndexFamily.audioFp("doc_id", "payload", _), audio._1, "postings"),
+      ("scene", IndexFamily.scene("doc_id", "_1", "_2", _, framesCol = Some("frames")),
+        videos._1, "scenes"))
+    for ((name, family, old, table) <- media) {
+      val path = tmp(s"graft_family_${name}_del_")
+      family(path).build(old, None)
+      // three partitions naming an id twice: a distinct over them would shuffle
+      val ids = spark.sparkContext.parallelize(Seq(2L, 3L, 2L), 3).toDF("doc_id")
+      // one job of one stage: no shuffle stage, so no Exchange
+      assert(jobsAndStages(family(path).delete(ids)) == ((1, 1)), name)
+      assert(!IndexIO.liveTable(spark, path, table, "doc_id")
+        .select("doc_id").as[Long].collect().exists(Set(2L, 3L)), name)
+    }
+  }
+
+  test("IndexFamily delete: a retraction family unsees the deleted rows' counts") {
+    val (old, _) = texts
+    val path = tmp("graft_family_eval_del_")
+    val eval = IndexFamily.eval("text", path, n = 3)
+    eval.build(old, None)
+    eval.delete(old.filter($"doc_id" === 1L))
+    val fresh = tmp("graft_family_eval_del_fresh_")
+    IndexFamily.eval("text", fresh, n = 3).build(old.filter($"doc_id" =!= 1L), None)
+    assertSameRows(Decontaminate.evalIndexHashes(spark, path),
+      Decontaminate.evalIndexHashes(spark, fresh))
+  }
 }

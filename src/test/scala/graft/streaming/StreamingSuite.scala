@@ -1183,8 +1183,8 @@ class StreamingSuite extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hits == Set((10L, 1L), (10L, 4L), (11L, 2L), (11L, 5L)))
     // delete-then-probe: tombstoned ids stop matching, compact drops them
-    Multimodal.deleteFromAHashIndex(Seq(4L).toDF("doc_id"), "doc_id", dir)
-    Multimodal.compactAHashIndex(spark, dir, "doc_id")
+    IndexFamily.Stored.aHash("doc_id", dir).delete(Seq(4L).toDF("doc_id"))
+    IndexFamily.Stored.aHash("doc_id", dir).compact(spark)
     assert(graft.sources.IndexIO.segmentMarkers(spark, dir) == markers,
       "manual compact must carry the applied-batch markers too")
     val hits2 = Multimodal.dedupAgainstAHashIndex(
@@ -2223,8 +2223,8 @@ class StreamingSuite extends SparkSpec {
     SimilaritySearch.buildSemDedupIndex(
       boot.map(t => (t._1, t._3)).toDF("id", "embedding"),
       "id", "embedding", bidx, k = 2, threshold = 0.995)
-    SimilaritySearch.deleteFromSemDedupIndex(spark, bidx,
-      Seq(3L, 5L).toDF("id"), "id")
+    IndexFamily.Stored.semDedup("id", bidx)
+      .delete(Seq(3L, 5L).toDF("id"))
     SimilaritySearch.applySemDedupBatch(spark, bidx,
       feed.filter(t => t._2 != "removed").map(t => (t._1, t._3))
         .toDF("id", "embedding"), "id", "embedding")
@@ -2297,8 +2297,8 @@ class StreamingSuite extends SparkSpec {
     val pqB = java.nio.file.Files.createTempDirectory("graft_cdc_pqb_").toString
     SimilaritySearch.buildPqIndex(boot.map(t => (t._1, t._3))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", pqB, m = 2, kCodes = 2)
-    SimilaritySearch.deleteFromAnnIndex(spark, pqB,
-      Seq(3L, 6L).toDF("vec_id"), "vec_id")
+    IndexFamily.Stored.pq("vec_id", pqB)
+      .delete(Seq(3L, 6L).toDF("vec_id"))
     SimilaritySearch.appendToPqIndex(Seq((3L, vec(3).map(-_)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", pqB)
     assertSameRows(
@@ -2319,8 +2319,8 @@ class StreamingSuite extends SparkSpec {
     val sqB = java.nio.file.Files.createTempDirectory("graft_cdc_sqb_").toString
     SimilaritySearch.buildIvfSq8Index(boot.map(t => (t._1, t._3))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", sqB, 2, 5)
-    SimilaritySearch.deleteFromAnnIndex(spark, sqB,
-      Seq(3L, 6L).toDF("vec_id"), "vec_id")
+    IndexFamily.Stored.ivfSq8("vec_id", sqB)
+      .delete(Seq(3L, 6L).toDF("vec_id"))
     SimilaritySearch.appendToIvfSq8Index(spark, sqB,
       Seq((3L, vec(3).map(-_))).toDF("vec_id", "embedding"), "vec_id", "embedding")
     assertSameRows(
